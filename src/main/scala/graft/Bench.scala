@@ -42,7 +42,7 @@ object Bench {
       }
       spark.catalog.clearCache() // warm-up caches hold sf0.001 data
       CheckpointRegistry.releaseAll()
-      SharedRelations.clear()
+      Standing.clear()
     }
     def timeOnce(op: Op): (Boolean, Double) = {
       val t0 = System.nanoTime()
@@ -67,7 +67,7 @@ object Bench {
         canaryOp.foreach(c => canaries += timeOnce(c)._2)
         group.filter(selected).foreach { op =>
           // TWO runs per pass: the first may build the family's shared
-          // relations (SharedRelations memo, structural caches); the
+          // relations (Standing relation memo, structural caches); the
           // second rides them and measures the op's MARGINAL cost — the
           // production steady state the min is meant to capture. The
           // cross-WINDOW corroboration below never trusts this pair by
@@ -82,7 +82,7 @@ object Bench {
           }
         }
         spark.catalog.clearCache()
-        SharedRelations.clear() // family memo (pair/label/rank sets)
+        Standing.clear() // family memo (pair/label/rank sets)
       }
     }
     for (p <- 1 to passes) runPass(p)

@@ -23,7 +23,7 @@ object DevTime {
     ops.foreach { op =>
       try op.fn(spark, warmDir).count() catch { case _: Throwable => () }
     }
-    spark.catalog.clearCache(); CheckpointRegistry.releaseAll(); SharedRelations.clear()
+    spark.catalog.clearCache(); CheckpointRegistry.releaseAll(); Standing.clear()
     ops.foreach { op =>
       val ts = (1 to k).map { _ =>
         val t0 = System.nanoTime()
@@ -33,7 +33,7 @@ object DevTime {
         (System.nanoTime() - t0) / 1e9
       }
       println(f"DEVTIME ${op.name}%-28s min=${ts.min}%.3f  all=[${ts.map(t => f"$t%.2f").mkString(", ")}]")
-      spark.catalog.clearCache(); SharedRelations.clear()
+      spark.catalog.clearCache(); Standing.clear()
     }
     spark.stop()
   }

@@ -75,13 +75,19 @@ object GenManifest {
     val prev = st.map(_.retained).getOrElse(Nil)
     val all = (prev :+ gen).distinct.sorted
     val (gone, kept) = all.splitAt(math.max(0, all.length - math.max(1, retain)))
-    val f = manifest(base, name)
-    val tmp = new File(base, s"MANIFEST_$name.tmp")
-    Files.writeString(tmp.toPath,
+    atomicWrite(manifest(base, name),
       s"current=$gen;retained=${kept.mkString(",")}\n")
+    gone
+  }
+
+  /** Replace `f` with `text` atomically: write a temp sibling, then an
+    * ATOMIC_MOVE rename over `f` — a reader (or a crash) sees the old
+    * content or the new, never a torn file. */
+  def atomicWrite(f: File, text: String): Unit = {
+    val tmp = new File(f.getParentFile, f.getName + ".tmp")
+    Files.writeString(tmp.toPath, text)
     Files.move(tmp.toPath, f.toPath,
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    gone
   }
 
   /** Drop every manifest + generation bookkeeping under `base` for a

@@ -1,0 +1,166 @@
+package graft
+
+import java.io.File
+import java.util.concurrent.{CompletableFuture, CompletionException}
+import scala.collection.mutable
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+
+/** Session-lifetime standing state: everything an operator builds once
+  * per corpus snapshot and then reads many times.
+  *
+  *  - [[relation]]: an in-memory relation materialized through
+  *    `localCheckpoint()` (the dedup pair sets, CC labels, PageRank
+  *    vector, trained merge tables, pack relations, …). Iterative
+  *    fixpoints and action-embedding builds must truncate lineage, and
+  *    every invocation manufactures a fresh `LogicalRDD`, so the
+  *    CacheManager's structural match never fires; the memo keys by
+  *    (relation, data dir) instead and hands every consumer the SAME
+  *    materialized DataFrame. Its blocks are owned here — the per-op
+  *    [[CheckpointRegistry.releaseAll]] cannot strand them — and
+  *    [[clear]] releases them at the op-family boundary (Bench/Verify
+  *    next to `clearCache()`, specs in the SharedSpark teardown).
+  *    Entries are sized ≪ corpus by contract (pair sets ∝ true
+  *    duplicates, label/rank sets one row per doc id, merge tables
+  *    driver-sized).
+  *  - [[artifact]]: an on-disk artifact (ANN indexes, bucketed snapshot
+  *    indexes, rank histories, tokenizer/pack/w2v generations). A slot
+  *    records what its artifact describes (the corpus dir, or a richer
+  *    identity key) and rebuilds only when asked for something else or
+  *    when the artifact is no longer live; asking for another dir
+  *    rebuilds into the same base as the next generation. Slots survive
+  *    [[clear]]; [[invalidate]] drops one after a direct write/append.
+  *  - [[dir]]: the per-application base directory every artifact lives
+  *    in, removed at JVM exit.
+  *
+  * Concurrency: each key owns one future. The monitor guards only map
+  * mutation, so a second caller of a key waits on that key's build,
+  * distinct keys build in parallel, and a build may nest a build of a
+  * different key (q95 → `pairs50`, `bpe_merges` → `bpe_vocab`). A build
+  * that throws is not cached: the next call rebuilds. The premise is the
+  * engine-wide snapshot contract — a dir's contents are immutable for
+  * the session.
+  */
+object Standing {
+
+  /** One build, run by `owner`; waiters join `value`. */
+  private final class Slot[V](val owner: Thread) {
+    val value = new CompletableFuture[V]
+    def building: Boolean = !value.isDone && (owner eq Thread.currentThread)
+  }
+
+  /** Build-once table: per-key futures, lock held only for map edits. */
+  private final class Table[K, V] {
+    private val slots = mutable.HashMap.empty[K, Slot[V]]
+
+    /** The value for `k`, building it when absent or when `fresh`
+      * rejects the finished one. */
+    def get(k: K, fresh: V => Boolean)(build: => V): V = {
+      val (slot, mine) = synchronized {
+        slots.get(k) match {
+          case Some(sl) => (sl, false)
+          case None =>
+            val sl = new Slot[V](Thread.currentThread)
+            slots(k) = sl
+            (sl, true)
+        }
+      }
+      if (mine) {
+        val v = try build catch { case t: Throwable =>
+          drop(k, slot)
+          slot.value.completeExceptionally(t)
+          throw t
+        }
+        slot.value.complete(v)
+        v
+      } else {
+        if (slot.building) throw new IllegalStateException(
+          s"standing build of $k depends on itself")
+        val v = try slot.value.join()
+          catch { case e: CompletionException => throw e.getCause }
+        if (fresh(v)) v
+        else { drop(k, slot); get(k, fresh)(build) }
+      }
+    }
+
+    private def drop(k: K, slot: Slot[V]): Unit = synchronized {
+      if (slots.get(k).contains(slot)) slots.remove(k)
+    }
+
+    /** Forget `k` so the next call rebuilds — unless the caller is
+      * `k`'s own build (its writes ARE the build). */
+    def invalidate(k: K): Unit = synchronized {
+      if (slots.get(k).exists(!_.building)) slots.remove(k)
+    }
+
+    /** Remove every slot, returning their futures. */
+    def drain(): Seq[CompletableFuture[V]] = synchronized {
+      val all = slots.values.map(_.value).toSeq
+      slots.clear()
+      all
+    }
+  }
+
+  private final case class Entry(df: DataFrame, blocks: Seq[RDD[_]])
+  private val relations = new Table[(String, String), Entry]
+  private val artifacts = new Table[(String, String), Any]
+
+  /** The memoized relation for (key, dir), built and materialized
+    * (eager `localCheckpoint`) on first request. */
+  def relation(key: String, dir: String)(build: => DataFrame): DataFrame =
+    relations.get((key, dir), (_: Entry) => true) {
+      val ck = build.localCheckpoint()
+      Entry(ck, ck.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd })
+    }.df
+
+  /** Drop every memoized relation and unpersist its blocks (an in-flight
+    * build's blocks go when it finishes). Call only where no consumer
+    * will re-execute a plan that read one — the blocks are those plans'
+    * only source. Artifact slots are untouched. */
+  def clear(): Unit =
+    relations.drain().foreach(_.thenAccept(_.blocks.foreach(_.unpersist(blocking = false))))
+
+  /** The base dir of artifact `name` after making sure its `lineage`
+    * describes `describes`: `build(base)` runs unless the slot already
+    * holds that value and `live(base)` holds. */
+  def artifact(s: SparkSession, name: String, lineage: String, describes: Any,
+      live: File => Boolean)(build: File => Unit): File = {
+    val base = dir(s, name)
+    artifacts.get((base.getPath, lineage), (d: Any) => d == describes && live(base)) {
+      build(base)
+      describes
+    }
+    base
+  }
+
+  /** [[artifact]] whose liveness is its `lineage` generation manifest. */
+  def artifact(s: SparkSession, name: String, lineage: String, describes: Any)(
+      build: File => Unit): File =
+    artifact(s, name, lineage, describes, GenManifest.read(_, lineage).isDefined)(build)
+
+  /** Liveness of an artifact kept as catalog tables: all of `tables`
+    * exist in this session's catalog. */
+  def catalogHas(s: SparkSession, tables: String*): File => Boolean =
+    _ => tables.forall(s.catalog.tableExists)
+
+  /** Forget what `lineage` of artifact `name` describes: its content was
+    * written directly (not by the slot's own build), so the next
+    * [[artifact]] call rebuilds. */
+  def invalidate(s: SparkSession, name: String, lineage: String): Unit =
+    artifacts.invalidate((dir(s, name).getPath, lineage))
+
+  private val dirs = mutable.LinkedHashSet.empty[File]
+  private lazy val exitHook: Unit = Runtime.getRuntime.addShutdownHook(
+    new Thread(() => dirs.synchronized(dirs.foreach(GenManifest.rmTree))))
+
+  /** `graft_<name>-<applicationId>` under the JVM temp dir — keyed per
+    * Spark application so concurrent JVMs never clobber each other —
+    * registered for removal at JVM exit. */
+  def dir(s: SparkSession, name: String): File = {
+    val d = new File(System.getProperty("java.io.tmpdir"),
+      s"graft_$name-${s.sparkContext.applicationId}")
+    dirs.synchronized { exitHook; dirs += d }
+    d
+  }
+}

@@ -31,7 +31,7 @@ object Verify {
         CheckpointRegistry.releaseAll()
       }
       spark.catalog.clearCache()
-      SharedRelations.clear() // family memo (pair/label/rank sets)
+      Standing.clear() // family memo (pair/label/rank sets)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -208,7 +208,7 @@ case class CellArgMin(first: Expression, second: Expression,
         s"${third.dataType.simpleString}")
   }
   override def dataType: DataType = idType
-  // empty cells array: array_min over an empty transform is null
+  // no non-null cell: array_min over an empty transform is null
   override def nullable: Boolean = true
   override def prettyName: String = "cell_arg_min"
 
@@ -217,7 +217,7 @@ case class CellArgMin(first: Expression, second: Expression,
     val r = CellArgMin.argMin(e.asInstanceOf[ArrayData],
       nr.asInstanceOf[Double], cs.asInstanceOf[ArrayData],
       idType == LongType, id, cen, cn, nf)
-    if (r == java.lang.Long.MIN_VALUE && cs.asInstanceOf[ArrayData].numElements() == 0) null
+    if (CellArgMin.none(r, cs.asInstanceOf[ArrayData])) null
     else if (idType == LongType) java.lang.Long.valueOf(r)
     else java.lang.Integer.valueOf(r.toInt)
   }
@@ -230,7 +230,7 @@ case class CellArgMin(first: Expression, second: Expression,
       s"""
          |long $rv = graft.expressions.CellArgMin.argMin(
          |  $e, $nr, $cs, $isLong, $id, $cen, $cn, $nf);
-         |if ($rv == java.lang.Long.MIN_VALUE && $cs.numElements() == 0) {
+         |if (graft.expressions.CellArgMin.none($rv, $cs)) {
          |  ${ev.isNull} = true;
          |} else {
          |  ${ev.value} = ${if (isLong) rv else s"(int) $rv"};
@@ -245,9 +245,7 @@ case class CellArgMin(first: Expression, second: Expression,
 
 object CellArgMin {
   /** Argmin cell id, or Long.MinValue when `cells` contributes no
-    * entries (the caller maps that to null for an empty array — a
-    * MinValue id from real data would compare below any other id and
-    * win the argmin legitimately either way, because ids are unique). */
+    * entries — [[none]] tells that sentinel from a real MinValue id. */
   def argMin(emb: ArrayData, nrm: Double, cells: ArrayData, idIsLong: Boolean,
       idOrd: Int, cenOrd: Int, cnOrd: Int, numFields: Int): Long = {
     val n = cells.numElements()
@@ -277,4 +275,14 @@ object CellArgMin {
     }
     bestId
   }
+
+  /** True when [[argMin]] scanned no cell — `cells` is empty or every
+    * slot is null — so its result `r` is the sentinel, not an id (a
+    * real MinValue id needs a non-null slot). */
+  def none(r: Long, cells: ArrayData): Boolean =
+    r == java.lang.Long.MIN_VALUE && {
+      var i = 0
+      while (i < cells.numElements() && cells.isNullAt(i)) i += 1
+      i == cells.numElements()
+    }
 }

@@ -131,19 +131,19 @@ object BpeOps {
 
   /** One training run, two registered readouts (q144 merge table + q147
     * unit inventory) — the scored38en family-memo treatment
-    * ([[graft.SharedRelations]]): whichever consumer fires first trains
+    * ([[graft.Standing]]): whichever consumer fires first trains
     * once per (family run, dir); the sibling key is populated from
-    * inside the same build (nested different-key getOrBuild — the
-    * q95 → pairs50 reentrancy precedent). At 100 TB a tokenizer release
+    * inside the same build (a nested build of a different key, like
+    * q95 → pairs50). At 100 TB a tokenizer release
     * trains once per corpus snapshot and every readout consumes the
     * artifact. */
   private def trainShared(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     var vocabOut: DataFrame = null
-    val merges = graft.SharedRelations.getOrBuild("bpe_merges", dir) {
+    val merges = graft.Standing.relation("bpe_merges", dir) {
       import s.implicits._
       val (ms, vocab) = train(s, dir)
-      vocabOut = graft.SharedRelations.getOrBuild("bpe_vocab", dir)(vocab)
+      vocabOut = graft.Standing.relation("bpe_vocab", dir)(vocab)
       ms.toDF("round", "pair", "merged", "n")
     }
     val vocab =
@@ -154,7 +154,7 @@ object BpeOps {
       // one corpus pass, zero pair-aggregate/argmax rounds — instead of
       // silently re-TRAINING (r9 ADVICE: the retrain quietly violated
       // the 'trains once per family run' contract).
-      else graft.SharedRelations.getOrBuild("bpe_vocab", dir)(
+      else graft.Standing.relation("bpe_vocab", dir)(
         replayVocab(s, dir, merges))
     (merges, vocab)
   }
@@ -278,7 +278,7 @@ object BpeOps {
     * (the q152 build, q181's fertility gate, q184's repeat planner) —
     * the docsWithToks treatment one step downstream. */
   def docUnits(s: SparkSession, dir: String): DataFrame =
-    graft.SharedRelations.getOrBuild("doc_units", dir)(
+    graft.Standing.relation("doc_units", dir)(
       TextOps.docsWithToks(s, dir)
         .select(col("doc_id"), explode(col("toks")).as("token"))
         .join(unitMapping(s, dir), "token")
@@ -402,7 +402,7 @@ object BpeOps {
     import graft.functions.Num
     // train-fold merges, one training run per family run (the memo
     // holds the ≤Rounds-row merge table, not the corpus)
-    val mergesDf = graft.SharedRelations.getOrBuild("bpe156_merges", dir) {
+    val mergesDf = graft.Standing.relation("bpe156_merges", dir) {
       import s.implicits._
       trainOn(wordCountsOf(TextOps.docsWithToks(s, dir)
         .filter(pmod(col("doc_id"), lit(5)) =!= 0)), Rounds)
@@ -507,7 +507,7 @@ object BpeOps {
   /** The full corpus chunk relation under the trained tokenizer —
     * positions, masses, AND the reassembled text. NOT memoized: the
     * text column makes it corpus-sized, which would break the
-    * SharedRelations sizing contract (entries ≪ corpus — r11 review);
+    * Standing sizing contract (entries ≪ corpus — r11 review);
     * q157 re-derives it per call (one corpus pass + the doc-keyed
     * window), the pack consumers read the thin [[chunkMasses]] memo. */
   private def corpusChunks(s: SparkSession, dir: String): DataFrame = {
@@ -523,7 +523,7 @@ object BpeOps {
     * consumers (q158's pack, q159's manifest via the pack memo);
     * memoized per (family run, dir) — the tfidf_feats treatment. */
   private[graft] def chunkMasses(s: SparkSession, dir: String): DataFrame =
-    graft.SharedRelations.getOrBuild("bpe_chunks", dir) {
+    graft.Standing.relation("bpe_chunks", dir) {
       corpusChunks(s, dir)
         .select(col("doc_id"), col("chunk_id"), col("n_tokens"),
           col("n_units"))
@@ -745,40 +745,20 @@ object BpeOps {
     ms
   }
 
-  // session-lifetime guard: which corpus the persisted tokenizer describes
-  private var tokArtDir: Option[String] = None
-
-  private[graft] def q164Base(s: SparkSession): java.io.File =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_tokenizer-${s.sparkContext.applicationId}")
-
   /** Train (family-memoized) + publish unless the live artifact already
     * describes `dir` — the q105/q160 standing-snapshot pattern: the
     * registered entry measures the amortized load+segment, not a
-    * re-train+re-publish per call (reuse spec-pinned). SYNCHRONIZED
-    * (r12 ADVICE): concurrent invocations would race the check-then-
-    * publish and double-publish generations. The guard keys on the dir
-    * string under the engine-wide snapshot premise (a dir's contents are
-    * immutable for the session — the SharedRelations memo contract; a
-    * corpus that mutates in place invalidates every family memo, not
-    * just this artifact). */
-  private[graft] def q164Ensure(s: SparkSession, dir: String): java.io.File =
-    this.synchronized {
-    val base = q164Base(s)
-    if (!tokArtDir.contains(dir) ||
-        graft.GenManifest.read(base, "merges").isEmpty) {
-      graft.TempArtifacts.register(base)
+    * re-train+re-publish per call (reuse spec-pinned). */
+  private[graft] def tokenizerArtifact(s: SparkSession, dir: String): java.io.File =
+    graft.Standing.artifact(s, "tokenizer", "merges", dir) { base =>
       val ms = trainShared(s, dir)._1.collect()
         .map(r => BpeMerge(r.getAs[Int]("round"), r.getAs[String]("pair"),
           r.getAs[String]("merged"), r.getAs[Long]("n"))).toSeq
       tokenizerWrite(s, base, ms)
-      tokArtDir = Some(dir)
-    }
-    base
     }
 
   def q164(s: SparkSession, dir: String): DataFrame = {
-    val ms = tokenizerLoad(s, q164Ensure(s, dir))
+    val ms = tokenizerLoad(s, tokenizerArtifact(s, dir))
     val toks = TextOps.docsWithToks(s, dir)
       .select(col("doc_id"), explode(col("toks")).as("token"))
     segmentReadout(toks, unitMappingOf(toks.select(col("token")).distinct(), ms))
@@ -952,7 +932,7 @@ object BpeOps {
     * trainShared memo treatment. Relation: (script, round, pair,
     * merged, n). */
   private[graft] def trainPerScriptShared(s: SparkSession, dir: String): DataFrame =
-    graft.SharedRelations.getOrBuild("bpe_merges_script", dir) {
+    graft.Standing.relation("bpe_merges_script", dir) {
       import s.implicits._
       // the returned merge table is driver data — the v0 cache only
       // feeds the training loop, so release it as soon as training
@@ -969,7 +949,7 @@ object BpeOps {
     * transliterated docs as one class), memoized like the per-script
     * tables it baselines. Driver-sized by construction (≤ Rounds). */
   private def trainUniShared(s: SparkSession, dir: String): Seq[BpeMerge] =
-    graft.SharedRelations.getOrBuild("bpe_merges_uni", dir) {
+    graft.Standing.relation("bpe_merges_uni", dir) {
       import s.implicits._
       // same v0-release rule as trainPerScriptShared (r16 ADVICE)
       val v0 = uniWordCounts(s, dir)
@@ -1103,26 +1083,16 @@ object BpeOps {
     byScript
   }
 
-  // session-lifetime guard: which corpus the per-script artifact describes
-  private var tokScriptArtDir: Option[String] = None
-
   /** Train (family-memoized) + publish unless the live per-script
-    * artifact already describes `dir` — the q164Ensure contract for the
-    * `merges_script` relation. */
-  private[graft] def q204Ensure(s: SparkSession, dir: String): java.io.File =
-    this.synchronized {
-      val base = q164Base(s)
-      if (!tokScriptArtDir.contains(dir) ||
-          graft.GenManifest.read(base, "merges_script").isEmpty) {
-        graft.TempArtifacts.register(base)
-        val ms = trainPerScriptShared(s, dir).collect()
-          .map(r => (r.getAs[String]("script"),
-            BpeMerge(r.getAs[Int]("round"), r.getAs[String]("pair"),
-              r.getAs[String]("merged"), r.getAs[Long]("n")))).toSeq
-        tokenizerWriteScripts(s, base, ms)
-        tokScriptArtDir = Some(dir)
-      }
-      base
+    * artifact already describes `dir` — [[tokenizerArtifact]] for the
+    * `merges_script` lineage, in the same base. */
+  private[graft] def scriptTokenizerArtifact(s: SparkSession, dir: String): java.io.File =
+    graft.Standing.artifact(s, "tokenizer", "merges_script", dir) { base =>
+      val ms = trainPerScriptShared(s, dir).collect()
+        .map(r => (r.getAs[String]("script"),
+          BpeMerge(r.getAs[Int]("round"), r.getAs[String]("pair"),
+            r.getAs[String]("merged"), r.getAs[Long]("n")))).toSeq
+      tokenizerWriteScripts(s, base, ms)
     }
 
   /** (script, token) → unit count under a LOADED per-script table: the
@@ -1153,20 +1123,11 @@ object BpeOps {
     // distinct-token relation — standing relations, memoized (the
     // unitMapping/docUnits treatment): the readout's marginal cost is
     // the corpus token pass + the joins, not a re-replay per call
-    // lock-order discipline (r16 ADVICE): q204Ensure takes the BpeOps
-    // monitor and (via trainPerScriptShared) then SharedRelations' —
-    // so it must run BEFORE getOrBuild, never inside the build closure,
-    // or the two monitors are acquired in opposite orders depending on
-    // the entry point. peek keeps the memo-hit path free of the
-    // ensure/load work.
-    val routed = graft.SharedRelations.peek("bpe_map_routed", dir)
-      .getOrElse {
-        val perScript = tokenizerLoadScripts(s, q204Ensure(s, dir))
-        graft.SharedRelations.getOrBuild("bpe_map_routed", dir)(
-          unitMappingGrouped(
-            toks.select(col("script"), col("token")).distinct(), perScript))
-      }.withColumnRenamed("units", "units_r")
-    val shared = graft.SharedRelations.getOrBuild("bpe_map_uni", dir)(
+    val routed = graft.Standing.relation("bpe_map_routed", dir)(
+      unitMappingGrouped(toks.select(col("script"), col("token")).distinct(),
+        tokenizerLoadScripts(s, scriptTokenizerArtifact(s, dir))))
+      .withColumnRenamed("units", "units_r")
+    val shared = graft.Standing.relation("bpe_map_uni", dir)(
       unitMappingOf(
         toks.select(col("token")).distinct(), trainUniShared(s, dir)))
       .withColumnRenamed("units", "units_s")

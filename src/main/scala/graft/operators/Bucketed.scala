@@ -23,7 +23,7 @@ import graft.functions.Num.dsum
   * Bucket files live under a per-application path in the system temp
   * dir (concurrent JVMs — test forks beside Bench — must not clobber
   * each other's layout; the q105 artifact rule), cleaned at JVM exit
-  * via the artifact registry. The write runs ONCE per corpus snapshot
+  * by [[graft.Standing]]. The write runs ONCE per corpus snapshot
   * (r18; the q105/q122/q126 standing-artifact convention): the
   * operator's own 100 TB story is "pay the shuffle once at write time,
   * every subsequent join rides the layout", so rebuilding both tables
@@ -35,36 +35,6 @@ import graft.functions.Num.dsum
   */
 object Bucketed {
   val Buckets = 8
-
-  // session-lifetime guard: which corpus the bucketed layout describes
-  private var bucketedDir: Option[String] = None
-
-  private[operators] def q93Base(s: SparkSession): java.io.File =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_bucketed-${s.sparkContext.applicationId}")
-
-  /** Build the bucketed layout for `dir` unless the live layout already
-    * describes it (tables present in this session's catalog AND built
-    * from the same dir). */
-  private[operators] def q93Ensure(s: SparkSession, dir: String): Unit = {
-    val base = q93Base(s)
-    val haveTables = s.catalog.tableExists("g93_orders") &&
-      s.catalog.tableExists("g93_lineitem")
-    if (!bucketedDir.contains(dir) || !haveTables) {
-      graft.TempArtifacts.register(base)
-      Seq("g93_orders", "g93_lineitem").foreach(reset(s, base, _))
-      Tables.orders(s, dir)
-        .write.bucketBy(Buckets, "o_orderkey").sortBy("o_orderkey")
-        .option("path", new java.io.File(base, "g93_orders").getAbsolutePath)
-        .mode("overwrite").saveAsTable("g93_orders")
-      Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_extendedprice"))
-        .write.bucketBy(Buckets, "l_orderkey").sortBy("l_orderkey")
-        .option("path", new java.io.File(base, "g93_lineitem").getAbsolutePath)
-        .mode("overwrite").saveAsTable("g93_lineitem")
-      bucketedDir = Some(dir)
-    }
-  }
 
   private[operators] def reset(s: SparkSession, base: java.io.File, table: String): Unit = {
     s.sql(s"DROP TABLE IF EXISTS $table")
@@ -84,7 +54,22 @@ object Bucketed {
   }
 
   def q93(s: SparkSession, dir: String): DataFrame = {
-    q93Ensure(s, dir)
+    // the bucketed layout of `dir`, built unless the live layout already
+    // describes it (tables present in this session's catalog AND built
+    // from the same dir)
+    graft.Standing.artifact(s, "bucketed", "g93", dir,
+        graft.Standing.catalogHas(s, "g93_orders", "g93_lineitem")) { base =>
+      Seq("g93_orders", "g93_lineitem").foreach(reset(s, base, _))
+      Tables.orders(s, dir)
+        .write.bucketBy(Buckets, "o_orderkey").sortBy("o_orderkey")
+        .option("path", new java.io.File(base, "g93_orders").getAbsolutePath)
+        .mode("overwrite").saveAsTable("g93_orders")
+      Tables.lineitem(s, dir)
+        .select(col("l_orderkey"), col("l_extendedprice"))
+        .write.bucketBy(Buckets, "l_orderkey").sortBy("l_orderkey")
+        .option("path", new java.io.File(base, "g93_lineitem").getAbsolutePath)
+        .mode("overwrite").saveAsTable("g93_lineitem")
+    }
     s.table("g93_lineitem")
       .join(s.table("g93_orders"), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_orderpriority"))

@@ -173,8 +173,6 @@ object EmbedOps {
     * the generation lifecycle. Scale shape: the artifact is model-sized
     * (vocab × dim floats — driver-cheap here, broadcast-scale in
     * production); the transform is q148's own one corpus pass. */
-  private var w2vArtDir: Option[String] = None
-
   private[graft] def w2vDir(base: java.io.File, gen: Long): java.io.File =
     new java.io.File(base, s"w2v_g$gen")
 
@@ -198,26 +196,14 @@ object EmbedOps {
       w2vDir(base, graft.GenManifest.current(base, "w2v")).getAbsolutePath)
 
   private[graft] def q175Base(s: SparkSession): java.io.File =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_w2v-${s.sparkContext.applicationId}")
+    graft.Standing.dir(s, "w2v")
 
-  /** Fit + publish unless the live artifact already describes `dir` —
-    * the q164Ensure pattern (synchronized: a concurrent double-publish
-    * would race the generation counter). */
-  private[graft] def q175Ensure(s: SparkSession, dir: String): java.io.File =
-    this.synchronized {
-      val base = q175Base(s)
-      if (!w2vArtDir.contains(dir) ||
-          graft.GenManifest.read(base, "w2v").isEmpty) {
-        graft.TempArtifacts.register(base)
-        w2vWrite(s, base, w2vFit(s, dir, numPartitions = 1))
-        w2vArtDir = Some(dir)
-      }
-      base
-    }
-
-  def q175(s: SparkSession, dir: String): DataFrame =
-    flatVectors(w2vTransform(s, dir, w2vLoad(s, q175Ensure(s, dir))))
+  def q175(s: SparkSession, dir: String): DataFrame = {
+    // fit + publish unless the live artifact already describes `dir`
+    val base = graft.Standing.artifact(s, "w2v", "w2v", dir)(
+      w2vWrite(s, _, w2vFit(s, dir, numPartitions = 1)))
+    flatVectors(w2vTransform(s, dir, w2vLoad(s, base)))
+  }
 
   // --- 149. semantic dedup over TRAINED vectors ---------------------------
   /** Near-duplicate pairs by cosine over the q145-TRAINED embeddings —

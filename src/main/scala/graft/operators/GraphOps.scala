@@ -51,7 +51,7 @@ object GraphOps {
   /** q95: PageRank over the verified MinHash near-dup pairs (q50),
     * isolates included via the document universe. */
   def q95(s: SparkSession, dir: String): DataFrame =
-    graft.SharedRelations.getOrBuild("pr50", dir)(
+    graft.Standing.relation("pr50", dir)(
       pagerank(DedupOps.pairs50(s, dir).select(col("id_a"), col("id_b")),
         Tables.documents(s, dir).select(col("doc_id"))))
 
@@ -398,7 +398,7 @@ object GraphOps {
     * relation — then a per-cluster argmax whose `row_number ≤ 1` compiles
     * to a map-side WindowGroupLimit (a pathological mega-cluster never
     * lands whole on one task). One row per cluster, singletons included.
-    * Both iterations come from the family memo ([[graft.SharedRelations]]):
+    * Both iterations come from the family memo ([[graft.Standing]]):
     * q74's label set and q95's rank vector are materialized once per
     * family run, so q97 itself is just the argmax join. */
   def q97(s: SparkSession, dir: String): DataFrame =
@@ -647,7 +647,7 @@ object GraphOps {
     * (doc_id, t, r) artifact shape as [[pagerankHistory]] (uniform
     * weights pw = RankScale reduce both the init and the base term to
     * the uniform forms exactly). Persisted t-partitioned by
-    * [[q111Ensure]] so the registered readout probes ONE pruned
+    * [[q111History]] so the registered readout probes ONE pruned
     * partition instead of rebuilding `iters` checkpointed rounds per
     * run (r9 VERDICT #6) — and so a future personalized delta update
     * has the per-round state [[pagerankDelta]] needs. */
@@ -698,19 +698,14 @@ object GraphOps {
       .digest(repr.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
 
-  // session-lifetime guards: which (corpus, teleport policy) each
-  // persisted personalized-history table describes — q111's artifact
-  // covers the FULL pair set (a final-ranks readout), q154's the BASE
-  // split (the delta update's state), so they are separate tables
-  private val persKeys =
-    scala.collection.mutable.Map.empty[String, (String, String, String)]
-
   /** Build + persist a personalized rank history table over `pairs` for
     * (dir, policy) unless the live artifact already describes it — the
     * q126 standing-artifact pattern verbatim: partitioned by round `t`,
     * one pruned partition per readback, history build paid once per
     * (corpus snapshot, policy). Shared by q111 (full graph) and q154
-    * (base split).
+    * (base split) as separate tables: q111's covers the FULL pair set
+    * (a final-ranks readout), q154's the BASE split (the delta update's
+    * state).
     *
     * `pairsTag` names the EDGE-SET DEFINITION and is part of the
     * identity key (r10 ADVICE): the `pairs` DataFrame itself can't be
@@ -718,13 +713,10 @@ object GraphOps {
     * holds — a caller reusing a table name with a different edge set
     * misses the key and rebuilds instead of silently reading the stale
     * artifact. */
-  private def ensurePersonalizedHist(s: SparkSession, dir: String,
-      table: String, pairsTag: String, pairs: DataFrame): Unit = {
-    val key = (dir, teleportPolicyHash, pairsTag)
-    if (!persKeys.get(table).contains(key) || !s.catalog.tableExists(table)) {
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_$table-${s.sparkContext.applicationId}")
-      graft.TempArtifacts.register(base)
+  private def personalizedHist(s: SparkSession, dir: String,
+      table: String, pairsTag: String, pairs: DataFrame): Unit =
+    graft.Standing.artifact(s, table, table, (dir, teleportPolicyHash, pairsTag),
+        graft.Standing.catalogHas(s, table)) { base =>
       Bucketed.reset(s, base, table)
       // scoped: the history build's per-round checkpoint blocks are dead
       // once the write materializes them into the artifact
@@ -735,12 +727,10 @@ object GraphOps {
           .mode("overwrite").saveAsTable(table)
       }
       graft.GenManifest.publish(base, table, 0L)
-      persKeys(table) = key
     }
-  }
 
-  private[graft] def q111Ensure(s: SparkSession, dir: String): Unit =
-    ensurePersonalizedHist(s, dir, "g111_hist", "pairs50_full",
+  private[graft] def q111History(s: SparkSession, dir: String): Unit =
+    personalizedHist(s, dir, "g111_hist", "pairs50_full",
       DedupOps.pairs50(s, dir).select(col("id_a"), col("id_b")))
 
   /** Personalized PageRank as a STANDING-ARTIFACT readout: ensure the
@@ -753,7 +743,7 @@ object GraphOps {
     * bit-identical to the fresh run (GraphSpec pins it), so the full
     * oracle is unchanged. */
   def q111(s: SparkSession, dir: String): DataFrame = {
-    q111Ensure(s, dir)
+    q111History(s, dir)
     s.table("g111_hist").filter(col("t") === Iters)
       .select(col("doc_id"), (col("r") / 1000000.0).as("rank"))
       .orderBy(col("doc_id"))
@@ -824,7 +814,7 @@ object GraphOps {
     val pairs = DedupOps.pairs50(s, dir).select(col("id_a"), col("id_b"))
     val docs = Tables.documents(s, dir).select(col("doc_id"))
     val isDelta = (col("id_a") + col("id_b")) % DeltaSplitMod === 0
-    q126Ensure(s, dir, pairs.filter(!isDelta), docs)
+    q126History(s, dir, pairs.filter(!isDelta), docs)
     pagerankDelta(q126Hist(s), pairs.filter(!isDelta), pairs.filter(isDelta), docs)
   }
 
@@ -833,18 +823,13 @@ object GraphOps {
   private[graft] def q126Hist(s: SparkSession): DataFrame =
     s.table("g126_hist").select(col("doc_id"), col("t").cast("int").as("t"), col("r"))
 
-  // session-lifetime guard: which corpus the persisted history describes
-  private var histDir: Option[String] = None
-
   /** Build + persist the base-graph rank history for `dir` unless the
     * live artifact already describes it. Partitioned by round `t`, so a
     * delta round's readback is one pruned partition. */
-  private[graft] def q126Ensure(s: SparkSession, dir: String,
+  private[graft] def q126History(s: SparkSession, dir: String,
       basePairs: DataFrame, docs: DataFrame): Unit =
-    if (!histDir.contains(dir) || !s.catalog.tableExists("g126_hist")) {
-      val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_prhist-${s.sparkContext.applicationId}")
-      graft.TempArtifacts.register(base)
+    graft.Standing.artifact(s, "prhist", "g126_hist", dir,
+        graft.Standing.catalogHas(s, "g126_hist")) { base =>
       Bucketed.reset(s, base, "g126_hist")
       // scoped: the history build's per-round checkpoint blocks are dead
       // once the write materializes them into the artifact
@@ -855,7 +840,6 @@ object GraphOps {
           .mode("overwrite").saveAsTable("g126_hist")
       }
       graft.GenManifest.publish(base, "g126_hist", 0L)
-      histDir = Some(dir)
     }
 
   /** Full-recompute replay over the merged edge set — delta ≡ full. */
@@ -878,14 +862,14 @@ object GraphOps {
     val pairs = DedupOps.pairs50(s, dir).select(col("id_a"), col("id_b"))
     val docs = Tables.documents(s, dir).select(col("doc_id"))
     val isDelta = (col("id_a") + col("id_b")) % DeltaSplitMod === 0
-    q154Ensure(s, dir, pairs.filter(!isDelta))
+    q154History(s, dir, pairs.filter(!isDelta))
     pagerankDeltaPersonalized(q154Hist(s), pairs.filter(!isDelta),
       pairs.filter(isDelta), docs, q111Weights(s, dir))
   }
 
-  private[graft] def q154Ensure(s: SparkSession, dir: String,
+  private[graft] def q154History(s: SparkSession, dir: String,
       basePairs: DataFrame): Unit =
-    ensurePersonalizedHist(s, dir, "g154_hist", "pairs50_base_split", basePairs)
+    personalizedHist(s, dir, "g154_hist", "pairs50_base_split", basePairs)
 
   /** The persisted personalized base history, column-normalized for the
     * delta fold (partition column `t` comes back last from the catalog). */

@@ -142,7 +142,7 @@ object MLOps {
     * deterministic doc_id-mod 80/20 split, featurizer fitted on the TRAIN
     * fold only (no test leakage) then applied to BOTH folds.
     *
-    * Memoized per (family run, dir) via [[graft.SharedRelations]] — the
+    * Memoized per (family run, dir) via [[graft.Standing]] — the
     * scored38en treatment (r9 VERDICT #2): q79, q81 and q146's 100% curve
     * cell previously each refit CountVectorizer+IDF on the same train
     * fold and re-transformed both folds; one build now feeds all three,
@@ -153,7 +153,7 @@ object MLOps {
     * At 100 TB a screening pipeline featurizes its labeled pool once per
     * snapshot and every model-selection readout consumes the artifact. */
   private[operators] def tfidfFeats(s: SparkSession, dir: String): DataFrame =
-    graft.SharedRelations.getOrBuild("tfidf_feats", dir) {
+    graft.Standing.relation("tfidf_feats", dir) {
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), Text.tokens(col("text")).as("toks"),
           (col("lang") === "en").cast("double").as("y"),
@@ -213,7 +213,7 @@ object MLOps {
     * GridSearchSpec's q81 re-run equality and LearningCurveSpec's
     * endpoint reconciliation now hold by construction. */
   private[operators] def rosterPreds(s: SparkSession, dir: String): DataFrame =
-    graft.SharedRelations.getOrBuild("roster_preds", dir) {
+    graft.Standing.relation("roster_preds", dir) {
       val f = tfidfFeats(s, dir)
       evalConcurrent(roster,
         f.filter(col("is_train")), f.filter(!col("is_train"))) { pred =>
@@ -385,13 +385,6 @@ object MLOps {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val nTest = test.count()
-      // pre-warm ON THE CALLING THREAD (r10 ADVICE): SharedRelations
-      // documents a load-bearing single-threaded constraint (the build
-      // runs holding the object monitor, nested getOrBuild relies on
-      // reentrancy) — invoking getOrBuild from a worker-pool Future
-      // violated that letter even though no other builder raced it.
-      // Materialized here, the 100% future below is a pure readout.
-      val warmPreds = rosterPreds(s, dir)
       val perFraction = fractions.map { frac =>
         if (frac == 100) Future {
           // the 100% cells ARE q79/q81's setting — READOUTS of the
@@ -400,7 +393,7 @@ object MLOps {
           // exact BY CONSTRUCTION (identical predictions, not merely
           // identically-seeded refits), and neither the featurizer nor
           // the four models refit for this fraction at all.
-          val p = warmPreds
+          val p = rosterPreds(s, dir)
           val nTrain = train.count()
           roster.map { case (name, _) =>
             val scored = p.filter(col("model") === name)
@@ -491,7 +484,7 @@ object MLOps {
     * per (family run, dir): the gate readout and MLSpec's threshold
     * replay both consume the SAME one fit + transform. */
   private[graft] def qualityScores(s: SparkSession, dir: String): DataFrame =
-    graft.SharedRelations.getOrBuild("quality_gate_scores", dir) {
+    graft.Standing.relation("quality_gate_scores", dir) {
       val f = tfidfFeats(s, dir)
       val lr = new LogisticRegression()
         .setLabelCol("y").setFeaturesCol("features")

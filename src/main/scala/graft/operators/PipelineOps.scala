@@ -32,7 +32,7 @@ object PipelineOps {
     * `q112Sql` carry the q44/q45/roots CTEs verbatim), so the driver's
     * hash gate re-proves the memo ≡ the chain on every run. */
   private[operators] def gateDecisions(s: SparkSession, dir: String): DataFrame =
-    graft.SharedRelations.getOrBuild("gate77", dir)(gateDecisionsPlan(s, dir))
+    graft.Standing.relation("gate77", dir)(gateDecisionsPlan(s, dir))
 
   /** The unmemoized gate-decision build plan. */
   private[graft] def gateDecisionsPlan(s: SparkSession, dir: String): DataFrame = {
@@ -574,12 +574,12 @@ object PipelineOps {
   /** Doc-level raw/cleaned token masses over the q112 population —
     * (doc_id, lang, rt, ct); shared by q114 (per-lang aggregate) and
     * q116 (re-sampling membership). */
-  /** [[q114Docs]] through the [[graft.SharedRelations]] memo — the
+  /** [[q114Docs]] through the [[graft.Standing]] memo — the
     * consumers (q116/q118/q123) share one materialization with a real
     * release lifecycle; q114 itself builds fresh so its bench entry
     * times the actual span pipeline (the q50/q70 convention). */
   private def q114DocsShared(s: SparkSession, dir: String): DataFrame =
-    graft.SharedRelations.getOrBuild("q114docs", dir)(q114Docs(s, dir))
+    graft.Standing.relation("q114docs", dir)(q114Docs(s, dir))
 
   private def q114Docs(s: SparkSession, dir: String): DataFrame = {
     val sel = gateDecisions(s, dir).filter(col("selected") === 1).select(col("doc_id"))
@@ -699,7 +699,7 @@ object PipelineOps {
     // one span-pipeline build feeds both the policy aggregate and the
     // sampling join — and q116/q118/q123 all start from the same
     // relation (4 scalars per population doc), so it lives in the
-    // SharedRelations memo: one materialization per (relation, dir),
+    // Standing relation memo: one materialization per (relation, dir),
     // released at the family boundary / by a library caller's clear()
     // instead of leaking per-invocation caches (r5 ADVICE)
     val docs = q114DocsShared(s, dir)
@@ -862,7 +862,7 @@ object PipelineOps {
   }
 
   def q120(s: SparkSession, dir: String): DataFrame =
-    // SharedRelations memo like the other q114-policy consumers
+    // Standing relation memo like the other q114-policy consumers
     // (q116/q118/q123): q114's own entry times the span pipeline; q120
     // measures what it adds — the water-filling fixpoint
     q120PolicyOf(q114PolicyOf(q114DocsShared(s, dir))).orderBy(col("lang"))
@@ -952,7 +952,7 @@ object PipelineOps {
     * readout). The tfidf_feats treatment: one build per family run,
     * every consumer gets the same materialized relation. */
   private def packedBuild(s: SparkSession, dir: String): DataFrame =
-    graft.SharedRelations.getOrBuild("subword_pack", dir)(
+    graft.Standing.relation("subword_pack", dir)(
       packedBuildPlan(s, dir))
 
   /** The UNMEMOIZED pack plan — what the memo materializes once per
@@ -1045,7 +1045,7 @@ object PipelineOps {
     * registered readout and q159's manifest both consume it (the
     * [[packedBuild]] treatment, one level up the granularity ladder). */
   private def sequencePack(s: SparkSession, dir: String): DataFrame =
-    graft.SharedRelations.getOrBuild("sequence_pack", dir)(
+    graft.Standing.relation("sequence_pack", dir)(
       sequencePackPlan(s, dir))
 
   /** The unmemoized sequence-pack plan (the [[packedBuildPlan]] rule —
@@ -1194,7 +1194,7 @@ object PipelineOps {
     * build they rank. The memo's localCheckpoint also truncates the
     * fold's plan, the q191 plan-cost rule. */
   private[graft] def epochOrdered(s: SparkSession, dir: String): DataFrame =
-    graft.SharedRelations.getOrBuild("epoch_ordered", dir)(
+    graft.Standing.relation("epoch_ordered", dir)(
       epochOrderedPlan(s, dir))
 
   /** The unmemoized epoch-ordering plan (ScalePlanSpec pins the window
@@ -1343,7 +1343,7 @@ object PipelineOps {
   def q171(s: SparkSession, dir: String): DataFrame =
     // memoized like [[epochOrdered]] (r15) — the curriculum schedule is
     // the same standing per-snapshot relation a loader derives once
-    graft.SharedRelations.getOrBuild("curriculum_ordered", dir)(
+    graft.Standing.relation("curriculum_ordered", dir)(
       q171Plan(s, dir)).orderBy(col("epoch"), col("seq_rank"))
 
   /** The unmemoized curriculum-ordering plan (ScalePlanSpec pins the
@@ -1797,12 +1797,6 @@ object PipelineOps {
     * pack-sized shuffle at write (repartition on shard → exactly one
     * file per shard — the bucketed-write rule), then manifest = one
     * map-side-combined groupBy over the artifact scan. */
-  private var packArtDir: Option[String] = None
-
-  private[graft] def q165Base(s: SparkSession): java.io.File =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_seqpack-${s.sparkContext.applicationId}")
-
   /** `name` keys the LINEAGE: the shipped build publishes under "pack";
     * the q174 decontaminated migration publishes its generations under
     * "packclean" beside it (one artifact base, two manifest lines — a
@@ -1878,25 +1872,13 @@ object PipelineOps {
         col("n_units"), col("cum_units"), col("shard"))
 
   /** Pack + publish unless the live artifact already describes `dir` —
-    * the q105/q160/q164 standing-snapshot pattern (reuse spec-pinned).
-    * SYNCHRONIZED (r12 ADVICE): concurrent invocations would race the
-    * check-then-publish and double-publish generations; the dir-string
-    * guard rides the session-wide snapshot premise (the SharedRelations
-    * memo contract — a corpus dir is immutable for the session). */
-  private[graft] def q165Ensure(s: SparkSession, dir: String): java.io.File =
-    this.synchronized {
-      val base = q165Base(s)
-      if (!packArtDir.contains(dir) ||
-          graft.GenManifest.read(base, "pack").isEmpty) {
-        graft.TempArtifacts.register(base)
-        packWrite(s, base, sequencePack(s, dir))
-        packArtDir = Some(dir)
-      }
-      base
-    }
+    * the q105/q160/q164 standing-snapshot pattern (reuse spec-pinned). */
+  private[graft] def packArtifact(s: SparkSession, dir: String): java.io.File =
+    graft.Standing.artifact(s, "seqpack", "pack", dir)(
+      packWrite(s, _, sequencePack(s, dir)))
 
   def q165(s: SparkSession, dir: String): DataFrame =
-    sequenceManifestOf(packRead(s, q165Ensure(s, dir)))
+    sequenceManifestOf(packRead(s, packArtifact(s, dir)))
 
   /** The SERVE half of the artifact lifecycle: append a served pack
     * batch ([[graft.streaming.StreamOps.packServe]]'s sink payload) into
@@ -1987,7 +1969,7 @@ object PipelineOps {
   val SeekShard = 0L
 
   def q172(s: SparkSession, dir: String): DataFrame =
-    packRead(s, q165Ensure(s, dir))
+    packRead(s, packArtifact(s, dir))
       .filter(col("shard") === SeekShard)
       .orderBy(col("doc_id"), col("chunk_id"))
 
@@ -2038,7 +2020,7 @@ object PipelineOps {
     // batch-bounded by construction: ≤ (StepHiRank − StepLoRank) ids
     val touched = step.select(col("shard")).distinct()
       .collect().map(_.getLong(0)).sorted
-    val art = packRead(s, q165Ensure(s, dir))
+    val art = packRead(s, packArtifact(s, dir))
       .filter(col("shard").isin(touched: _*))
     step.join(art, Seq("doc_id", "chunk_id", "shard"))
       .select(col("epoch"), col("seq_rank"), col("doc_id"), col("chunk_id"),
@@ -2074,7 +2056,7 @@ object PipelineOps {
     *
     * Scale shape: the pack memo + ONE chunk-text pass (q157's corpus
     * pass — the text-bearing relation is deliberately unmemoized, the
-    * SharedRelations sizing contract) shingled map-side against the
+    * Standing sizing contract) shingled map-side against the
     * BROADCAST eval shingle set (q85's rule: the bench side is
     * eval-sized by premise), one map-side-combined per-chunk count,
     * one thin LEFT join back onto the pack. FULL oracle: the q158
@@ -2273,14 +2255,14 @@ object PipelineOps {
     * hash compare proves stored ≡ recomputed ≡ the build — through two
     * independent disk paths. */
   def q190(s: SparkSession, dir: String): DataFrame = {
-    val base = q165Ensure(s, dir)
+    val base = packArtifact(s, dir)
     manifestDiff(packManifestRead(s, base),
       sequenceManifestOf(packRead(s, base)))
   }
 
   // NB: the oracle's stored-manifest CTE (mn) is a verbatim copy of the
   // recomputed one (mo) — valid ONLY under Verify's fresh-artifact
-  // premise (q165Ensure just published, so stored ≡ recomputed ≡ the
+  // premise (packArtifact just published, so stored ≡ recomputed ≡ the
   // q158 chain and every status is 'same'). The non-'same' branches of
   // manifestDiffSelectSql (added/removed/changed after appends or a
   // trimmed directory) are pinned by PipelineSpec's lifecycle tests,
@@ -2324,7 +2306,6 @@ object PipelineOps {
     * two-level scan + the one-shuffle bucketed write — all the q158/q165
     * costs, nothing new; the diff is two thin aggregates + a
     * manifest-sized full outer join. */
-  private var cleanArtDir: Option[String] = None
 
   /** The clean sequence pack: q158's build minus flagged chunks,
     * re-packed (fresh cumulative offsets + shard ids) under the SAME
@@ -2353,21 +2334,16 @@ object PipelineOps {
   }
 
   /** Repack + publish the clean lineage unless it already describes
-    * `dir` (the q165Ensure pattern; the shipped build is ensured first —
-    * the migration is FROM it). */
-  private[graft] def q174Ensure(s: SparkSession, dir: String): java.io.File =
-    this.synchronized {
-      val base = q165Ensure(s, dir)
-      if (!cleanArtDir.contains(dir) ||
-          graft.GenManifest.read(base, "packclean").isEmpty) {
-        packWrite(s, base, cleanSequencePack(s, dir), "packclean")
-        cleanArtDir = Some(dir)
-      }
-      base
-    }
+    * `dir` (the shipped build is ensured first — the migration is FROM
+    * it). */
+  private[graft] def cleanPackArtifact(s: SparkSession, dir: String): java.io.File = {
+    packArtifact(s, dir)
+    graft.Standing.artifact(s, "seqpack", "packclean", dir)(
+      packWrite(s, _, cleanSequencePack(s, dir), "packclean"))
+  }
 
   def q174(s: SparkSession, dir: String): DataFrame = {
-    val base = q174Ensure(s, dir)
+    val base = cleanPackArtifact(s, dir)
     manifestDiff(
       sequenceManifestOf(packRead(s, base)),
       sequenceManifestOf(packRead(s, base, "packclean")))
@@ -2392,7 +2368,7 @@ object PipelineOps {
   def q178(s: SparkSession, dir: String): DataFrame =
     // the clean epoch stream memoizes like [[epochOrdered]] (r15 — the
     // same standing per-snapshot relation, over the clean lineage)
-    graft.SharedRelations.getOrBuild("clean_epoch_ordered", dir)(
+    graft.Standing.relation("clean_epoch_ordered", dir)(
       q178Plan(s, dir)).orderBy(col("epoch"), col("seq_rank"))
 
   /** The unmemoized clean-epoch-ordering plan. */
@@ -2400,8 +2376,8 @@ object PipelineOps {
     // the artifact read memoizes (three int64s per clean sequence): the
     // rank scan would otherwise re-scan the parquet — the
     // sequencePack-memo rule applied to the clean lineage
-    val clean = graft.SharedRelations.getOrBuild("clean_pack_read", dir)(
-      packRead(s, q174Ensure(s, dir), "packclean")
+    val clean = graft.Standing.relation("clean_pack_read", dir)(
+      packRead(s, cleanPackArtifact(s, dir), "packclean")
         .select(col("doc_id"), col("chunk_id"), col("shard")))
     val keyed = (0 until Epochs).map(e => shuffleKeyed(clean, e))
       .reduce(_ unionAll _)
@@ -2523,7 +2499,7 @@ object PipelineOps {
   /** The per-batch relation behind [[q179]] (unordered) and [[q191]]'s
     * epoch scheduling — ONE builder, so the batch-formation rule cannot
     * drift between the readout and the consumption order. Memoized via
-    * [[graft.SharedRelations]] (r15): the relation is THIN (five int64s
+    * [[graft.Standing]] (r15): the relation is THIN (five int64s
     * + a double per batch) but its LINEAGE is the whole batch-formation
     * chain (PrefixSum ranked scan + offset window + aggregate), and
     * q191's epoch union referenced that lineage several times per plan
@@ -2534,7 +2510,7 @@ object PipelineOps {
     * up; blocks owned by the family memo, released at the group
     * boundary. */
   private def lengthBatches(s: SparkSession, dir: String): DataFrame =
-    graft.SharedRelations.getOrBuild("length_batches", dir)(
+    graft.Standing.relation("length_batches", dir)(
       lengthBatchesPlan(s, dir))
 
   /** The unmemoized batch-formation plan (ScalePlanSpec pins the window
@@ -3088,7 +3064,7 @@ object PipelineOps {
     * q196's registered readout, q197's artifact write, and the spec
     * reconciliations all consume ONE materialization. */
   private def mmPack(s: SparkSession, dir: String): DataFrame =
-    graft.SharedRelations.getOrBuild("mm_pack", dir)(mmPackPlan(s, dir))
+    graft.Standing.relation("mm_pack", dir)(mmPackPlan(s, dir))
 
   /** The unmemoized multimodal-pack plan. */
   private[graft] def mmPackPlan(s: SparkSession, dir: String): DataFrame = {
@@ -3195,11 +3171,6 @@ object PipelineOps {
     * shard → one file per shard), then the manifest is one
     * map-side-combined groupBy(shard) over the partition-pruned
     * artifact scan. */
-  private var mmArtDir: Option[String] = None
-
-  private[graft] def q197Base(s: SparkSession): java.io.File =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_mmpack-${s.sparkContext.applicationId}")
 
   /** The multimodal-manifest AGGREGATE over an arbitrary [[q196]]-shaped
     * relation `(doc_id, seq_id, modality, locator, n_units, cum_units,
@@ -3226,18 +3197,10 @@ object PipelineOps {
       .orderBy(col("shard"))
 
   /** Pack + publish the multimodal artifact unless the live one already
-    * describes `dir` (the q165Ensure discipline, synchronized). */
-  private[graft] def q197Ensure(s: SparkSession, dir: String): java.io.File =
-    this.synchronized {
-      val base = q197Base(s)
-      if (!mmArtDir.contains(dir) ||
-          graft.GenManifest.read(base, "mmpack").isEmpty) {
-        graft.TempArtifacts.register(base)
-        packWrite(s, base, mmPack(s, dir), "mmpack", mmManifestOf)
-        mmArtDir = Some(dir)
-      }
-      base
-    }
+    * describes `dir`. */
+  private[graft] def mmPackArtifact(s: SparkSession, dir: String): java.io.File =
+    graft.Standing.artifact(s, "mmpack", "mmpack", dir)(
+      packWrite(s, _, mmPack(s, dir), "mmpack", mmManifestOf))
 
   /** The persisted multimodal pack at the current generation, through
     * the `graftpack` table (shard restored to int64, build column
@@ -3308,7 +3271,7 @@ object PipelineOps {
   }
 
   def q197(s: SparkSession, dir: String): DataFrame =
-    mmManifestOf(mmPackRead(s, q197Ensure(s, dir)))
+    mmManifestOf(mmPackRead(s, mmPackArtifact(s, dir)))
 
   /** The step epoch's seeded permutation of the PERSISTED multimodal
     * pack, ranked ONCE per (family run, dir) — the [[epochOrdered]]
@@ -3316,7 +3279,7 @@ object PipelineOps {
     * fetch reads the standing ranking instead of re-ranking per call. */
   private def mmEpochRanked(s: SparkSession, dir: String,
       base: java.io.File): DataFrame =
-    graft.SharedRelations.getOrBuild("mm_epoch_ranked", dir) {
+    graft.Standing.relation("mm_epoch_ranked", dir) {
       val thin = mmPackRead(s, base)
         .select(col("doc_id"), col("seq_id"), col("modality"), col("shard"))
         .withColumn("okey",
@@ -3353,7 +3316,7 @@ object PipelineOps {
     * columns ride the single pass (value-equal to the pruned-fetch
     * composition the Spark side executes). */
   def q199(s: SparkSession, dir: String): DataFrame = {
-    val base = q197Ensure(s, dir)
+    val base = mmPackArtifact(s, dir)
     // r15: the step's epoch permutation memoizes (the q177 treatment at
     // multimodal granularity — a loader ranks the epoch once and every
     // step reads it); the memo leaf also satisfies the snapshot rule,
@@ -3447,7 +3410,7 @@ object PipelineOps {
     * codec round-trips — memoized: the codec pass is the expensive
     * stage and BOTH q205 and q206 consume it. */
   private[graft] def mmPayloadFps(s: SparkSession, dir: String): DataFrame =
-    graft.SharedRelations.getOrBuild("mm_payload_fps", dir) {
+    graft.Standing.relation("mm_payload_fps", dir) {
       val u = corpusWithReingest(s, dir)
         .repartition(s.sparkContext.defaultParallelism)
       val img = graft.multimodal.MultiModal.payloadFingerprints(s,
@@ -3605,7 +3568,7 @@ object PipelineOps {
     val gen = mmPack(s, dir)
     val prefix = mmEpochOrdered(s, dir)
       .withColumn("is_arrival", lit(0L))
-    val arr = graft.SharedRelations.getOrBuild("q207_mm_arrivals", dir)(
+    val arr = graft.Standing.relation("q207_mm_arrivals", dir)(
         mmArrivalPack(s, dir, gen.agg(max(col("cum_units")).as("base_off"))))
       .select(col("doc_id"), col("seq_id"), col("modality"), col("shard"))
     val nGen = gen.agg(count(lit(1)).as("__n_gen"))
@@ -3637,7 +3600,7 @@ object PipelineOps {
     * a pure function of (seed, mm-pack snapshot), ranked once in ONE
     * epoch-folded scan and READ thereafter. */
   private[graft] def mmEpochOrdered(s: SparkSession, dir: String): DataFrame =
-    graft.SharedRelations.getOrBuild("mm_epoch_ordered", dir)(
+    graft.Standing.relation("mm_epoch_ordered", dir)(
       mmEpochOrderedPlan(s, dir))
 
   /** The unmemoized mm epoch-ordering plan (ScalePlanSpec pins the
@@ -3810,7 +3773,7 @@ object PipelineOps {
       .withColumn("is_arrival", lit(0L))
     // the arrival pack memoizes like the build it continues (it is a
     // standing per-snapshot relation — what the serve seam appended)
-    val arr = graft.SharedRelations.getOrBuild("q200_arrivals", dir)(
+    val arr = graft.Standing.relation("q200_arrivals", dir)(
         arrivalPack(s, dir, gen.agg(max(col("cum_units")).as("base_off"))))
       .select(col("doc_id"), col("chunk_id"), col("shard"))
     // tail ranks = |gen N| + the q162-rule rank WITHIN the arrival set:

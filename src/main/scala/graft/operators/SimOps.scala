@@ -1114,17 +1114,6 @@ object SimOps {
       .orderBy(col("cell_id"))
   }
 
-  // session-lifetime guard: which corpus the persisted index describes
-  private var annDir: Option[String] = None
-
-  /** The per-application artifact dir q105 serves from: concurrent JVMs
-    * (test forks, Bench beside sbt test) must not delete each other's
-    * index mid-query; cleanup at JVM exit via the artifact registry
-    * (r4 ADVICE). */
-  private[graft] def q105Base(s: SparkSession): java.io.File =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_annindex-${s.sparkContext.applicationId}")
-
   /** Build + persist the IVF+PQ index artifact for `dir` unless the
     * live artifact already describes it — the q122/q126 standing-
     * snapshot pattern (r7 VERDICT #4): in production the index is built
@@ -1132,20 +1121,13 @@ object SimOps {
     * registered q105 entry measures the amortized probe, not
     * build+query. Reuse is spec-pinned (a second q105 call must not
     * touch the manifest). */
-  private[graft] def q105Ensure(s: SparkSession, dir: String): java.io.File = {
-    val base = q105Base(s)
-    if (!annDir.contains(dir) ||
-        graft.GenManifest.read(base, "vecs").isEmpty) {
-      graft.TempArtifacts.register(base)
-      annIndexWrite(s, base, Tables.embeddings(s, dir))
-      annDir = Some(dir)
-    }
-    base
-  }
+  private[graft] def annIndex(s: SparkSession, dir: String): java.io.File =
+    graft.Standing.artifact(s, "annindex", "vecs", dir)(
+      annIndexWrite(s, _, Tables.embeddings(s, dir)))
 
   def q105(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
-    val base = q105Ensure(s, dir)
+    val base = annIndex(s, dir)
     val (cellsRow, cbRow) = annIndexModel(s, base)
     val idx = annIndexVecs(s, base)
     annIndexSearch(idx,
@@ -1274,36 +1256,6 @@ object SimOps {
   }
 
   // --- 160. persisted IVF+PQ index over TRAINED embeddings (r10) ----------
-  /** [[q105]]'s build-once/query-many artifact closed over PRODUCED
-    * vectors (r10 VERDICT #3): q149/q153 dedup the q145-trained
-    * embeddings, but the persisted index only ever indexed the SHIPPED
-    * embeddings table — the train→index→serve seam was unexercised.
-    * Corpus = [[EmbedOps.trainedEmbTable]] (trained vectors + the
-    * deterministic sign-bit coarse label), artifact machinery =
-    * [[annIndexWrite]]/[[annIndexSearch]] VERBATIM (frozen model,
-    * cell-partitioned payload, static partition pruning, ADC shortlist,
-    * exact rerank — nothing re-implemented), query set = the same
-    * vec_id % 50 bounded-probe contract, FILTERED BEFORE the projection
-    * aggregate (vectors are per-doc, so pruning the corpus pass to the
-    * query docs is exact). FULL oracle: [[EmbedOps.trainedEmbCtesSql]]'s
-    * `embeddings` CTE SHADOWS the table and q105's entire frozen-model
-    * replay runs over it verbatim — the rounded argmin/argmax encode
-    * replays, the q88/q61 precedent. Recall vs brute-over-trained and
-    * probe pruning are spec-pinned (SimilaritySpec).
-    *
-    * r12 — the coarse quantizer is LLOYD-TRAINED (r11 VERDICT #1, the
-    * round's one `weak`): the raw sign-bit cells are skewed on natural
-    * text (top cell 37 % of the sf0.1 corpus — at 100 TB any query
-    * probing it reads ~37 % of the data, an unpruned scan; recall@5
-    * 0.64), so the sign buckets now only SEED [[lloydCmeans]], whose
-    * [[LloydRounds]] fixed assign/re-center steps both balance the
-    * cells and move them onto the data. SimilaritySpec pins max cell
-    * occupancy ≤ 3× uniform, recall@5 ≥ 0.8 at [[TrainedNProbe]], and
-    * pruning intact; the oracle replays the refinement as the unrolled
-    * [[lloydCmeansCtesSql]] chain feeding the SAME
-    * [[annIndexReplaySql]] body q105 uses. */
-  private var annTrainedDir: Option[String] = None
-
   /** Fixed Lloyd refinement rounds for the trained-vector index's coarse
     * quantizer — FIXED (not a convergence test) so the oracle unrolls
     * the refinement exactly; occupancy/recall at this setting are
@@ -1391,15 +1343,36 @@ object SimOps {
        |cmeans AS MATERIALIZED (SELECT label, dim, c FROM cmeans$rounds)""".stripMargin
   }
 
-  private[graft] def q160Base(s: SparkSession): java.io.File =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_annindex_trained-${s.sparkContext.applicationId}")
-
-  private[graft] def q160Ensure(s: SparkSession, dir: String): java.io.File = {
-    val base = q160Base(s)
-    if (!annTrainedDir.contains(dir) ||
-        graft.GenManifest.read(base, "vecs").isEmpty) {
-      graft.TempArtifacts.register(base)
+  /** [[q105]]'s build-once/query-many artifact closed over PRODUCED
+    * vectors (r10 VERDICT #3): q149/q153 dedup the q145-trained
+    * embeddings, but the persisted index only ever indexed the SHIPPED
+    * embeddings table — the train→index→serve seam was unexercised.
+    * Corpus = [[EmbedOps.trainedEmbTable]] (trained vectors + the
+    * deterministic sign-bit coarse label), artifact machinery =
+    * [[annIndexWrite]]/[[annIndexSearch]] VERBATIM (frozen model,
+    * cell-partitioned payload, static partition pruning, ADC shortlist,
+    * exact rerank — nothing re-implemented), query set = the same
+    * vec_id % 50 bounded-probe contract, FILTERED BEFORE the projection
+    * aggregate (vectors are per-doc, so pruning the corpus pass to the
+    * query docs is exact). FULL oracle: [[EmbedOps.trainedEmbCtesSql]]'s
+    * `embeddings` CTE SHADOWS the table and q105's entire frozen-model
+    * replay runs over it verbatim — the rounded argmin/argmax encode
+    * replays, the q88/q61 precedent. Recall vs brute-over-trained and
+    * probe pruning are spec-pinned (SimilaritySpec).
+    *
+    * r12 — the coarse quantizer is LLOYD-TRAINED (r11 VERDICT #1, the
+    * round's one `weak`): the raw sign-bit cells are skewed on natural
+    * text (top cell 37 % of the sf0.1 corpus — at 100 TB any query
+    * probing it reads ~37 % of the data, an unpruned scan; recall@5
+    * 0.64), so the sign buckets now only SEED [[lloydCmeans]], whose
+    * [[LloydRounds]] fixed assign/re-center steps both balance the
+    * cells and move them onto the data. SimilaritySpec pins max cell
+    * occupancy ≤ 3× uniform, recall@5 ≥ 0.8 at [[TrainedNProbe]], and
+    * pruning intact; the oracle replays the refinement as the unrolled
+    * [[lloydCmeansCtesSql]] chain feeding the SAME
+    * [[annIndexReplaySql]] body q105 uses. */
+  private[graft] def annTrainedIndex(s: SparkSession, dir: String): java.io.File =
+    graft.Standing.artifact(s, "annindex_trained", "vecs", dir) { base =>
       // cached across the build's corpus reads (seed means + one
       // assign/re-center pass per Lloyd round + encode); the write is
       // eager, so the unpersist cannot strand a returned plan (the
@@ -1408,13 +1381,10 @@ object SimOps {
       try annIndexWriteCells(s, base, corpus,
         cellsOfCmeans(lloydCmeans(corpus, LloydRounds)))
       finally corpus.unpersist()
-      annTrainedDir = Some(dir)
     }
-    base
-  }
 
   def q160(s: SparkSession, dir: String): DataFrame = {
-    val base = q160Ensure(s, dir)
+    val base = annTrainedIndex(s, dir)
     val (cellsRow, cbRow) = annIndexModel(s, base)
     // the query batch reads its vectors (and stored norms) FROM the
     // standing artifact instead of re-running the projection aggregate

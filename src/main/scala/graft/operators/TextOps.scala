@@ -549,14 +549,14 @@ object TextOps {
 
   /** The (doc_id, score, y) scored-vs-truth relation all four ranked-
     * evaluation readouts (q132/q133/q134/q139) start from. Family-
-    * memoized via [[graft.SharedRelations]]: each readout previously
+    * memoized via [[graft.Standing]]: each readout previously
     * re-ran the TF-IDF scoring join — four corpus passes where one
     * suffices (at 100 TB an evaluation report runs the scorer once per
     * snapshot, not once per metric). The memo materializes through
     * localCheckpoint, so values — and the oracle hashes — are
     * unchanged. */
   private[operators] def scoredEn(s: SparkSession, dir: String): DataFrame =
-    graft.SharedRelations.getOrBuild("scored38en", dir) {
+    graft.Standing.relation("scored38en", dir) {
       val truth = Tables.documents(s, dir)
         .select(col("doc_id").as("d2"), (col("lang") === "en").cast("int").as("y"))
       q38(s, dir).join(truth, col("doc_id") === col("d2"))
@@ -1019,7 +1019,7 @@ object TextOps {
     * relation is doc-sized (4 thin columns); the epoch-order/
     * length-batches treatment (r15) applied one family over. */
   private def pplBuckets(s: SparkSession, dir: String): DataFrame =
-    graft.SharedRelations.getOrBuild("ppl_buckets", dir)(
+    graft.Standing.relation("ppl_buckets", dir)(
       pplBucketsPlan(s, dir))
 
   /** The unmemoized bucketing plan (ScalePlanSpec pins the window
@@ -1319,7 +1319,7 @@ object TextOps {
     // corpus totals are a per-corpus constant — family-memoized so the
     // repeated-probe pattern (and the bench's best-of-N) pays the
     // corpus-stats pass once per corpus, not once per query
-    val stats = graft.SharedRelations.getOrBuild("bm25stats", dir)(
+    val stats = graft.Standing.relation("bm25stats", dir)(
       d.agg(count(lit(1)).as("n_docs"),
         sum(size(col("toks")).cast("long")).as("sum_len")))
     // ≤ |query| rows per doc; cached so the df aggregate and the scoring
@@ -1386,21 +1386,9 @@ object TextOps {
     * filter pushdown on the artifact scan — spec-pinned, the corpus is
     * NEVER rescanned) and broadcast; same integer-micros scoring
     * lattice as q103. Top-K is TakeOrderedAndProject. */
-  private def bm25Base(s: SparkSession): java.io.File =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_bm25index-${s.sparkContext.applicationId}")
-
-  /** Which corpus dir the live g130 artifacts are a PRISTINE snapshot
-    * of — the DedupOps.g108SnapshotFor convention (r8): the registered
-    * entry reuses the session's standing artifact; any direct write or
-    * append clears the marker, compaction keeps it (probe results are
-    * invariant under the aggregating compaction — spec-pinned). */
-  private var g130SnapshotFor: Option[String] = None
-
   private[graft] def q130Write(s: SparkSession, snap: DataFrame): Unit = {
-    g130SnapshotFor = None
-    val base = bm25Base(s)
-    graft.TempArtifacts.register(base)
+    graft.Standing.invalidate(s, "bm25index", "g130")
+    val base = graft.Standing.dir(s, "bm25index")
     Seq("g130_df", "g130_totals").foreach(Bucketed.reset(s, base, _))
     snap.select(explode(array_distinct(col("toks"))).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("df"))
@@ -1417,7 +1405,7 @@ object TextOps {
 
   /** Fold an accepted batch into the stats artifact (partial rows). */
   private[graft] def q130Append(s: SparkSession, batch: DataFrame): Unit = {
-    g130SnapshotFor = None
+    graft.Standing.invalidate(s, "bm25index", "g130")
     batch.select(explode(array_distinct(col("toks"))).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("df"))
       .write.bucketBy(DedupOps.IndexBuckets, "tok")
@@ -1435,7 +1423,7 @@ object TextOps {
     * table stays append-only: one row per batch is bounded by batch
     * COUNT, not data, and its reader is already a 2-column sum. */
   private[graft] def q130Compact(s: SparkSession): Unit =
-    DedupOps.compactBucketed(s, "graft_bm25index", "g130_df",
+    DedupOps.compactBucketed(s, "bm25index", "g130_df",
       Seq("tok"), Nil,
       merge = _.groupBy(col("tok")).agg(sum(col("df")).as("df")))
 
@@ -1467,13 +1455,12 @@ object TextOps {
   def q130(s: SparkSession, dir: String): DataFrame = {
     val mod = DedupOps.IncrSplitMod
     val d = docsWithToks(s, dir).select(col("doc_id"), col("toks"))
-    // standing-snapshot reuse (r8) — see g130SnapshotFor / DedupOps.q108
-    if (!(g130SnapshotFor.contains(dir) &&
-        s.catalog.tableExists("g130_df") &&
-        s.catalog.tableExists("g130_totals"))) {
-      q130Write(s, d.filter(col("doc_id") % mod =!= 0))
-      g130SnapshotFor = Some(dir)
-    }
+    // standing-snapshot reuse (r8) — see DedupOps.q108: a direct write
+    // or append invalidates the slot, compaction keeps it (probe results
+    // are invariant under the aggregating compaction — spec-pinned)
+    graft.Standing.artifact(s, "bm25index", "g130", dir,
+        graft.Standing.catalogHas(s, "g130_df", "g130_totals"))(
+      _ => q130Write(s, d.filter(col("doc_id") % mod =!= 0)))
     q130Probe(s, d.filter(col("doc_id") % mod === 0), Bm25Query)
   }
 

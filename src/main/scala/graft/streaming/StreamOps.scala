@@ -848,31 +848,29 @@ object StreamOps {
     * None when the file does not exist (a fresh stream). */
   private[graft] def loadPackState(f: java.io.File)
       : Option[(Long, (Long, Long))] =
+    stateFields(f, "pack state").map(field =>
+      (field("offset"), (field("last_id"), field("last_base"))))
+
+  /** The integer fields of a persisted state file, or None when it does
+    * not exist; a missing field is a named error (`what` + path). */
+  private def stateFields(f: java.io.File, what: String)
+      : Option[String => Long] =
     if (!f.isFile) None
     else {
       val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      def field(k: String): Long =
-        s""""$k"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(txt) match {
-          case Some(m) => m.group(1).toLong
-          case None => throw new IllegalStateException(
-            s"pack state ${f.getPath}: missing field '$k' in: $txt")
-        }
-      Some((field("offset"), (field("last_id"), field("last_base"))))
+      Some(k => s""""$k"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(txt) match {
+        case Some(m) => m.group(1).toLong
+        case None => throw new IllegalStateException(
+          s"$what ${f.getPath}: missing field '$k' in: $txt")
+      })
     }
 
-  /** Persist the pack state atomically: write a temp sibling, fsync-free
-    * ATOMIC_MOVE rename (the GenManifest publish rule) — a reader (or a
-    * crash) never observes a torn state file. */
+  /** Persist the pack state atomically ([[graft.GenManifest.atomicWrite]])
+    * — a reader (or a crash) never observes a torn state file. */
   private[graft] def persistPackState(f: java.io.File, offset: Long,
-      last: (Long, Long)): Unit = {
-    val tmp = new java.io.File(f.getParentFile, f.getName + ".tmp")
-    java.nio.file.Files.write(tmp.toPath,
-      s"""{"offset":$offset,"last_id":${last._1},"last_base":${last._2}}"""
-        .getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp.toPath, f.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+      last: (Long, Long)): Unit =
+    graft.GenManifest.atomicWrite(f,
+      s"""{"offset":$offset,"last_id":${last._1},"last_base":${last._2}}""")
 
   /** Driver-side pack state: the global unit offset plus the (batchId,
     * base) pair of the most recent batch (the idempotent-re-delivery
@@ -1220,32 +1218,17 @@ object StreamOps {
     * the same micro-batch). None when the file does not exist. */
   private[graft] def loadEpochTailState(f: java.io.File)
       : Option[(Long, (Long, Long), Long, Long)] =
-    if (!f.isFile) None
-    else {
-      val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      def field(k: String): Long =
-        s""""$k"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(txt) match {
-          case Some(m) => m.group(1).toLong
-          case None => throw new IllegalStateException(
-            s"epoch tail state ${f.getPath}: missing field '$k' in: $txt")
-        }
-      Some((field("offset"), (field("last_id"), field("last_base")),
+    stateFields(f, "epoch tail state").map(field =>
+      (field("offset"), (field("last_id"), field("last_base")),
         field("rank_offset"), field("rank_last_base")))
-    }
 
   /** Persist both epoch-tail states in ONE atomic rename (the
     * [[persistPackState]] rule — a crash never tears the pair). */
   private[graft] def persistEpochTailState(f: java.io.File, offset: Long,
-      last: (Long, Long), rankOffset: Long, rankLastBase: Long): Unit = {
-    val tmp = new java.io.File(f.getParentFile, f.getName + ".tmp")
-    java.nio.file.Files.write(tmp.toPath,
-      (s"""{"offset":$offset,"last_id":${last._1},"last_base":${last._2},""" +
+      last: (Long, Long), rankOffset: Long, rankLastBase: Long): Unit =
+    graft.GenManifest.atomicWrite(f,
+      s"""{"offset":$offset,"last_id":${last._1},"last_base":${last._2},""" +
         s""""rank_offset":$rankOffset,"rank_last_base":$rankLastBase}""")
-        .getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp.toPath, f.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
 
   private[graft] def packFold(batch: DataFrame,
       merges: Seq[graft.operators.BpeOps.BpeMerge], state: PackServeState,

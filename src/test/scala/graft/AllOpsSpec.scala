@@ -27,4 +27,16 @@ class AllOpsSpec extends AnyFunSuite with SharedSpark {
       assert(df.count() >= 0)
     }
   }
+
+  test("README's operator and oracle counts are the registry's") {
+    val readme = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("README.md")), "UTF-8")
+    def quoted(re: scala.util.matching.Regex): Seq[Int] =
+      re.findFirstMatchIn(readme).map(_.subgroups.map(_.toInt)).getOrElse(Nil)
+    val (ops, oracle) = (SparkEntry.allOps.size, SparkEntry.oracleSql.size)
+    assert(quoted("""the (\d+)-operator surface""".r) === Seq(ops))
+    assert(quoted("""(\d+) of the (\d+) operators are DuckDB-oracle-checked""".r) ===
+      Seq(oracle, ops))
+    assert(quoted("""the (\d+) rows-only ops""".r) === Seq(ops - oracle))
+  }
 }

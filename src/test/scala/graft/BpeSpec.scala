@@ -263,8 +263,7 @@ class BpeSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("q164 tokenizer artifact: round-trip byte-equal, generation lifecycle, gapped load is a named error") {
-    val base = java.nio.file.Files.createTempDirectory("graft_tokart_spec").toFile
-    graft.TempArtifacts.register(base)
+    val base = Standing.dir(spark, "tokart_spec")
     val ms = BpeOps.train(spark, SF, BpeOps.Rounds)._1
     // write → load round-trips the merge table exactly
     assert(BpeOps.tokenizerWrite(spark, base, ms) === 1L)
@@ -290,8 +289,7 @@ class BpeSpec extends AnyFunSuite with SharedSpark {
     // the preemption story end-to-end: snapshot lands ON DISK (not in a
     // driver variable), a fresh process loads it and finishes training —
     // byte-equal to the uninterrupted run
-    val base = java.nio.file.Files.createTempDirectory("graft_tokart_resume").toFile
-    graft.TempArtifacts.register(base)
+    val base = Standing.dir(spark, "tokart_resume")
     BpeOps.tokenizerWrite(spark, base, BpeOps.train(spark, SF, 4)._1)
     val resumed = BpeOps.trainFrom(spark, SF,
       BpeOps.tokenizerLoad(spark, base), BpeOps.Rounds - 4)._1
@@ -376,8 +374,7 @@ class BpeSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("q204 per-script artifact: round-trip, generation lifecycle, gapped per-script load is a named error") {
-    val base = java.nio.file.Files.createTempDirectory("graft_tokart_script").toFile
-    graft.TempArtifacts.register(base)
+    val base = Standing.dir(spark, "tokart_script")
     val ms = Seq(
       "x" -> BpeMerge(1, "a b", "ab", 10L), "x" -> BpeMerge(2, "ab c", "abc", 4L),
       "y" -> BpeMerge(1, "d e", "de", 7L))

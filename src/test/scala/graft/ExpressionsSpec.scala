@@ -273,6 +273,22 @@ class ExpressionsSpec extends AnyFunSuite with SharedSpark {
       .select(col("cell_id")).head()
     assert(gotE.isNullAt(0) === decE.isNullAt(0))
     assert(gotE.isNullAt(0))
+    // a NON-empty array whose slots are all null scans nothing either:
+    // null, not the MinValue sentinel, interpreted and generated alike
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types._
+    val cellT = StructType(Seq(StructField("cell_id", LongType),
+      StructField("centroid", ArrayType(FloatType)), StructField("cn", DoubleType)))
+    val allNull = graft.expressions.CellArgMin(
+      Literal(new GenericArrayData(Array[Any](0.5f, 0.5f)), ArrayType(FloatType)),
+      Literal(0.5),
+      Literal(new GenericArrayData(Array[Any](null, null)), ArrayType(cellT)))
+    assert(allNull.eval(InternalRow.empty) == null)
+    assert(GenerateUnsafeProjection.generate(Seq(allNull))
+      .apply(InternalRow.empty).isNullAt(0))
   }
 
   test("LongVecDotDecimal degrades to null past 38 digits on the codegen path") {

@@ -28,9 +28,7 @@ import graft.operators.{DedupOps, SimOps}
 class GenerationsSpec extends AnyFunSuite with SharedSpark {
 
   test("manifest publish is atomic, ordered, and ages generations out") {
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_genmanifest_spec-${spark.sparkContext.applicationId}")
-    TempArtifacts.register(base)
+    val base = Standing.dir(spark, "genmanifest_spec")
     GenManifest.reset(base, "t")
     assert(GenManifest.read(base, "t").isEmpty)
     assert(GenManifest.publish(base, "t", 0L) === Nil)
@@ -51,9 +49,7 @@ class GenerationsSpec extends AnyFunSuite with SharedSpark {
 
   test("ann index: probe pinned at gen N is bit-identical across compaction; aged gens GC") {
     val e = Tables.embeddings(spark, SF)
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_anngen_spec-${spark.sparkContext.applicationId}")
-    TempArtifacts.register(base)
+    val base = Standing.dir(spark, "anngen_spec")
     SimOps.annIndexWrite(spark, base, e.filter(col("vec_id") % 5 =!= 0))
     SimOps.annIndexAppend(spark, base,
       e.filter(col("vec_id") % 5 === 0).select(col("vec_id"), col("embedding")))
@@ -104,11 +100,11 @@ class GenerationsSpec extends AnyFunSuite with SharedSpark {
     // the generation; it's the SWAP that must not strand a reader)
     val beforeRows = resolvedBefore.count()
     DedupOps.q108Compact(spark)
-    assert(DedupOps.bucketedGen(spark, "graft_dedupindex", "g108_shingles") === 1L)
+    assert(DedupOps.bucketedGen(spark, "dedupindex", "g108_shingles") === 1L)
     // the pre-swap reader's plan still reads generation 0's files —
     // retained, so identical; and the retired table is pinnable by name
     assert(resolvedBefore.count() === beforeRows)
-    val pinned0 = DedupOps.bucketedGenOf(spark, "graft_dedupindex", "g108_shingles", 0L)
+    val pinned0 = DedupOps.bucketedGenOf(spark, "dedupindex", "g108_shingles", 0L)
     assert(pinned0.count() === beforeRows)
     // pinned generation is still a BUCKETED catalog table (the plan
     // contract pinning needs: DESCRIBE carries the bucket spec)
@@ -129,9 +125,9 @@ class GenerationsSpec extends AnyFunSuite with SharedSpark {
     DedupOps.q108Compact(spark)
     assert(!spark.catalog.tableExists("g108_shingles_r0"))
     intercept[IllegalArgumentException] {
-      DedupOps.bucketedGenOf(spark, "graft_dedupindex", "g108_shingles", 0L)
+      DedupOps.bucketedGenOf(spark, "dedupindex", "g108_shingles", 0L)
     }
-    assert(DedupOps.bucketedGenOf(spark, "graft_dedupindex", "g108_shingles", 1L)
+    assert(DedupOps.bucketedGenOf(spark, "dedupindex", "g108_shingles", 1L)
       .count() > 0L)
     newSh.unpersist()
   }
@@ -147,7 +143,7 @@ class GenerationsSpec extends AnyFunSuite with SharedSpark {
     spark.range(1).selectExpr("id AS doc_id", "array('x') AS shs")
       .write.saveAsTable("g108_shingles_c1")
     DedupOps.q108Compact(spark)
-    assert(DedupOps.bucketedGen(spark, "graft_dedupindex", "g108_shingles") === 1L)
+    assert(DedupOps.bucketedGen(spark, "dedupindex", "g108_shingles") === 1L)
     assert(spark.table("g108_shingles").count() === rows)
     // STATE 3: crash between promote and publish — the live table is
     // already the next generation, only the manifest is stale. Simulate
@@ -158,14 +154,14 @@ class GenerationsSpec extends AnyFunSuite with SharedSpark {
     val mf = new java.io.File(base, "MANIFEST_g108_shingles")
     java.nio.file.Files.writeString(mf.toPath, "current=0;retained=0\n")
     DedupOps.q108Compact(spark)
-    assert(DedupOps.bucketedGen(spark, "graft_dedupindex", "g108_shingles") === 2L)
+    assert(DedupOps.bucketedGen(spark, "dedupindex", "g108_shingles") === 2L)
     assert(spark.table("g108_shingles").count() === rows)
     // STATE 2: crash between retire and promote — the live name is gone,
     // the retired current generation holds the data. The next attempt
     // must restore the live name and proceed.
     spark.sql("ALTER TABLE g108_shingles RENAME TO g108_shingles_r2")
     DedupOps.q108Compact(spark)
-    assert(DedupOps.bucketedGen(spark, "graft_dedupindex", "g108_shingles") === 3L)
+    assert(DedupOps.bucketedGen(spark, "dedupindex", "g108_shingles") === 3L)
     assert(spark.table("g108_shingles").count() === rows)
     // STATE 4 (r7 ADVICE): crash AFTER publish but BEFORE the GC loop —
     // an aged-out retired generation's table+files survive and nothing

@@ -14,7 +14,7 @@ import graft.operators.PipelineOps
   * unpublished lineage. */
 class GraftPackSourceSpec extends AnyFunSuite with SharedSpark {
 
-  private def base = PipelineOps.q165Ensure(spark, SF)
+  private def base = PipelineOps.packArtifact(spark, SF)
 
   test("format(graftpack) resolves the current generation and matches packRead") {
     val viaFormat = spark.read.format("graftpack")

@@ -216,8 +216,8 @@ class GraphSpec extends AnyFunSuite with SharedSpark {
     // base relation proves the artifact, not the build, answers
     val poison = spark.range(1)
       .select(assert_true(lit(false)).as("x"), lit(0L).as("doc_id"))
-    GraphOps.q126Ensure(spark, SF, poison, poison)
-    DedupOps.q127Ensure(spark, SF, poison, poison)
+    GraphOps.q126History(spark, SF, poison, poison)
+    DedupOps.ccLabelSnapshot(spark, SF, poison, poison)
     assert(GraphOps.q126(spark, SF).collect().toList === a126)
     assert(DedupOps.q127(spark, SF).collect().toList === a127)
   }
@@ -248,7 +248,7 @@ class GraphSpec extends AnyFunSuite with SharedSpark {
     // poisoned base relation proves the artifact, not the build, answers
     val poison = spark.range(1)
       .select(assert_true(lit(false)).as("x"), lit(0L).as("doc_id"))
-    GraphOps.q154Ensure(spark, SF, poison)
+    GraphOps.q154History(spark, SF, poison)
     assert(GraphOps.q154(spark, SF).collect().toList === a154)
   }
 

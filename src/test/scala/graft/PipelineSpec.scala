@@ -755,7 +755,7 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     val mArt = PipelineOps.q165(spark, SF).collect().map(_.toSeq)
     val mMem = PipelineOps.q159(spark, SF).collect().map(_.toSeq)
     assert(mArt === mMem)
-    val base = PipelineOps.q165Base(spark)
+    val base = Standing.dir(spark, "seqpack")
     val gen = graft.GenManifest.current(base, "pack")
     // every sequence survives the disk hop byte-for-byte
     val art = PipelineOps.packRead(spark, base).collect().map(packKey).sorted
@@ -881,7 +881,7 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     assert(diff.exists(_.getAs[String]("status") == "changed"))
     // the persisted clean artifact: flagged keys absent, clean membership
     // exact, offsets a contiguous prefix sum from zero
-    val base = PipelineOps.q174Ensure(spark, SF)
+    val base = PipelineOps.cleanPackArtifact(spark, SF)
     val art = PipelineOps.packRead(spark, base, "packclean").collect()
     val artKeys = art.map(r =>
       (r.getAs[Long]("doc_id"), r.getAs[Long]("chunk_id"))).toSet
@@ -1215,7 +1215,7 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
 
   test("q190 pack audit lifecycle: clean, forged append flags its shard, compaction republishes, lost shard removed, rebuild recovers") {
     import spark.implicits._
-    val base = PipelineOps.q165Ensure(spark, SF)
+    val base = PipelineOps.packArtifact(spark, SF)
     // 1. a fresh artifact audits clean: stored ≡ recomputed on every shard
     val a0 = PipelineOps.q190(spark, SF).collect()
     assert(a0.nonEmpty)
@@ -1421,7 +1421,7 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
   test("q197 multimodal artifact: read-back ≡ the build, per-modality manifest reconciles, standing reuse") {
     def key(r: org.apache.spark.sql.Row) = r.toSeq.toList.toString
     val mem = PipelineOps.q196(spark, SF).collect().map(key).sorted
-    val base = PipelineOps.q197Ensure(spark, SF)
+    val base = PipelineOps.mmPackArtifact(spark, SF)
     // every row (incl. locators) survives the disk hop through the
     // graftpack table, byte for byte
     val art = PipelineOps.mmPackRead(spark, base).collect().map(key).sorted

@@ -75,7 +75,7 @@ class ScalePlanSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("q111 warm readout scans ONE pruned partition of the standing artifact") {
-    graft.operators.GraphOps.q111Ensure(spark, SF)
+    graft.operators.GraphOps.q111History(spark, SF)
     val plan = graft.operators.GraphOps.q111(spark, SF)
       .queryExecution.executedPlan.toString
     // partition pruning fired at the scan: the t-filter must appear on

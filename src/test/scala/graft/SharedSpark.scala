@@ -14,7 +14,7 @@ trait SharedSpark extends BeforeAndAfterAll { self: Suite =>
     * of a checkpointed plan has already materialized by teardown. */
   override def afterAll(): Unit = {
     CheckpointRegistry.releaseAll()
-    SharedRelations.clear()
+    Standing.clear()
     super.afterAll()
   }
 }

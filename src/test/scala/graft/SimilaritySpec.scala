@@ -392,7 +392,7 @@ class SimilaritySpec extends AnyFunSuite with SharedSpark {
 
   test("q105 standing artifact: a re-run probes the existing index and never rebuilds") {
     val r1 = SimOps.q105(spark, SF).collect().toList
-    val base = SimOps.q105Base(spark)
+    val base = Standing.dir(spark, "annindex")
     def listing(f: java.io.File): Set[String] =
       if (f.isDirectory)
         Option(f.listFiles()).getOrElse(Array.empty).flatMap(listing).toSet
@@ -471,7 +471,7 @@ class SimilaritySpec extends AnyFunSuite with SharedSpark {
 
   test("q160 standing artifact: a re-run probes the existing trained index, never rebuilds") {
     val r1 = SimOps.q160(spark, SF).collect().toList
-    val base = SimOps.q160Base(spark)
+    val base = Standing.dir(spark, "annindex_trained")
     def listing(f: java.io.File): Set[String] =
       if (f.isDirectory)
         Option(f.listFiles()).getOrElse(Array.empty).flatMap(listing).toSet
@@ -490,9 +490,7 @@ class SimilaritySpec extends AnyFunSuite with SharedSpark {
     val e = Tables.embeddings(spark, SF)
     val a = e.filter(col("vec_id") % 5 =!= 0)
     val b = e.filter(col("vec_id") % 5 === 0)
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_annidx_lc-${spark.sparkContext.applicationId}")
-    graft.TempArtifacts.register(base)
+    val base = Standing.dir(spark, "annidx_lc")
     // build on the snapshot (model trained on A only), then append B
     SimOps.annIndexWrite(spark, base, a)
     SimOps.annIndexAppend(spark, base, b.select(col("vec_id"), col("embedding")))
@@ -555,9 +553,7 @@ class SimilaritySpec extends AnyFunSuite with SharedSpark {
     val tv = EmbedOps.trainedEmbTable(spark, SF).cache()
     val a = tv.filter(col("vec_id") % 5 =!= 0)
     val b = tv.filter(col("vec_id") % 5 === 0)
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_annidx_tlc-${spark.sparkContext.applicationId}")
-    graft.TempArtifacts.register(base)
+    val base = Standing.dir(spark, "annidx_tlc")
     SimOps.annIndexWrite(spark, base, a)
     SimOps.annIndexAppend(spark, base, b.select(col("vec_id"), col("embedding")))
     val (cellsRow, cbRow) = SimOps.annIndexModel(spark, base)
@@ -590,9 +586,7 @@ class SimilaritySpec extends AnyFunSuite with SharedSpark {
   test("ann index drift: zero against its own build set, non-zero for a shifted batch") {
     import org.apache.spark.sql.functions._
     val e = Tables.embeddings(spark, SF)
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_annidx_drift-${spark.sparkContext.applicationId}")
-    graft.TempArtifacts.register(base)
+    val base = Standing.dir(spark, "annidx_drift")
     SimOps.annIndexWrite(spark, base, e)
     // self-drift: the index's own vectors re-assigned to the frozen
     // model land in their own cells with identical per-cell means

@@ -394,9 +394,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toList
 
     // ---- sequential batch lifecycle: search as-of arrival, then append ----
-    val refBase = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_annserve_ref-${spark.sparkContext.applicationId}")
-    TempArtifacts.register(refBase)
+    val refBase = Standing.dir(spark, "annserve_ref")
     SimOps.annIndexWrite(spark, refBase, snapshot)
     val (cells, cb) = SimOps.annIndexModel(spark, refBase)
     def searchRef(vs: Seq[(Long, Array[Float])]) = shot(SimOps.annIndexSearch(
@@ -410,9 +408,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val want2 = searchRef(b2.toSeq); appendRef(b2.toSeq)
 
     // ---- the maintained stream over the same batches ----
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_annserve_m-${spark.sparkContext.applicationId}")
-    TempArtifacts.register(base)
+    val base = Standing.dir(spark, "annserve_m")
     SimOps.annIndexWrite(spark, base, snapshot)
     val gen0 = SimOps.annIndexGen(base)
     val ms = MemoryStream[(Long, Array[Float])]
@@ -665,7 +661,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     assert(synthRec._6 === 1, s"synthetic copy not flagged near-dup: $synthRec")
     assert(synthRec._8 === 0, "near-dup must not be admitted")
     // the lifecycle compacted at least once ⇒ generations advanced
-    assert(DedupOps.bucketedGen(spark, "graft_dedupindex", "g108_shingles") >= 1L)
+    assert(DedupOps.bucketedGen(spark, "dedupindex", "g108_shingles") >= 1L)
 
     // ---- the maintained stream over the same chunks ----
     DedupOps.q122Write(spark, SF) // fresh snapshot artifacts
@@ -1214,8 +1210,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val docs = Tables.documents(spark, SF).select("doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getString(1))).take(18).toSeq
     val batches = Seq(docs.take(6), docs.slice(6, 12), docs.drop(12))
-    val tmpDir = java.nio.file.Files.createTempDirectory("packstate").toFile
-    graft.TempArtifacts.register(tmpDir)
+    val tmpDir = Standing.dir(spark, "packstate")
+    tmpDir.mkdirs()
     def stateFile(n: String) = new java.io.File(tmpDir, n)
     // drive one micro-batch the way packServeResumable's foreachBatch
     // does — packFold, then the atomic state write (driven directly:
@@ -1276,8 +1272,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val docs = Tables.documents(spark, SF).select("doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getString(1))).take(18).toSeq
     val batches = Seq(docs.take(6), docs.slice(6, 12), docs.drop(12))
-    val tmpDir = java.nio.file.Files.createTempDirectory("mmpackstate").toFile
-    graft.TempArtifacts.register(tmpDir)
+    val tmpDir = Standing.dir(spark, "mmpackstate")
+    tmpDir.mkdirs()
     def stateFile(n: String) = new java.io.File(tmpDir, n)
     type MmRow = (Long, Long, String, String, Long, Long, Long)
     // drive one micro-batch the way mmPackServeResumable's foreachBatch
@@ -1334,8 +1330,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val docs = Tables.documents(spark, SF).select("doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getString(1))).take(18).toSeq
     val batches = Seq(docs.take(6), docs.slice(6, 12), docs.drop(12))
-    val tmpDir = java.nio.file.Files.createTempDirectory("eptailstate").toFile
-    graft.TempArtifacts.register(tmpDir)
+    val tmpDir = Standing.dir(spark, "eptailstate")
+    tmpDir.mkdirs()
     def stateFile(n: String) = new java.io.File(tmpDir, n)
     type TailRow = (Long, Long, Long, Long, Long)
     // drive one micro-batch the way epochTailServeResumable's
@@ -1404,8 +1400,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     // the standing REBUILD: the static sequence pack published at gen 1
     // (a dedicated base — the registered q165 artifact must stay
     // pack-exact, appends would break its oracle)
-    val base = java.nio.file.Files.createTempDirectory("graft_packart_serve").toFile
-    graft.TempArtifacts.register(base)
+    val base = Standing.dir(spark, "packart_serve")
     PipelineOps.packWrite(spark, base, PipelineOps.q158(spark, SF))
     type Full = (Long, Long, String, Long, Long, Long, Long)
     def fullKey(r: org.apache.spark.sql.Row): Full =
@@ -1965,8 +1960,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     // directly (the epochTailServeResumable proof shape for the mm
     // seam) — kill after batch 0, resume from the FILE, re-deliver
     // batch 1 byte-identically, neither offset advancing
-    val tmpDir = java.nio.file.Files.createTempDirectory("mmeptail").toFile
-    graft.TempArtifacts.register(tmpDir)
+    val tmpDir = Standing.dir(spark, "mmeptail")
+    tmpDir.mkdirs()
     def stateFile(n: String) = new java.io.File(tmpDir, n)
     def drive(state: StreamOps.PackServeState,
         rankState: StreamOps.PackServeState, f: java.io.File,
