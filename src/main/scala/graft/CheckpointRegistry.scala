@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Ownership registry for localCheckpoint blocks that outlive their
   * operator ([[operators.DedupOps.connectedComponents]]'s final round,
@@ -56,6 +58,19 @@ object CheckpointRegistry {
   private def release(h: Handle): Unit = synchronized {
     live.remove(h.id).foreach(_.foreach(_.unpersist(blocking = false)))
   }
+
+  /** `df.localCheckpoint()` (eager) with its blocks registered — inside
+    * a [[scoped]] block on the same thread, captured by that scope —
+    * returning the checkpointed frame. */
+  def checkpoint(df: DataFrame): DataFrame = {
+    val ck = df.localCheckpoint()
+    blocksOf(ck).foreach(register(_))
+    ck
+  }
+
+  /** The blocks behind a checkpointed frame: its `LogicalRDD` leaf's RDD. */
+  def blocksOf(df: DataFrame): Option[RDD[_]] =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
 
   /** Unpersist EVERY registered block set. Safe to call repeatedly, but
     * only once no consumer will re-execute any registered plan (their

@@ -693,7 +693,7 @@ object BpeOps {
     * around in memory). A production pipeline trains once per corpus
     * snapshot, PUBLISHES the merge table, and every downstream consumer
     * — segmentation (q151), chunking (q157), the serving seams
-    * (segmentServe/chunkServe/packServe), a resumed train
+    * (segmentServe/chunkServe/serve), a resumed train
     * ([[trainFrom]]) — loads the artifact instead of re-training or
     * holding driver state. The artifact is model-sized (≤ rounds rows),
     * so the write/load are driver-cheap; the generation manifest gives

@@ -303,10 +303,7 @@ object DedupOps {
     // an action, and without the checkpoint it would re-run the whole
     // signature+banding pipeline a second time (measured 2× q50/q74).
     // Blocks registered for harness release (the CC ownership pattern).
-    val candCk = cand.localCheckpoint()
-    candCk.queryExecution.analyzed
-      .collectFirst { case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
-      .foreach(r => graft.CheckpointRegistry.register(r))
+    val candCk = graft.CheckpointRegistry.checkpoint(cand)
     val candIds = candCk.select(col("id_a").as("id"))
       .unionAll(candCk.select(col("id_b").as("id")))
     // the DISTINCT id count (cheap — reads checkpoint blocks) picks the
@@ -524,8 +521,6 @@ object DedupOps {
     // round is materialized; the final round's blocks back the returned
     // plan, so they are handed to [[graft.CheckpointRegistry]] for the
     // harness to release after the consuming count/write completes.
-    def blocks(df: DataFrame) = df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
     val edges = pairs
       .unionAll(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .cache()
@@ -535,7 +530,7 @@ object DedupOps {
     // an ever-deeper tree). The eager checkpoint materializes the round
     // in ONE job and truncates lineage to the stored blocks.
     var labels = docs.withColumn("root", col("doc_id")).localCheckpoint()
-    var prevBlocks = blocks(labels)
+    var prevBlocks = graft.CheckpointRegistry.blocksOf(labels)
     var iter = 0
     var converged = false
     while (!converged && iter < 20) {
@@ -552,7 +547,7 @@ object DedupOps {
         .localCheckpoint()
       val changed = next.filter(col("new_root") =!= col("old_root")).count()
       prevBlocks.foreach(_.unpersist(blocking = false))
-      prevBlocks = blocks(next)
+      prevBlocks = graft.CheckpointRegistry.blocksOf(next)
       labels = next.select(col("doc_id"), col("new_root").as("root"))
       converged = changed == 0
       iter += 1
@@ -1519,10 +1514,8 @@ object DedupOps {
   /** Per-batch probe: id-only candidates against the persisted index,
     * checkpointed, then the candidate-pruned verify. */
   private[graft] def q108Probe(s: SparkSession, newSh: DataFrame): DataFrame = {
-    val candCk = q108CandidatesOf(s, newSh).localCheckpoint()
-    candCk.queryExecution.analyzed
-      .collectFirst { case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
-      .foreach(r => graft.CheckpointRegistry.register(r))
+    val candCk = graft.CheckpointRegistry.checkpoint(
+      q108CandidatesOf(s, newSh))
     val dupIds = candCk.select(col("dup_of").as("id")).distinct()
     val nIds = dupIds.count() // reads checkpoint blocks; sizes the prune
     val idxSh = {

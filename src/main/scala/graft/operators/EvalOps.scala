@@ -120,10 +120,7 @@ object EvalOps {
       // (q38 rounds), so −round(score·10⁶) is an order-reversing
       // int64 bijection
       .withColumn("bkey", -round(col("score") * 1e6).cast("long"))
-    val gc = g.localCheckpoint()
-    gc.queryExecution.analyzed
-      .collectFirst { case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
-      .foreach(r => graft.CheckpointRegistry.register(r))
+    val gc = graft.CheckpointRegistry.checkpoint(g)
     val tot = gc.agg(sum(col("p")).as("n_pos"), sum(col("q")).as("n_neg"))
     graft.functions.PrefixSum
       .withRunningSums(gc, "bkey", Nil, Seq("p" -> "cum_tp", "q" -> "cum_fp"))

@@ -71,8 +71,6 @@ object GraphOps {
     * warm-starts from the previous snapshot instead of uniform ranks. */
   def pagerankFrom(ranks0: DataFrame, pairs: DataFrame, docs: DataFrame,
       iters: Int): DataFrame = {
-    def blocks(df: DataFrame) = df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
     val edges = pairs
       .unionAll(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .cache()
@@ -81,7 +79,7 @@ object GraphOps {
     val deg = edges.groupBy(col("id_b")).agg(count(lit(1)).as("deg"))
     var ranks = ranks0.select(col("doc_id"), col("r"))
       .localCheckpoint()
-    var prevBlocks = blocks(ranks)
+    var prevBlocks = graft.CheckpointRegistry.blocksOf(ranks)
     for (_ <- 1 to iters) {
       val shares = ranks
         .join(deg, ranks("doc_id") === deg("id_b"))
@@ -96,7 +94,7 @@ object GraphOps {
             expr(s"($Damping * cin0) div 100")).as("r"))
         .localCheckpoint()
       prevBlocks.foreach(_.unpersist(blocking = false))
-      prevBlocks = blocks(next)
+      prevBlocks = graft.CheckpointRegistry.blocksOf(next)
       ranks = next
     }
     edges.unpersist()
@@ -114,15 +112,12 @@ object GraphOps {
     * `t` and each round's readback is one pruned partition). */
   def pagerankHistory(pairs: DataFrame, docs: DataFrame,
       iters: Int = Iters): DataFrame = {
-    def blocks(df: DataFrame) = df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
     val edges = pairs
       .unionAll(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .cache()
     val deg = edges.groupBy(col("id_b")).agg(count(lit(1)).as("deg"))
-    var ranks = docs.select(col("doc_id"), lit(RankScale).as("r"))
-      .localCheckpoint()
-    blocks(ranks).foreach(r => graft.CheckpointRegistry.register(r))
+    var ranks = graft.CheckpointRegistry.checkpoint(
+      docs.select(col("doc_id"), lit(RankScale).as("r")))
     val rounds = scala.collection.mutable.ArrayBuffer(
       ranks.withColumn("t", lit(0)))
     for (t <- 1 to iters) {
@@ -131,14 +126,12 @@ object GraphOps {
         .select(col("id_b"), expr("r div deg").as("share"))
       val contrib = edges.join(shares, "id_b")
         .groupBy(col("id_a")).agg(sum(col("share")).as("cin"))
-      val next = docs.select(col("doc_id"))
+      val next = graft.CheckpointRegistry.checkpoint(docs.select(col("doc_id"))
         .join(contrib.withColumnRenamed("id_a", "doc_id"), Seq("doc_id"), "left")
         .withColumn("cin0", coalesce(col("cin"), lit(0L)))
         .select(col("doc_id"),
           (lit((100 - Damping) * RankScale / 100) +
-            expr(s"($Damping * cin0) div 100")).as("r"))
-        .localCheckpoint()
-      blocks(next).foreach(r => graft.CheckpointRegistry.register(r))
+            expr(s"($Damping * cin0) div 100")).as("r")))
       rounds += next.withColumn("t", lit(t))
       ranks = next
     }
@@ -621,19 +614,17 @@ object GraphOps {
     * unnormalized teleport vector; each round is [[personalizedStep]]. */
   def pagerankPersonalized(pairs: DataFrame, weights: DataFrame,
       iters: Int = Iters): DataFrame = {
-    def blocks(df: DataFrame) = df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
     val edges = pairs
       .unionAll(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .cache()
     val deg = edges.groupBy(col("id_b")).agg(count(lit(1)).as("deg"))
     val pw = weights.select(col("doc_id"), col("pw")).cache()
     var ranks = pw.select(col("doc_id"), col("pw").as("r")).localCheckpoint()
-    var prevBlocks = blocks(ranks)
+    var prevBlocks = graft.CheckpointRegistry.blocksOf(ranks)
     for (_ <- 1 to iters) {
       val next = personalizedStep(ranks, deg, edges, pw).localCheckpoint()
       prevBlocks.foreach(_.unpersist(blocking = false))
-      prevBlocks = blocks(next)
+      prevBlocks = graft.CheckpointRegistry.blocksOf(next)
       ranks = next
     }
     edges.unpersist()
@@ -653,20 +644,18 @@ object GraphOps {
     * has the per-round state [[pagerankDelta]] needs. */
   def pagerankPersonalizedHistory(pairs: DataFrame, weights: DataFrame,
       iters: Int = Iters): DataFrame = {
-    def blocks(df: DataFrame) = df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
     val edges = pairs
       .unionAll(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .cache()
     val deg = edges.groupBy(col("id_b")).agg(count(lit(1)).as("deg"))
     val pw = weights.select(col("doc_id"), col("pw")).cache()
-    var ranks = pw.select(col("doc_id"), col("pw").as("r")).localCheckpoint()
-    blocks(ranks).foreach(r => graft.CheckpointRegistry.register(r))
+    var ranks = graft.CheckpointRegistry.checkpoint(
+      pw.select(col("doc_id"), col("pw").as("r")))
     val rounds = scala.collection.mutable.ArrayBuffer(
       ranks.withColumn("t", lit(0)))
     for (t <- 1 to iters) {
-      val next = personalizedStep(ranks, deg, edges, pw).localCheckpoint()
-      blocks(next).foreach(r => graft.CheckpointRegistry.register(r))
+      val next = graft.CheckpointRegistry.checkpoint(
+        personalizedStep(ranks, deg, edges, pw))
       rounds += next.withColumn("t", lit(t))
       ranks = next
     }

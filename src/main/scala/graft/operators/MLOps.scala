@@ -496,10 +496,7 @@ object MLOps {
 
   def q176(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val scored = qualityScores(s, dir).localCheckpoint()
-    scored.queryExecution.analyzed
-      .collectFirst { case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
-      .foreach(r => graft.CheckpointRegistry.register(r))
+    val scored = graft.CheckpointRegistry.checkpoint(qualityScores(s, dir))
     val g = scored.agg(count(lit(1)), min(col("score")), max(col("score")),
       min(col("doc_id")), max(col("doc_id"))).head()
     val n = g.getLong(0)

@@ -342,10 +342,7 @@ object PipelineOps {
   def q87(s: SparkSession, dir: String): DataFrame = {
     val corpusSh = q87Shingles(s, dir, benchSide = false)
     val benchSh = q87Shingles(s, dir, benchSide = true)
-    val candCk = q87Candidates(s, dir).localCheckpoint()
-    candCk.queryExecution.analyzed
-      .collectFirst { case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
-      .foreach(r => graft.CheckpointRegistry.register(r))
+    val candCk = graft.CheckpointRegistry.checkpoint(q87Candidates(s, dir))
     def prune(rel: DataFrame, ids: DataFrame): DataFrame = {
       val d = ids.distinct()
       val n = d.count() // reads checkpoint blocks — cheap, sizes the sketch
@@ -1241,7 +1238,7 @@ object PipelineOps {
     * plus every later epoch in full. Because the per-epoch permutation
     * is a pure function of (seed, epoch, doc, chunk), the suffix is
     * computable on a fresh cluster with no loader state beyond the
-    * two-long checkpoint — the packServeResumable rule at the
+    * two-long checkpoint — the [[graft.streaming.StreamOps.ServeState]] rule at the
     * consumption end of the pipeline.
     *
     * Scale shape: [[epochOrdered]]'s one folded PrefixSum scan with the
@@ -1748,7 +1745,7 @@ object PipelineOps {
     * relation `(doc_id, chunk_id, lang, n_units, cum_units, shard)` —
     * ONE definition behind [[q159]]'s batch readout and the
     * serve-vs-rebuild reconciliation (StreamingSpec runs it over
-    * [[graft.streaming.StreamOps.packServe]]'s served shard stream), the
+    * [[graft.streaming.StreamOps.pack]]'s served shard stream), the
     * segmentReadout/chunkReadout rule at manifest level: stream ≡ batch
     * reconciles through the SAME aggregate, not a re-implementation. */
   private[graft] def sequenceManifestOf(pack: DataFrame): DataFrame =
@@ -1784,7 +1781,7 @@ object PipelineOps {
     * keeps reading exactly N's files across concurrent rebuilds; and a
     * loader seek to shard k is ONE partition directory read (partition
     * pruning on the shard key — the manifest's end offsets are the seek
-    * handles). [[graft.streaming.StreamOps.packServe]] is the arrival
+    * handles). [[graft.streaming.StreamOps.pack]] is the arrival
     * seam BETWEEN these rebuild publishes.
     *
     * [[q165]] is the closed loop registered under the oracle: pack
@@ -1881,7 +1878,7 @@ object PipelineOps {
     sequenceManifestOf(packRead(s, packArtifact(s, dir)))
 
   /** The SERVE half of the artifact lifecycle: append a served pack
-    * batch ([[graft.streaming.StreamOps.packServe]]'s sink payload) into
+    * batch ([[graft.streaming.StreamOps.pack]]'s sink payload) into
     * the artifact's CURRENT generation — each row lands inside its
     * shard's partition directory, so partition pruning is preserved
     * verbatim (the annIndexAppend rule applied to the training-data
@@ -1891,7 +1888,7 @@ object PipelineOps {
     * Batch cost ∝ batch size; existing files are never read or moved.
     *
     * At-least-once note: a RE-DELIVERED batch replays byte-identically
-    * (the packFold contract) but an append-mode write lands its rows
+    * (the pack fold contract) but an append-mode write lands its rows
     * twice — the duplicates are ABSORBED at [[packCompactArtifact]]
     * (full-row dropDuplicates is deterministic because re-deliveries
     * are byte-identical), the same place the one-file-per-shard layout
@@ -2076,7 +2073,7 @@ object PipelineOps {
     * an arbitrary `(doc_id, chunk_id, text_chunk)` relation — ONE rule
     * behind [[q173]]'s flags, [[q174]]'s repack membership, and the
     * serve-seam gate ([[graft.streaming.StreamOps]]'s decontaminated
-    * packFold), so the batch build and the arrival path cannot drift. */
+    * pack fold), so the batch build and the arrival path cannot drift. */
   private[graft] def contamCountsOf(chunks: DataFrame,
       benchSh: DataFrame): DataFrame =
     chunks
@@ -3011,7 +3008,7 @@ object PipelineOps {
     * n_units)` for an arbitrary `(doc_id, text)` relation — the q196
     * geometry rules as ONE definition, shared by the batch build
     * ([[multimodalRows]]) and the serve seam
-    * ([[graft.streaming.StreamOps.mmPackFold]]), the chunkReadout rule
+    * ([[graft.streaming.StreamOps.mmPack]]), the chunkReadout rule
     * applied to modality rows: the two paths cannot drift. */
   private[graft] def modalityRowsOf(docs: DataFrame): DataFrame = {
     val bytes = docs
@@ -3224,7 +3221,7 @@ object PipelineOps {
   /** The SERVE half of the multimodal artifact lifecycle (r14 VERDICT
     * #2 — the [[packAppendServed]] treatment for the `mmpack` lineage):
     * append a served multimodal batch
-    * ([[graft.streaming.StreamOps.mmPackServe]]'s sink payload — or its
+    * ([[graft.streaming.StreamOps.mmPack]]'s sink payload — or its
     * gated twin's, which is what a production seam runs) into the
     * artifact's CURRENT generation. Each row lands inside its shard's
     * partition directory, so the q199 partition pruning is preserved
@@ -3232,7 +3229,7 @@ object PipelineOps {
     * or moved. No lang side-channel is needed here — the mmpack schema
     * carries no lang column (modality rows are language-free by
     * construction). At-least-once: a re-delivered batch replays
-    * byte-identically (the mmPackFold contract) and its duplicate
+    * byte-identically (the mmPack fold contract) and its duplicate
     * append rows are absorbed at [[mmCompactArtifact]]. */
   private[graft] def mmAppendServed(s: SparkSession, base: java.io.File,
       served: DataFrame): Unit =
@@ -3551,10 +3548,10 @@ object PipelineOps {
     * consumed stream can never re-rank), and served arrivals append to
     * each epoch's tail under the SAME draw law — rank = \|gen N\| + the
     * q199-rule rank within the arrival set. The arrival pack is exactly
-    * what [[graft.streaming.StreamOps.mmPackFold]] would have served:
+    * what [[graft.streaming.StreamOps.mmPack]] would have served:
     * the q200 arrival docs' text chunks AND their image/audio locator
     * rows, mmKey-ordered, offsets continuing from gen N's end
-    * (StreamingSpec drives a REAL mmPackServe → [[mmAppendServed]] run
+    * (StreamingSpec drives a REAL mmPack serve → [[mmAppendServed]] run
     * and reconciles byte-identity). Epoch 1's prefix permutation is BY
     * CONSTRUCTION the q199 standing ranking (same `mmep:` key string).
     *
@@ -3618,10 +3615,11 @@ object PipelineOps {
   }
 
   /** The mm arrival batch packed at `endOff` — the q200 arrival docs'
-    * text chunks AND modality locator rows under [[mmPackFold]]'s
-    * one-batch law (mmKey order, offsets continuing from the handoff).
+    * text chunks AND modality locator rows under
+    * [[graft.streaming.StreamOps.mmPack]]'s one-batch law (mmKey order,
+    * offsets continuing from the handoff).
     * Exposed so StreamingSpec can reconcile it against a REAL
-    * mmPackServe run. */
+    * mmPack serve run. */
   private[graft] def mmArrivalPack(s: SparkSession, dir: String,
       endOff: DataFrame): DataFrame = {
     val arrd = q114DocsShared(s, dir).select(col("doc_id"))
@@ -3721,7 +3719,7 @@ object PipelineOps {
   // --- 200. epoch continuity over a GROWING artifact (r15 — r13 #7) ----------
   /** The contract a CONTINUOUSLY-FED pretraining job consumes: the q165
     * artifact grows mid-epoch (serve appends —
-    * [[graft.streaming.StreamOps.packServe]] → [[packAppendServed]]) and
+    * [[graft.streaming.StreamOps.pack]] → [[packAppendServed]]) and
     * the running job must NOT re-derive its epoch stream from scratch —
     * re-ranking the prefix would re-order sequences the job already
     * consumed (double-train/silent-skip corruption: the q166 failure
@@ -3748,7 +3746,7 @@ object PipelineOps {
     * from gen N by construction) with doc_id %
     * [[DedupOps.IncrSplitMod]] == 0 arrive between rebuilds, chunk
     * under the shipped tokenizer, and pack at the gen-N end offset —
-    * [[graft.streaming.StreamOps.packFold]]'s law over one batch, so
+    * [[graft.streaming.StreamOps.pack]]'s law over one batch, so
     * the relation is exactly what the serve seam would have appended.
     * FULL oracle: the q158 chain (gen N) ∪ the arrival pack under one
     * per-epoch ROW_NUMBER ordered (is_arrival, okey, doc, chunk).
@@ -3795,9 +3793,9 @@ object PipelineOps {
   /** The arrival-model batch packed at `endOff` — the q200 arrival set
     * (non-member docs, doc_id % [[DedupOps.IncrSplitMod]] == 0) chunked
     * and packed exactly as the serve seam would
-    * ([[graft.streaming.StreamOps.packFold]]'s one-batch law: md5-bkey
+    * ([[graft.streaming.StreamOps.pack]]'s one-batch law: md5-bkey
     * order, offsets continuing from the handoff). Exposed so
-    * PipelineSpec can reconcile it against a REAL packServe run. */
+    * PipelineSpec can reconcile it against a REAL pack serve run. */
   private[graft] def arrivalPack(s: SparkSession, dir: String,
       endOff: DataFrame): DataFrame = {
     // NON-members via anti-join against the memoized build's member set

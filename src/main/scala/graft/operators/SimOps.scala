@@ -633,12 +633,10 @@ object SimOps {
     // The checkpointed codebook is one tiny row; blocks of superseded
     // rounds are released immediately, the final round's are handed to
     // the registry (the CC/q50 ownership pattern).
-    def blocks(df: DataFrame) = df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
     val n = corpus.count()
     val threshold = n * tolPpm / 1000000L
     var cb = pqCodebook(corpus).localCheckpoint()
-    var prevBlocks = blocks(cb)
+    var prevBlocks = graft.CheckpointRegistry.blocksOf(cb)
     var iters = 0
     var converged = false
     var lastChanged = n
@@ -650,7 +648,7 @@ object SimOps {
           "vec_id")
         .filter(col("c0") =!= col("c1")).count()
       prevBlocks.foreach(_.unpersist(blocking = false))
-      prevBlocks = blocks(next)
+      prevBlocks = graft.CheckpointRegistry.blocksOf(next)
       cb = next
       iters += 1
       converged = lastChanged <= threshold
@@ -683,10 +681,8 @@ object SimOps {
     * would otherwise double per round — the [[pqTrain]] lesson), final
     * blocks handed to the registry. */
   private[graft] def lloydCmeans(corpus: DataFrame, rounds: Int): DataFrame = {
-    def blocks(df: DataFrame) = df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
     var cm = cmeansOf(corpus).localCheckpoint()
-    var prevBlocks = blocks(cm)
+    var prevBlocks = graft.CheckpointRegistry.blocksOf(cm)
     for (_ <- 1 to rounds) {
       val fresh = assignToCells(withNorm(corpus), cellsAsRow(cellsOfCmeans(cm)))
         .select(col("cell_id").as("label"),
@@ -699,7 +695,7 @@ object SimOps {
           coalesce(col("c1"), col("c")).as("c"))
         .localCheckpoint()
       prevBlocks.foreach(_.unpersist(blocking = false))
-      prevBlocks = blocks(next)
+      prevBlocks = graft.CheckpointRegistry.blocksOf(next)
       cm = next
     }
     prevBlocks.foreach(r => graft.CheckpointRegistry.register(r))

@@ -1514,11 +1514,8 @@ object TextOps {
     // harness or by a library caller's `scoped {}` — where a bare cache
     // leaked until somebody's clearCache (r5 ADVICE). Two int64-class
     // columns per doc, the documented snapshot size class.
-    val scored = q38(s, dir).select(col("doc_id"), col("score"))
-      .localCheckpoint()
-    scored.queryExecution.analyzed
-      .collectFirst { case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
-      .foreach(r => graft.CheckpointRegistry.register(r))
+    val scored = graft.CheckpointRegistry.checkpoint(
+      q38(s, dir).select(col("doc_id"), col("score")))
     // one fused pass over the snapshot: n for the rank position + the
     // rank search's global stats (r7)
     val g = scored.agg(count(lit(1)), min(col("score")), max(col("score")),
@@ -1932,19 +1929,13 @@ object TextOps {
     // rather than .cache(): three aggregates read ct, and the registry
     // releases the blocks at the op boundary instead of letting them
     // linger until the family-boundary clearCache (r15 ADVICE).
-    val ct = Tables.documents(s, dir)
+    val ct = graft.CheckpointRegistry.checkpoint(Tables.documents(s, dir)
       .repartition(s.sparkContext.defaultParallelism)
       .select(col("doc_id"),
         // the 27th `from` char (space) has no `to` counterpart, so both
         // engines DELETE it (PostgreSQL translate semantics) — the
         // fixture is genuinely delimiter-free, like real CJK text
-        translate(lower(col("text")), CjkFrom + " ", CjkTo).as("ctext"))
-      .localCheckpoint()
-    ct.queryExecution.analyzed
-      .collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }
-      .foreach(r => graft.CheckpointRegistry.register(r))
+        translate(lower(col("text")), CjkFrom + " ", CjkTo).as("ctext")))
     val seg = ct.select(explode(tokens(col("ctext"))).as("tok"))
       .agg(count(lit(1)).as("n_tokens"),
         countDistinct(col("tok")).as("n_vocab"),
@@ -2015,19 +2006,13 @@ object TextOps {
     // token pass + the 7-regex classification executed 3× per call
     // (plan audit: 6 parquet scans; bench 1.00 s → 0.4 s-class). The
     // checkpointed relation is doc-sized (three scalars per doc).
-    val dq = cls
+    val dq = graft.CheckpointRegistry.checkpoint(cls
       .select(col("doc_id"), col("script"),
         explode(tokens(col("utext"))).as("tok"))
       .groupBy(col("doc_id"), col("script"))
       .agg(Num.idivHalfAway(
         sum(length(col("tok")).cast("long")) * lit(1000000L),
-        count(lit(1))).as("q_micros"))
-      .localCheckpoint()
-    dq.queryExecution.analyzed
-      .collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }
-      .foreach(r => graft.CheckpointRegistry.register(r))
+        count(lit(1))).as("q_micros")))
     val sm = dq.groupBy(col("script"))
       .agg(Num.idivHalfAway(sum(col("q_micros")), count(lit(1)))
         .as("mean_micros"))

@@ -372,12 +372,10 @@ object StreamOps {
         // generation directory — a batch answers against the index as
         // of its arrival, never against itself; blocks die with the
         // batch (the admitServeMaintained contract)
-        val res = SimOps.annIndexSearch(SimOps.annIndexVecs(s, base),
-          SimOps.probeCells(SimOps.withNorm(b), cellsRow, SimOps.IdxNProbe),
-          cbRow, k).localCheckpoint()
-        res.queryExecution.analyzed
-          .collectFirst { case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
-          .foreach(r => graft.CheckpointRegistry.register(r))
+        val res = graft.CheckpointRegistry.checkpoint(
+          SimOps.annIndexSearch(SimOps.annIndexVecs(s, base),
+            SimOps.probeCells(SimOps.withNorm(b), cellsRow, SimOps.IdxNProbe),
+            cbRow, k))
         sink(res)
         SimOps.annIndexAppend(s, base, b.select(col("vec_id"), col("embedding")))
         if (SimOps.annIndexFileCount(base) > compactAtFiles)
@@ -505,10 +503,8 @@ object StreamOps {
       val t = batch.select(col("doc_id"), col("source"),
         graft.text.Text.tokens(col("text")).as("toks")).cache()
       try graft.CheckpointRegistry.scoped {
-        val rec = graft.operators.DedupOps.q122ProbeToks(s, t).localCheckpoint()
-        rec.queryExecution.analyzed
-          .collectFirst { case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
-          .foreach(r => graft.CheckpointRegistry.register(r))
+        val rec = graft.CheckpointRegistry.checkpoint(
+          graft.operators.DedupOps.q122ProbeToks(s, t))
         sink(rec)
         graft.operators.DedupOps.admissionMaintain(s, t,
           rec.filter(col("admit") === 1).select(col("doc_id")), compactAtFiles)
@@ -537,10 +533,8 @@ object StreamOps {
       val t = batch.select(col("doc_id"),
         graft.text.Text.tokens(col("text")).as("toks")).cache()
       try graft.CheckpointRegistry.scoped {
-        val res = graft.operators.TextOps.q130Probe(s, t, query).localCheckpoint()
-        res.queryExecution.analyzed
-          .collectFirst { case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd }
-          .foreach(r => graft.CheckpointRegistry.register(r))
+        val res = graft.CheckpointRegistry.checkpoint(
+          graft.operators.TextOps.q130Probe(s, t, query))
         sink(res)
         if (maintain) graft.operators.TextOps.q130Append(s, t)
       } finally t.unpersist(blocking = false)
@@ -659,10 +653,24 @@ object StreamOps {
     * (StreamingSpec pins union-over-batches ≡ batch, incl. an OOV
     * arrival). Per-batch cost: Rounds broadcast-literal replaces over
     * the batch vocabulary + one batch-sized join + the doc-keyed
-    * window. */
-  /** The shared per-batch prelude of [[chunkServe]] and [[packServe]]:
-    * positioned tokens (CACHED — the distinct-vocabulary branch and the
-    * join probe both read them; the segmentServe lifecycle, caller
+    * window. With `gate` (the benchmark shingle set,
+    * [[graft.operators.PipelineOps.benchShingles]]) contaminated chunks
+    * are DROPPED before the sink sees them ([[decontamGate]]; the rest
+    * of the doc still serves — q173's sequence granularity). */
+  def chunkServe(newDocs: DataFrame,
+      merges: Seq[graft.operators.BpeOps.BpeMerge],
+      gate: Option[DataFrame] = None)(sink: DataFrame => Unit)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    newDocs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+      val (toks, mapping) = batchToksAndMapping(batch, merges)
+      try sink(decontamGate(
+        graft.operators.BpeOps.chunkReadout(toks, mapping), gate).chunks)
+      finally toks.unpersist()
+    }
+
+  /** The shared per-batch prelude of [[chunkServe]] and every [[Pack]]
+    * fold: positioned tokens (CACHED — the distinct-vocabulary branch and
+    * the join probe both read them; the segmentServe lifecycle, caller
     * unpersists) + the OOV-correct unit mapping replayed over the
     * batch's own vocabulary. One definition so the serve paths cannot
     * silently diverge on the tokenize/replay rule (r11 review). */
@@ -682,56 +690,215 @@ object StreamOps {
     catch { case t: Throwable => toks.unpersist(); throw t }
   }
 
-  def chunkServe(newDocs: DataFrame,
-      merges: Seq[graft.operators.BpeOps.BpeMerge])(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val (toks, mapping) = batchToksAndMapping(batch, merges)
-      try sink(graft.operators.BpeOps.chunkReadout(toks, mapping))
-      finally toks.unpersist()
+  /** A batch's chunk readout after the optional q173 eval-overlap gate:
+    * `chunks` keeps the readout's rows, `docs` filters any other
+    * doc-keyed rows of the same batch. Both are the identity ungated. */
+  private[StreamOps] final class Gated(val chunks: DataFrame,
+      val docs: DataFrame => DataFrame)
+
+  /** The q173 eval-overlap gate at the arrival seam: a chunk is flagged
+    * when its own token window shares ≥
+    * [[graft.operators.PipelineOps.ContamMinShared]] distinct shingles
+    * with the BROADCAST benchmark set `benchSh` — the SAME
+    * [[graft.operators.PipelineOps.contamCountsOf]] rule the batch build
+    * flags with, so served appends can no longer bypass the gate the
+    * rebuild enforces. Flagged chunks leave `chunks`;
+    * `docs` drops every row of a doc with ≥1 flagged chunk (a doc whose
+    * text overlaps a benchmark item must not smuggle that item's
+    * pixels/samples in through its payload locators). Stateless: the
+    * bench set is static and eval-sized by premise (one broadcast
+    * semi-join per micro-batch; zero stream state). */
+  private def decontamGate(readout: DataFrame, benchSh: Option[DataFrame])
+      : Gated =
+    benchSh.fold(new Gated(readout, identity)) { b =>
+      import graft.operators.PipelineOps
+      val flagged = PipelineOps.contamCountsOf(
+          readout.select(col("doc_id"), col("chunk_id"), col("text_chunk")), b)
+        .filter(col("n_shared") >= PipelineOps.ContamMinShared)
+        .select(col("doc_id"), col("chunk_id"))
+      new Gated(readout.join(flagged, Seq("doc_id", "chunk_id"), "left_anti"),
+        _.join(flagged.select(col("doc_id")).distinct(), Seq("doc_id"),
+          "left_anti"))
     }
 
-  /** The q173 eval-overlap gate applied to a batch's chunk readout:
-    * drop every chunk whose own token window shares ≥
-    * [[graft.operators.PipelineOps.ContamMinShared]] distinct shingles
-    * with the BROADCAST benchmark set — the SAME
-    * [[graft.operators.PipelineOps.contamCountsOf]] rule the batch
-    * build flags with, applied at the arrival seam, so served appends
-    * can no longer bypass the gate the rebuild enforces (r12 VERDICT
-    * #2). Stateless: the bench set is static and eval-sized by premise
-    * (one broadcast semi-join per micro-batch; zero stream state). */
-  private def decontamGate(chunks: DataFrame, benchSh: DataFrame): DataFrame =
-    chunks.join(contamFlaggedKeys(chunks, benchSh),
-      Seq("doc_id", "chunk_id"), "left_anti")
+  /** Driver-side state of a pack-family serve: the global unit offset,
+    * the epoch tail's rank offset when the state is `ranked`, and the
+    * (batchId, base, rankBase) of the most recent batch — the
+    * idempotent-re-delivery key (Structured Streaming only ever
+    * re-delivers the latest uncommitted batch, so the state is BOUNDED,
+    * not a map over the stream's life). The triple lives in ONE volatile
+    * reference: batch executions can land on different micro-batch
+    * threads, and its fields must be read consistently.
+    *
+    * A file-backed state ([[ServeState.resume]]) is persisted by
+    * [[commit]] after every batch the sink consumed: one JSON line,
+    * `{"offset":…,"last_id":…,"last_base":…}`, plus
+    * `"rank_offset":…,"rank_last_base":…` when ranked, written by
+    * write-temp + atomic rename ([[graft.GenManifest.atomicWrite]]) so a
+    * reader or a crash never sees a torn state and the two offsets never
+    * part. A restarted process passes the same file and resumes exactly
+    * where the stream left off:
+    *
+    *  - died AFTER the sink and the state write, BEFORE the stream
+    *    checkpoint commit → the batch is RE-DELIVERED under its original
+    *    batchId, and [[claim]] replays it at its original base and rank
+    *    base, byte-identically (idempotent downstream absorption);
+    *  - died BETWEEN the sink and the state write → the persisted state
+    *    predates the batch, which packs and ranks fresh at the SAME bases
+    *    it originally used — byte-identical again;
+    *  - died after everything committed → the next batch enters at the
+    *    persisted offsets, gapless in units and in ranks.
+    *
+    * The file is keyed by nothing but its path: one file, and one state,
+    * per query lifecycle (starting a second query from the same writer
+    * reuses the captured state and its batchId space — caller error).
+    * Requires the stream to run with a checkpointLocation so re-delivery
+    * keeps batch ids — the standard Structured Streaming recovery
+    * premise. */
+  final class ServeState private (baseOffset: Long, rankBase: Option[Long],
+      lastCommitted: (Long, Long, Long), file: Option[java.io.File]) {
+    private val units = new java.util.concurrent.atomic.AtomicLong(baseOffset)
+    private val ranks = rankBase.map(new java.util.concurrent.atomic.AtomicLong(_))
+    @volatile private var lastRef = lastCommitted
 
-  /** The (doc_id, chunk_id) keys the q173 rule flags in a batch's chunk
-    * readout — factored out of [[decontamGate]] (r15) so the multimodal
-    * gate can ALSO drop a flagged doc's image/audio rows (the payload
-    * belongs to the doc whose text overlapped the benchmark — locators
-    * of a contaminated doc must not train either). */
-  private def contamFlaggedKeys(chunks: DataFrame,
-      benchSh: DataFrame): DataFrame = {
-    import graft.operators.PipelineOps
-    PipelineOps.contamCountsOf(
-      chunks.select(col("doc_id"), col("chunk_id"), col("text_chunk")),
-      benchSh)
-      .filter(col("n_shared") >= PipelineOps.ContamMinShared)
-      .select(col("doc_id"), col("chunk_id"))
+    def offset: Long = units.get()
+    def ranked: Boolean = ranks.isDefined
+    def rankOffset: Long = ranks.getOrElse(
+      throw new IllegalStateException("an unranked ServeState has no rank offset"))
+      .get()
+    def last: (Long, Long, Long) = lastRef
+
+    /** The (base, rankBase) batch `batchId` packs and ranks at: a
+      * re-delivered batch (or a second claim within one batch) gets its
+      * ORIGINAL bases; a fresh batch enters at the current offsets. */
+    def claim(batchId: Long): (Long, Long) = {
+      val (lastId, lastBase, lastRankBase) = lastRef
+      if (batchId == lastId) (lastBase, lastRankBase)
+      else {
+        val b = (units.get(), ranks.fold(0L)(_.get()))
+        lastRef = (batchId, b._1, b._2)
+        b
+      }
+    }
+
+    /** Move an offset to `end` — only after the sink returns (a sink
+      * failure leaves the stream resumable at its base), and never
+      * backwards (a re-delivered old batch must not rewind past fresher
+      * batches). */
+    private[StreamOps] def advance(end: Long): Unit = {
+      units.updateAndGet(cur => math.max(cur, end)); ()
+    }
+    private[StreamOps] def advanceRanks(end: Long): Unit = {
+      ranks.foreach(_.updateAndGet(cur => math.max(cur, end))); ()
+    }
+
+    /** Persist the state to its file; a no-op for an in-memory state. */
+    def commit(): Unit = file.foreach { f =>
+      val (lastId, lastBase, lastRankBase) = lastRef
+      graft.GenManifest.atomicWrite(f,
+        s"""{"offset":${units.get()},"last_id":$lastId,"last_base":$lastBase""" +
+          ranks.fold("")(r =>
+            s""","rank_offset":${r.get()},"rank_last_base":$lastRankBase""") +
+          "}")
+    }
   }
 
-  /** [[chunkServe]] with the eval-overlap gate: contaminated chunks are
-    * DROPPED before the sink ever sees them (the rest of the doc still
-    * serves — q173's sequence granularity at the seam). */
-  def chunkServeDecontam(newDocs: DataFrame,
-      merges: Seq[graft.operators.BpeOps.BpeMerge], benchSh: DataFrame)
-      (sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+  object ServeState {
+    /** An in-memory state entering at unit offset `offset` — the
+      * rebuild→serve handoff: pass the static build's final end_offset
+      * and arrivals continue its shard stream. `ranked` (an [[epochTail]]
+      * fold's state) also counts served ranks, from 0: the tail's rank
+      * prefix is the fold's `nGenPrefix`. */
+    def apply(offset: Long = 0L, ranked: Boolean = false): ServeState =
+      new ServeState(offset, if (ranked) Some(0L) else None,
+        (-1L, offset, 0L), None)
+
+    /** The state persisted in `file`, or [[apply]]`(offset, ranked)` when
+      * the file does not exist yet; [[ServeState.commit]] writes it back.
+      * A ranked state's file carries the rank fields too. A missing field
+      * is a named error, and so is a ranked file read as an unranked
+      * state (its next commit would drop the rank fields). */
+    def resume(file: java.io.File, offset: Long = 0L, ranked: Boolean = false)
+        : ServeState =
+      if (!file.isFile)
+        new ServeState(offset, if (ranked) Some(0L) else None,
+          (-1L, offset, 0L), Some(file))
+      else {
+        val what = if (ranked) "epoch tail state" else "pack state"
+        val txt = new String(java.nio.file.Files.readAllBytes(file.toPath), "UTF-8")
+        val fields = """"(\w+)"\s*:\s*(-?\d+)""".r.findAllMatchIn(txt)
+          .map(m => m.group(1) -> m.group(2).toLong).toMap
+        def field(k: String): Long = fields.getOrElse(k,
+          throw new IllegalStateException(
+            s"$what ${file.getPath}: missing field '$k' in: $txt"))
+        if (!ranked && fields.contains("rank_offset"))
+          throw new IllegalStateException(s"$what ${file.getPath}: has " +
+            s"'rank_offset' (an epoch tail state); resume it ranked: $txt")
+        new ServeState(field("offset"),
+          if (ranked) Some(field("rank_offset")) else None,
+          (field("last_id"), field("last_base"),
+            if (ranked) field("rank_last_base") else 0L),
+          Some(file))
+      }
+  }
+
+  /** One pack-family micro-batch: a [[Pack]] fold ([[pack]], [[mmPack]])
+    * or an [[epochTail]] over one. [[serve]] runs `step` per batch, then
+    * commits the state; StreamingSpec drives `step` itself to replay a
+    * re-delivered batchId or a process death (MemoryStream's happy path
+    * never re-delivers and cannot survive one). */
+  sealed abstract class Fold {
+    /** Whether the fold needs a ranked [[ServeState]] ([[epochTail]]). */
+    def ranked: Boolean
+    def step(batch: DataFrame, state: ServeState, batchId: Long)
+        (sink: DataFrame => Unit): Unit
+  }
+
+  /** Packs a batch's rows — `rowsOf(batch, gated chunk readout)`, each
+    * carrying its `n_units` mass and an int64 `bkey` order key — at the
+    * batch's claimed base: a PrefixSum running total in (bkey, `keys`)
+    * order plus the start-offset shard rule, emitted in `cum_units`
+    * order. `keyed` is the lineage's per-epoch draw key for
+    * [[epochTail]]. */
+  final class Pack private[StreamOps] (
+      merges: Seq[graft.operators.BpeOps.BpeMerge], gate: Option[DataFrame],
+      rowsOf: (DataFrame, Gated) => DataFrame,
+      private[StreamOps] val keys: Seq[String],
+      private[StreamOps] val keyed: (DataFrame, Int) => DataFrame)
+      extends Fold {
+    def ranked: Boolean = false
+    def step(batch: DataFrame, state: ServeState, batchId: Long)
+        (sink: DataFrame => Unit): Unit = {
+      import graft.operators.{BpeOps, PipelineOps}
       val (toks, mapping) = batchToksAndMapping(batch, merges)
-      try sink(decontamGate(
-        graft.operators.BpeOps.chunkReadout(toks, mapping), benchSh))
-      finally toks.unpersist()
+      // cached: the mass total and the sink's PrefixSum plan both read the
+      // row masses — uncached, the merge replay + mapping join + doc
+      // window + groupBy would run twice per batch; built
+      // under the toks guard so a construction failure can't leak either
+      val rows =
+        try rowsOf(batch, decontamGate(BpeOps.chunkReadout(toks, mapping), gate))
+          .cache()
+        catch { case t: Throwable => toks.unpersist(); throw t }
+      try {
+        val (base, _) = state.claim(batchId)
+        val packed = graft.functions.PrefixSum
+          .withRunningSum(rows, "bkey", keys, "n_units", "cum_batch")
+          .select(rows.columns.filter(_ != "bkey").map(col) :+
+            (col("cum_batch") + base).as("cum_units"): _*)
+          .withColumn("shard", expr(
+            s"(cum_units - n_units) div ${PipelineOps.ShardUnitBudget}L"))
+          // deterministic EMIT order: PrefixSum's final window
+          // leaves rows hash-distributed by bin — correct values, arbitrary
+          // order past one post-shuffle partition. The pack order is part
+          // of this op's contract, so sort the batch-sized result by it.
+          .orderBy(col("cum_units"))
+        val total = rows.agg(coalesce(sum(col("n_units")), lit(0L)))
+          .head().getLong(0)
+        sink(packed)
+        state.advance(base + total)
+      } finally { rows.unpersist(); toks.unpersist() }
     }
+  }
 
   /** Streaming SEQUENCE PACKING at the arrival seam — what a loader
     * does between full rebuilds: arriving docs chunk under the shipped
@@ -739,13 +906,11 @@ object StreamOps {
     * [[graft.operators.BpeOps.chunkReadout]]), and their chunks APPEND
     * to the unit-budgeted shard stream where it left off. Within a
     * batch, chunks order deterministically by q158's md5-bkey rule; the
-    * running unit total continues from `baseOffset` + everything packed
-    * so far, so shard ids keep the q158 start-offset budget rule across
-    * batch boundaries (a batch may fill the previous batch's last
-    * partial shard — appending rows to an open shard, never rewriting
-    * emitted ones). `baseOffset` is the rebuild→serve handoff: pass the
-    * static build's final end_offset and arrivals continue its shard
-    * stream.
+    * running unit total continues from the state's offset, so shard ids
+    * keep the q158 start-offset budget rule across batch boundaries (a
+    * batch may fill the previous batch's last partial shard — appending
+    * rows to an open shard, never rewriting emitted ones). Emits
+    * (doc_id, chunk_id, n_tokens, n_units, cum_units, shard).
     *
     * vs the static rebuild (q158): the rebuild globally shuffles ALL
     * chunks into md5-bkey order; the serve path packs arrivals in
@@ -754,537 +919,140 @@ object StreamOps {
     * chunking of the same docs (StreamingSpec reconciles both, plus
     * the per-batch local replay and the budget bound).
     *
-    * At-least-once semantics (r11 review): the fold keys its driver
-    * state by foreachBatch's batchId — a RE-DELIVERED batch (sink
-    * succeeded, checkpoint commit didn't) re-packs at its ORIGINAL base
-    * offset, reproducing the identical rows (an append-only downstream
-    * absorbs them by (doc_id, chunk_id) idempotence) instead of
-    * shifting the shard stream; the global offset only ever advances
-    * past fresh batches. Resuming ACROSS process death needs both
-    * halves of the handoff: `baseOffset` = the last end offset the
-    * downstream committed AND `lastCommitted` = (that batch's id, the
-    * base it packed at) — with it, a re-delivery of the committed batch
-    * replays byte-identically at its original base; without it a fresh
-    * state would treat the re-delivery as new work at a shifted base
-    * (the r11-review corruption case). One writer serves ONE query
-    * lifecycle: starting a second query from the same writer reuses the
-    * captured state and its batchId space — caller error.
+    * With `gate` (the benchmark shingle set) contaminated chunks drop
+    * BEFORE the running offsets are assigned, so the served shard stream
+    * (and any artifact it appends to —
+    * [[graft.operators.PipelineOps.packAppendServed]]) never carries
+    * benchmark-overlapping sequences or their mass. The gate is
+    * deterministic and chunk-local, so every fold guarantee (idempotent
+    * re-delivery at the original base, gapless offsets over what WAS
+    * packed, open-shard append, deterministic emit order) holds verbatim.
     *
-    * Scale shape: zero executor stream state — driver state is three
-    * longs (offset + the last (batchId, base) pair); per batch: the
-    * chunkServe costs + the PrefixSum two-level scan over batch-sized
-    * CACHED chunk masses (computed once, read by the mass total and
-    * the sink's plan). */
-  def packServe(newDocs: DataFrame,
-      merges: Seq[graft.operators.BpeOps.BpeMerge], baseOffset: Long = 0L,
-      lastCommitted: Option[(Long, Long)] = None)
-      (sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val state = new PackServeState(baseOffset, lastCommitted)
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      packFold(batch, merges, state, batchId)(sink)
-    }
-  }
-
-  /** [[packServe]] with the q173 eval-overlap gate INSIDE the fold:
-    * contaminated chunks are dropped BEFORE the batch's running offsets
-    * are assigned, so the served shard stream (and any artifact it
-    * appends to — [[graft.operators.PipelineOps.packAppendServed]])
-    * never carries benchmark-overlapping sequences or their mass. The
-    * gate is deterministic and chunk-local, so every packFold guarantee
-    * (idempotent re-delivery, gapless offsets over what WAS packed,
-    * open-shard append) holds verbatim over the gated stream. */
-  def packServeDecontam(newDocs: DataFrame,
-      merges: Seq[graft.operators.BpeOps.BpeMerge], benchSh: DataFrame,
-      baseOffset: Long = 0L,
-      lastCommitted: Option[(Long, Long)] = None)
-      (sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val state = new PackServeState(baseOffset, lastCommitted)
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      packFold(batch, merges, state, batchId, Some(benchSh))(sink)
-    }
-  }
-
-  /** [[packServe]] with the resume state PERSISTED beside the sink's
-    * commits (r11 VERDICT #7 — cross-process resume was caller-shaped:
-    * the in-process contract was complete, but nothing persisted the
-    * three-long state itself). After every batch the sink has consumed,
-    * the (offset, lastBatchId, lastBase) triple lands in `stateFile`
-    * via write-temp + atomic rename; a restarted process passes the
-    * same file and resumes exactly where the stream left off:
-    *
-    *  - died AFTER the sink's commit and the state write, BEFORE the
-    *    stream checkpoint commit → the batch is RE-DELIVERED under its
-    *    original batchId; the persisted (lastBatchId, lastBase) replays
-    *    it byte-identically at its original base (idempotent downstream
-    *    absorption, the packFold contract);
-    *  - died BETWEEN the sink and the state write → the batch is
-    *    re-delivered AND the persisted state predates it, so it packs
-    *    fresh at the SAME offset it originally packed at (the offset
-    *    only advances in the state write) — byte-identical again;
-    *  - died after everything committed → the next batch enters at the
-    *    persisted offset, gapless.
-    *
-    * The state file is one JSON line, keyed by nothing but its path —
-    * one file per query lifecycle (the one-writer rule [[packServe]]
-    * already documents). Requires the stream to run with a
-    * checkpointLocation so re-delivery keeps batch ids — the standard
-    * Structured Streaming recovery premise. */
-  def packServeResumable(newDocs: DataFrame,
-      merges: Seq[graft.operators.BpeOps.BpeMerge], stateFile: java.io.File)
-      (sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val loaded = loadPackState(stateFile)
-    val state = new PackServeState(loaded.map(_._1).getOrElse(0L),
-      loaded.map(_._2))
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      packFold(batch, merges, state, batchId)(sink)
-      persistPackState(stateFile, state.offset.get(), state.last)
-    }
-  }
-
-  /** Read a persisted pack state: (offset, (lastBatchId, lastBase)).
-    * None when the file does not exist (a fresh stream). */
-  private[graft] def loadPackState(f: java.io.File)
-      : Option[(Long, (Long, Long))] =
-    stateFields(f, "pack state").map(field =>
-      (field("offset"), (field("last_id"), field("last_base"))))
-
-  /** The integer fields of a persisted state file, or None when it does
-    * not exist; a missing field is a named error (`what` + path). */
-  private def stateFields(f: java.io.File, what: String)
-      : Option[String => Long] =
-    if (!f.isFile) None
-    else {
-      val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      Some(k => s""""$k"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(txt) match {
-        case Some(m) => m.group(1).toLong
-        case None => throw new IllegalStateException(
-          s"$what ${f.getPath}: missing field '$k' in: $txt")
-      })
-    }
-
-  /** Persist the pack state atomically ([[graft.GenManifest.atomicWrite]])
-    * — a reader (or a crash) never observes a torn state file. */
-  private[graft] def persistPackState(f: java.io.File, offset: Long,
-      last: (Long, Long)): Unit =
-    graft.GenManifest.atomicWrite(f,
-      s"""{"offset":$offset,"last_id":${last._1},"last_base":${last._2}}""")
-
-  /** Driver-side pack state: the global unit offset plus the (batchId,
-    * base) pair of the most recent batch (the idempotent-re-delivery
-    * key — Structured Streaming only ever re-delivers the latest
-    * uncommitted batch, so the state is BOUNDED, not a map over the
-    * stream's life). The pair lives in ONE volatile reference: batch
-    * executions can land on different micro-batch threads, and the two
-    * fields must be read consistently (r11 review — plain vars had no
-    * happens-before edge between threads). */
-  private[graft] final class PackServeState(baseOffset: Long,
-      lastCommitted: Option[(Long, Long)] = None) {
-    val offset = new java.util.concurrent.atomic.AtomicLong(baseOffset)
-    @volatile var last: (Long, Long) = lastCommitted.getOrElse((-1L, baseOffset))
-  }
-
-  /** One [[packServe]] micro-batch — factored out so StreamingSpec can
-    * drive a re-delivered batchId directly (foreachBatch won't
-    * re-deliver under MemoryStream's in-process happy path). */
-  /** [[packServe]] for the MULTIMODAL stream (r14 — the q196 build at
-    * the arrival seam): each arriving doc batch packs its text chunks
-    * AND its image/audio locator rows under ONE running unit offset.
-    * Text rows price exactly like [[packFold]] (merge replay →
-    * chunkReadout); modality rows come from the SAME geometry builder
-    * as the batch op
-    * ([[graft.operators.PipelineOps.modalityRowsOf]] — one definition,
-    * the two paths cannot drift), and the interleave key is the shared
-    * [[graft.operators.PipelineOps.mmKey]]. Payload bytes never enter
-    * the stream — locators only, the q196 contract. Every packFold
-    * guarantee holds verbatim: idempotent re-delivery at the original
-    * base, gapless offsets over what WAS packed, open-shard append,
-    * deterministic emit order. */
-  def mmPackServe(newDocs: DataFrame,
-      merges: Seq[graft.operators.BpeOps.BpeMerge], baseOffset: Long = 0L,
-      lastCommitted: Option[(Long, Long)] = None)
-      (sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val state = new PackServeState(baseOffset, lastCommitted)
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      mmPackFold(batch, merges, state, batchId)(sink)
-    }
-  }
-
-  /** [[mmPackServe]] with the q173 eval-overlap gate INSIDE the fold
-    * (r14 VERDICT #2 — the 32p treatment for the multimodal seam):
-    * contaminated TEXT chunks drop before the batch's running offsets
-    * are assigned, exactly as [[packServeDecontam]], and additionally
-    * the image/audio locator rows of any doc with ≥1 flagged chunk
-    * drop too — a doc whose text overlaps a benchmark item must not
-    * smuggle that item's pixels/samples into the stream through its
-    * payload locators. The gate is deterministic and batch-local, so
-    * every packFold guarantee (idempotent re-delivery at the original
-    * base, gapless offsets over what WAS packed, open-shard append,
-    * deterministic emit order) holds verbatim over the gated stream —
-    * and arrivals landed via
-    * [[graft.operators.PipelineOps.mmAppendServed]] can no longer
-    * bypass the gate the rebuild enforces. */
-  def mmPackServeDecontam(newDocs: DataFrame,
-      merges: Seq[graft.operators.BpeOps.BpeMerge], benchSh: DataFrame,
-      baseOffset: Long = 0L,
-      lastCommitted: Option[(Long, Long)] = None)
-      (sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val state = new PackServeState(baseOffset, lastCommitted)
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      mmPackFold(batch, merges, state, batchId, Some(benchSh))(sink)
-    }
-  }
-
-  /** [[mmPackServe]] with the resume state PERSISTED beside the sink's
-    * commits — the [[packServeResumable]] (32n) treatment for the
-    * multimodal seam (r15 VERDICT #5: the mm seam had only in-driver
-    * idempotency; a killed mmPackServe could not resume from disk).
-    * Same (offset, lastBatchId, lastBase) triple, same write-temp +
-    * atomic-rename file, same three death-window guarantees — the mm
-    * fold shares [[packFold]]'s offset state machine, so the proof
-    * carries verbatim over the interleaved text+locator rows. */
-  def mmPackServeResumable(newDocs: DataFrame,
-      merges: Seq[graft.operators.BpeOps.BpeMerge], stateFile: java.io.File)
-      (sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val loaded = loadPackState(stateFile)
-    val state = new PackServeState(loaded.map(_._1).getOrElse(0L),
-      loaded.map(_._2))
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      mmPackFold(batch, merges, state, batchId)(sink)
-      persistPackState(stateFile, state.offset.get(), state.last)
-    }
-  }
-
-  private[graft] def mmPackFold(batch: DataFrame,
-      merges: Seq[graft.operators.BpeOps.BpeMerge], state: PackServeState,
-      batchId: Long, gate: Option[DataFrame] = None)
-      (sink: DataFrame => Unit): Unit = {
-    import graft.operators.{BpeOps, PipelineOps}
-    val (toks, mapping) = batchToksAndMapping(batch, merges)
-    val rows =
-      try {
-        val readout = BpeOps.chunkReadout(toks, mapping)
-        // both gate references live inside the ONE cached `rows` plan
-        // below, so the flagged-key subplan executes at most twice
-        // within a single batch-sized materialization — never per action
-        val flagged = gate.map(contamFlaggedKeys(readout, _))
-        val gated = flagged
-          .map(f => readout.join(f, Seq("doc_id", "chunk_id"), "left_anti"))
-          .getOrElse(readout)
-        val txt = gated
-          .select(col("doc_id"), col("chunk_id").as("seq_id"),
-            lit("text").as("modality"),
-            concat(lit("txt://"), col("doc_id"), lit(":"), col("chunk_id"))
-              .as("locator"),
-            col("n_units"))
-        val mm = PipelineOps.modalityRowsOf(
-          batch.select(col("doc_id"), col("text")))
-        val mmGated = flagged
-          .map(f => mm.join(f.select(col("doc_id")).distinct(),
-            Seq("doc_id"), "left_anti"))
-          .getOrElse(mm)
-        txt.unionAll(mmGated)
-          .withColumn("bkey",
-            PipelineOps.mmKey(col("modality"), col("doc_id"), col("seq_id")))
-          .cache()
-      } catch { case t: Throwable => toks.unpersist(); throw t }
-    try {
-      val base = {
-        val (lastId, lastBase) = state.last
-        if (batchId == lastId) lastBase
-        else {
-          val b = state.offset.get()
-          state.last = (batchId, b)
-          b
-        }
-      }
-      val packed = graft.functions.PrefixSum
-        .withRunningSum(rows, "bkey", Seq("modality", "doc_id", "seq_id"),
-          "n_units", "cum_batch")
-        .select(col("doc_id"), col("seq_id"), col("modality"), col("locator"),
-          col("n_units"), (col("cum_batch") + base).as("cum_units"))
-        .withColumn("shard", expr(
-          s"(cum_units - n_units) div ${PipelineOps.ShardUnitBudget}L"))
-        .orderBy(col("cum_units"))
-      val total = rows.agg(coalesce(sum(col("n_units")), lit(0L)))
-        .head().getLong(0)
-      sink(packed)
-      state.offset.updateAndGet(cur => math.max(cur, base + total))
-      ()
-    } finally { rows.unpersist(); toks.unpersist() }
-  }
-
-  /** The q200 epoch TAIL at the arrival seam (r15 — 32t): arriving docs
-    * chunk and pack exactly like [[packServe]] (same fold, same offset
-    * state machine), and each served sequence ALSO gets its per-epoch
-    * tail rank — `seq_rank = nGenPrefix + served-so-far + its q162-law
-    * rank within the batch` — so a running training job can consume
-    * arrivals straight into the open epoch without re-deriving anything
-    * (the q200 contract, streaming). vs the batch op: q200 ranks ALL
-    * arrivals in one okey order; the serve path necessarily appends
-    * batch-by-batch (earlier served ranks are immutable), so the
-    * divergence is ORDER ONLY across batches — a single batch covering
-    * the same arrivals is byte-identical to q200's tail (StreamingSpec
-    * reconciles exactly that, plus cross-batch density and the
-    * within-batch draw law).
-    *
-    * At-least-once: BOTH states (unit offset, rank base) key by batchId
-    * through the same [[PackServeState]] idempotency rule — a
-    * re-delivered batch replays its rows byte-identically at the
-    * original offset AND the original rank base. Scale shape: the
-    * packFold costs + one batch-sized epoch fold (Epochs × batch rows,
-    * never the corpus) + a 1-row count. */
-  def epochTailServe(newDocs: DataFrame,
-      merges: Seq[graft.operators.BpeOps.BpeMerge], nGenPrefix: Long,
-      baseOffset: Long = 0L)
-      (sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val state = new PackServeState(baseOffset)
-    val rankState = new PackServeState(0L)
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      epochTailFold(batch, merges, state, rankState, nGenPrefix, batchId)(sink)
-    }
-  }
-
-  /** One [[epochTailServe]] micro-batch — the packFold plus the epoch
-    * tail ranking, BOTH states keyed by batchId through the
-    * [[PackServeState]] idempotency rule. Factored out so the resumable
-    * wrapper and StreamingSpec's kill-and-resume proof drive the exact
-    * seam the stream wires. */
-  private[graft] def epochTailFold(batch: DataFrame,
-      merges: Seq[graft.operators.BpeOps.BpeMerge], state: PackServeState,
-      rankState: PackServeState, nGenPrefix: Long, batchId: Long)
-      (sink: DataFrame => Unit): Unit = {
-    import graft.operators.PipelineOps
-    packFold(batch, merges, state, batchId) { packed =>
-      val cached = packed.cache()
-      try {
-        val rankBase = {
-          val (lastId, lastBase) = rankState.last
-          if (batchId == lastId) lastBase
-          else {
-            val b = rankState.offset.get()
-            rankState.last = (batchId, b)
-            b
-          }
-        }
-        val thin = cached.select(col("doc_id"), col("chunk_id"),
-          col("shard"))
-        val keyed = (0 until PipelineOps.Epochs)
-          .map(e => PipelineOps.shuffleKeyed(thin, e))
-          .reduce(_ unionAll _)
-        val ranked = PipelineOps.rankEpochsFolded(keyed,
-            Seq("doc_id", "chunk_id"), "arr_rank")
-          .select(col("epoch"),
-            (col("arr_rank") + nGenPrefix + rankBase).as("seq_rank"),
-            col("doc_id"), col("chunk_id"), col("shard"))
-          .orderBy(col("epoch"), col("seq_rank"))
-        val n = cached.count()
-        sink(ranked)
-        rankState.offset.updateAndGet(cur => math.max(cur, rankBase + n))
-        ()
-      } finally cached.unpersist()
-    }
-  }
-
-  /** [[epochTailServe]] with BOTH states persisted beside the sink's
-    * commits — the [[packServeResumable]] (32n) treatment for the epoch
-    * tail, which carries TWO offsets (the pack's unit offset and the
-    * epoch tail's rank base). They land together in ONE atomic
-    * write-temp + rename (a death can never tear them apart), keyed by
-    * the one batchId both fold stages share, so each 32n death window
-    * replays byte-identically:
-    *
-    *  - died after sink + state write, before the stream checkpoint →
-    *    re-delivery under the original batchId replays at the original
-    *    unit offset AND the original rank base;
-    *  - died between sink and state write → the persisted state
-    *    predates the batch, which re-packs and re-ranks fresh at the
-    *    SAME bases it originally used (neither offset advances until
-    *    the state write);
-    *  - died after everything → the next batch enters at both
-    *    persisted offsets, gapless in units and in ranks. */
-  def epochTailServeResumable(newDocs: DataFrame,
-      merges: Seq[graft.operators.BpeOps.BpeMerge], nGenPrefix: Long,
-      stateFile: java.io.File)
-      (sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val loaded = loadEpochTailState(stateFile)
-    val state = new PackServeState(loaded.map(_._1).getOrElse(0L),
-      loaded.map(_._2))
-    val rankState = new PackServeState(loaded.map(_._3).getOrElse(0L),
-      loaded.map(l => (l._2._1, l._4)))
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      epochTailFold(batch, merges, state, rankState, nGenPrefix, batchId)(sink)
-      persistEpochTailState(stateFile, state.offset.get(), state.last,
-        rankState.offset.get(), rankState.last._2)
-    }
-  }
-
-  /** The q207 MULTIMODAL epoch tail at the arrival seam (r16 — the 32t
-    * treatment for the mmpack lineage): arriving docs pack exactly like
-    * [[mmPackServe]] (text chunks + modality locator rows, one running
-    * unit offset), and each served row ALSO gets its per-epoch mm tail
-    * rank — `seq_rank = nGenPrefix + served-so-far + its q199-law rank
-    * within the batch` — so a running MULTIMODAL training job consumes
-    * arrivals straight into the open epoch (the q207 contract,
-    * streaming). Both states (unit offset, rank base) share the
-    * [[PackServeState]] batchId idempotency rule; vs the batch op the
-    * divergence is order-only across batches, and a single batch
-    * covering the same arrivals is byte-identical to q207's tail
-    * (StreamingSpec reconciles exactly that). */
-  def mmEpochTailServe(newDocs: DataFrame,
-      merges: Seq[graft.operators.BpeOps.BpeMerge], nGenPrefix: Long,
-      baseOffset: Long = 0L)
-      (sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val state = new PackServeState(baseOffset)
-    val rankState = new PackServeState(0L)
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      mmEpochTailFold(batch, merges, state, rankState, nGenPrefix,
-        batchId)(sink)
-    }
-  }
-
-  /** One [[mmEpochTailServe]] micro-batch — the mmPackFold plus the mm
-    * epoch tail ranking (the [[epochTailFold]] shape with the mm
-    * interleave key and the `mmep:` draw). */
-  private[graft] def mmEpochTailFold(batch: DataFrame,
-      merges: Seq[graft.operators.BpeOps.BpeMerge], state: PackServeState,
-      rankState: PackServeState, nGenPrefix: Long, batchId: Long)
-      (sink: DataFrame => Unit): Unit = {
-    import graft.operators.PipelineOps
-    mmPackFold(batch, merges, state, batchId) { packed =>
-      val cached = packed.cache()
-      try {
-        val rankBase = {
-          val (lastId, lastBase) = rankState.last
-          if (batchId == lastId) lastBase
-          else {
-            val b = rankState.offset.get()
-            rankState.last = (batchId, b)
-            b
-          }
-        }
-        val thin = cached.select(col("doc_id"), col("seq_id"),
-          col("modality"), col("shard"))
-        val keyed = (0 until PipelineOps.Epochs)
-          .map(e => PipelineOps.mmShuffleKeyed(thin, e))
-          .reduce(_ unionAll _)
-        val ranked = PipelineOps.rankEpochsFolded(keyed,
-            Seq("modality", "doc_id", "seq_id"), "arr_rank")
-          .select(col("epoch"),
-            (col("arr_rank") + nGenPrefix + rankBase).as("seq_rank"),
-            col("doc_id"), col("seq_id"), col("modality"), col("shard"))
-          .orderBy(col("epoch"), col("seq_rank"))
-        val n = cached.count()
-        sink(ranked)
-        rankState.offset.updateAndGet(cur => math.max(cur, rankBase + n))
-        ()
-      } finally cached.unpersist()
-    }
-  }
-
-  /** [[mmEpochTailServe]] with BOTH states persisted — the
-    * [[epochTailServeResumable]] contract verbatim for the mm seam
-    * (one atomic two-state file, the three death windows replay
-    * byte-identically). */
-  def mmEpochTailServeResumable(newDocs: DataFrame,
-      merges: Seq[graft.operators.BpeOps.BpeMerge], nGenPrefix: Long,
-      stateFile: java.io.File)
-      (sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val loaded = loadEpochTailState(stateFile)
-    val state = new PackServeState(loaded.map(_._1).getOrElse(0L),
-      loaded.map(_._2))
-    val rankState = new PackServeState(loaded.map(_._3).getOrElse(0L),
-      loaded.map(l => (l._2._1, l._4)))
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      mmEpochTailFold(batch, merges, state, rankState, nGenPrefix,
-        batchId)(sink)
-      persistEpochTailState(stateFile, state.offset.get(), state.last,
-        rankState.offset.get(), rankState.last._2)
-    }
-  }
-
-  /** Read a persisted epoch-tail state:
-    * (offset, (lastBatchId, lastBase), rankOffset, rankLastBase) —
-    * the two [[PackServeState]]s share one batchId (both stages fold
-    * the same micro-batch). None when the file does not exist. */
-  private[graft] def loadEpochTailState(f: java.io.File)
-      : Option[(Long, (Long, Long), Long, Long)] =
-    stateFields(f, "epoch tail state").map(field =>
-      (field("offset"), (field("last_id"), field("last_base")),
-        field("rank_offset"), field("rank_last_base")))
-
-  /** Persist both epoch-tail states in ONE atomic rename (the
-    * [[persistPackState]] rule — a crash never tears the pair). */
-  private[graft] def persistEpochTailState(f: java.io.File, offset: Long,
-      last: (Long, Long), rankOffset: Long, rankLastBase: Long): Unit =
-    graft.GenManifest.atomicWrite(f,
-      s"""{"offset":$offset,"last_id":${last._1},"last_base":${last._2},""" +
-        s""""rank_offset":$rankOffset,"rank_last_base":$rankLastBase}""")
-
-  private[graft] def packFold(batch: DataFrame,
-      merges: Seq[graft.operators.BpeOps.BpeMerge], state: PackServeState,
-      batchId: Long, gate: Option[DataFrame] = None)
-      (sink: DataFrame => Unit): Unit = {
-    import graft.operators.{BpeOps, PipelineOps}
-    val (toks, mapping) = batchToksAndMapping(batch, merges)
-    // cached: the mass total and the sink's PrefixSum plan both read the
-    // chunk masses — uncached, the merge replay + mapping join + doc
-    // window + groupBy would run twice per batch (r11 review); built
-    // under the toks guard so a construction failure can't leak either
-    val chunks =
-      try {
-        val readout = BpeOps.chunkReadout(toks, mapping)
-        gate.map(decontamGate(readout, _)).getOrElse(readout)
+    * Scale shape: zero executor stream state; per batch: the chunkServe
+    * costs + the PrefixSum two-level scan over batch-sized CACHED chunk
+    * masses (computed once, read by the mass total and the sink's
+    * plan). */
+  def pack(merges: Seq[graft.operators.BpeOps.BpeMerge],
+      gate: Option[DataFrame] = None): Pack =
+    new Pack(merges, gate, (_, g) => g.chunks
         .select(col("doc_id"), col("chunk_id"), col("n_tokens"),
           col("n_units"))
         .withColumn("bkey",
           conv(substring(md5(concat(lit("ord:"), col("doc_id"), lit(":"),
-            col("chunk_id"))), 1, 15), 16, 10).cast("long"))
-        .cache()
-      } catch { case t: Throwable => toks.unpersist(); throw t }
-    try {
-      // re-delivery packs at the batch's ORIGINAL base (idempotent);
-      // fresh batches enter at the current offset
-      val base = {
-        val (lastId, lastBase) = state.last
-        if (batchId == lastId) lastBase
-        else {
-          val b = state.offset.get()
-          state.last = (batchId, b)
-          b
-        }
-      }
-      val packed = graft.functions.PrefixSum
-        .withRunningSum(chunks, "bkey", Seq("doc_id", "chunk_id"),
-          "n_units", "cum_batch")
-        .select(col("doc_id"), col("chunk_id"), col("n_tokens"),
-          col("n_units"), (col("cum_batch") + base).as("cum_units"))
-        .withColumn("shard", expr(
-          s"(cum_units - n_units) div ${PipelineOps.ShardUnitBudget}L"))
-        // deterministic EMIT order (r11 review): PrefixSum's final window
-        // leaves rows hash-distributed by bin — correct values, arbitrary
-        // order past one post-shuffle partition. The pack order is part
-        // of this op's contract, so sort the batch-sized result by it.
-        .orderBy(col("cum_units"))
-      val total = chunks.agg(coalesce(sum(col("n_units")), lit(0L)))
-        .head().getLong(0)
-      sink(packed)
-      // advance only after the sink returns (a sink failure leaves the
-      // stream resumable at `base`), and never backwards (a re-delivered
-      // old batch must not rewind past fresher batches)
-      state.offset.updateAndGet(cur => math.max(cur, base + total))
-      ()
-    } finally { chunks.unpersist(); toks.unpersist() }
+            col("chunk_id"))), 1, 15), 16, 10).cast("long")),
+      Seq("doc_id", "chunk_id"), graft.operators.PipelineOps.shuffleKeyed)
+
+  /** [[pack]] for the MULTIMODAL stream (the q196 build at the
+    * arrival seam): each arriving doc batch packs its text chunks AND its
+    * image/audio locator rows under ONE running unit offset. Text rows
+    * price exactly like [[pack]] (merge replay → chunkReadout); modality
+    * rows come from the SAME geometry builder as the batch op
+    * ([[graft.operators.PipelineOps.modalityRowsOf]] — one definition,
+    * the two paths cannot drift), and the interleave key is the shared
+    * [[graft.operators.PipelineOps.mmKey]]. Payload bytes never enter
+    * the stream — locators only, the q196 contract. Emits (doc_id,
+    * seq_id, modality, locator, n_units, cum_units, shard). With `gate`,
+    * flagged text chunks drop AND so do the locator rows of their docs
+    * ([[decontamGate]]), so arrivals landed via
+    * [[graft.operators.PipelineOps.mmAppendServed]] cannot bypass the
+    * gate the rebuild enforces. Every [[pack]] guarantee holds verbatim
+    * over the interleaved rows. */
+  def mmPack(merges: Seq[graft.operators.BpeOps.BpeMerge],
+      gate: Option[DataFrame] = None): Pack = {
+    import graft.operators.PipelineOps
+    // both gate references live inside the ONE cached rows plan, so the
+    // flagged-key subplan executes at most twice within a single
+    // batch-sized materialization — never per action
+    new Pack(merges, gate, (batch, g) => g.chunks
+        .select(col("doc_id"), col("chunk_id").as("seq_id"),
+          lit("text").as("modality"),
+          concat(lit("txt://"), col("doc_id"), lit(":"), col("chunk_id"))
+            .as("locator"),
+          col("n_units"))
+        .unionAll(g.docs(PipelineOps.modalityRowsOf(
+          batch.select(col("doc_id"), col("text")))))
+        .withColumn("bkey",
+          PipelineOps.mmKey(col("modality"), col("doc_id"), col("seq_id"))),
+      Seq("modality", "doc_id", "seq_id"), PipelineOps.mmShuffleKeyed)
   }
+
+  /** The epoch TAIL at the arrival seam (q200 over [[pack]],
+    * q207 over [[mmPack]]): arriving docs pack exactly like `fold`, and
+    * each served sequence ALSO gets its per-epoch tail rank —
+    * `seq_rank = nGenPrefix + served-so-far + its draw-law rank within
+    * the batch` — so a running training job consumes arrivals straight
+    * into the open epoch without re-deriving anything. Emits (epoch,
+    * seq_rank, the fold's key columns, shard). vs the batch op: q200/q207
+    * rank ALL arrivals in one okey order; the serve path necessarily
+    * appends batch-by-batch (earlier served ranks are immutable), so the
+    * divergence is ORDER ONLY across batches — a single batch covering
+    * the same arrivals is byte-identical to the batch op's tail
+    * (StreamingSpec reconciles exactly that, plus cross-batch density).
+    *
+    * Needs a ranked [[ServeState]]: unit offset and rank base key by the
+    * one batchId through the same [[ServeState.claim]], so a re-delivered
+    * batch replays at the original offset AND rank base. Scale shape: the
+    * pack costs + one batch-sized epoch fold (Epochs × batch rows, never
+    * the corpus) + a 1-row count. */
+  def epochTail(fold: Pack, nGenPrefix: Long): Fold = new Fold {
+    def ranked: Boolean = true
+    def step(batch: DataFrame, state: ServeState, batchId: Long)
+        (sink: DataFrame => Unit): Unit = {
+      import graft.operators.PipelineOps
+      require(state.ranked, "an epoch-tail fold needs a ranked ServeState")
+      fold.step(batch, state, batchId) { packed =>
+        val cached = packed.cache()
+        try {
+          val (_, rankBase) = state.claim(batchId)
+          val ids = packed.columns.filter(fold.keys.contains) :+ "shard"
+          val thin = cached.select(ids.map(col): _*)
+          val keyed = (0 until PipelineOps.Epochs)
+            .map(fold.keyed(thin, _))
+            .reduce(_ unionAll _)
+          val ranked = PipelineOps.rankEpochsFolded(keyed, fold.keys, "arr_rank")
+            .select(col("epoch") +:
+              (col("arr_rank") + nGenPrefix + rankBase).as("seq_rank") +:
+              ids.map(col): _*)
+            .orderBy(col("epoch"), col("seq_rank"))
+          val n = cached.count()
+          sink(ranked)
+          state.advanceRanks(rankBase + n)
+        } finally cached.unpersist()
+      }
+    }
+  }
+
+  /** Serve `fold` over the arriving (doc_id, text) stream: per
+    * micro-batch, `fold.step` under `state`, then `state.commit()`.
+    * At-least-once: the fold keys its state by foreachBatch's batchId, so
+    * a RE-DELIVERED batch (sink succeeded, checkpoint commit didn't)
+    * replays at its ORIGINAL bases, reproducing the identical rows (an
+    * append-only downstream absorbs them by key idempotence) instead of
+    * shifting the stream; offsets only ever advance past fresh batches.
+    * Crash-safe with a file-backed state ([[ServeState.resume]]). A
+    * state that is not ranked exactly when the fold is fails here, before
+    * the query starts. */
+  def serve(newDocs: DataFrame, fold: Fold, state: ServeState)
+      (sink: DataFrame => Unit)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    // checked here, before any batch runs: inside foreachBatch the
+    // mismatch would fail the running query, and an unranked state
+    // would rewrite an epoch tail's state file without its rank fields
+    require(fold.ranked == state.ranked,
+      if (fold.ranked) "an epoch-tail fold needs a ranked ServeState"
+      else "a pack fold needs an unranked ServeState")
+    newDocs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      fold.step(batch, state, batchId)(sink)
+      state.commit()
+    }
+  }
+
+  /** [[serve]] of the gated text [[pack]] from unit offset 0. */
+  def packServeDecontam(newDocs: DataFrame,
+      merges: Seq[graft.operators.BpeOps.BpeMerge], benchSh: DataFrame)
+      (sink: DataFrame => Unit)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    serve(newDocs, pack(merges, Some(benchSh)), ServeState())(sink)
 
   def sessionCounts(events: Dataset[Event]): DataFrame = {
     import events.sparkSession.implicits._

@@ -887,8 +887,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
         ()
       }
       val w = if (gated)
-        StreamOps.chunkServeDecontam(ms.toDF().toDF("doc_id", "text"),
-          merges, benchSh)(sink)
+        StreamOps.chunkServe(ms.toDF().toDF("doc_id", "text"),
+          merges, Some(benchSh))(sink)
       else StreamOps.chunkServe(ms.toDF().toDF("doc_id", "text"),
         merges)(sink)
       val q = w.start()
@@ -953,8 +953,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val ms = MemoryStream[(Long, String)]
     type PackRow = (Long, Long, Long, Long, Long, Long)
     val out = scala.collection.mutable.ArrayBuffer[List[PackRow]]()
-    val q = StreamOps.packServe(
-        ms.toDF().toDF("doc_id", "text"), merges, base) { p =>
+    val q = StreamOps.serve(ms.toDF().toDF("doc_id", "text"),
+        StreamOps.pack(merges), StreamOps.ServeState(base)) { p =>
       out += p.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5))).toList
     }.start()
@@ -1017,29 +1017,29 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     assert(streamedMass === batchMass)
     // AT-LEAST-ONCE: a re-delivered batchId re-packs at its ORIGINAL
     // base — byte-identical rows, offset untouched (foreachBatch's
-    // failure-retry window; driven through packFold directly because
-    // MemoryStream's happy path never re-delivers)
+    // failure-retry window; driven through the fold's step directly
+    // because MemoryStream's happy path never re-delivers)
     import spark.implicits._
-    val st = new StreamOps.PackServeState(500L)
+    val st = StreamOps.ServeState(500L)
     def drive(b: Seq[(Long, String)], id: Long): List[PackRow] = {
       var got: List[PackRow] = null
-      StreamOps.packFold(b.toDF("doc_id", "text"), merges, st, id) { p =>
+      StreamOps.pack(merges).step(b.toDF("doc_id", "text"), st, id) { p =>
         got = p.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4), r.getLong(5))).toList
       }
       got
     }
     val first = drive(docs.take(6), 0L)
-    val offAfterFirst = st.offset.get()
+    val offAfterFirst = st.offset
     assert(drive(docs.take(6), 0L) === first, "re-delivery must be idempotent")
-    assert(st.offset.get() === offAfterFirst, "re-delivery must not advance")
+    assert(st.offset === offAfterFirst, "re-delivery must not advance")
     // a FRESH batch enters at the advanced offset and moves it by
     // exactly its own mass
     assert(first.head._5 - first.head._4 === 500L, "baseOffset handoff")
     assert(offAfterFirst === 500L + first.map(_._4).sum)
     val second = drive(docs.slice(6, 10), 1L)
     assert(second.head._5 - second.head._4 === offAfterFirst)
-    assert(st.offset.get() === offAfterFirst + second.map(_._4).sum)
+    assert(st.offset === offAfterFirst + second.map(_._4).sum)
   }
 
   test("streaming multimodal packing: fold ≡ local geometry replay, interleaved modalities, idempotent re-delivery") {
@@ -1056,13 +1056,13 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       p.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
         r.getString(3), r.getLong(4), r.getLong(5), r.getLong(6))).toList
     val out = scala.collection.mutable.ArrayBuffer[List[MmRow]]()
-    val q = StreamOps.mmPackServe(
-        ms.toDF().toDF("doc_id", "text"), merges, base) { p => out += rowsOf(p) }
+    val q = StreamOps.serve(ms.toDF().toDF("doc_id", "text"),
+        StreamOps.mmPack(merges), StreamOps.ServeState(base)) { p => out += rowsOf(p) }
       .start()
     try batchesIn.foreach { b => ms.addData(b); q.processAllAvailable() }
     finally q.stop()
     assert(out.length === 2)
-    // local replay: text chunks priced by merge replay (the packServe
+    // local replay: text chunks priced by merge replay (the text pack
     // test's rule), image/audio rows by the q196 geometry over byte
     // length, interleaved on md5("mm:modality:doc:seq") with the
     // (modality, doc, seq) tiebreak, carried offset, start-offset shard
@@ -1114,16 +1114,16 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     // no payload bytes in the schema — locator strings only
     assert(all.forall(r => r._4.length < 64))
     // re-delivery at the ORIGINAL base, byte-identical, offset untouched
-    val st = new StreamOps.PackServeState(100L)
+    val st = StreamOps.ServeState(100L)
     var got1: List[MmRow] = null
-    StreamOps.mmPackFold(docs.take(5).toDF("doc_id", "text"), merges, st, 0L) {
+    StreamOps.mmPack(merges).step(docs.take(5).toDF("doc_id", "text"), st, 0L) {
       p => got1 = rowsOf(p) }
-    val off1 = st.offset.get()
+    val off1 = st.offset
     var got2: List[MmRow] = null
-    StreamOps.mmPackFold(docs.take(5).toDF("doc_id", "text"), merges, st, 0L) {
+    StreamOps.mmPack(merges).step(docs.take(5).toDF("doc_id", "text"), st, 0L) {
       p => got2 = rowsOf(p) }
     assert(got2 === got1, "re-delivery must be idempotent")
-    assert(st.offset.get() === off1, "re-delivery must not advance")
+    assert(st.offset === off1, "re-delivery must not advance")
   }
 
   test("serve-vs-rebuild manifest reconciliation: one-batch serve ≡ static q159, multi-batch totals exact") {
@@ -1148,8 +1148,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     def serve(batchesIn: Seq[Seq[(Long, String)]]): List[List[PackRow]] = {
       val ms = MemoryStream[(Long, String)]
       val out = scala.collection.mutable.ArrayBuffer[List[PackRow]]()
-      val q = StreamOps.packServe(
-          ms.toDF().toDF("doc_id", "text"), merges) { p =>
+      val q = StreamOps.serve(ms.toDF().toDF("doc_id", "text"),
+          StreamOps.pack(merges), StreamOps.ServeState()) { p =>
         out += p.collect().map(r => (r.getLong(0), r.getLong(1),
           r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toList
       }.start()
@@ -1206,6 +1206,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     implicit val ctx = spark.sqlContext
     import spark.implicits._
     import graft.operators.BpeOps
+    import StreamOps.ServeState
     val merges = BpeOps.train(spark, SF)._1
     val docs = Tables.documents(spark, SF).select("doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getString(1))).take(18).toSeq
@@ -1213,61 +1214,76 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val tmpDir = Standing.dir(spark, "packstate")
     tmpDir.mkdirs()
     def stateFile(n: String) = new java.io.File(tmpDir, n)
-    // drive one micro-batch the way packServeResumable's foreachBatch
-    // does — packFold, then the atomic state write (driven directly:
+    def text(f: java.io.File) =
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    // drive one micro-batch the way serve's foreachBatch does — the
+    // fold's step, then the state's atomic commit (driven directly:
     // MemoryStream cannot survive a process death, so the replay is
     // emulated at the exact seam the wrapper wires)
-    def drive(state: StreamOps.PackServeState, f: java.io.File,
-        b: Seq[(Long, String)], id: Long)
+    def drive(state: ServeState, b: Seq[(Long, String)], id: Long)
         : List[(Long, Long, Long, Long, Long, Long)] = {
       var got: List[(Long, Long, Long, Long, Long, Long)] = null
-      StreamOps.packFold(b.toDF("doc_id", "text"), merges, state, id) { p =>
+      StreamOps.pack(merges).step(b.toDF("doc_id", "text"), state, id) { p =>
         got = p.collect().map(r => (r.getLong(0), r.getLong(1),
           r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toList
       }
-      StreamOps.persistPackState(f, state.offset.get(), state.last)
+      state.commit()
       got
     }
     // uninterrupted reference stream: three batches, one state
     val fRef = stateFile("ref.json")
-    val stRef = new StreamOps.PackServeState(0L)
+    val stRef = ServeState.resume(fRef)
     val ref = batches.zipWithIndex.map { case (b, i) =>
-      drive(stRef, fRef, b, i.toLong) }
+      drive(stRef, b, i.toLong) }
     // the killed run: batches 0–1, then process death
     val fKill = stateFile("kill.json")
-    assert(StreamOps.loadPackState(fKill).isEmpty, "fresh stream premise")
-    val st1 = new StreamOps.PackServeState(0L)
-    assert(drive(st1, fKill, batches(0), 0L) === ref(0))
-    assert(drive(st1, fKill, batches(1), 1L) === ref(1))
+    assert(!fKill.isFile, "fresh stream premise")
+    val st1 = ServeState.resume(fKill)
+    assert(drive(st1, batches(0), 0L) === ref(0))
+    assert(drive(st1, batches(1), 1L) === ref(1))
     // resume in a "new process": the state is rebuilt from the FILE
-    // (packServeResumable's constructor path), st1 is gone
-    val loaded = StreamOps.loadPackState(fKill).get
-    val st2 = new StreamOps.PackServeState(loaded._1, Some(loaded._2))
+    // (ServeState.resume), st1 is gone
+    val st2 = ServeState.resume(fKill)
+    val loadedOffset = st2.offset
     // worst case first: the last committed batch is re-delivered (died
     // before the stream checkpoint committed) — byte-identical replay
     // at its original base, offset untouched
-    assert(drive(st2, fKill, batches(1), 1L) === ref(1))
-    assert(st2.offset.get() === loaded._1, "re-delivery must not advance")
+    assert(drive(st2, batches(1), 1L) === ref(1))
+    assert(st2.offset === loadedOffset, "re-delivery must not advance")
     // then the fresh batch continues the uninterrupted stream exactly,
     // and the two state files converge byte-for-byte
-    assert(drive(st2, fKill, batches(2), 2L) === ref(2))
-    assert(StreamOps.loadPackState(fKill) === StreamOps.loadPackState(fRef))
+    assert(drive(st2, batches(2), 2L) === ref(2))
+    assert(text(fKill) === text(fRef))
     // the real foreachBatch wiring persists too: a one-batch resumable
     // stream leaves (offset = batch mass, last_id = 0) behind
     val fLive = stateFile("live.json")
     val ms = MemoryStream[(Long, String)]
-    val q = StreamOps.packServeResumable(
-      ms.toDF().toDF("doc_id", "text"), merges, fLive)(_.count()).start()
+    val q = StreamOps.serve(ms.toDF().toDF("doc_id", "text"),
+      StreamOps.pack(merges), ServeState.resume(fLive))(_.count()).start()
     try { ms.addData(batches(0)); q.processAllAvailable() } finally q.stop()
-    val live = StreamOps.loadPackState(fLive).get
-    assert(live._2._1 === 0L)
-    assert(live._1 === ref(0).map(_._4).sum)
+    val live = ServeState.resume(fLive)
+    assert(live.last._1 === 0L)
+    assert(live.offset === ref(0).map(_._4).sum)
+    // the on-disk format is pinned: exactly this line, and a line in
+    // this format loads into the state it names and re-commits unchanged
+    assert(text(fLive) ===
+      s"""{"offset":${ref(0).map(_._4).sum},"last_id":0,"last_base":0}""")
+    val fLit = stateFile("literal.json")
+    val lit = """{"offset":5150,"last_id":7,"last_base":4020}"""
+    graft.GenManifest.atomicWrite(fLit, lit)
+    val fromLit = ServeState.resume(fLit)
+    assert(!fromLit.ranked)
+    assert(fromLit.offset === 5150L && fromLit.last === ((7L, 4020L, 0L)))
+    assert(fromLit.claim(7L) === ((4020L, 0L)), "re-delivery of last_id")
+    fromLit.commit()
+    assert(text(fLit) === lit)
   }
 
   test("mmPackServeResumable: kill-and-resume from the persisted state ≡ the uninterrupted mm stream") {
     implicit val ctx = spark.sqlContext
     import spark.implicits._
     import graft.operators.BpeOps
+    import StreamOps.ServeState
     val merges = BpeOps.train(spark, SF)._1
     val docs = Tables.documents(spark, SF).select("doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getString(1))).take(18).toSeq
@@ -1275,56 +1291,59 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val tmpDir = Standing.dir(spark, "mmpackstate")
     tmpDir.mkdirs()
     def stateFile(n: String) = new java.io.File(tmpDir, n)
+    def text(f: java.io.File) =
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
     type MmRow = (Long, Long, String, String, Long, Long, Long)
-    // drive one micro-batch the way mmPackServeResumable's foreachBatch
-    // does — mmPackFold, then the atomic state write
-    def drive(state: StreamOps.PackServeState, f: java.io.File,
-        b: Seq[(Long, String)], id: Long): List[MmRow] = {
+    // drive one micro-batch the way serve's foreachBatch does — the mm
+    // fold's step, then the state's atomic commit
+    def drive(state: ServeState, b: Seq[(Long, String)], id: Long)
+        : List[MmRow] = {
       var got: List[MmRow] = null
-      StreamOps.mmPackFold(b.toDF("doc_id", "text"), merges, state, id) { p =>
+      StreamOps.mmPack(merges).step(b.toDF("doc_id", "text"), state, id) { p =>
         got = p.collect().map(r => (r.getLong(0), r.getLong(1),
           r.getString(2), r.getString(3), r.getLong(4), r.getLong(5),
           r.getLong(6))).toList
       }
-      StreamOps.persistPackState(f, state.offset.get(), state.last)
+      state.commit()
       got
     }
     val fRef = stateFile("ref.json")
-    val stRef = new StreamOps.PackServeState(0L)
+    val stRef = ServeState.resume(fRef)
     val ref = batches.zipWithIndex.map { case (b, i) =>
-      drive(stRef, fRef, b, i.toLong) }
+      drive(stRef, b, i.toLong) }
     // the mm stream really interleaves: locator rows ride beside text
     assert(ref(0).exists(_._3 != "text"), "test premise: non-text rows")
     // the killed run: batches 0–1, then process death
     val fKill = stateFile("kill.json")
-    assert(StreamOps.loadPackState(fKill).isEmpty, "fresh stream premise")
-    val st1 = new StreamOps.PackServeState(0L)
-    assert(drive(st1, fKill, batches(0), 0L) === ref(0))
-    assert(drive(st1, fKill, batches(1), 1L) === ref(1))
+    assert(!fKill.isFile, "fresh stream premise")
+    val st1 = ServeState.resume(fKill)
+    assert(drive(st1, batches(0), 0L) === ref(0))
+    assert(drive(st1, batches(1), 1L) === ref(1))
     // resume in a "new process" from the FILE
-    val loaded = StreamOps.loadPackState(fKill).get
-    val st2 = new StreamOps.PackServeState(loaded._1, Some(loaded._2))
+    val st2 = ServeState.resume(fKill)
+    val loadedOffset = st2.offset
     // re-delivered last batch → byte-identical at the original base
-    assert(drive(st2, fKill, batches(1), 1L) === ref(1))
-    assert(st2.offset.get() === loaded._1, "re-delivery must not advance")
+    assert(drive(st2, batches(1), 1L) === ref(1))
+    assert(st2.offset === loadedOffset, "re-delivery must not advance")
     // fresh batch continues the uninterrupted stream; states converge
-    assert(drive(st2, fKill, batches(2), 2L) === ref(2))
-    assert(StreamOps.loadPackState(fKill) === StreamOps.loadPackState(fRef))
+    assert(drive(st2, batches(2), 2L) === ref(2))
+    assert(text(fKill) === text(fRef))
     // the real foreachBatch wiring persists too
     val fLive = stateFile("live.json")
     val ms = MemoryStream[(Long, String)]
-    val q = StreamOps.mmPackServeResumable(
-      ms.toDF().toDF("doc_id", "text"), merges, fLive)(_.count()).start()
+    val q = StreamOps.serve(ms.toDF().toDF("doc_id", "text"),
+      StreamOps.mmPack(merges), ServeState.resume(fLive))(_.count()).start()
     try { ms.addData(batches(0)); q.processAllAvailable() } finally q.stop()
-    val live = StreamOps.loadPackState(fLive).get
-    assert(live._2._1 === 0L)
-    assert(live._1 === ref(0).map(_._5).sum)
+    val live = ServeState.resume(fLive)
+    assert(live.last._1 === 0L)
+    assert(live.offset === ref(0).map(_._5).sum)
   }
 
   test("epochTailServeResumable: kill-and-resume replays BOTH states (unit offset AND rank base) byte-identically") {
     implicit val ctx = spark.sqlContext
     import spark.implicits._
     import graft.operators.BpeOps
+    import StreamOps.ServeState
     val merges = BpeOps.train(spark, SF)._1
     val nGen = 1000L
     val docs = Tables.documents(spark, SF).select("doc_id", "text")
@@ -1333,63 +1352,187 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val tmpDir = Standing.dir(spark, "eptailstate")
     tmpDir.mkdirs()
     def stateFile(n: String) = new java.io.File(tmpDir, n)
+    def text(f: java.io.File) =
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    def resume(f: java.io.File) = ServeState.resume(f, ranked = true)
     type TailRow = (Long, Long, Long, Long, Long)
-    // drive one micro-batch the way epochTailServeResumable's
-    // foreachBatch does — epochTailFold, then ONE atomic two-state write
-    def drive(state: StreamOps.PackServeState,
-        rankState: StreamOps.PackServeState, f: java.io.File,
-        b: Seq[(Long, String)], id: Long): List[TailRow] = {
+    // drive one micro-batch the way serve's foreachBatch does — the
+    // epoch-tail fold's step, then ONE atomic two-state commit
+    def drive(state: ServeState, b: Seq[(Long, String)], id: Long)
+        : List[TailRow] = {
       var got: List[TailRow] = null
-      StreamOps.epochTailFold(b.toDF("doc_id", "text"), merges, state,
-          rankState, nGen, id) { p =>
+      StreamOps.epochTail(StreamOps.pack(merges), nGen)
+          .step(b.toDF("doc_id", "text"), state, id) { p =>
         got = p.collect().map(r => (r.getLong(0), r.getLong(1),
           r.getLong(2), r.getLong(3), r.getLong(4))).toList
       }
-      StreamOps.persistEpochTailState(f, state.offset.get(), state.last,
-        rankState.offset.get(), rankState.last._2)
+      state.commit()
       got
     }
     val fRef = stateFile("ref.json")
-    val stRef = new StreamOps.PackServeState(0L)
-    val rkRef = new StreamOps.PackServeState(0L)
+    val stRef = resume(fRef)
     val ref = batches.zipWithIndex.map { case (b, i) =>
-      drive(stRef, rkRef, fRef, b, i.toLong) }
+      drive(stRef, b, i.toLong) }
     // tail ranks start past the gen-N prefix and advance across batches
     assert(ref(0).forall(_._2 > nGen))
     assert(ref(1).map(_._2).min > ref(0).map(_._2).min)
     // the killed run: batches 0–1, then process death
     val fKill = stateFile("kill.json")
-    assert(StreamOps.loadEpochTailState(fKill).isEmpty, "fresh premise")
-    val st1 = new StreamOps.PackServeState(0L)
-    val rk1 = new StreamOps.PackServeState(0L)
-    assert(drive(st1, rk1, fKill, batches(0), 0L) === ref(0))
-    assert(drive(st1, rk1, fKill, batches(1), 1L) === ref(1))
-    // resume in a "new process": BOTH states rebuilt from the ONE file
-    // (epochTailServeResumable's constructor path)
-    val l = StreamOps.loadEpochTailState(fKill).get
-    val st2 = new StreamOps.PackServeState(l._1, Some(l._2))
-    val rk2 = new StreamOps.PackServeState(l._3, Some((l._2._1, l._4)))
+    assert(!fKill.isFile, "fresh premise")
+    val st1 = resume(fKill)
+    assert(drive(st1, batches(0), 0L) === ref(0))
+    assert(drive(st1, batches(1), 1L) === ref(1))
+    // resume in a "new process": BOTH offsets rebuilt from the ONE file
+    // (ServeState.resume)
+    val st2 = resume(fKill)
+    val (loadedOffset, loadedRank) = (st2.offset, st2.rankOffset)
     // re-delivered last batch → byte-identical replay at the original
     // unit offset AND the original rank base; neither offset advances
-    assert(drive(st2, rk2, fKill, batches(1), 1L) === ref(1))
-    assert(st2.offset.get() === l._1, "unit offset must not advance")
-    assert(rk2.offset.get() === l._3, "rank base must not advance")
+    assert(drive(st2, batches(1), 1L) === ref(1))
+    assert(st2.offset === loadedOffset, "unit offset must not advance")
+    assert(st2.rankOffset === loadedRank, "rank base must not advance")
     // fresh batch continues both sequences gapless; states converge
-    assert(drive(st2, rk2, fKill, batches(2), 2L) === ref(2))
-    assert(StreamOps.loadEpochTailState(fKill) ===
-      StreamOps.loadEpochTailState(fRef))
+    assert(drive(st2, batches(2), 2L) === ref(2))
+    assert(text(fKill) === text(fRef))
     // the real foreachBatch wiring persists the pair atomically
     val fLive = stateFile("live.json")
     val ms = MemoryStream[(Long, String)]
-    val q = StreamOps.epochTailServeResumable(
-      ms.toDF().toDF("doc_id", "text"), merges, nGen, fLive)(_.count())
-      .start()
+    val q = StreamOps.serve(ms.toDF().toDF("doc_id", "text"),
+      StreamOps.epochTail(StreamOps.pack(merges), nGen), resume(fLive))(
+      _.count()).start()
     try { ms.addData(batches(0)); q.processAllAvailable() } finally q.stop()
-    val live = StreamOps.loadEpochTailState(fLive).get
-    assert(live._2._1 === 0L)
+    val live = resume(fLive)
+    assert(live.last._1 === 0L)
     // rank offset advanced by the served sequence count (ranks are
     // per-epoch, so the base advances by |batch sequences|, not ×Epochs)
-    assert(live._3 === ref(0).map(r => (r._3, r._4)).distinct.size.toLong)
+    val nSeqs = ref(0).map(r => (r._3, r._4)).distinct.size.toLong
+    assert(live.rankOffset === nSeqs)
+    // the on-disk format is pinned: exactly this five-field line (the
+    // unit offset is the batch's pack mass), and a line in this format
+    // loads into the state it names and re-commits unchanged
+    var mass = 0L
+    StreamOps.pack(merges).step(batches(0).toDF("doc_id", "text"),
+      ServeState(), 0L) { p => mass = p.agg(sum("n_units")).head().getLong(0) }
+    assert(text(fLive) === s"""{"offset":$mass,"last_id":0,"last_base":0,""" +
+      s""""rank_offset":$nSeqs,"rank_last_base":0}""")
+    val fLit = stateFile("literal.json")
+    val lit = """{"offset":5150,"last_id":7,"last_base":4020,""" +
+      """"rank_offset":96,"rank_last_base":80}"""
+    graft.GenManifest.atomicWrite(fLit, lit)
+    val fromLit = resume(fLit)
+    assert(fromLit.offset === 5150L && fromLit.rankOffset === 96L)
+    assert(fromLit.last === ((7L, 4020L, 80L)))
+    assert(fromLit.claim(7L) === ((4020L, 80L)), "re-delivery of last_id")
+    fromLit.commit()
+    assert(text(fLit) === lit)
+    // a pack-state line is no epoch-tail state: the missing field is named
+    val fPack = stateFile("packline.json")
+    graft.GenManifest.atomicWrite(fPack,
+      """{"offset":5150,"last_id":7,"last_base":4020}""")
+    val err = intercept[IllegalStateException](resume(fPack))
+    assert(err.getMessage.contains("epoch tail state") &&
+      err.getMessage.contains("'rank_offset'"))
+    // and an epoch-tail line read unranked is a named error too, so no
+    // commit can rewrite it without its rank fields
+    val errUnranked = intercept[IllegalStateException](ServeState.resume(fLit))
+    assert(errUnranked.getMessage.contains("'rank_offset'"))
+    assert(text(fLit) === lit)
+    // a fold and a state that disagree on ranks fail at serve, before
+    // the query starts — not inside its first micro-batch
+    val msBad = MemoryStream[(Long, String)].toDF().toDF("doc_id", "text")
+    intercept[IllegalArgumentException](StreamOps.serve(msBad,
+      StreamOps.epochTail(StreamOps.pack(merges), nGen), ServeState())(_.count()))
+    intercept[IllegalArgumentException](StreamOps.serve(msBad,
+      StreamOps.pack(merges), ServeState(ranked = true))(_.count()))
+  }
+
+  test("gated epochTail serve: no q173-flagged chunk is ranked; kill-and-resume from the state file replays byte-identically") {
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    import graft.operators.{BpeOps, PipelineOps}
+    import StreamOps.ServeState
+    val merges = BpeOps.train(spark, SF)._1
+    val benchSh = PipelineOps.benchShingles(spark, SF)
+    val nGen = 1000L
+    // the decontamServe split: ordinary docs + a PLANTED arrival quoting
+    // a benchmark doc verbatim
+    val corpus = Tables.documents(spark, SF).select("doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getString(1)))
+    val benchDoc = corpus.filter(_._1 % 97 == 0)
+      .maxBy(_._2.split("\\s+").length)
+    val planted = (900001L, benchDoc._2)
+    val docs = corpus.filterNot(_._1 % 97 == 0).take(24).toSeq
+    val batchesIn = Seq(docs.take(12), docs.drop(12) :+ planted)
+    // the ungated chunks of the split, and the q173 rule replayed over
+    // them locally
+    val all = scala.collection.mutable.ArrayBuffer[(Long, Long, String)]()
+    val msAll = MemoryStream[(Long, String)]
+    val qAll = StreamOps.chunkServe(msAll.toDF().toDF("doc_id", "text"),
+        merges) { out =>
+      all ++= out.select("doc_id", "chunk_id", "text_chunk").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+      ()
+    }.start()
+    try batchesIn.foreach { b => msAll.addData(b); qAll.processAllAvailable() }
+    finally qAll.stop()
+    val re = "[a-z0-9]+".r
+    val k = PipelineOps.ContamShingleK
+    def grams(ts: Seq[String]): Set[String] =
+      if (ts.length < k) Set.empty
+      else ts.sliding(k).map(_.mkString(" ")).toSet
+    val bench = corpus.filter(_._1 % 97 == 0)
+      .flatMap(r => grams(re.findAllIn(r._2.toLowerCase).toSeq)).toSet
+    val flagged = all.filter { case (_, _, tc) =>
+      (grams(tc.split(" ").toSeq) intersect bench).size >=
+        PipelineOps.ContamMinShared
+    }.map(r => (r._1, r._2)).toSet
+    assert(flagged.exists(_._1 === planted._1),
+      "premise: the planted benchmark quote flags at the seam")
+    val kept = all.map(r => (r._1, r._2)).toSet -- flagged
+
+    val tmpDir = Standing.dir(spark, "gatedeptail")
+    tmpDir.mkdirs()
+    def stateFile(n: String) = new java.io.File(tmpDir, n)
+    def text(f: java.io.File) =
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    def resume(f: java.io.File) =
+      ServeState.resume(f, ranked = true)
+    val fold = StreamOps.epochTail(StreamOps.pack(merges, Some(benchSh)), nGen)
+    type TailRow = (Long, Long, Long, Long, Long)
+    def rowsOf(p: org.apache.spark.sql.DataFrame): List[TailRow] =
+      p.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4))).toList
+    // the real stream: gated, file-backed, epoch-tail ranked
+    val fLive = stateFile("live.json")
+    val live = scala.collection.mutable.ArrayBuffer[List[TailRow]]()
+    val ms = MemoryStream[(Long, String)]
+    val q = StreamOps.serve(ms.toDF().toDF("doc_id", "text"), fold,
+      resume(fLive)) { p => live += rowsOf(p) }.start()
+    try batchesIn.foreach { b => ms.addData(b); q.processAllAvailable() }
+    finally q.stop()
+    // no flagged (doc_id, chunk_id) is ranked; every kept one is, in
+    // every epoch, densely from nGen + 1
+    val ranked = live.flatten
+    (0L until PipelineOps.Epochs.toLong).foreach { e =>
+      val inEpoch = ranked.filter(_._1 == e)
+      assert(inEpoch.map(r => (r._3, r._4)).toSet === kept)
+      assert(inEpoch.map(_._2).sorted === (nGen + 1 to nGen + kept.size))
+    }
+    // kill-and-resume at the step the stream runs: batch 0, process
+    // death, resume from the FILE, re-deliver batch 0, then batch 1
+    def drive(state: ServeState, b: Seq[(Long, String)], id: Long)
+        : List[TailRow] = {
+      var got: List[TailRow] = null
+      fold.step(b.toDF("doc_id", "text"), state, id) { p => got = rowsOf(p) }
+      state.commit()
+      got
+    }
+    val fKill = stateFile("kill.json")
+    assert(drive(resume(fKill), batchesIn(0), 0L) === live(0))
+    val st2 = resume(fKill)
+    assert(drive(st2, batchesIn(0), 0L) === live(0))
+    assert(drive(st2, batchesIn(1), 1L) === live(1))
+    assert(text(fKill) === text(fLive))
   }
 
   test("served batches land IN the pack artifact: partitioned append, compaction dedups re-delivery") {
@@ -1418,8 +1561,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     type Served = (Long, Long, Long, Long, Long, Long)
     val servedRows = scala.collection.mutable.ArrayBuffer[Served]()
     val ms = MemoryStream[(Long, String)]
-    val q = StreamOps.packServe(
-        ms.toDF().toDF("doc_id", "text"), merges, endOffset) { p =>
+    val q = StreamOps.serve(ms.toDF().toDF("doc_id", "text"),
+        StreamOps.pack(merges), StreamOps.ServeState(endOffset)) { p =>
       val cached = p.cache() // two consumers: the append job + the probe
       try {
         PipelineOps.packAppendServed(spark, base, cached, langs)
@@ -1456,7 +1599,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     assert(manifestRows(PipelineOps.packRead(spark, base)) ===
       manifestRows(unionDf))
     // AT-LEAST-ONCE: a re-delivered batch appends byte-identical rows
-    // again (packFold replays at the original base) — absorbed at
+    // again (the pack fold replays at the original base) — absorbed at
     // compaction, where the one-file-per-shard layout is also restored
     PipelineOps.packAppendServed(spark, base,
       servedRows.toSeq.map(identity[(Long, Long, Long, Long, Long, Long)])
@@ -1643,8 +1786,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       type PackRow = (Long, Long, Long, Long, Long, Long)
       val served = scala.collection.mutable.ArrayBuffer[PackRow]()
       val ms = MemoryStream[(Long, String)]
-      val q = StreamOps.packServe(
-          ms.toDF().toDF("doc_id", "text"), merges, endOffset) { p =>
+      val q = StreamOps.serve(ms.toDF().toDF("doc_id", "text"),
+          StreamOps.pack(merges), StreamOps.ServeState(endOffset)) { p =>
         val cached = p.cache()
         try {
           PipelineOps.packAppendServed(spark, base, cached, langs)
@@ -1654,7 +1797,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       }.start()
       try { ms.addData(arrDocs); q.processAllAvailable() } finally q.stop()
       // (1) the REAL served rows are byte-identical to the registered
-      // op's arrival model (packFold's one-batch law at the handoff):
+      // op's arrival model (the pack fold's one-batch law at the handoff):
       // the q200 tail IS what the serve seam appended
       val modeled = PipelineOps.arrivalPack(spark, SF,
           gen.agg(max(col("cum_units")).as("base_off")))
@@ -1718,8 +1861,9 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
           r.getLong(4), r.getLong(5), r.getLong(6))
       val served = scala.collection.mutable.ArrayBuffer[MmRow]()
       val ms = MemoryStream[(Long, String)]
-      val q = StreamOps.mmPackServeDecontam(
-          ms.toDF().toDF("doc_id", "text"), merges, benchSh, endOffset) { p =>
+      val q = StreamOps.serve(ms.toDF().toDF("doc_id", "text"),
+          StreamOps.mmPack(merges, Some(benchSh)),
+          StreamOps.ServeState(endOffset)) { p =>
         val cached = p.cache() // two consumers: append job + the probe
         try {
           PipelineOps.mmAppendServed(spark, base, cached)
@@ -1734,8 +1878,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       // same doc's text + image + audio rows
       val served2 = scala.collection.mutable.ArrayBuffer[MmRow]()
       val ms2 = MemoryStream[(Long, String)]
-      val q2 = StreamOps.mmPackServe(
-          ms2.toDF().toDF("doc_id", "text"), merges) { p =>
+      val q2 = StreamOps.serve(ms2.toDF().toDF("doc_id", "text"),
+          StreamOps.mmPack(merges), StreamOps.ServeState()) { p =>
         served2 ++= p.collect().map(mmKeyOf); ()
       }.start()
       try { ms2.addData(Seq(planted)); q2.processAllAvailable() }
@@ -1819,8 +1963,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
           r.getLong(4), r.getLong(5), r.getLong(6))
       val served = scala.collection.mutable.ArrayBuffer[MmRow]()
       val ms = MemoryStream[(Long, String)]
-      val q = StreamOps.mmPackServe(
-          ms.toDF().toDF("doc_id", "text"), merges, endOffset) { p =>
+      val q = StreamOps.serve(ms.toDF().toDF("doc_id", "text"),
+          StreamOps.mmPack(merges), StreamOps.ServeState(endOffset)) { p =>
         val cached = p.cache()
         try {
           PipelineOps.mmAppendServed(spark, base, cached)
@@ -1888,8 +2032,9 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     def run(batches: Seq[Seq[(Long, String)]]): Seq[TailRow] = {
       val got = scala.collection.mutable.ArrayBuffer[TailRow]()
       val ms = MemoryStream[(Long, String)]
-      val q = StreamOps.epochTailServe(
-          ms.toDF().toDF("doc_id", "text"), merges, nGen, endOffset) { out =>
+      val q = StreamOps.serve(ms.toDF().toDF("doc_id", "text"),
+          StreamOps.epochTail(StreamOps.pack(merges), nGen),
+          StreamOps.ServeState(endOffset, ranked = true)) { out =>
         got ++= out.collect().map(key); ()
       }.start()
       try batches.foreach { b => ms.addData(b); q.processAllAvailable() }
@@ -1920,7 +2065,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     // same membership as the batch op. Shard boundaries are excluded
     // deliberately: split batches pack at their own running offsets, so
     // the unit stream's shard cuts differ from the all-at-once pack —
-    // the SAME order-only divergence packServe documents vs q158
+    // the SAME order-only divergence the pack fold documents vs q158
     assert(two.map(t => (t._1, t._3, t._4)).sorted ===
       want.map(t => (t._1, t._3, t._4)).sorted)
   }
@@ -1950,49 +2095,49 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     // ranks, shards, membership, modalities, everything
     val got = scala.collection.mutable.ArrayBuffer[TailRow]()
     val ms = MemoryStream[(Long, String)]
-    val q = StreamOps.mmEpochTailServe(
-        ms.toDF().toDF("doc_id", "text"), merges, nGen, endOffset) { out =>
+    val q = StreamOps.serve(ms.toDF().toDF("doc_id", "text"),
+        StreamOps.epochTail(StreamOps.mmPack(merges), nGen),
+        StreamOps.ServeState(endOffset, ranked = true)) { out =>
       got ++= out.collect().map(key); ()
     }.start()
     try { ms.addData(arrDocs); q.processAllAvailable() } finally q.stop()
     assert(got.toSeq.sorted === want)
-    // the RESUMABLE twin: drive the fold + the atomic two-state write
-    // directly (the epochTailServeResumable proof shape for the mm
-    // seam) — kill after batch 0, resume from the FILE, re-deliver
+    // the RESUMABLE twin: drive the fold's step + the atomic two-state
+    // commit directly (the epochTailServeResumable proof shape for the
+    // mm seam) — kill after batch 0, resume from the FILE, re-deliver
     // batch 1 byte-identically, neither offset advancing
     val tmpDir = Standing.dir(spark, "mmeptail")
     tmpDir.mkdirs()
     def stateFile(n: String) = new java.io.File(tmpDir, n)
-    def drive(state: StreamOps.PackServeState,
-        rankState: StreamOps.PackServeState, f: java.io.File,
-        b: Seq[(Long, String)], id: Long): List[TailRow] = {
+    def text(f: java.io.File) =
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    def resume(f: java.io.File) =
+      StreamOps.ServeState.resume(f, endOffset, ranked = true)
+    def drive(state: StreamOps.ServeState, b: Seq[(Long, String)], id: Long)
+        : List[TailRow] = {
       var out: List[TailRow] = null
-      StreamOps.mmEpochTailFold(b.toDF("doc_id", "text"), merges, state,
-          rankState, nGen, id) { p => out = p.collect().map(key).toList }
-      StreamOps.persistEpochTailState(f, state.offset.get(), state.last,
-        rankState.offset.get(), rankState.last._2)
+      StreamOps.epochTail(StreamOps.mmPack(merges), nGen)
+        .step(b.toDF("doc_id", "text"), state, id) { p =>
+          out = p.collect().map(key).toList }
+      state.commit()
       out
     }
     val (b1, b2) = arrDocs.splitAt(arrDocs.size / 2)
     val fRef = stateFile("ref.json")
-    val stRef = new StreamOps.PackServeState(endOffset)
-    val rkRef = new StreamOps.PackServeState(0L)
+    val stRef = resume(fRef)
     val ref = Seq(b1, b2).zipWithIndex.map { case (b, i) =>
-      drive(stRef, rkRef, fRef, b, i.toLong) }
+      drive(stRef, b, i.toLong) }
     val fKill = stateFile("kill.json")
-    val st1 = new StreamOps.PackServeState(endOffset)
-    val rk1 = new StreamOps.PackServeState(0L)
-    assert(drive(st1, rk1, fKill, b1, 0L) === ref(0))
-    val l = StreamOps.loadEpochTailState(fKill).get
-    val st2 = new StreamOps.PackServeState(l._1, Some(l._2))
-    val rk2 = new StreamOps.PackServeState(l._3, Some((l._2._1, l._4)))
+    val st1 = resume(fKill)
+    assert(drive(st1, b1, 0L) === ref(0))
+    val st2 = resume(fKill)
+    val (loadedOffset, loadedRank) = (st2.offset, st2.rankOffset)
     // re-delivered batch 0 → byte-identical at the original bases
-    assert(drive(st2, rk2, fKill, b1, 0L) === ref(0))
-    assert(st2.offset.get() === l._1 && rk2.offset.get() === l._3,
+    assert(drive(st2, b1, 0L) === ref(0))
+    assert(st2.offset === loadedOffset && st2.rankOffset === loadedRank,
       "re-delivery must advance neither offset")
     // fresh batch continues both sequences; states converge
-    assert(drive(st2, rk2, fKill, b2, 1L) === ref(1))
-    assert(StreamOps.loadEpochTailState(fKill) ===
-      StreamOps.loadEpochTailState(fRef))
+    assert(drive(st2, b2, 1L) === ref(1))
+    assert(text(fKill) === text(fRef))
   }
 }
