@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Op
+import graft.functions.HexKey
 import graft.text.Text
 import graft.text.Text.toksSql
 
@@ -92,8 +93,7 @@ object PipelineOps {
   val MixDefaultRate = 0.125
 
   /** Uniform-in-[0,1e6) sampling key: 60 md5 bits of the doc id mod 10^6. */
-  private def mixU = conv(substring(md5(concat(lit("mix:"), col("doc_id"))), 1, 15),
-    16, 10).cast("long") % 1000000L
+  private def mixU = HexKey("mix:", 15, col("doc_id")) % 1000000L
 
   private def mixRate = MixRates.foldLeft(lit(MixDefaultRate)) {
     case (acc, (l, r)) => when(col("lang") === l, lit(r)).otherwise(acc) }
@@ -145,8 +145,7 @@ object PipelineOps {
     val toks = graft.Tables.documents(s, dir)
       .select(col("doc_id"),
         graft.text.Text.bpeTokenCount(col("text")).as("n_tokens"),
-        conv(substring(md5(concat(lit("ord:"), col("doc_id"))), 1, 15), 16, 10)
-          .cast("long").as("bkey"))
+        HexKey("ord:", 15, col("doc_id")).as("bkey"))
     graft.functions.PrefixSum
       .withRunningSum(toks, "bkey", Seq("doc_id"), "n_tokens", "cum_tokens")
       .select(col("doc_id"), col("n_tokens"), col("cum_tokens"),
@@ -238,8 +237,7 @@ object PipelineOps {
     val mixed = mixSampled(docs)
       .select(col("doc_id"), col("lang"), col("weight"),
         graft.text.Text.bpeTokenCount(col("text")).as("n_tokens"),
-        conv(substring(md5(concat(lit("ord:"), col("doc_id"))), 1, 15), 16, 10)
-          .cast("long").as("bkey"))
+        HexKey("ord:", 15, col("doc_id")).as("bkey"))
     graft.functions.PrefixSum
       .withRunningSum(mixed, "bkey", Seq("doc_id"), "n_tokens", "cum_tokens")
       .select(col("doc_id"), col("lang"), col("weight"), col("n_tokens"),
@@ -414,8 +412,7 @@ object PipelineOps {
   def q96(s: SparkSession, dir: String): DataFrame = {
     val keyed = graft.Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"),
-        conv(substring(md5(concat(lit("quota:"), col("doc_id"))), 1, 15), 16, 10)
-          .cast("long").as("skey"))
+        HexKey("quota:", 15, col("doc_id")).as("skey"))
     keyed
       .withColumn("rk", row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -461,8 +458,7 @@ object PipelineOps {
       .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
       .select(col("doc_id"), (size(col("toks")).cast("long") + 1L).as("w"))
     d.withColumn("hm",
-        conv(substring(md5(concat(lit("wrs:"), col("doc_id"))), 1, 15), 16, 10)
-          .cast("long") % 1000000000000000L)
+        HexKey("wrs:", 15, col("doc_id")) % 1000000000000000L)
       .withColumn("km",
         round((log((col("hm") + lit(0.5)) / lit(1.0e15)) / col("w")) *
           lit(1000000L), 0).cast("long"))
@@ -745,8 +741,7 @@ object PipelineOps {
       .select(col("doc_id"), col("lang"),
         Num.ratio6(lit(1000000L), col("rate_micros")).as("weight"),
         col("ct").as("n_tokens"),
-        conv(substring(md5(concat(lit("ord:"), col("doc_id"))), 1, 15), 16, 10)
-          .cast("long").as("bkey"))
+        HexKey("ord:", 15, col("doc_id")).as("bkey"))
     graft.functions.PrefixSum
       .withRunningSum(sampled, "bkey", Seq("doc_id"), "n_tokens", "cum_tokens")
       .select(col("doc_id"), col("lang"), col("weight"), col("n_tokens"),
@@ -942,6 +937,28 @@ object PipelineOps {
     * packs at zero mass instead of silently dropping from the build. */
   val ShardUnitBudget = 8192L
 
+  /** The PACK LAW, one definition for every unit-budgeted pack (q152's
+    * docs, the three [[Lineage]] builds, q206, the arrival model and the
+    * serve fold): `rows` (each carrying its `n_units` mass) ordered by
+    * the md5 order key `orderPrefix` over `keys` with `keys` as the
+    * tiebreak, `cum_units` = the inclusive PrefixSum running unit total
+    * in that order plus `base` (the unit offset a continuation enters
+    * at; a build starts at 0), and `shard` = the START-offset rule under
+    * [[ShardUnitBudget]]. Emits `rows`' columns + (cum_units, shard).
+    * Every order key is a 15-hex-digit md5 key below 2⁶⁰, so the
+    * PrefixSum span is static (no range-probe job). */
+  private[graft] def packAt(rows: DataFrame, orderPrefix: String,
+      keys: Seq[String], base: Option[Long] = None): DataFrame = {
+    val cum = if (base.isEmpty) "cum_units" else "__cum"
+    val summed = graft.functions.PrefixSum
+      .withRunningSum(
+        rows.withColumn("bkey", HexKey(orderPrefix, 15, keys.map(col): _*)),
+        "bkey", keys, "n_units", cum, span = Some((0L, 1L << 60)))
+    base.fold(summed)(b => summed.withColumn("cum_units", col(cum) + b))
+      .select(rows.columns.map(col) :+ col("cum_units") :+
+        expr(s"(cum_units - n_units) div ${ShardUnitBudget}L").as("shard"): _*)
+  }
+
   /** The subword-packed build, memoized per (family run, dir) — THREE
     * consumers read it (q152's registered readout, q155's manifest,
     * q158's sampled membership), and before the memo q155 re-ran the
@@ -969,15 +986,8 @@ object PipelineOps {
         .join(BpeOps.docUnits(s, dir), Seq("doc_id"), "left")
         .select(col("doc_id"), col("lang"),
           Num.ratio6(lit(1000000L), col("rate_micros")).as("weight"),
-          coalesce(col("n_units"), lit(0L)).as("n_units"),
-          conv(substring(md5(concat(lit("ord:"), col("doc_id"))), 1, 15), 16, 10)
-            .cast("long").as("bkey"))
-      graft.functions.PrefixSum
-        .withRunningSum(sampled, "bkey", Seq("doc_id"), "n_units",
-          "cum_units", span = Some((0L, 1L << 60)))
-        .select(col("doc_id"), col("lang"), col("weight"), col("n_units"),
-          col("cum_units"),
-          expr(s"(cum_units - n_units) div ${ShardUnitBudget}L").as("shard"))
+          coalesce(col("n_units"), lit(0L)).as("n_units"))
+      packAt(sampled, "ord:", Seq("doc_id"))
     }
 
   def q152(s: SparkSession, dir: String): DataFrame =
@@ -1050,16 +1060,9 @@ object PipelineOps {
   private[graft] def sequencePackPlan(s: SparkSession, dir: String): DataFrame = {
       val members = packedBuild(s, dir).select(col("doc_id"), col("lang"))
       val chunks = BpeOps.chunkMasses(s, dir)
-      val seqs = members.join(chunks, Seq("doc_id"))
-        .withColumn("bkey",
-          conv(substring(md5(concat(lit("ord:"), col("doc_id"), lit(":"),
-            col("chunk_id"))), 1, 15), 16, 10).cast("long"))
-      graft.functions.PrefixSum
-        .withRunningSum(seqs, "bkey", Seq("doc_id", "chunk_id"),
-          "n_units", "cum_units", span = Some((0L, 1L << 60)))
-        .select(col("doc_id"), col("chunk_id"), col("lang"), col("n_tokens"),
-          col("n_units"), col("cum_units"),
-          expr(s"(cum_units - n_units) div ${ShardUnitBudget}L").as("shard"))
+      packAt(members.join(chunks, Seq("doc_id")), Lineage.Pack.orderPrefix,
+          Lineage.Pack.keys)
+        .select(Lineage.Pack.columns.map(col): _*)
     }
 
   /** The q158 pack TAIL as spliceable CTEs over the chain scope
@@ -1127,15 +1130,16 @@ object PipelineOps {
   val Epochs = 3
   val EpochSeed = 42L
 
-  /** One epoch's PrefixSum ranking of a keyed pack relation (must carry
-    * `epoch` and `okey`) — the single-epoch ranking behind [[q177]]'s
-    * step fetch (one epoch by contract; the multi-epoch ops rank ALL
-    * epochs in one scan via [[rankEpochsFolded]]). */
-  private def rankEpoch(keyed: DataFrame): DataFrame =
+  /** Epoch `e`'s PrefixSum ranking `seq_rank` of a `lin` pack relation
+    * under the lineage's draw key — the single-epoch ranking behind
+    * [[q199]]'s step fetch (one epoch by contract; the multi-epoch ops
+    * rank ALL epochs in one scan via [[epochRanked]]). The same draw key
+    * and tiebreak as [[epochRanked]], so epoch `e` of both agree. */
+  private def rankEpoch(pack: DataFrame, lin: Lineage, e: Long): DataFrame =
     graft.functions.PrefixSum
-      .withRunningSum(keyed.withColumn("one", lit(1L)), "okey",
-        Seq("doc_id", "chunk_id"), "one", "seq_rank",
-        span = Some((0L, 1L << 60)))
+      .withRunningSum(
+        pack.withColumn("okey", lin.drawKey(e)).withColumn("one", lit(1L)),
+        "okey", lin.keys, "one", "seq_rank", span = Some((0L, 1L << 60)))
 
   /** Rank EVERY epoch of a keyed union in ONE two-level PrefixSum scan
     * (r14 VERDICT #6 — the q179 bucket-folding rule applied to the
@@ -1155,7 +1159,7 @@ object PipelineOps {
     * amortized baseline ratio pays at local scale, and one fewer stage
     * wave per epoch on a cluster. Max folded key = ([[Epochs]]−1)·2⁶⁰ +
     * 2⁶⁰ ≤ 4·2⁶⁰ — inside int64 and inside PrefixSum's span guard. */
-  private[graft] def rankEpochsFolded(keyed: DataFrame, tiebreak: Seq[String],
+  private def rankEpochsFolded(keyed: DataFrame, tiebreak: Seq[String],
       out: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val folded = keyed
@@ -1174,40 +1178,44 @@ object PipelineOps {
       .drop("__fkey", "__one", "__grank", "__off")
   }
 
-  /** The seeded-shuffle key for epoch `e` (the q162 permutation rule). */
-  private[graft] def shuffleKeyed(pack: DataFrame, e: Int): DataFrame =
-    pack
-      .withColumn("epoch", lit(e.toLong))
-      .withColumn("okey",
-        conv(substring(md5(concat(lit(s"ep:$EpochSeed:$e:"), col("doc_id"),
-          lit(":"), col("chunk_id"))), 1, 15), 16, 10).cast("long"))
+  /** Every epoch of a `lin` pack relation ranked under the lineage's
+    * draw key: the [[Epochs]] draw-keyed copies unioned and ranked into
+    * `out` in ONE [[rankEpochsFolded]] scan, tiebroken by the lineage
+    * keys. Behind every standing epoch order ([[epochOrdered]]), the
+    * continuity tails (q200/q207) and the serve seam's epoch tail
+    * ([[graft.streaming.StreamOps.epochTail]]). */
+  private[graft] def epochRanked(pack: DataFrame, lin: Lineage,
+      out: String): DataFrame =
+    rankEpochsFolded((0 until Epochs).map(e => lin.drawKeyed(pack, e))
+      .reduce(_ unionAll _), lin.keys, out)
 
-  /** The per-epoch ordered sequence stream behind [[q162]]/[[q166]]/
-    * [[q193]]/[[q185]]/[[q200]] — MEMOIZED per (family run, dir) (r15):
-    * this is the engine's own documented premise made real ("a real
-    * loader amortizes the ranking across the epoch's steps", q177) —
-    * the epoch order is a pure function of (seed, corpus snapshot), so
-    * its five consumers share one materialization exactly like the pack
-    * build they rank. The memo's localCheckpoint also truncates the
-    * fold's plan, the q191 plan-cost rule. */
-  private[graft] def epochOrdered(s: SparkSession, dir: String): DataFrame =
-    graft.Standing.relation("epoch_ordered", dir)(
-      epochOrderedPlan(s, dir))
+  /** The per-epoch ordered stream of a lineage — `(epoch, seq_rank, the
+    * lineage ids, shard)` over `lin.source`: for the text pack the
+    * stream behind [[q162]]/[[q166]]/[[q193]]/[[q185]]/[[q200]], for
+    * the clean pack [[q178]]'s, for the multimodal pack q207's prefix.
+    * MEMOIZED per (family run, dir) (r15): this is the engine's own
+    * documented premise made real ("a real loader amortizes the ranking
+    * across the epoch's steps", q177) — the epoch order is a pure
+    * function of (seed, corpus snapshot), so its consumers share one
+    * materialization exactly like the pack build they rank. The memo's
+    * localCheckpoint also truncates the fold's plan, the q191 plan-cost
+    * rule. */
+  private[graft] def epochOrdered(s: SparkSession, dir: String,
+      lin: Lineage): DataFrame =
+    graft.Standing.relation(s"${lin.name}_epoch_ordered", dir)(
+      epochOrderedPlan(s, dir, lin))
 
   /** The unmemoized epoch-ordering plan (ScalePlanSpec pins the window
     * discipline here — the memo readout is a LogicalRDD leaf). */
-  private[graft] def epochOrderedPlan(s: SparkSession, dir: String): DataFrame = {
-    val pack = sequencePack(s, dir)
-      .select(col("doc_id"), col("chunk_id"), col("shard"))
-    val keyed = (0 until Epochs).map(e => shuffleKeyed(pack, e))
-      .reduce(_ unionAll _)
-    rankEpochsFolded(keyed, Seq("doc_id", "chunk_id"), "seq_rank")
-      .select(col("epoch"), col("seq_rank"), col("doc_id"), col("chunk_id"),
-        col("shard"))
+  private[graft] def epochOrderedPlan(s: SparkSession, dir: String,
+      lin: Lineage): DataFrame = {
+    val ids = (lin.ids :+ "shard").map(col)
+    epochRanked(lin.source(s, dir).select(ids: _*), lin, "seq_rank")
+      .select(col("epoch") +: col("seq_rank") +: ids: _*)
   }
 
   def q162(s: SparkSession, dir: String): DataFrame =
-    epochOrdered(s, dir).orderBy(col("epoch"), col("seq_rank"))
+    epochOrdered(s, dir, Lineage.Pack).orderBy(col("epoch"), col("seq_rank"))
 
   /** The [[q162]] SELECT body without the final ORDER BY — [[q162Sql]]
     * appends it; [[q166Sql]] wraps the body in its resume predicate. */
@@ -1256,7 +1264,7 @@ object PipelineOps {
     // be the full epoch's rank, which the memo carries by construction;
     // epochs before the checkpoint drop at the filter, and the memoized
     // scan is the same one every other loader readout consumes
-    epochOrdered(s, dir)
+    epochOrdered(s, dir, Lineage.Pack)
       .filter(col("epoch") > ResumeEpoch ||
         (col("epoch") === ResumeEpoch && col("seq_rank") > ResumeRank))
       .select(col("epoch"), col("seq_rank"), col("doc_id"), col("chunk_id"),
@@ -1301,7 +1309,7 @@ object PipelineOps {
     * so PipelineSpec can quantify over all W workers. */
   private[graft] def workerSlice(s: SparkSession, dir: String, workers: Long,
       w: Long): DataFrame =
-    epochOrdered(s, dir)
+    epochOrdered(s, dir, Lineage.Pack)
       .filter((col("seq_rank") - 1) % workers === w)
       .withColumn("worker_step",
         expr(s"(seq_rank - 1 - $w) div ${workers}L + 1L"))
@@ -1360,10 +1368,10 @@ object PipelineOps {
       .withColumn("epoch", lit(0L))
       .withColumn("okey",
         (lit(1000000L) - col("q_micros")) * lit(1099511627776L) +
-          conv(substring(md5(concat(lit("cur:"), col("doc_id"), lit(":"),
-            col("chunk_id"))), 1, 10), 16, 10).cast("long"))
+          HexKey("cur:", 10, col("doc_id"), col("chunk_id")))
       .drop("q_micros")
-    val keyed = (e0 +: (1 until Epochs).map(e => shuffleKeyed(pack, e)).toList)
+    val keyed = (e0 +: (1 until Epochs)
+        .map(e => Lineage.Pack.drawKeyed(pack, e)).toList)
       .reduce(_ unionAll _)
     rankEpochsFolded(keyed, Seq("doc_id", "chunk_id"), "seq_rank")
       .select(col("epoch"), col("seq_rank"), col("doc_id"), col("chunk_id"),
@@ -1438,8 +1446,7 @@ object PipelineOps {
   val DsirTopN = 100
 
   private def dsirBucket(f: Column, m: Int): Column =
-    conv(substring(md5(concat(lit("dsir:"), f)), 1, 15), 16, 10)
-      .cast("long") % m
+    HexKey("dsir:", 15, f) % m
 
   def q121(s: SparkSession, dir: String): DataFrame =
     q121Of(graft.Tables.documents(s, dir), DsirBuckets, DsirTopN)
@@ -1672,8 +1679,7 @@ object PipelineOps {
     * reconciliation is maintained by construction, not by copy
     * (r11 review). */
   private def sidCol: Column =
-    conv(substring(md5(concat(lit("sid:"), col("doc_id"))), 1, 15), 16, 10)
-      .cast("long") % 1099511627776L
+    HexKey("sid:", 15, col("doc_id")) % 1099511627776L
 
   /** SQL twin of [[sidCol]]. */
   private val sidSql: String =
@@ -1794,158 +1800,229 @@ object PipelineOps {
     * pack-sized shuffle at write (repartition on shard → exactly one
     * file per shard — the bucketed-write rule), then manifest = one
     * map-side-combined groupBy over the artifact scan. */
-  /** `name` keys the LINEAGE: the shipped build publishes under "pack";
-    * the q174 decontaminated migration publishes its generations under
-    * "packclean" beside it (one artifact base, two manifest lines — a
-    * reader pins a lineage + generation pair). */
-  private[graft] def packDir(base: java.io.File, gen: Long,
-      name: String = "pack"): java.io.File =
-    new java.io.File(base, s"${name}_g$gen")
+  /** A pack LINEAGE: the data that tells apart the three packs a loader
+    * reads — the text sequence pack (`pack`, q158/q165), its
+    * decontaminated repack (`packclean`, q174, published beside the
+    * shipped build: one artifact base, two manifest lines — a reader
+    * pins a lineage + generation pair) and the multimodal pack
+    * (`mmpack`, q196/q197). The pack law ([[packAt]]), the epoch ranks
+    * ([[epochRanked]], [[rankEpoch]]), the arrival model
+    * ([[arrivalPack]]), the serve fold
+    * ([[graft.streaming.StreamOps.Pack]]) and the artifact verbs below
+    * serve all three from it:
+    *
+    *  - `name`: the artifact lineage — generation g lives in
+    *    `<name>_g<g>`, the manifest stored with it in `<name>mf_g<g>`,
+    *    both published under the one [[graft.GenManifest]] line `name`
+    *    (the layout the `graftpack` table reads);
+    *  - `columns`: the persisted column order;
+    *  - `keys`: the row key in key order — the parts of the order and
+    *    draw keys and the rank tiebreak;
+    *  - `orderPrefix`: the md5 order-key prefix the pack law sorts by;
+    *  - `drawPrefix`: the per-epoch draw-key prefix (seed and epoch
+    *    follow it);
+    *  - `manifestOf`: the manifest aggregate persisted with every
+    *    generation;
+    *  - `rowsOf(chunks, docs)`: the unpacked rows of arriving docs, from
+    *    their chunk masses and their `(doc_id, text)`;
+    *  - `landed(served, langs)`: the projection a served batch goes
+    *    through before it is appended;
+    *  - `source(s, dir)`: the relation the standing epoch order ranks. */
+  private[graft] final class Lineage private (val name: String,
+      val columns: Seq[String], val keys: Seq[String],
+      val orderPrefix: String, drawPrefix: String,
+      manifestOf: DataFrame => DataFrame,
+      val rowsOf: (DataFrame, DataFrame) => DataFrame,
+      landed: (DataFrame, Option[DataFrame]) => DataFrame,
+      private[PipelineOps] val source: (SparkSession, String) => DataFrame) {
+    /** The key columns in persisted column order. */
+    def ids: Seq[String] = columns.filter(keys.contains)
 
-  /** Publish `pack` as the next generation of `name` at `base` (atomic
-    * manifest rename; aged-out generations GC'd). Returns the published
-    * gen. */
-  private[graft] def packWrite(s: SparkSession, base: java.io.File,
-      pack: DataFrame, name: String = "pack",
-      manifestOf: DataFrame => DataFrame = sequenceManifestOf): Long = {
-    val next =
-      graft.GenManifest.read(base, name).map(_.current).getOrElse(0L) + 1
-    pack.repartition(col("shard"))
-      .write.partitionBy("shard")
-      .parquet(packDir(base, next, name).getAbsolutePath)
-    // persist the MANIFEST beside the data (r13 — q190's audit seam),
-    // computed from the IN-MEMORY relation, not a read-back of the
-    // files just written: a write-time corruption (bit flip, partial
-    // row group) must NOT notarize itself into the stored manifest —
-    // the first audit catches it instead (r13 review). Also saves one
-    // full artifact scan per publish. `manifestOf` selects the
-    // manifest AGGREGATE for the lineage's schema (sequence packs use
-    // [[sequenceManifestOf]]; the multimodal pack its [[mmManifestOf]]).
-    manifestOf(pack)
-      .write.parquet(packDir(base, next, name + "mf").getAbsolutePath)
-    graft.GenManifest.publish(base, name, next)
-      .foreach { g =>
-        graft.GenManifest.rmTree(packDir(base, g, name))
-        graft.GenManifest.rmTree(packDir(base, g, name + "mf"))
-      }
-    next
+    /** Epoch `e`'s seeded-shuffle draw key (the q162 permutation rule). */
+    def drawKey(e: Long): Column =
+      HexKey(s"$drawPrefix$EpochSeed:$e:", 15, keys.map(col): _*)
+
+    /** `pack` with `epoch` = e and its draw key `okey`. */
+    def drawKeyed(pack: DataFrame, e: Long): DataFrame =
+      pack.withColumn("epoch", lit(e)).withColumn("okey", drawKey(e))
+
+    /** Generation `gen`'s data directory under `base`. */
+    def dir(base: java.io.File, gen: Long): java.io.File =
+      new java.io.File(base, s"${name}_g$gen")
+
+    private def manifestDir(base: java.io.File, gen: Long): java.io.File =
+      new java.io.File(base, s"${name}mf_g$gen")
+
+    /** Write `pack` as generation `gen` (repartition on shard → one file
+      * per shard, the bucketed-write rule) with its manifest beside it,
+      * publish it (atomic manifest rename) and GC the aged-out
+      * generations. The stored manifest is computed from the IN-MEMORY
+      * relation, not a read-back of the files just written: a
+      * write-time corruption (bit flip, partial row group) must NOT
+      * notarize itself into the stored manifest — the first audit
+      * catches it instead (r13 review). Also saves one full artifact
+      * scan per publish. */
+    private def publish(base: java.io.File, pack: DataFrame, gen: Long,
+        expectCurrent: Option[Long]): Unit = {
+      pack.repartition(col("shard"))
+        .write.partitionBy("shard")
+        .parquet(dir(base, gen).getAbsolutePath)
+      manifestOf(pack).write.parquet(manifestDir(base, gen).getAbsolutePath)
+      graft.GenManifest.publish(base, name, gen,
+          expectCurrent = expectCurrent)
+        .foreach { g =>
+          graft.GenManifest.rmTree(dir(base, g))
+          graft.GenManifest.rmTree(manifestDir(base, g))
+        }
+    }
+
+    /** Publish `pack` as the next generation at `base`. Returns the
+      * published gen. */
+    def write(base: java.io.File, pack: DataFrame): Long = {
+      val next =
+        graft.GenManifest.read(base, name).map(_.current).getOrElse(0L) + 1
+      publish(base, pack, next, None)
+      next
+    }
+
+    /** The artifact at generation `gen` (default: the CURRENT one, resolved
+      * here), read THROUGH the [[graft.sources.GraftPackDataSource]]
+      * table (r14) — the generation is pinned so a concurrent publish
+      * between `current()` and the scan cannot retarget the read; the
+      * scan below it is Spark's own ParquetScan (pruning/pushdown/
+      * vectorization unchanged — PipelineSpec re-pins PartitionFilters
+      * on this path). Shard is restored to int64 (partition-column
+      * inference narrows it) and the persisted column order restored. */
+    def read(s: SparkSession, base: java.io.File,
+        gen: Option[Long] = None): DataFrame =
+      s.read.format("graftpack")
+        .option("base", base.getAbsolutePath)
+        .option("lineage", name)
+        .option("generation",
+          gen.getOrElse(graft.GenManifest.current(base, name)))
+        .load()
+        .withColumn("shard", col("shard").cast("long"))
+        .select(columns.map(col): _*)
+
+    /** The manifest persisted with the current generation (what that
+      * publish shipped — [[write]]/[[compact]] store it), read through
+      * the `graftpack` table as the `<name>mf` lineage. */
+    def manifestRead(s: SparkSession, base: java.io.File): DataFrame =
+      s.read.format("graftpack")
+        .option("base", base.getAbsolutePath)
+        .option("lineage", name + "mf")
+        .option("generation", graft.GenManifest.current(base, name))
+        .load()
+
+    /** The SERVE half of the artifact lifecycle: append a served pack
+      * batch ([[graft.streaming.StreamOps.Pack]]'s sink payload) into the
+      * CURRENT generation — each row lands inside its shard's partition
+      * directory, so partition pruning is preserved verbatim (the
+      * annIndexAppend rule applied to the training-data artifact). The
+      * batch passes through the lineage's `landed` projection first;
+      * `langs` is the text lineages' `(doc_id, lang)` side input. Batch
+      * cost ∝ batch size; existing files are never read or moved.
+      *
+      * At-least-once: a RE-DELIVERED batch replays byte-identically (the
+      * pack fold contract) but an append-mode write lands its rows
+      * twice — the duplicates are ABSORBED at [[compact]] (full-row
+      * dropDuplicates is deterministic because re-deliveries are
+      * byte-identical), the same place the one-file-per-shard layout is
+      * restored. */
+    def appendServed(base: java.io.File, served: DataFrame,
+        langs: Option[DataFrame] = None): Unit =
+      landed(served, langs).select(columns.map(col): _*)
+        .write.mode("append").partitionBy("shard")
+        .parquet(dir(base, graft.GenManifest.current(base, name))
+          .getAbsolutePath)
+
+    /** COMPACTION: rewrite the current generation to ONE file per shard
+      * at a fresh generation (the annIndexCompact rule), dropping
+      * byte-identical duplicate rows from at-least-once re-deliveries,
+      * and re-publish the stored manifest so it DESCRIBES the compacted
+      * generation (served appends absorbed — the q190/q197 audit goes
+      * back to all-`same`), computed from the deduped source relation.
+      * FULL-row dropDuplicates, matching the absorption contract:
+      * keyed-only dedup would silently pick an arbitrary row if the same
+      * key ever landed with different attributes (e.g. a re-serve at a
+      * different base after a rebuild) — a genuine conflict must instead
+      * survive to the manifest hash-check. A reader pinned at the old
+      * generation is undisturbed (sibling directory, atomic
+      * compare-and-publish, retained to [[graft.GenManifest.DefaultRetain]]). */
+    def compact(s: SparkSession, base: java.io.File): Unit = {
+      val cur = graft.GenManifest.current(base, name)
+      publish(base, read(s, base, Some(cur)).dropDuplicates(), cur + 1,
+        Some(cur))
+    }
   }
 
-  /** The manifest persisted with generation `gen` of `name` (what that
-    * publish shipped — [[packWrite]]/[[packCompactArtifact]] write it).
-    * Read through the `graftpack` table (manifest dirs live beside the
-    * data at the same generation, as the `<lineage>mf` lineage). */
-  private[graft] def packManifestRead(s: SparkSession, base: java.io.File,
-      name: String = "pack"): DataFrame =
-    s.read.format("graftpack")
-      .option("base", base.getAbsolutePath)
-      .option("lineage", name + "mf")
-      .option("generation", graft.GenManifest.current(base, name))
-      .load()
+  private[graft] object Lineage {
+    /** The text lineages' rows: chunk masses as packed sequences. */
+    private def textRows(chunks: DataFrame, docs: DataFrame): DataFrame =
+      chunks.select(col("doc_id"), col("chunk_id"), col("n_tokens"),
+        col("n_units"))
 
-  /** The artifact's sequences at the CURRENT generation (shard restored
-    * to int64 — partition-column inference narrows it — and the build's
-    * column order restored). */
-  private[graft] def packRead(s: SparkSession, base: java.io.File,
-      name: String = "pack"): DataFrame =
-    packReadAt(s, base, graft.GenManifest.current(base, name), name)
+    /** The text lineages' landing: the `(doc_id → lang)` the serve path
+      * doesn't thread through the chunk readout (arrival metadata — a
+      * real stream carries it beside the text; one thin doc-keyed
+      * join). LEFT join + loud failure on a missing mapping: an inner
+      * join would silently DROP the served row from the persisted
+      * artifact (silent loss in the loader-facing append path, r12
+      * ADVICE); raise_error fires inside the write job, failing the
+      * batch before the sink commit — the stream resumes and
+      * re-delivers it. */
+    private def withLangs(name: String)(served: DataFrame,
+        langs: Option[DataFrame]): DataFrame =
+      served.join(langs.getOrElse(throw new IllegalArgumentException(
+          s"$name appendServed: the served rows' (doc_id, lang) are required")),
+          Seq("doc_id"), "left")
+        .withColumn("lang", when(col("lang").isNull, raise_error(concat(
+          lit(s"$name appendServed: served doc_id "), col("doc_id"),
+          lit(" has no lang metadata — refusing to drop it from the artifact"))))
+          .otherwise(col("lang")))
 
-  /** All artifact consumers (q165/q172/q174/q177/q178/q190, the serve
-    * loops) read THROUGH the [[graft.sources.GraftPackDataSource]]
-    * table (r14) — `generation` pinned here so a concurrent publish
-    * between `current()` and the scan cannot retarget the read; the
-    * scan below it is Spark's own ParquetScan (pruning/pushdown/
-    * vectorization unchanged — PipelineSpec re-pins PartitionFilters
-    * on this path). */
-  private[graft] def packReadAt(s: SparkSession, base: java.io.File,
-      gen: Long, name: String = "pack"): DataFrame =
-    s.read.format("graftpack")
-      .option("base", base.getAbsolutePath)
-      .option("lineage", name)
-      .option("generation", gen)
-      .load()
-      .withColumn("shard", col("shard").cast("long"))
-      .select(col("doc_id"), col("chunk_id"), col("lang"), col("n_tokens"),
-        col("n_units"), col("cum_units"), col("shard"))
+    private def text(name: String,
+        source: (SparkSession, String) => DataFrame): Lineage =
+      new Lineage(name, Seq("doc_id", "chunk_id", "lang", "n_tokens",
+          "n_units", "cum_units", "shard"), Seq("doc_id", "chunk_id"),
+        "ord:", "ep:", sequenceManifestOf, textRows, withLangs(name), source)
+
+    /** The shipped sequence pack (q158 → q165). */
+    val Pack: Lineage = text("pack", sequencePack)
+
+    /** The decontaminated repack (q174), ordered and drawn like
+      * [[Pack]]; its epoch order ranks the artifact read back (memoized:
+      * three int64s per clean sequence — the rank scan would otherwise
+      * re-scan the parquet). */
+    val PackClean: Lineage = text("packclean", (s, dir) =>
+      graft.Standing.relation("clean_pack_read", dir)(
+        PackClean.read(s, cleanPackArtifact(s, dir))
+          .select(col("doc_id"), col("chunk_id"), col("shard"))))
+
+    /** The multimodal pack (q196 → q197): text chunks and image/audio
+      * locator rows interleaved under the `mm:` key, drawn under `mmep:`. */
+    val MmPack: Lineage = new Lineage("mmpack",
+      Seq("doc_id", "seq_id", "modality", "locator", "n_units",
+        "cum_units", "shard"), Seq("modality", "doc_id", "seq_id"),
+      "mm:", "mmep:", mmManifestOf,
+      (chunks, docs) => chunks
+        .select(col("doc_id"), col("chunk_id").as("seq_id"),
+          lit("text").as("modality"),
+          concat(lit("txt://"), col("doc_id"), lit(":"), col("chunk_id"))
+            .as("locator"),
+          col("n_units"))
+        .unionAll(modalityRowsOf(docs)),
+      (served, _) => served, mmPack)
+  }
 
   /** Pack + publish unless the live artifact already describes `dir` —
     * the q105/q160/q164 standing-snapshot pattern (reuse spec-pinned). */
   private[graft] def packArtifact(s: SparkSession, dir: String): java.io.File =
-    graft.Standing.artifact(s, "seqpack", "pack", dir)(
-      packWrite(s, _, sequencePack(s, dir)))
+    graft.Standing.artifact(s, "seqpack", Lineage.Pack.name, dir)(
+      Lineage.Pack.write(_, sequencePack(s, dir)))
 
   def q165(s: SparkSession, dir: String): DataFrame =
-    sequenceManifestOf(packRead(s, packArtifact(s, dir)))
-
-  /** The SERVE half of the artifact lifecycle: append a served pack
-    * batch ([[graft.streaming.StreamOps.pack]]'s sink payload) into
-    * the artifact's CURRENT generation — each row lands inside its
-    * shard's partition directory, so partition pruning is preserved
-    * verbatim (the annIndexAppend rule applied to the training-data
-    * artifact). `langs` supplies the (doc_id, lang) the serve path
-    * doesn't thread through the chunk readout (arrival metadata — a
-    * real stream carries it beside the text; one thin doc-keyed join).
-    * Batch cost ∝ batch size; existing files are never read or moved.
-    *
-    * At-least-once note: a RE-DELIVERED batch replays byte-identically
-    * (the pack fold contract) but an append-mode write lands its rows
-    * twice — the duplicates are ABSORBED at [[packCompactArtifact]]
-    * (full-row dropDuplicates is deterministic because re-deliveries
-    * are byte-identical), the same place the one-file-per-shard layout
-    * is restored. */
-  private[graft] def packAppendServed(s: SparkSession, base: java.io.File,
-      served: DataFrame, langs: DataFrame): Unit =
-    // LEFT join + loud failure on a missing (doc_id → lang) mapping: an
-    // inner join would silently DROP the served row from the persisted
-    // artifact (silent loss in the loader-facing append path, r12 ADVICE);
-    // raise_error fires inside the write job, failing the batch before
-    // the sink commit — the stream resumes and re-delivers it
-    served.join(langs, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("chunk_id"),
-        when(col("lang").isNull, raise_error(concat(
-          lit("packAppendServed: served doc_id "), col("doc_id"),
-          lit(" has no lang metadata — refusing to drop it from the artifact"))))
-          .otherwise(col("lang")).as("lang"),
-        col("n_tokens"),
-        col("n_units"), col("cum_units"), col("shard"))
-      .write.mode("append").partitionBy("shard")
-      .parquet(packDir(base,
-        graft.GenManifest.current(base, "pack")).getAbsolutePath)
-
-  /** Artifact COMPACTION: rewrite the current generation to ONE file per
-    * shard at a fresh generation (repartition on shard + partitionBy —
-    * the annIndexCompact rule), dropping byte-identical duplicate rows
-    * from at-least-once re-deliveries. A reader pinned at the old
-    * generation is undisturbed (sibling directory, atomic manifest
-    * publish, retained to the manifest's depth). */
-  private[graft] def packCompactArtifact(s: SparkSession,
-      base: java.io.File,
-      retain: Int = graft.GenManifest.DefaultRetain): Unit = {
-    val cur = graft.GenManifest.current(base, "pack")
-    val next = cur + 1
-    // FULL-row dropDuplicates, matching the documented absorption contract
-    // (re-deliveries are byte-identical): keyed-only dedup would silently
-    // pick an arbitrary row if the same key ever landed with different
-    // attributes (e.g. a re-serve at a different base after a rebuild) —
-    // a genuine conflict must instead survive to the manifest hash-check
-    val deduped = packReadAt(s, base, cur).dropDuplicates()
-    deduped
-      .repartition(col("shard"))
-      .write.partitionBy("shard")
-      .parquet(packDir(base, next).getAbsolutePath)
-    // compaction re-publishes the artifact's truth: the fresh stored
-    // manifest now DESCRIBES the compacted generation (served appends
-    // absorbed), so q190's audit goes back to all-`same`. Computed from
-    // the deduped SOURCE relation, not a read-back of the new files —
-    // a corrupted compaction write must not self-bless (r13 review)
-    sequenceManifestOf(deduped)
-      .write.parquet(packDir(base, next, "packmf").getAbsolutePath)
-    graft.GenManifest.publish(base, "pack", next, retain, Some(cur))
-      .foreach { g =>
-        graft.GenManifest.rmTree(packDir(base, g))
-        graft.GenManifest.rmTree(packDir(base, g, "packmf"))
-      }
-  }
+    sequenceManifestOf(Lineage.Pack.read(s, packArtifact(s, dir)))
 
   /** Artifact round-trip ≡ in-memory build: the oracle replays q159's
     * direct manifest; a write/read that dropped, duplicated, or
@@ -1966,7 +2043,7 @@ object PipelineOps {
   val SeekShard = 0L
 
   def q172(s: SparkSession, dir: String): DataFrame =
-    packRead(s, packArtifact(s, dir))
+    Lineage.Pack.read(s, packArtifact(s, dir))
       .filter(col("shard") === SeekShard)
       .orderBy(col("doc_id"), col("chunk_id"))
 
@@ -2009,7 +2086,7 @@ object PipelineOps {
     // materialized LogicalRDD, so the shard collect and the returned
     // join share one ranking execution with no per-op localCheckpoint
     // (the snapshot rule is satisfied by the leaf itself).
-    val step = epochOrdered(s, dir)
+    val step = epochOrdered(s, dir, Lineage.Pack)
       .filter(col("epoch") === StepEpoch &&
         col("seq_rank") > StepLoRank && col("seq_rank") <= StepHiRank)
       .select(col("epoch"), col("seq_rank"), col("doc_id"), col("chunk_id"),
@@ -2017,7 +2094,7 @@ object PipelineOps {
     // batch-bounded by construction: ≤ (StepHiRank − StepLoRank) ids
     val touched = step.select(col("shard")).distinct()
       .collect().map(_.getLong(0)).sorted
-    val art = packRead(s, packArtifact(s, dir))
+    val art = Lineage.Pack.read(s, packArtifact(s, dir))
       .filter(col("shard").isin(touched: _*))
     step.join(art, Seq("doc_id", "chunk_id", "shard"))
       .select(col("epoch"), col("seq_rank"), col("doc_id"), col("chunk_id"),
@@ -2231,7 +2308,7 @@ object PipelineOps {
 
   // --- 190. artifact integrity audit (r13) -----------------------------------
   /** The trust-but-verify seam a long-lived 100 TB artifact needs: every
-    * publish ([[packWrite]] / [[packCompactArtifact]]) now persists the
+    * publish ([[Lineage.write]] / [[Lineage.compact]]) now persists the
     * manifest BESIDE the data — what that publish shipped — and this op
     * recomputes the manifest from the artifact's CURRENT files and
     * diffs it against the stored one through [[manifestDiff]]'s status
@@ -2253,8 +2330,8 @@ object PipelineOps {
     * independent disk paths. */
   def q190(s: SparkSession, dir: String): DataFrame = {
     val base = packArtifact(s, dir)
-    manifestDiff(packManifestRead(s, base),
-      sequenceManifestOf(packRead(s, base)))
+    manifestDiff(Lineage.Pack.manifestRead(s, base),
+      sequenceManifestOf(Lineage.Pack.read(s, base)))
   }
 
   // NB: the oracle's stored-manifest CTE (mn) is a verbatim copy of the
@@ -2319,15 +2396,7 @@ object PipelineOps {
       .join(flagged, Seq("doc_id", "chunk_id"), "left_anti")
       .select(col("doc_id"), col("chunk_id"), col("lang"), col("n_tokens"),
         col("n_units"))
-      .withColumn("bkey",
-        conv(substring(md5(concat(lit("ord:"), col("doc_id"), lit(":"),
-          col("chunk_id"))), 1, 15), 16, 10).cast("long"))
-    graft.functions.PrefixSum
-      .withRunningSum(clean, "bkey", Seq("doc_id", "chunk_id"),
-        "n_units", "cum_units")
-      .select(col("doc_id"), col("chunk_id"), col("lang"), col("n_tokens"),
-        col("n_units"), col("cum_units"),
-        expr(s"(cum_units - n_units) div ${ShardUnitBudget}L").as("shard"))
+    packAt(clean, Lineage.PackClean.orderPrefix, Lineage.PackClean.keys)
   }
 
   /** Repack + publish the clean lineage unless it already describes
@@ -2335,15 +2404,15 @@ object PipelineOps {
     * it). */
   private[graft] def cleanPackArtifact(s: SparkSession, dir: String): java.io.File = {
     packArtifact(s, dir)
-    graft.Standing.artifact(s, "seqpack", "packclean", dir)(
-      packWrite(s, _, cleanSequencePack(s, dir), "packclean"))
+    graft.Standing.artifact(s, "seqpack", Lineage.PackClean.name, dir)(
+      Lineage.PackClean.write(_, cleanSequencePack(s, dir)))
   }
 
   def q174(s: SparkSession, dir: String): DataFrame = {
     val base = cleanPackArtifact(s, dir)
     manifestDiff(
-      sequenceManifestOf(packRead(s, base)),
-      sequenceManifestOf(packRead(s, base, "packclean")))
+      sequenceManifestOf(Lineage.Pack.read(s, base)),
+      sequenceManifestOf(Lineage.PackClean.read(s, base)))
   }
 
   // --- 178. epoch ordering over the CLEAN artifact (r13) ---------------------
@@ -2363,25 +2432,10 @@ object PipelineOps {
     * ROW_NUMBER — the hash compare proves the artifact-backed epoch
     * stream is exactly the clean build's permutation. */
   def q178(s: SparkSession, dir: String): DataFrame =
-    // the clean epoch stream memoizes like [[epochOrdered]] (r15 — the
-    // same standing per-snapshot relation, over the clean lineage)
-    graft.Standing.relation("clean_epoch_ordered", dir)(
-      q178Plan(s, dir)).orderBy(col("epoch"), col("seq_rank"))
-
-  /** The unmemoized clean-epoch-ordering plan. */
-  private[graft] def q178Plan(s: SparkSession, dir: String): DataFrame = {
-    // the artifact read memoizes (three int64s per clean sequence): the
-    // rank scan would otherwise re-scan the parquet — the
-    // sequencePack-memo rule applied to the clean lineage
-    val clean = graft.Standing.relation("clean_pack_read", dir)(
-      packRead(s, cleanPackArtifact(s, dir), "packclean")
-        .select(col("doc_id"), col("chunk_id"), col("shard")))
-    val keyed = (0 until Epochs).map(e => shuffleKeyed(clean, e))
-      .reduce(_ unionAll _)
-    rankEpochsFolded(keyed, Seq("doc_id", "chunk_id"), "seq_rank")
-      .select(col("epoch"), col("seq_rank"), col("doc_id"), col("chunk_id"),
-        col("shard"))
-  }
+    // the clean epoch stream memoizes like q162's (r15 — the same
+    // standing per-snapshot relation, over the clean lineage)
+    epochOrdered(s, dir, Lineage.PackClean)
+      .orderBy(col("epoch"), col("seq_rank"))
 
   /** The clean re-pack as spliceable CTEs ending in `cpk` (the clean
     * pack with fresh offsets + shards) — the shared prefix of [[q174Sql]]
@@ -2521,8 +2575,7 @@ object PipelineOps {
       .withColumn("bucket", (length(bin(col("n_units"))) - 1).cast("long"))
       .withColumn("okey",
         col("bucket") * lit(1L << 44) +
-          conv(substring(md5(concat(lit("lb:"), col("doc_id"), lit(":"),
-            col("chunk_id"))), 1, 11), 16, 10).cast("long"))
+          HexKey("lb:", 11, col("doc_id"), col("chunk_id")))
     val ranked = graft.functions.PrefixSum
       .withRunningSum(lb.withColumn("one", lit(1L)), "okey",
         Seq("doc_id", "chunk_id"), "one", "grank",
@@ -2601,8 +2654,7 @@ object PipelineOps {
     val keyed = (0 until Epochs).map { e =>
       bt.withColumn("epoch", lit(e.toLong))
         .withColumn("okey",
-          conv(substring(md5(concat(lit(s"bb:$EpochSeed:$e:"), col("bucket"),
-            lit(":"), col("batch_id"))), 1, 15), 16, 10).cast("long"))
+          HexKey(s"bb:$EpochSeed:$e:", 15, col("bucket"), col("batch_id")))
     }.reduce(_ unionAll _)
     rankEpochsFolded(keyed, Seq("bucket", "batch_id"), "batch_rank")
       .select(col("epoch"), col("batch_rank"), col("bucket"), col("batch_id"),
@@ -2914,7 +2966,7 @@ object PipelineOps {
     * pins it).
     *
     * Scale shape: the epoch-folded PrefixSum rank scan ([[q162]]'s), a
-    * thin n_units column riding the pack memo through [[shuffleKeyed]],
+    * thin n_units column joined back from the pack memo,
     * and one map-side-combined groupBy(epoch, batch) — batch rows are
     * pack/B-sized, never corpus-held. FULL oracle: the q158 chain
     * nested once, ranked per epoch, grouped by the same batch rule. */
@@ -2924,13 +2976,12 @@ object PipelineOps {
     // masses back on (doc, chunk) — AQE broadcasts the pack side
     val pack = sequencePack(s, dir)
       .select(col("doc_id"), col("chunk_id"), col("n_units"))
-    epochOrdered(s, dir)
+    epochOrdered(s, dir, Lineage.Pack)
       .join(pack, Seq("doc_id", "chunk_id"))
       .withColumn("batch_id",
         expr(s"(seq_rank - 1) div ${LoaderBatchSeqs}L"))
       .withColumn("ck",
-        conv(substring(md5(concat(lit("bm:"), col("doc_id"), lit(":"),
-          col("chunk_id"))), 1, 12), 16, 10).cast("long"))
+        HexKey("bm:", 12, col("doc_id"), col("chunk_id")))
       .groupBy(col("epoch"), col("batch_id"))
       .agg(count(lit(1)).as("n_seqs"), sum(col("n_units")).as("n_units"),
         sum(col("ck")).as("checksum"))
@@ -3034,24 +3085,10 @@ object PipelineOps {
     * modalities — [[q196]]'s input, exposed for PipelineSpec's per-
     * modality mass reconciliation. */
   private[graft] def multimodalRows(s: SparkSession, dir: String): DataFrame = {
-    val txt = sequencePack(s, dir)
-      .select(col("doc_id"), col("chunk_id").as("seq_id"),
-        lit("text").as("modality"),
-        concat(lit("txt://"), col("doc_id"), lit(":"), col("chunk_id"))
-          .as("locator"),
-        col("n_units"))
     val members = packedBuild(s, dir).select(col("doc_id")).distinct()
-    val mm = modalityRowsOf(graft.Tables.documents(s, dir)
+    Lineage.MmPack.rowsOf(sequencePack(s, dir), graft.Tables.documents(s, dir)
       .select(col("doc_id"), col("text")).join(members, "doc_id"))
-    txt.unionAll(mm)
   }
-
-  /** The q196 interleave KEY — md5 over (modality, doc, seq), ONE
-    * definition for the batch build and the serve fold. */
-  private[graft] def mmKey(modality: Column, docId: Column,
-      seqId: Column): Column =
-    conv(substring(md5(concat(lit("mm:"), modality, lit(":"), docId,
-      lit(":"), seqId)), 1, 15), 16, 10).cast("long")
 
   def q196(s: SparkSession, dir: String): DataFrame =
     mmPack(s, dir).orderBy(col("doc_id"), col("modality"), col("seq_id"))
@@ -3064,17 +3101,9 @@ object PipelineOps {
     graft.Standing.relation("mm_pack", dir)(mmPackPlan(s, dir))
 
   /** The unmemoized multimodal-pack plan. */
-  private[graft] def mmPackPlan(s: SparkSession, dir: String): DataFrame = {
-    val keyed = multimodalRows(s, dir)
-      .withColumn("bkey",
-        mmKey(col("modality"), col("doc_id"), col("seq_id")))
-    graft.functions.PrefixSum
-      .withRunningSum(keyed, "bkey", Seq("modality", "doc_id", "seq_id"),
-        "n_units", "cum_units", span = Some((0L, 1L << 60)))
-      .select(col("doc_id"), col("seq_id"), col("modality"), col("locator"),
-        col("n_units"), col("cum_units"),
-        expr(s"(cum_units - n_units) div ${ShardUnitBudget}L").as("shard"))
-  }
+  private[graft] def mmPackPlan(s: SparkSession, dir: String): DataFrame =
+    packAt(multimodalRows(s, dir), Lineage.MmPack.orderPrefix,
+      Lineage.MmPack.keys)
 
   /** FULL oracle: the q158 chain (membership + chunk units) + the two
     * modality CTEs' geometry arithmetic + the same windowed prefix sum.
@@ -3158,7 +3187,7 @@ object PipelineOps {
     * oracle = the same aggregate over the q196 chain — the hash compare
     * IS the artifact round-trip contract (locators, modality masses,
     * offsets and fingerprints all survive the disk hop), q165's proof
-    * shape at the multimodal granularity. packWrite persists the
+    * shape at the multimodal granularity. [[Lineage.write]] persists the
     * manifest beside the data from the in-memory relation (the q190
     * audit seam — corruption cannot notarize itself), under the same
     * atomic generation flip + GC contract; a pinned loader keeps its
@@ -3176,9 +3205,7 @@ object PipelineOps {
   private[graft] def mmManifestOf(pack: DataFrame): DataFrame =
     pack
       .withColumn("mmid",
-        conv(substring(md5(concat(lit("mmid:"), col("modality"), lit(":"),
-          col("doc_id"), lit(":"), col("seq_id"))), 1, 10), 16, 10)
-          .cast("long"))
+        HexKey("mmid:", 10, col("modality"), col("doc_id"), col("seq_id")))
       .groupBy(col("shard"))
       .agg(count(lit(1)).as("n_rows"),
         countDistinct(col("doc_id")).as("n_docs"),
@@ -3196,98 +3223,11 @@ object PipelineOps {
   /** Pack + publish the multimodal artifact unless the live one already
     * describes `dir`. */
   private[graft] def mmPackArtifact(s: SparkSession, dir: String): java.io.File =
-    graft.Standing.artifact(s, "mmpack", "mmpack", dir)(
-      packWrite(s, _, mmPack(s, dir), "mmpack", mmManifestOf))
-
-  /** The persisted multimodal pack at the current generation, through
-    * the `graftpack` table (shard restored to int64, build column
-    * order restored). */
-  private[graft] def mmPackRead(s: SparkSession, base: java.io.File): DataFrame =
-    mmPackReadAt(s, base, graft.GenManifest.current(base, "mmpack"))
-
-  /** The multimodal artifact pinned at generation `gen` (the packReadAt
-    * twin for the `mmpack` lineage). */
-  private[graft] def mmPackReadAt(s: SparkSession, base: java.io.File,
-      gen: Long): DataFrame =
-    s.read.format("graftpack")
-      .option("base", base.getAbsolutePath)
-      .option("lineage", "mmpack")
-      .option("generation", gen)
-      .load()
-      .withColumn("shard", col("shard").cast("long"))
-      .select(col("doc_id"), col("seq_id"), col("modality"), col("locator"),
-        col("n_units"), col("cum_units"), col("shard"))
-
-  /** The SERVE half of the multimodal artifact lifecycle (r14 VERDICT
-    * #2 — the [[packAppendServed]] treatment for the `mmpack` lineage):
-    * append a served multimodal batch
-    * ([[graft.streaming.StreamOps.mmPack]]'s sink payload — or its
-    * gated twin's, which is what a production seam runs) into the
-    * artifact's CURRENT generation. Each row lands inside its shard's
-    * partition directory, so the q199 partition pruning is preserved
-    * verbatim; batch cost ∝ batch size; existing files are never read
-    * or moved. No lang side-channel is needed here — the mmpack schema
-    * carries no lang column (modality rows are language-free by
-    * construction). At-least-once: a re-delivered batch replays
-    * byte-identically (the mmPack fold contract) and its duplicate
-    * append rows are absorbed at [[mmCompactArtifact]]. */
-  private[graft] def mmAppendServed(s: SparkSession, base: java.io.File,
-      served: DataFrame): Unit =
-    served
-      .select(col("doc_id"), col("seq_id"), col("modality"), col("locator"),
-        col("n_units"), col("cum_units"), col("shard"))
-      .write.mode("append").partitionBy("shard")
-      .parquet(packDir(base,
-        graft.GenManifest.current(base, "mmpack"), "mmpack").getAbsolutePath)
-
-  /** Multimodal artifact COMPACTION — [[packCompactArtifact]] for the
-    * `mmpack` lineage: rewrite the current generation to ONE file per
-    * shard at a fresh generation, dropping byte-identical duplicate
-    * rows from at-least-once re-deliveries, and re-publish the stored
-    * per-modality manifest so it DESCRIBES the compacted generation
-    * (served appends absorbed — the q197 audit goes back to all-same).
-    * Computed from the deduped source relation, never a read-back of
-    * the new files (write-time corruption must not notarize itself). */
-  private[graft] def mmCompactArtifact(s: SparkSession,
-      base: java.io.File,
-      retain: Int = graft.GenManifest.DefaultRetain): Unit = {
-    val cur = graft.GenManifest.current(base, "mmpack")
-    val next = cur + 1
-    val deduped = mmPackReadAt(s, base, cur).dropDuplicates()
-    deduped
-      .repartition(col("shard"))
-      .write.partitionBy("shard")
-      .parquet(packDir(base, next, "mmpack").getAbsolutePath)
-    mmManifestOf(deduped)
-      .write.parquet(packDir(base, next, "mmpackmf").getAbsolutePath)
-    graft.GenManifest.publish(base, "mmpack", next, retain, Some(cur))
-      .foreach { g =>
-        graft.GenManifest.rmTree(packDir(base, g, "mmpack"))
-        graft.GenManifest.rmTree(packDir(base, g, "mmpackmf"))
-      }
-  }
+    graft.Standing.artifact(s, "mmpack", Lineage.MmPack.name, dir)(
+      Lineage.MmPack.write(_, mmPack(s, dir)))
 
   def q197(s: SparkSession, dir: String): DataFrame =
-    mmManifestOf(mmPackRead(s, mmPackArtifact(s, dir)))
-
-  /** The step epoch's seeded permutation of the PERSISTED multimodal
-    * pack, ranked ONCE per (family run, dir) — the [[epochOrdered]]
-    * treatment over the mmpack artifact (r15): every q199-style step
-    * fetch reads the standing ranking instead of re-ranking per call. */
-  private def mmEpochRanked(s: SparkSession, dir: String,
-      base: java.io.File): DataFrame =
-    graft.Standing.relation("mm_epoch_ranked", dir) {
-      val thin = mmPackRead(s, base)
-        .select(col("doc_id"), col("seq_id"), col("modality"), col("shard"))
-        .withColumn("okey",
-          conv(substring(md5(concat(lit(s"mmep:$EpochSeed:$StepEpoch:"),
-            col("modality"), lit(":"), col("doc_id"), lit(":"),
-            col("seq_id"))), 1, 15), 16, 10).cast("long"))
-      graft.functions.PrefixSum
-        .withRunningSum(thin.withColumn("one", lit(1L)), "okey",
-          Seq("modality", "doc_id", "seq_id"), "one", "seq_rank",
-          span = Some((0L, 1L << 60)))
-    }
+    mmManifestOf(Lineage.MmPack.read(s, mmPackArtifact(s, dir)))
 
   // --- 199. the multimodal loader's per-step batch fetch (r14) ----------------
   /** [[q177]]'s proof shape over the MULTIMODAL artifact: a multimodal
@@ -3319,13 +3259,16 @@ object PipelineOps {
     // step reads it); the memo leaf also satisfies the snapshot rule,
     // so the shard collect and the returned join share one ranking
     // with no per-op localCheckpoint
-    val step = mmEpochRanked(s, dir, base)
+    val lin = Lineage.MmPack
+    val step = graft.Standing.relation("mm_epoch_ranked", dir)(
+        rankEpoch(lin.read(s, base).select((lin.ids :+ "shard").map(col): _*),
+          lin, StepEpoch))
       .filter(col("seq_rank") > StepLoRank && col("seq_rank") <= StepHiRank)
       .select(col("seq_rank"), col("doc_id"), col("seq_id"), col("modality"),
         col("shard"))
     val touched = step.select(col("shard")).distinct()
       .collect().map(_.getLong(0)).sorted
-    val art = mmPackRead(s, base).filter(col("shard").isin(touched: _*))
+    val art = lin.read(s, base).filter(col("shard").isin(touched: _*))
     step.join(art, Seq("doc_id", "seq_id", "modality", "shard"))
       .select(col("seq_rank"), col("doc_id"), col("seq_id"), col("modality"),
         col("locator"), col("n_units"), col("cum_units"), col("shard"))
@@ -3468,7 +3411,7 @@ object PipelineOps {
     *
     * FULL oracle: geometry is pure byte-length arithmetic and the
     * fingerprint replays as md5(text), so membership (keeper rows
-    * only), unit costs, the mmKey interleave and the shard boundaries
+    * only), unit costs, the `mm:` key interleave and the shard boundaries
     * all replay exactly. PipelineSpec plants a duplicate payload across
     * two docs and pins the collapse to ONE locator row (the keeper's),
     * plus pack mass = distinct-payload mass. Scale shape: the q205
@@ -3488,15 +3431,8 @@ object PipelineOps {
       .select(col("modality"), col("doc_id"))
     val gated = modalityRowsOf(corpusWithReingest(s, dir))
       .join(keepers, Seq("modality", "doc_id"))
-    graft.functions.PrefixSum
-      .withRunningSum(
-        gated.withColumn("bkey",
-          mmKey(col("modality"), col("doc_id"), col("seq_id"))),
-        "bkey", Seq("modality", "doc_id", "seq_id"),
-        "n_units", "cum_units", span = Some((0L, 1L << 60)))
-      .select(col("doc_id"), col("seq_id"), col("modality"), col("locator"),
-        col("n_units"), col("cum_units"),
-        expr(s"(cum_units - n_units) div ${ShardUnitBudget}L").as("shard"))
+    packAt(gated, Lineage.MmPack.orderPrefix, Lineage.MmPack.keys)
+      .select(Lineage.MmPack.columns.map(col): _*)
       .orderBy(col("doc_id"), col("modality"), col("seq_id"))
   }
 
@@ -3543,108 +3479,26 @@ object PipelineOps {
   /** [[q200]]'s law over the q199 multimodal stream: a continuously-fed
     * MULTIMODAL job's epochs stay consumable while the mmpack artifact
     * grows mid-epoch. Generation-N rows keep their `mmep:`-draw ranks
-    * VERBATIM (the prefix is the standing memoized [[mmEpochOrdered]]
+    * VERBATIM (the prefix is the standing memoized [[epochOrdered]]
     * relation — nothing here recomputes it, so the running job's
     * consumed stream can never re-rank), and served arrivals append to
     * each epoch's tail under the SAME draw law — rank = \|gen N\| + the
     * q199-rule rank within the arrival set. The arrival pack is exactly
     * what [[graft.streaming.StreamOps.mmPack]] would have served:
     * the q200 arrival docs' text chunks AND their image/audio locator
-    * rows, mmKey-ordered, offsets continuing from gen N's end
-    * (StreamingSpec drives a REAL mmPack serve → [[mmAppendServed]] run
-    * and reconciles byte-identity). Epoch 1's prefix permutation is BY
+    * rows, `mm:`-key-ordered, offsets continuing from gen N's end
+    * (StreamingSpec drives a REAL mmPack serve → [[Lineage.appendServed]]
+    * run and reconciles byte-identity). Epoch 1's prefix permutation is BY
     * CONSTRUCTION the q199 standing ranking (same `mmep:` key string).
     *
     * FULL oracle: the q196 chain ∪ the mm arrival pack under one
     * per-epoch ROW_NUMBER ordered (is_arrival, okey, modality, doc,
     * seq). Scale shape: the mm-pack memo + one thin arrival build +
     * ONE epoch-folded ranking scan over the ARRIVALS ONLY
-    * ([[rankEpochsFolded]]; prefix-before-tail falls out of the
+    * ([[epochRanked]]; prefix-before-tail falls out of the
     * +\|gen N\| offset, a 1-row broadcast). */
-  def q207(s: SparkSession, dir: String): DataFrame = {
-    val gen = mmPack(s, dir)
-    val prefix = mmEpochOrdered(s, dir)
-      .withColumn("is_arrival", lit(0L))
-    val arr = graft.Standing.relation("q207_mm_arrivals", dir)(
-        mmArrivalPack(s, dir, gen.agg(max(col("cum_units")).as("base_off"))))
-      .select(col("doc_id"), col("seq_id"), col("modality"), col("shard"))
-    val nGen = gen.agg(count(lit(1)).as("__n_gen"))
-    val arrKeyed = (0 until Epochs).map(e => mmShuffleKeyed(arr, e))
-      .reduce(_ unionAll _)
-    val tail = rankEpochsFolded(arrKeyed,
-        Seq("modality", "doc_id", "seq_id"), "arr_rank")
-      .crossJoin(broadcast(nGen))
-      .select(col("epoch"), (col("arr_rank") + col("__n_gen")).as("seq_rank"),
-        col("doc_id"), col("seq_id"), col("modality"), col("shard"))
-      .withColumn("is_arrival", lit(1L))
-    prefix.unionAll(tail)
-      .orderBy(col("epoch"), col("seq_rank"))
-  }
-
-  /** The `mmep:` seeded-shuffle key for epoch `e` — the q199 rule (for
-    * e = [[StepEpoch]] the key STRING is identical, so epoch 1's
-    * permutation is q199's). */
-  private[graft] def mmShuffleKeyed(pack: DataFrame, e: Int): DataFrame =
-    pack
-      .withColumn("epoch", lit(e.toLong))
-      .withColumn("okey",
-        conv(substring(md5(concat(lit(s"mmep:$EpochSeed:$e:"),
-          col("modality"), lit(":"), col("doc_id"), lit(":"),
-          col("seq_id"))), 1, 15), 16, 10).cast("long"))
-
-  /** The per-epoch ordered MULTIMODAL stream — [[epochOrdered]] for the
-    * mmpack lineage, MEMOIZED per (family run, dir): the epoch order is
-    * a pure function of (seed, mm-pack snapshot), ranked once in ONE
-    * epoch-folded scan and READ thereafter. */
-  private[graft] def mmEpochOrdered(s: SparkSession, dir: String): DataFrame =
-    graft.Standing.relation("mm_epoch_ordered", dir)(
-      mmEpochOrderedPlan(s, dir))
-
-  /** The unmemoized mm epoch-ordering plan (ScalePlanSpec pins the
-    * window discipline here — the memo readout is a LogicalRDD leaf). */
-  private[graft] def mmEpochOrderedPlan(s: SparkSession,
-      dir: String): DataFrame = {
-    val pack = mmPack(s, dir)
-      .select(col("doc_id"), col("seq_id"), col("modality"), col("shard"))
-    val keyed = (0 until Epochs).map(e => mmShuffleKeyed(pack, e))
-      .reduce(_ unionAll _)
-    rankEpochsFolded(keyed, Seq("modality", "doc_id", "seq_id"),
-        "seq_rank")
-      .select(col("epoch"), col("seq_rank"), col("doc_id"), col("seq_id"),
-        col("modality"), col("shard"))
-  }
-
-  /** The mm arrival batch packed at `endOff` — the q200 arrival docs'
-    * text chunks AND modality locator rows under
-    * [[graft.streaming.StreamOps.mmPack]]'s one-batch law (mmKey order,
-    * offsets continuing from the handoff).
-    * Exposed so StreamingSpec can reconcile it against a REAL
-    * mmPack serve run. */
-  private[graft] def mmArrivalPack(s: SparkSession, dir: String,
-      endOff: DataFrame): DataFrame = {
-    val arrd = q114DocsShared(s, dir).select(col("doc_id"))
-      .join(packedBuild(s, dir).select(col("doc_id")), Seq("doc_id"),
-        "left_anti")
-      .filter(col("doc_id") % DedupOps.IncrSplitMod === 0)
-    val txt = BpeOps.chunkMasses(s, dir).join(arrd, "doc_id")
-      .select(col("doc_id"), col("chunk_id").as("seq_id"),
-        lit("text").as("modality"),
-        concat(lit("txt://"), col("doc_id"), lit(":"), col("chunk_id"))
-          .as("locator"),
-        col("n_units"))
-    val mm = modalityRowsOf(graft.Tables.documents(s, dir)
-      .select(col("doc_id"), col("text")).join(arrd, "doc_id"))
-    val rows = txt.unionAll(mm)
-      .withColumn("bkey", mmKey(col("modality"), col("doc_id"), col("seq_id")))
-    graft.functions.PrefixSum
-      .withRunningSum(rows, "bkey", Seq("modality", "doc_id", "seq_id"),
-        "n_units", "cum_arr", span = Some((0L, 1L << 60)))
-      .crossJoin(broadcast(endOff))
-      .withColumn("cum_units", col("cum_arr") + col("base_off"))
-      .select(col("doc_id"), col("seq_id"), col("modality"), col("locator"),
-        col("n_units"), col("cum_units"),
-        expr(s"(cum_units - n_units) div ${ShardUnitBudget}L").as("shard"))
-  }
+  def q207(s: SparkSession, dir: String): DataFrame =
+    continuity(s, dir, Lineage.MmPack)
 
   lazy val q207Sql: String =
     s"""$q120CtesSql,
@@ -3719,7 +3573,7 @@ object PipelineOps {
   // --- 200. epoch continuity over a GROWING artifact (r15 — r13 #7) ----------
   /** The contract a CONTINUOUSLY-FED pretraining job consumes: the q165
     * artifact grows mid-epoch (serve appends —
-    * [[graft.streaming.StreamOps.pack]] → [[packAppendServed]]) and
+    * [[graft.streaming.StreamOps.pack]] → [[Lineage.appendServed]]) and
     * the running job must NOT re-derive its epoch stream from scratch —
     * re-ranking the prefix would re-order sequences the job already
     * consumed (double-train/silent-skip corruption: the q166 failure
@@ -3753,51 +3607,57 @@ object PipelineOps {
     *
     * Scale shape: the pack memo + one thin non-member chunk join + one
     * batch-sized PrefixSum for the arrival offsets + ONE epoch-folded
-    * ranking scan over the ARRIVALS ONLY ([[rankEpochsFolded]] on the
+    * ranking scan over the ARRIVALS ONLY ([[epochRanked]] on the
     * batch-sized arrival set; the prefix is READ from the memoized
     * [[epochOrdered]] relation and its ranks are never recomputed, and
     * prefix-before-tail falls out of the +|gen N| offset, a 1-row
     * broadcast). Nothing ranks per epoch; nothing ever re-ranks the
     * prefix. */
-  def q200(s: SparkSession, dir: String): DataFrame = {
-    val gen = sequencePack(s, dir)
-    // the PREFIX is literally the standing epoch order — the memoized
-    // q162 relation (r15: reading it IS the contract — the running
-    // job's consumed stream can never re-rank, because nothing here
-    // recomputes it)
-    val prefix = epochOrdered(s, dir)
-      .select(col("epoch"), col("seq_rank"), col("doc_id"), col("chunk_id"),
-        col("shard"))
+  def q200(s: SparkSession, dir: String): DataFrame =
+    continuity(s, dir, Lineage.Pack)
+
+  /** The epoch stream over generation N plus its arrivals, for lineage
+    * `lin` (q200 over the text pack, q207 over the multimodal one):
+    * `(epoch, seq_rank, the lineage ids, shard, is_arrival)`. */
+  private def continuity(s: SparkSession, dir: String,
+      lin: Lineage): DataFrame = {
+    val gen = lin.source(s, dir)
+    val ids = (lin.ids :+ "shard").map(col)
+    // the PREFIX is literally the standing epoch order (r15: reading it
+    // IS the contract — the running job's consumed stream can never
+    // re-rank, because nothing here recomputes it)
+    val prefix = epochOrdered(s, dir, lin)
+      .select(col("epoch") +: col("seq_rank") +: ids: _*)
       .withColumn("is_arrival", lit(0L))
     // the arrival pack memoizes like the build it continues (it is a
-    // standing per-snapshot relation — what the serve seam appended)
-    val arr = graft.Standing.relation("q200_arrivals", dir)(
-        arrivalPack(s, dir, gen.agg(max(col("cum_units")).as("base_off"))))
-      .select(col("doc_id"), col("chunk_id"), col("shard"))
-    // tail ranks = |gen N| + the q162-rule rank WITHIN the arrival set:
+    // standing per-snapshot relation — what the serve seam appended),
+    // entering at gen N's end offset
+    val arr = graft.Standing.relation(s"${lin.name}_arrivals", dir)(
+        arrivalPack(s, dir, lin, gen.agg(coalesce(max(col("cum_units")),
+          lit(0L))).head().getLong(0)))
+      .select(ids: _*)
+    // tail ranks = |gen N| + the draw-law rank WITHIN the arrival set:
     // the fold runs over the batch-sized arrivals only (never the
     // corpus), and the gen count rides a 1-row broadcast
     val nGen = gen.agg(count(lit(1)).as("__n_gen"))
-    val arrKeyed = (0 until Epochs).map(e => shuffleKeyed(arr, e))
-      .reduce(_ unionAll _)
-    val tail = rankEpochsFolded(arrKeyed, Seq("doc_id", "chunk_id"),
-        "arr_rank")
+    val tail = epochRanked(arr, lin, "arr_rank")
       .crossJoin(broadcast(nGen))
-      .select(col("epoch"), (col("arr_rank") + col("__n_gen")).as("seq_rank"),
-        col("doc_id"), col("chunk_id"), col("shard"))
+      .select(col("epoch") +: (col("arr_rank") + col("__n_gen")).as("seq_rank")
+        +: ids: _*)
       .withColumn("is_arrival", lit(1L))
     prefix.unionAll(tail)
       .orderBy(col("epoch"), col("seq_rank"))
   }
 
-  /** The arrival-model batch packed at `endOff` — the q200 arrival set
-    * (non-member docs, doc_id % [[DedupOps.IncrSplitMod]] == 0) chunked
-    * and packed exactly as the serve seam would
-    * ([[graft.streaming.StreamOps.pack]]'s one-batch law: md5-bkey
-    * order, offsets continuing from the handoff). Exposed so
-    * PipelineSpec can reconcile it against a REAL pack serve run. */
-  private[graft] def arrivalPack(s: SparkSession, dir: String,
-      endOff: DataFrame): DataFrame = {
+  /** The arrival-model batch of lineage `lin` packed at unit offset
+    * `base` — the q200 arrival set (non-member docs, doc_id %
+    * [[DedupOps.IncrSplitMod]] == 0) chunked, turned into the lineage's
+    * rows and packed exactly as the serve seam would
+    * ([[graft.streaming.StreamOps.Pack]]'s one-batch law: [[packAt]]
+    * from the handoff offset). Exposed so StreamingSpec can reconcile it
+    * against a REAL serve run. */
+  private[graft] def arrivalPack(s: SparkSession, dir: String, lin: Lineage,
+      base: Long): DataFrame = {
     // NON-members via anti-join against the memoized build's member set
     // instead of re-deriving the q120 policy fixpoint per call (the
     // fixpoint is a multi-job driver iteration — measured ~2.4 s of
@@ -3808,19 +3668,10 @@ object PipelineOps {
       .join(packedBuild(s, dir).select(col("doc_id")), Seq("doc_id"),
         "left_anti")
       .filter(col("doc_id") % DedupOps.IncrSplitMod === 0)
-    val arrc = BpeOps.chunkMasses(s, dir)
-      .join(arrd, "doc_id")
-      .withColumn("bkey",
-        conv(substring(md5(concat(lit("ord:"), col("doc_id"), lit(":"),
-          col("chunk_id"))), 1, 15), 16, 10).cast("long"))
-    graft.functions.PrefixSum
-      .withRunningSum(arrc, "bkey", Seq("doc_id", "chunk_id"),
-        "n_units", "cum_arr", span = Some((0L, 1L << 60)))
-      .crossJoin(broadcast(endOff))
-      .withColumn("cum_units", col("cum_arr") + col("base_off"))
-      .select(col("doc_id"), col("chunk_id"), col("n_tokens"),
-        col("n_units"), col("cum_units"),
-        expr(s"(cum_units - n_units) div ${ShardUnitBudget}L").as("shard"))
+    packAt(lin.rowsOf(BpeOps.chunkMasses(s, dir).join(arrd, "doc_id"),
+        graft.Tables.documents(s, dir).select(col("doc_id"), col("text"))
+          .join(arrd, "doc_id")),
+      lin.orderPrefix, lin.keys, Some(base))
   }
 
   lazy val q200Sql: String =

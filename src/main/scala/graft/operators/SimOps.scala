@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Op, Tables}
+import graft.functions.HexKey
 import graft.expressions.VectorExprs.{vecDot, vecNorm}
 
 /** Similarity search over the embedding column (SURVEY §2 rows 53–55, 61).
@@ -174,8 +175,8 @@ object SimOps {
 
   // --- 170. hard-negative mining (r12) -----------------------------------
   /** Contrastive-training data mining: for each query doc, the top-K
-    * candidates by cosine inside the HARD band [[HnLoMicros]] ≤ cos <
-    * [[HnHiMicros]] — similar enough to be confusable (that is what
+    * candidates by cosine inside the HARD band [[HnLo]] ≤ cos <
+    * [[HnHi]] — similar enough to be confusable (that is what
     * makes a negative HARD and the contrastive gradient informative),
     * but with the near-dup ceiling EXCLUDED: a pair at cos ≥ the q50
     * duplicate range is a false negative that actively poisons an
@@ -1428,8 +1429,7 @@ object SimOps {
       .orderBy(col("skey"), col("vec_id"))
     assignToCells(withNorm(e), cellsAsRow(centroidCells(e)))
       .withColumn("skey",
-        conv(substring(md5(concat(lit("divs:"), col("vec_id"))), 1, 15),
-          16, 10).cast("long"))
+        HexKey("divs:", 15, col("vec_id")))
       .withColumn("cell_rank", row_number().over(w).cast("long"))
       .filter(col("cell_rank") <= CellQuota)
       .select(col("vec_id"), col("cell_id"), col("cell_rank"))

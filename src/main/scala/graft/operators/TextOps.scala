@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Op, Tables}
+import graft.functions.HexKey
 import graft.text.Text
 
 /** Text preprocessing, feature extraction, scoring and screening metrics
@@ -1101,8 +1102,7 @@ object TextOps {
     pplBuckets(s, dir)
       .join(broadcast(rates), "bucket")
       .withColumn("u",
-        conv(substring(md5(concat(lit("pplmix:"), col("doc_id"))), 1, 15),
-          16, 10).cast("long") % 1000000L)
+        HexKey("pplmix:", 15, col("doc_id")) % 1000000L)
       .filter(col("u") < col("rate_micros"))
       .select(col("doc_id"), col("lang"), col("sc_micros"), col("bucket"),
         graft.functions.Num.ratio6(lit(1000000L), col("rate_micros"))

@@ -10,7 +10,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 /** DataSource V2 connector for the engine's generation-manifested
   * artifacts (r13 VERDICT #3):
   * `spark.read.format("graftpack").option("base", dir).load()` replaces
-  * the path-based `packRead`/`GenManifest.current` convention with the
+  * the path-based `<lineage>_g<gen>`/`GenManifest.current` convention with the
   * named-table abstraction a lake user gets from Delta/Iceberg (whose
   * jars are absent from this environment — this is the reachable
   * equivalent seam). Any artifact following the
@@ -46,7 +46,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * name `graftpack` resolves without a fully-qualified class name. Not
   * in `spark.sql.sources.useV1SourceList`, so the V2 path is never
   * downgraded. Write support is deliberately absent: publishes go
-  * through [[graft.operators.PipelineOps.packWrite]], which pairs the
+  * through [[graft.operators.PipelineOps.Lineage.write]], which pairs the
   * data write with the manifest write and the generation flip — a bare
   * `save()` could not keep that atomic (readers must never observe a
   * half-published generation).
@@ -68,7 +68,7 @@ class GraftPackDataSource extends FileDataSourceV2 {
       graft.GenManifest.read(baseF, lineage).map(_.current).getOrElse(
         throw new IllegalArgumentException(
           s"graftpack: no published generation for lineage '$lineage' " +
-            s"at $base — packWrite publishes one")))
+            s"at $base — Lineage.write publishes one")))
     val dirF = new java.io.File(baseF, s"${lineage}_g$gen")
     // A pinned `generation` older than the manifest's retain depth has
     // been GC'd ([[graft.GenManifest.publish]] removes aged-out dirs):

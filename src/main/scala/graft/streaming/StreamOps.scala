@@ -854,17 +854,16 @@ object StreamOps {
         (sink: DataFrame => Unit): Unit
   }
 
-  /** Packs a batch's rows — `rowsOf(batch, gated chunk readout)`, each
-    * carrying its `n_units` mass and an int64 `bkey` order key — at the
-    * batch's claimed base: a PrefixSum running total in (bkey, `keys`)
-    * order plus the start-offset shard rule, emitted in `cum_units`
-    * order. `keyed` is the lineage's per-epoch draw key for
-    * [[epochTail]]. */
+  /** Packs a batch under `lineage`: the lineage's rows of the batch
+    * (`rowsOf` over the gated chunk readout and the gated docs) at the
+    * batch's claimed base under the one pack law
+    * ([[graft.operators.PipelineOps.packAt]]: the lineage's order key,
+    * a PrefixSum running unit total plus the base, the start-offset
+    * shard rule), emitted in `cum_units` order. [[epochTail]] ranks the
+    * packed rows under the lineage's draw key. */
   final class Pack private[StreamOps] (
       merges: Seq[graft.operators.BpeOps.BpeMerge], gate: Option[DataFrame],
-      rowsOf: (DataFrame, Gated) => DataFrame,
-      private[StreamOps] val keys: Seq[String],
-      private[StreamOps] val keyed: (DataFrame, Int) => DataFrame)
+      private[StreamOps] val lineage: graft.operators.PipelineOps.Lineage)
       extends Fold {
     def ranked: Boolean = false
     def step(batch: DataFrame, state: ServeState, batchId: Long)
@@ -874,19 +873,20 @@ object StreamOps {
       // cached: the mass total and the sink's PrefixSum plan both read the
       // row masses — uncached, the merge replay + mapping join + doc
       // window + groupBy would run twice per batch; built
-      // under the toks guard so a construction failure can't leak either
+      // under the toks guard so a construction failure can't leak either.
+      // Both gate references live inside this ONE cached plan, so the
+      // flagged-key subplan executes at most twice within a single
+      // batch-sized materialization — never per action
       val rows =
-        try rowsOf(batch, decontamGate(BpeOps.chunkReadout(toks, mapping), gate))
-          .cache()
-        catch { case t: Throwable => toks.unpersist(); throw t }
+        try {
+          val g = decontamGate(BpeOps.chunkReadout(toks, mapping), gate)
+          lineage.rowsOf(g.chunks,
+            g.docs(batch.select(col("doc_id"), col("text")))).cache()
+        } catch { case t: Throwable => toks.unpersist(); throw t }
       try {
         val (base, _) = state.claim(batchId)
-        val packed = graft.functions.PrefixSum
-          .withRunningSum(rows, "bkey", keys, "n_units", "cum_batch")
-          .select(rows.columns.filter(_ != "bkey").map(col) :+
-            (col("cum_batch") + base).as("cum_units"): _*)
-          .withColumn("shard", expr(
-            s"(cum_units - n_units) div ${PipelineOps.ShardUnitBudget}L"))
+        val packed = PipelineOps
+          .packAt(rows, lineage.orderPrefix, lineage.keys, Some(base))
           // deterministic EMIT order: PrefixSum's final window
           // leaves rows hash-distributed by bin — correct values, arbitrary
           // order past one post-shuffle partition. The pack order is part
@@ -922,7 +922,7 @@ object StreamOps {
     * With `gate` (the benchmark shingle set) contaminated chunks drop
     * BEFORE the running offsets are assigned, so the served shard stream
     * (and any artifact it appends to —
-    * [[graft.operators.PipelineOps.packAppendServed]]) never carries
+    * [[graft.operators.PipelineOps.Lineage.appendServed]]) never carries
     * benchmark-overlapping sequences or their mass. The gate is
     * deterministic and chunk-local, so every fold guarantee (idempotent
     * re-delivery at the original base, gapless offsets over what WAS
@@ -934,13 +934,7 @@ object StreamOps {
     * plan). */
   def pack(merges: Seq[graft.operators.BpeOps.BpeMerge],
       gate: Option[DataFrame] = None): Pack =
-    new Pack(merges, gate, (_, g) => g.chunks
-        .select(col("doc_id"), col("chunk_id"), col("n_tokens"),
-          col("n_units"))
-        .withColumn("bkey",
-          conv(substring(md5(concat(lit("ord:"), col("doc_id"), lit(":"),
-            col("chunk_id"))), 1, 15), 16, 10).cast("long")),
-      Seq("doc_id", "chunk_id"), graft.operators.PipelineOps.shuffleKeyed)
+    new Pack(merges, gate, graft.operators.PipelineOps.Lineage.Pack)
 
   /** [[pack]] for the MULTIMODAL stream (the q196 build at the
     * arrival seam): each arriving doc batch packs its text chunks AND its
@@ -948,33 +942,18 @@ object StreamOps {
     * price exactly like [[pack]] (merge replay → chunkReadout); modality
     * rows come from the SAME geometry builder as the batch op
     * ([[graft.operators.PipelineOps.modalityRowsOf]] — one definition,
-    * the two paths cannot drift), and the interleave key is the shared
-    * [[graft.operators.PipelineOps.mmKey]]. Payload bytes never enter
-    * the stream — locators only, the q196 contract. Emits (doc_id,
-    * seq_id, modality, locator, n_units, cum_units, shard). With `gate`,
-    * flagged text chunks drop AND so do the locator rows of their docs
+    * the two paths cannot drift), and the interleave key is the mmpack
+    * lineage's order key. Payload bytes never enter the stream —
+    * locators only, the q196 contract. Emits (doc_id, seq_id, modality,
+    * locator, n_units, cum_units, shard). With `gate`, flagged text
+    * chunks drop AND so do the locator rows of their docs
     * ([[decontamGate]]), so arrivals landed via
-    * [[graft.operators.PipelineOps.mmAppendServed]] cannot bypass the
-    * gate the rebuild enforces. Every [[pack]] guarantee holds verbatim
-    * over the interleaved rows. */
+    * [[graft.operators.PipelineOps.Lineage.appendServed]] cannot bypass
+    * the gate the rebuild enforces. Every [[pack]] guarantee holds
+    * verbatim over the interleaved rows. */
   def mmPack(merges: Seq[graft.operators.BpeOps.BpeMerge],
-      gate: Option[DataFrame] = None): Pack = {
-    import graft.operators.PipelineOps
-    // both gate references live inside the ONE cached rows plan, so the
-    // flagged-key subplan executes at most twice within a single
-    // batch-sized materialization — never per action
-    new Pack(merges, gate, (batch, g) => g.chunks
-        .select(col("doc_id"), col("chunk_id").as("seq_id"),
-          lit("text").as("modality"),
-          concat(lit("txt://"), col("doc_id"), lit(":"), col("chunk_id"))
-            .as("locator"),
-          col("n_units"))
-        .unionAll(g.docs(PipelineOps.modalityRowsOf(
-          batch.select(col("doc_id"), col("text")))))
-        .withColumn("bkey",
-          PipelineOps.mmKey(col("modality"), col("doc_id"), col("seq_id"))),
-      Seq("modality", "doc_id", "seq_id"), PipelineOps.mmShuffleKeyed)
-  }
+      gate: Option[DataFrame] = None): Pack =
+    new Pack(merges, gate, graft.operators.PipelineOps.Lineage.MmPack)
 
   /** The epoch TAIL at the arrival seam (q200 over [[pack]],
     * q207 over [[mmPack]]): arriving docs pack exactly like `fold`, and
@@ -1004,12 +983,9 @@ object StreamOps {
         val cached = packed.cache()
         try {
           val (_, rankBase) = state.claim(batchId)
-          val ids = packed.columns.filter(fold.keys.contains) :+ "shard"
-          val thin = cached.select(ids.map(col): _*)
-          val keyed = (0 until PipelineOps.Epochs)
-            .map(fold.keyed(thin, _))
-            .reduce(_ unionAll _)
-          val ranked = PipelineOps.rankEpochsFolded(keyed, fold.keys, "arr_rank")
+          val ids = fold.lineage.ids :+ "shard"
+          val ranked = PipelineOps.epochRanked(
+              cached.select(ids.map(col): _*), fold.lineage, "arr_rank")
             .select(col("epoch") +:
               (col("arr_rank") + nGenPrefix + rankBase).as("seq_rank") +:
               ids.map(col): _*)

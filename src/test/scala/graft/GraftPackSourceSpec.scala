@@ -6,7 +6,7 @@ import graft.operators.PipelineOps
 
 /** The `graftpack` DataSource V2 connector (r14 — SURVEY spec row):
   * named-table reads over the pack artifact replacing the path-based
-  * `packDir`/`GenManifest.current` convention. Pins: V2 scan node (no
+  * `<lineage>_g<gen>`/`GenManifest.current` convention. Pins: V2 scan node (no
   * silent V1 fallback), default lineage/current-generation resolution,
   * explicit generation time travel across publishes, lineage selection
   * (packclean / manifest lineages), partition pruning through the
@@ -23,7 +23,7 @@ class GraftPackSourceSpec extends AnyFunSuite with SharedSpark {
       .select("doc_id", "chunk_id", "lang", "n_tokens", "n_units",
         "cum_units", "shard")
       .collect().map(_.toSeq).sortBy(_.toString)
-    val viaHelper = PipelineOps.packRead(spark, base)
+    val viaHelper = PipelineOps.Lineage.Pack.read(spark, base)
       .collect().map(_.toSeq).sortBy(_.toString)
     assert(viaFormat.nonEmpty)
     assert(viaFormat === viaHelper)
@@ -48,14 +48,14 @@ class GraftPackSourceSpec extends AnyFunSuite with SharedSpark {
     // one-shard pack far from the cause. Same content, throwaway base.
     val tmp = java.nio.file.Files.createTempDirectory("graftpack_tt").toFile
     try {
-      val full = PipelineOps.packRead(spark, base)
-      val genBefore = PipelineOps.packWrite(spark, tmp, full)
+      val full = PipelineOps.Lineage.Pack.read(spark, base)
+      val genBefore = PipelineOps.Lineage.Pack.write(tmp, full)
       val rowsBefore = spark.read.format("graftpack")
         .option("base", tmp.getAbsolutePath).load().count()
       // publish a NEW generation with one shard only — the current-gen
       // read must follow it, the pinned read must not
       val oneShard = full.filter(col("shard") === 0)
-      val genAfter = PipelineOps.packWrite(spark, tmp, oneShard)
+      val genAfter = PipelineOps.Lineage.Pack.write(tmp, oneShard)
       assert(genAfter === genBefore + 1)
       val current = spark.read.format("graftpack")
         .option("base", tmp.getAbsolutePath).load()
@@ -74,9 +74,9 @@ class GraftPackSourceSpec extends AnyFunSuite with SharedSpark {
     // retain depth — r14 VERDICT #2)
     val tmp = java.nio.file.Files.createTempDirectory("graftpack_gc").toFile
     try {
-      val full = PipelineOps.packRead(spark, base)
+      val full = PipelineOps.Lineage.Pack.read(spark, base)
       (0 to GenManifest.DefaultRetain).foreach(_ =>
-        PipelineOps.packWrite(spark, tmp, full))
+        PipelineOps.Lineage.Pack.write(tmp, full))
       val e = intercept[Exception] {
         spark.read.format("graftpack")
           .option("base", tmp.getAbsolutePath)
@@ -100,7 +100,7 @@ class GraftPackSourceSpec extends AnyFunSuite with SharedSpark {
       .load()
     // the persisted manifest: one row per shard of the build
     assert(mf.count() ===
-      PipelineOps.packRead(spark, base).select("shard").distinct().count())
+      PipelineOps.Lineage.Pack.read(spark, base).select("shard").distinct().count())
   }
 
   test("missing base and unpublished lineage fail loudly") {

@@ -758,7 +758,7 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     val base = Standing.dir(spark, "seqpack")
     val gen = graft.GenManifest.current(base, "pack")
     // every sequence survives the disk hop byte-for-byte
-    val art = PipelineOps.packRead(spark, base).collect().map(packKey).sorted
+    val art = PipelineOps.Lineage.Pack.read(spark, base).collect().map(packKey).sorted
     val mem = PipelineOps.q158(spark, SF).collect().map(packKey).sorted
     assert(art === mem)
     // standing reuse: a second registered call must not re-publish
@@ -766,7 +766,7 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     assert(graft.GenManifest.current(base, "pack") === gen)
     // the loader's seek: reading one shard is partition-pruned to one
     // directory (the manifest's end offsets are the seek handles)
-    val seek = PipelineOps.packRead(spark, base).filter(col("shard") === 0L)
+    val seek = PipelineOps.Lineage.Pack.read(spark, base).filter(col("shard") === 0L)
     val pf = seek.queryExecution.executedPlan.toString.linesIterator
       .find(_.contains("PartitionFilters")).getOrElse("")
     assert(pf.matches(""".*PartitionFilters: \[[^\]]*shard[^\]]*=[^\]]*0[^\]]*\].*"""),
@@ -882,7 +882,7 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     // the persisted clean artifact: flagged keys absent, clean membership
     // exact, offsets a contiguous prefix sum from zero
     val base = PipelineOps.cleanPackArtifact(spark, SF)
-    val art = PipelineOps.packRead(spark, base, "packclean").collect()
+    val art = PipelineOps.Lineage.PackClean.read(spark, base).collect()
     val artKeys = art.map(r =>
       (r.getAs[Long]("doc_id"), r.getAs[Long]("chunk_id"))).toSet
     assert((artKeys intersect flaggedKeys) === Set.empty)
@@ -904,7 +904,7 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     assert(graft.GenManifest.current(base, "packclean") === gen)
     // and the shipped q165 lineage is UNDISTURBED by the migration (a
     // loader pinned on the contaminated build keeps its rows)
-    val shipped = PipelineOps.packRead(spark, base).collect()
+    val shipped = PipelineOps.Lineage.Pack.read(spark, base).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("chunk_id"))).toSet
     assert(shipped === cleanKeys ++ flaggedKeys)
   }
@@ -1225,7 +1225,7 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     val served = Seq((-1L, 0L, 1L, 5L, 5L, 0L))
       .toDF("doc_id", "chunk_id", "n_tokens", "n_units", "cum_units", "shard")
     val langs = Seq((-1L, "en")).toDF("doc_id", "lang")
-    PipelineOps.packAppendServed(spark, base, served, langs)
+    PipelineOps.Lineage.Pack.appendServed(base, served, Some(langs))
     val a1 = PipelineOps.q190(spark, SF).collect()
     assert(a1.filter(_.getAs[Long]("shard") == 0L)
       .forall(_.getAs[String]("status") == "changed"))
@@ -1233,14 +1233,14 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
       .forall(_.getAs[String]("status") == "same"))
     // 3. compaction re-publishes the artifact's truth (forged row and
     // all): the fresh stored manifest describes it — audit clean again
-    PipelineOps.packCompactArtifact(spark, base)
+    PipelineOps.Lineage.Pack.compact(spark, base)
     val a2 = PipelineOps.q190(spark, SF).collect()
     assert(a2.forall(_.getAs[String]("status") == "same"), a2.mkString("\n"))
     // 4. a lost shard directory (bit-rot / partial restore) reads as
     // `removed`: the stored manifest still lists what was published
     val cur = graft.GenManifest.current(base, "pack")
     graft.GenManifest.rmTree(
-      new java.io.File(PipelineOps.packDir(base, cur), "shard=0"))
+      new java.io.File(PipelineOps.Lineage.Pack.dir(base, cur), "shard=0"))
     val a3 = PipelineOps.q190(spark, SF).collect()
     assert(a3.filter(_.getAs[Long]("shard") == 0L)
       .forall(_.getAs[String]("status") == "removed"))
@@ -1248,7 +1248,7 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
       .forall(_.getAs[String]("status") == "same"))
     // 5. a rebuild publishes a fresh generation — audit recovers, and
     // the artifact again holds exactly the build's sequences
-    PipelineOps.packWrite(spark, base, PipelineOps.q158(spark, SF))
+    PipelineOps.Lineage.Pack.write(base, PipelineOps.q158(spark, SF))
     val a4 = PipelineOps.q190(spark, SF).collect()
     assert(a4.forall(_.getAs[String]("status") == "same"))
     assert(a4.map(_.getAs[Long]("new_seqs")).sum ===
@@ -1424,7 +1424,7 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     val base = PipelineOps.mmPackArtifact(spark, SF)
     // every row (incl. locators) survives the disk hop through the
     // graftpack table, byte for byte
-    val art = PipelineOps.mmPackRead(spark, base).collect().map(key).sorted
+    val art = PipelineOps.Lineage.MmPack.read(spark, base).collect().map(key).sorted
     assert(art === mem)
     assert(art.nonEmpty)
     // the registered manifest reconciles per shard per modality with a
@@ -1494,6 +1494,45 @@ class PipelineSpec extends AnyFunSuite with SharedSpark {
     // is too strong; assert only that modality values are valid
     assert(rows.map(_.getAs[String]("modality")).toSet
       .subsetOf(Set("text", "image", "audio")))
+  }
+
+  test("q199 step read ≡ the standing mm epoch order's StepEpoch rank range: one draw law, two ranking paths") {
+    def ids(r: org.apache.spark.sql.Row) = (r.getAs[Long]("seq_rank"),
+      r.getAs[String]("modality"), r.getAs[Long]("doc_id"),
+      r.getAs[Long]("seq_id"))
+    val step = PipelineOps.q199(spark, SF).collect().map(ids).toSeq
+    assert(step.nonEmpty, "premise: the rank range is non-empty at this SF")
+    val fold = PipelineOps.epochOrdered(spark, SF, PipelineOps.Lineage.MmPack)
+      .filter(col("epoch") === PipelineOps.StepEpoch &&
+        col("seq_rank") > PipelineOps.StepLoRank &&
+        col("seq_rank") <= PipelineOps.StepHiRank)
+      .collect().map(ids).toSeq.sortBy(_._1)
+    assert(step === fold)
+  }
+
+  test("text appendServed refuses a served row with no lang: named error, current generation unchanged") {
+    import spark.implicits._
+    val lin = PipelineOps.Lineage.Pack
+    val base = Standing.dir(spark, "append_guard")
+    lin.write(base, Seq((1L, 0L, "en", 3L, 5L, 5L, 0L),
+      (2L, 0L, "de", 2L, 4L, 9L, 0L)).toDF(lin.columns: _*))
+    val gen = GenManifest.current(base, lin.name)
+    def files(): Seq[String] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(lin.dir(base, gen)).map(_.getPath).sorted
+    }
+    val before = files()
+    val served = Seq((3L, 0L, 1L, 5L, 14L, 0L))
+      .toDF("doc_id", "chunk_id", "n_tokens", "n_units", "cum_units", "shard")
+    val langs = Seq((1L, "en")).toDF("doc_id", "lang")
+    val e = intercept[Exception](lin.appendServed(base, served, Some(langs)))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage)
+        .contains("served doc_id 3 has no lang metadata")), e.toString)
+    assert(GenManifest.current(base, lin.name) === gen)
+    assert(lin.read(spark, base).count() === 2L)
+    assert(files() === before, "a failed append must leave no files behind")
   }
 
   test("q200 epoch continuity: gen-N keeps its q162 ranks verbatim, arrivals are a dense disjoint tail under the shard-continuation rule") {

@@ -49,7 +49,8 @@ class ScalePlanSpec extends AnyFunSuite with SharedSpark {
     // r15: the epoch ordering memoizes (the q177 amortization premise),
     // so pin the BUILD plan — the registered entries read a LogicalRDD
     assertWindowsAggregated(
-      graft.operators.PipelineOps.epochOrderedPlan(spark, SF), "q162 build")
+      graft.operators.PipelineOps.epochOrderedPlan(spark, SF,
+        graft.operators.PipelineOps.Lineage.Pack), "q162 build")
     assertWindowsAggregated(graft.operators.PipelineOps.q166(spark, SF), "q166")
     assertWindowsAggregated(graft.operators.PipelineOps.q171(spark, SF), "q171")
     assertWindowsAggregated(
@@ -411,7 +412,8 @@ class ScalePlanSpec extends AnyFunSuite with SharedSpark {
     // the standing mm epoch ordering's BUILD plan (what executes once
     // per corpus snapshot) carries the same discipline
     assertWindowsAggregated(
-      graft.operators.PipelineOps.mmEpochOrderedPlan(spark, SF),
+      graft.operators.PipelineOps.epochOrderedPlan(spark, SF,
+        graft.operators.PipelineOps.Lineage.MmPack),
       "mmEpochOrdered build")
   }
 }

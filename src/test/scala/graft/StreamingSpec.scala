@@ -1544,7 +1544,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     // (a dedicated base — the registered q165 artifact must stay
     // pack-exact, appends would break its oracle)
     val base = Standing.dir(spark, "packart_serve")
-    PipelineOps.packWrite(spark, base, PipelineOps.q158(spark, SF))
+    PipelineOps.Lineage.Pack.write(base, PipelineOps.q158(spark, SF))
     type Full = (Long, Long, String, Long, Long, Long, Long)
     def fullKey(r: org.apache.spark.sql.Row): Full =
       (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3),
@@ -1565,7 +1565,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
         StreamOps.pack(merges), StreamOps.ServeState(endOffset)) { p =>
       val cached = p.cache() // two consumers: the append job + the probe
       try {
-        PipelineOps.packAppendServed(spark, base, cached, langs)
+        PipelineOps.Lineage.Pack.appendServed(base, cached, Some(langs))
         servedRows ++= cached.collect().map(r => (r.getLong(0),
           r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
           r.getLong(5)))
@@ -1578,13 +1578,13 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       (s._1, s._2, "xx", s._3, s._4, s._5, s._6)).toSeq
     val expected = (packRows.toSeq ++ servedFull).sorted
     // the artifact now holds rebuild ∪ served, byte-exact
-    val art = PipelineOps.packRead(spark, base).collect().map(fullKey)
+    val art = PipelineOps.Lineage.Pack.read(spark, base).collect().map(fullKey)
       .toSeq.sorted
     assert(art === expected)
     // served rows landed PARTITIONED: each served shard has its own
     // directory inside generation 1 (pruning preserved verbatim)
     servedRows.map(_._6).distinct.foreach { k =>
-      assert(new java.io.File(PipelineOps.packDir(base, 1L), s"shard=$k")
+      assert(new java.io.File(PipelineOps.Lineage.Pack.dir(base, 1L), s"shard=$k")
         .isDirectory, s"served shard $k must land in its partition dir")
     }
     // the manifest over the ARTIFACT runs through the same aggregate as
@@ -1596,30 +1596,30 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val unionDf = expected.map(identity[(Long, Long, String, Long, Long,
       Long, Long)]).toDF("doc_id", "chunk_id", "lang", "n_tokens",
       "n_units", "cum_units", "shard")
-    assert(manifestRows(PipelineOps.packRead(spark, base)) ===
+    assert(manifestRows(PipelineOps.Lineage.Pack.read(spark, base)) ===
       manifestRows(unionDf))
     // AT-LEAST-ONCE: a re-delivered batch appends byte-identical rows
     // again (the pack fold replays at the original base) — absorbed at
     // compaction, where the one-file-per-shard layout is also restored
-    PipelineOps.packAppendServed(spark, base,
+    PipelineOps.Lineage.Pack.appendServed(base,
       servedRows.toSeq.map(identity[(Long, Long, Long, Long, Long, Long)])
         .toDF("doc_id", "chunk_id", "n_tokens", "n_units",
-          "cum_units", "shard"), langs)
-    assert(PipelineOps.packRead(spark, base).count() ===
+          "cum_units", "shard"), Some(langs))
+    assert(PipelineOps.Lineage.Pack.read(spark, base).count() ===
       (expected.size + servedRows.size).toLong)
-    PipelineOps.packCompactArtifact(spark, base)
+    PipelineOps.Lineage.Pack.compact(spark, base)
     assert(graft.GenManifest.current(base, "pack") === 2L)
-    assert(PipelineOps.packRead(spark, base).collect().map(fullKey)
+    assert(PipelineOps.Lineage.Pack.read(spark, base).collect().map(fullKey)
       .toSeq.sorted === expected)
     // exactly one data file per shard after compaction
-    val gen2 = PipelineOps.packDir(base, 2L)
+    val gen2 = PipelineOps.Lineage.Pack.dir(base, 2L)
     gen2.listFiles().filter(_.getName.startsWith("shard=")).foreach { d =>
       assert(d.listFiles().count(_.getName.endsWith(".parquet")) === 1,
         s"${d.getName} must compact to one file")
     }
     // a reader pinned at generation 1 is undisturbed by the publish
     // (retained to the manifest's depth) — it still sees the duplicates
-    assert(PipelineOps.packReadAt(spark, base, 1L).count() ===
+    assert(PipelineOps.Lineage.Pack.read(spark, base, Some(1L)).count() ===
       (expected.size + servedRows.size).toLong)
   }
 
@@ -1770,7 +1770,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val base = java.nio.file.Files.createTempDirectory("graft_epochcont").toFile
     try {
       val gen = PipelineOps.q158(spark, SF)
-      PipelineOps.packWrite(spark, base, gen)
+      PipelineOps.Lineage.Pack.write(base, gen)
       val endOffset = gen.agg(max(col("cum_units"))).head().getLong(0)
       // the arrival set is the registered op's own model — the docs whose
       // TEXT now arrives through the real stream, as ONE served batch at
@@ -1790,7 +1790,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
           StreamOps.pack(merges), StreamOps.ServeState(endOffset)) { p =>
         val cached = p.cache()
         try {
-          PipelineOps.packAppendServed(spark, base, cached, langs)
+          PipelineOps.Lineage.Pack.appendServed(base, cached, Some(langs))
           served ++= cached.collect().map(r => (r.getLong(0), r.getLong(1),
             r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
         } finally cached.unpersist()
@@ -1800,7 +1800,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       // op's arrival model (the pack fold's one-batch law at the handoff):
       // the q200 tail IS what the serve seam appended
       val modeled = PipelineOps.arrivalPack(spark, SF,
-          gen.agg(max(col("cum_units")).as("base_off")))
+          PipelineOps.Lineage.Pack, endOffset)
         .collect().map(r => (r.getAs[Long]("doc_id"),
           r.getAs[Long]("chunk_id"), r.getAs[Long]("n_tokens"),
           r.getAs[Long]("n_units"), r.getAs[Long]("cum_units"),
@@ -1808,7 +1808,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       assert(served.sorted.toSeq === modeled.sorted.toSeq)
       // (2) the landed artifact's membership is exactly q200's (gen ∪
       // arrivals) — the epoch stream ranks precisely what is on disk
-      val artKeys = PipelineOps.packRead(spark, base)
+      val artKeys = PipelineOps.Lineage.Pack.read(spark, base)
         .select("doc_id", "chunk_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       val contKeys = PipelineOps.q200(spark, SF)
@@ -1841,8 +1841,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val base = java.nio.file.Files.createTempDirectory("graft_mmserve").toFile
     try {
       val build = PipelineOps.q196(spark, SF)
-      PipelineOps.packWrite(spark, base, build, "mmpack",
-        PipelineOps.mmManifestOf)
+      PipelineOps.Lineage.MmPack.write(base, build)
       val endOffset = build.agg(max(col("cum_units"))).head().getLong(0)
       // arrivals: clean docs + a PLANTED benchmark quote on an id that
       // carries BOTH modality rows (divisible by MmImgMod and MmAudMod) —
@@ -1866,7 +1865,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
           StreamOps.ServeState(endOffset)) { p =>
         val cached = p.cache() // two consumers: append job + the probe
         try {
-          PipelineOps.mmAppendServed(spark, base, cached)
+          PipelineOps.Lineage.MmPack.appendServed(base, cached)
           served ++= cached.collect().map(mmKeyOf)
         } finally cached.unpersist()
       }.start()
@@ -1891,12 +1890,12 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       // the artifact now holds rebuild ∪ served, byte-exact per modality
       val buildRows = build.collect().map(mmKeyOf)
       val expected = (buildRows.toSeq ++ served).sorted
-      def artRows() = PipelineOps.mmPackRead(spark, base).collect()
+      def artRows() = PipelineOps.Lineage.MmPack.read(spark, base).collect()
         .map(mmKeyOf).toSeq.sorted
       assert(artRows() === expected)
       // served rows landed PARTITIONED inside generation 1
       served.map(_._7).distinct.foreach { k =>
-        assert(new java.io.File(PipelineOps.packDir(base, 1L, "mmpack"),
+        assert(new java.io.File(PipelineOps.Lineage.MmPack.dir(base, 1L),
           s"shard=$k").isDirectory,
           s"served shard $k must land in its partition dir")
       }
@@ -1910,28 +1909,28 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
         .map(identity[(Long, Long, String, String, Long, Long, Long)])
         .toDF("doc_id", "seq_id", "modality",
           "locator", "n_units", "cum_units", "shard")
-      assert(manifestRows(PipelineOps.mmPackRead(spark, base)) ===
+      assert(manifestRows(PipelineOps.Lineage.MmPack.read(spark, base)) ===
         manifestRows(unionDf))
       // AT-LEAST-ONCE: a re-delivered batch appends byte-identical rows
       // again — absorbed at compaction, one file per shard restored
-      PipelineOps.mmAppendServed(spark, base,
+      PipelineOps.Lineage.MmPack.appendServed(base,
         served.toSeq
           .map(identity[(Long, Long, String, String, Long, Long, Long)])
           .toDF("doc_id", "seq_id", "modality", "locator",
             "n_units", "cum_units", "shard"))
-      assert(PipelineOps.mmPackRead(spark, base).count() ===
+      assert(PipelineOps.Lineage.MmPack.read(spark, base).count() ===
         (expected.size + served.size).toLong)
-      PipelineOps.mmCompactArtifact(spark, base)
+      PipelineOps.Lineage.MmPack.compact(spark, base)
       assert(GenManifest.current(base, "mmpack") === 2L)
       assert(artRows() === expected)
-      val gen2 = PipelineOps.packDir(base, 2L, "mmpack")
+      val gen2 = PipelineOps.Lineage.MmPack.dir(base, 2L)
       gen2.listFiles().filter(_.getName.startsWith("shard=")).foreach { d =>
         assert(d.listFiles().count(_.getName.endsWith(".parquet")) === 1,
           s"${d.getName} must compact to one file")
       }
       // a reader pinned at generation 1 is undisturbed by the publish —
       // it still sees the duplicate append
-      assert(PipelineOps.mmPackReadAt(spark, base, 1L).count() ===
+      assert(PipelineOps.Lineage.MmPack.read(spark, base, Some(1L)).count() ===
         (expected.size + served.size).toLong)
     } finally GenManifest.rmTree(base)
   }
@@ -1945,8 +1944,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val base = java.nio.file.Files.createTempDirectory("graft_mmepcont").toFile
     try {
       val gen = PipelineOps.q196(spark, SF)
-      PipelineOps.packWrite(spark, base, gen, "mmpack",
-        PipelineOps.mmManifestOf)
+      PipelineOps.Lineage.MmPack.write(base, gen)
       val endOffset = gen.agg(max(col("cum_units"))).head().getLong(0)
       // the arrival set is the registered op's own model — the docs
       // whose text AND locators now arrive through the real mm stream
@@ -1967,7 +1965,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
           StreamOps.mmPack(merges), StreamOps.ServeState(endOffset)) { p =>
         val cached = p.cache()
         try {
-          PipelineOps.mmAppendServed(spark, base, cached)
+          PipelineOps.Lineage.MmPack.appendServed(base, cached)
           served ++= cached.collect().map(mmKeyOf)
         } finally cached.unpersist()
       }.start()
@@ -1978,13 +1976,13 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       // text chunks AND modality locator rows
       assert(served.exists(_._3 != "text"),
         "premise: some arrival carries a modality row")
-      val modeled = PipelineOps.mmArrivalPack(spark, SF,
-          gen.agg(max(col("cum_units")).as("base_off")))
+      val modeled = PipelineOps.arrivalPack(spark, SF,
+          PipelineOps.Lineage.MmPack, endOffset)
         .collect().map(mmKeyOf)
       assert(served.sorted.toSeq === modeled.sorted.toSeq)
       // (2) the landed artifact's membership is exactly q207's (gen ∪
       // arrivals) — the mm epoch stream ranks precisely what is on disk
-      val artKeys = PipelineOps.mmPackRead(spark, base)
+      val artKeys = PipelineOps.Lineage.MmPack.read(spark, base)
         .select("doc_id", "seq_id", "modality").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
       val contKeys = PipelineOps.q207(spark, SF)
@@ -2002,7 +2000,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
           r.getString(4))).sorted.toSeq
-      val standing = PipelineOps.mmEpochOrdered(spark, SF)
+      val standing = PipelineOps.epochOrdered(spark, SF,
+        PipelineOps.Lineage.MmPack)
         .select("epoch", "seq_rank", "doc_id", "seq_id", "modality")
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
