@@ -90,7 +90,9 @@ object CheckpointRegistry {
     * stream's lifetime. Thread-local capture means a CONCURRENT
     * operator (another serving stream in the same JVM) registering
     * inside the window is untouched; nests, restoring the outer scope
-    * on exit. */
+    * on exit. The same rule covers [[Standing.inputs]]: what an input
+    * thread registers is not captured by the caller's scope — it
+    * belongs to the standing build that made it. */
   def scoped[T](f: => T): T = {
     val buf = scala.collection.mutable.Buffer.empty[Handle]
     val prev = scopeStack.get()

@@ -3,9 +3,10 @@ package graft
 import java.io.File
 import java.util.concurrent.{CompletableFuture, CompletionException}
 import scala.collection.mutable
+import scala.util.{Failure, Success, Try}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 
 /** Session-lifetime standing state: everything an operator builds once
   * per corpus snapshot and then reads many times.
@@ -41,6 +42,17 @@ import org.apache.spark.sql.execution.LogicalRDD
   * that throws is not cached: the next call rebuilds. The premise is the
   * engine-wide snapshot contract — a dir's contents are immutable for
   * the session.
+  *
+  * Named inputs: a build names the standing builds it reads that do not
+  * depend on each other with [[inputs]], and they build concurrently
+  * (q158's pack: the exact-dedup gate chain, the span-dedup set and the
+  * tokenizer branch). Each call creates its threads and they end with
+  * it — no pool outlives the call, because Spark local properties (the
+  * job group an op's jobs are attributed by) are copied into a thread
+  * when it is created. A [[CheckpointRegistry.scoped]] block captures
+  * only registrations made on its own thread, so blocks an input
+  * thread registers outlive the caller's scope: they belong to the
+  * standing build that made them.
   */
 object Standing {
 
@@ -113,6 +125,36 @@ object Standing {
       val ck = build.localCheckpoint()
       Entry(ck, ck.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd })
     }.df
+
+  /** Build `builds` — standing inputs that do not depend on each other
+    * — concurrently and return their values in the order named. All but
+    * the last run on threads created for this call, each inheriting the
+    * caller's Spark local properties (job group, scheduler pool) without
+    * its SQL execution id; the caller runs the last, then waits for the
+    * rest. Inputs sharing a key (a diamond) build it once: the second
+    * asker waits on the key's future. Once all have finished, the first
+    * failed input in the order named is rethrown; its build, like any
+    * failed one, is not cached. The inputs must form a DAG: an input
+    * thread asking for a key its caller is building waits forever,
+    * where the same nesting on one thread fails fast. */
+  def inputs[T](s: SparkSession)(builds: (() => T)*): Seq[T] = {
+    require(builds.nonEmpty, "inputs: name at least one build")
+    def run(b: () => T): Try[T] = try Success(b()) catch { case t: Throwable => Failure(t) }
+    val sc = s.sparkContext
+    val forked = builds.init.zipWithIndex.map { case (b, i) =>
+      var got: Try[T] = null
+      val t = new Thread(() => {
+        sc.setLocalProperty(SQLExecution.EXECUTION_ID_KEY, null)
+        sc.setLocalProperty(SQLExecution.EXECUTION_ROOT_ID_KEY, null)
+        got = run(b)
+      }, s"graft-standing-input-$i")
+      t.setDaemon(true)
+      t.start()
+      () => { t.join(); got }
+    }
+    val last = run(builds.last)
+    (forked.map(_()) :+ last).map(_.get)
+  }
 
   /** Drop every memoized relation and unpersist its blocks (an in-flight
     * build's blocks go when it finishes). Call only where no consumer

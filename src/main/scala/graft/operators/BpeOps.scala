@@ -92,10 +92,18 @@ object BpeOps {
 
   /** Train the merge table; also returns the final (merged) vocab relation
     * so the spec can pin re-tokenization. The registered op surfaces only
-    * the merge table (the model artifact a tokenizer ships). */
+    * the merge table (the model artifact a tokenizer ships). At the
+    * default [[Rounds]] this is the snapshot's one training run (the
+    * [[trainShared]] memo: its merges and `bpe_vocab`); another round
+    * budget trains afresh. */
   def train(s: SparkSession, dir: String, rounds: Int = Rounds)
       : (Seq[BpeMerge], DataFrame) =
-    trainOn(wordCounts(s, dir), rounds)
+    if (rounds != Rounds) trainOn(wordCounts(s, dir), rounds)
+    else {
+      import s.implicits._
+      val (merges, vocab) = trainShared(s, dir)
+      (merges.as[BpeMerge].collect().sortBy(_.round).toSeq, vocab)
+    }
 
   /** The round loop over an arbitrary char-spaced word-count relation
     * (shared by the corpus trainer, q156's train-fold trainer, and the
@@ -142,7 +150,7 @@ object BpeOps {
     var vocabOut: DataFrame = null
     val merges = graft.Standing.relation("bpe_merges", dir) {
       import s.implicits._
-      val (ms, vocab) = train(s, dir)
+      val (ms, vocab) = trainOn(wordCounts(s, dir), Rounds)
       vocabOut = graft.Standing.relation("bpe_vocab", dir)(vocab)
       ms.toDF("round", "pair", "merged", "n")
     }
@@ -620,10 +628,11 @@ object BpeOps {
     * stop is ABSORBING (no merge ⇒ same pairs ⇒ still no repeat), so
     * the two engines cannot disagree about which rounds fired.
     *
-    * Scale shape: identical to [[train]] — one corpus pass for the
-    * word counts + one extra vocabulary-sized distinct-symbol aggregate
-    * for the base inventory, then ≤ min(maxRounds, V − base)
-    * vocabulary-sized rounds. */
+    * Scale shape: [[trainToVocab]] is [[train]]'s — one corpus pass for
+    * the word counts + one extra vocabulary-sized distinct-symbol
+    * aggregate for the base inventory, then ≤ min(maxRounds, V − base)
+    * vocabulary-sized rounds; the registered [[q163]] pays only the
+    * base-inventory aggregate over the snapshot's trained table. */
   val TargetVocab = 29
 
   /** Train until the merge inventory would push |vocab| past
@@ -634,16 +643,27 @@ object BpeOps {
     trainToVocabOn(wordCounts(s, dir), targetVocab, maxRounds)
 
   private[graft] def trainToVocabOn(v0: DataFrame, targetVocab: Int,
-      maxRounds: Int): (Seq[BpeMerge], DataFrame) = {
+      maxRounds: Int): (Seq[BpeMerge], DataFrame) =
+    trainOn(v0, vocabBudget(v0, targetVocab, maxRounds), minPairCount = 2L)
+
+  /** The rounds `targetVocab` leaves past the base symbol inventory of
+    * `v0` (one distinct-symbol aggregate), capped at `maxRounds`. */
+  private def vocabBudget(v0: DataFrame, targetVocab: Int, maxRounds: Int): Int = {
     val base = v0.select(explode(split(col("w"), " ")).as("sym"))
       .agg(countDistinct(col("sym"))).head().getLong(0)
-    val budget = math.max(0L, targetVocab - base).min(maxRounds.toLong).toInt
-    trainOn(v0, budget, minPairCount = 2L)
+    math.max(0L, targetVocab - base).min(maxRounds.toLong).toInt
   }
 
+  /** The budgeted run is a PREFIX of the snapshot's one [[Rounds]]-round
+    * training run: both trainers see the same vocab state each round and
+    * pick the same argmax, so stopping at the budget or at the first
+    * non-repeating pair truncates the memoized merge table (BpeSpec pins
+    * it against a fresh [[trainToVocab]] run) — one base-inventory job
+    * instead of a second training run. */
   def q163(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    trainToVocab(s, dir, TargetVocab)._1
+    val budget = vocabBudget(wordCounts(s, dir), TargetVocab, Rounds)
+    train(s, dir)._1.take(budget).takeWhile(_.n >= 2)
       .toDF("round", "pair", "merged", "n")
       .orderBy(col("round"))
   }

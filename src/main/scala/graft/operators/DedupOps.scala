@@ -286,12 +286,7 @@ object DedupOps {
     * so the hash gate re-proves memo ≡ chain on every run. */
   private[graft] def q50Plan(s: SparkSession, dir: String): DataFrame = {
     val docSh = docShingles(s, dir).filter(size(col("shs")) > 0)
-    val buckets = aggBandBuckets(docSh)
-    val cand = buckets.select(col("doc_id").as("id_a"), col("band"), col("bucket"))
-      .join(buckets.select(col("doc_id").as("id_b"), col("band"), col("bucket")),
-        Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
+    val cand = bandCandidates(docSh)
     // verify candidates with exact Jaccard over the full shingle sets.
     // docSh is corpus-sized while candidates are ∝ true dups — too big a
     // key set to broadcast-join at 100 TB, far too small to justify
@@ -331,6 +326,22 @@ object DedupOps {
         graft.functions.Num.ratio6(col("inter"),
           size(col("shs_a")) + size(col("shs_b")) - col("inter")).as("jaccard"))
   }
+
+  /** Distinct (id_a < id_b) pairs of `docSh` sharing a band bucket. The
+    * buckets group once by (band, bucket) and each sorted member list
+    * pairs every id with the larger ones after it, so the 16-MIN
+    * signature aggregate runs through one exchange: a self-join of the
+    * bucket relation plans it on both sides, and AQE does not reuse that
+    * exchange. */
+  private[graft] def bandCandidates(docSh: DataFrame): DataFrame =
+    aggBandBuckets(docSh)
+      .groupBy(col("band"), col("bucket"))
+      .agg(array_sort(collect_list(col("doc_id"))).as("ids"))
+      .filter(size(col("ids")) > 1)
+      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "id_a")))
+      .select(col("id_a"), explode(slice(col("ids"), col("i") + 2,
+        size(col("ids")) - col("i") - 1)).as("id_b"))
+      .distinct()
 
   private[operators] def permsValuesSql: String =
     (0 until NumPerms)

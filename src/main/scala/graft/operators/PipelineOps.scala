@@ -575,7 +575,11 @@ object PipelineOps {
     graft.Standing.relation("q114docs", dir)(q114Docs(s, dir))
 
   private def q114Docs(s: SparkSession, dir: String): DataFrame = {
-    val sel = gateDecisions(s, dir).filter(col("selected") === 1).select(col("doc_id"))
+    // the exact-dedup gate chain and the span set cleanedDocs cuts with
+    // are independent standing inputs: they build side by side
+    val gate = graft.Standing.inputs(s)(
+      () => gateDecisions(s, dir), () => DedupOps.dupSpans8(s, dir)).head
+    val sel = gate.filter(col("selected") === 1).select(col("doc_id"))
     val cleaned = DedupOps.cleanedDocs(s, dir)
       .select(col("doc_id"), concat_ws(" ", col("cleaned")).as("ctext"))
     graft.Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("text"))
@@ -976,14 +980,15 @@ object PipelineOps {
     * windows to inspect). */
   private[graft] def packedBuildPlan(s: SparkSession, dir: String): DataFrame = {
       import graft.functions.Num
-      val docs = q114DocsShared(s, dir)
+      val Seq(docs, units) = graft.Standing.inputs(s)(
+        () => q114DocsShared(s, dir), () => BpeOps.docUnits(s, dir))
       val policy = q120PolicyOf(q114PolicyOf(docs))
         .select(col("lang"), col("rate_micros"))
       val sampled = docs
         .join(broadcast(policy), Seq("lang"))
         .withColumn("u", mixU)
         .filter(col("u") < col("rate_micros"))
-        .join(BpeOps.docUnits(s, dir), Seq("doc_id"), "left")
+        .join(units, Seq("doc_id"), "left")
         .select(col("doc_id"), col("lang"),
           Num.ratio6(lit(1000000L), col("rate_micros")).as("weight"),
           coalesce(col("n_units"), lit(0L)).as("n_units"))
@@ -1058,8 +1063,9 @@ object PipelineOps {
   /** The unmemoized sequence-pack plan (the [[packedBuildPlan]] rule —
     * ScalePlanSpec pins the window discipline here). */
   private[graft] def sequencePackPlan(s: SparkSession, dir: String): DataFrame = {
-      val members = packedBuild(s, dir).select(col("doc_id"), col("lang"))
-      val chunks = BpeOps.chunkMasses(s, dir)
+      val Seq(packed, chunks) = graft.Standing.inputs(s)(
+        () => packedBuild(s, dir), () => BpeOps.chunkMasses(s, dir))
+      val members = packed.select(col("doc_id"), col("lang"))
       packAt(members.join(chunks, Seq("doc_id")), Lineage.Pack.orderPrefix,
           Lineage.Pack.keys)
         .select(Lineage.Pack.columns.map(col): _*)

@@ -245,6 +245,10 @@ class BpeSpec extends AnyFunSuite with SharedSpark {
     // vocab state and picks the same argmax
     val (full, _) = BpeOps.train(spark, SF)
     assert(merges === full.take(merges.size))
+    // the registered q163 truncates the snapshot's memoized table; it
+    // must equal this fresh count-stopped run
+    import spark.implicits._
+    assert(BpeOps.q163(spark, SF).as[BpeOps.BpeMerge].collect().toSeq === merges)
   }
 
   test("q163 trainToVocab: the no-repeat stop fires strictly before budget and cap") {

@@ -290,6 +290,35 @@ class ScalePlanSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("q50's band candidates run the 16-MIN signature aggregate through one exchange") {
+    // a self-join of the band buckets planned the signature aggregate on
+    // both join sides and AQE did not reuse its exchange: the executed
+    // plan ran it twice over the same shingles
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Min, Partial}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // the executed (final) plan, through AQE stages — a reused exchange
+    // is not descended into: its work ran once
+    def flatten(p: SparkPlan): Seq[SparkPlan] =
+      p.collect { case x => x }.flatMap {
+        case s: InMemoryTableScanExec => s +: flatten(s.relation.cachedPlan)
+        case a: AdaptiveSparkPlanExec => a +: flatten(a.executedPlan)
+        case q: QueryStageExec => q +: flatten(q.plan)
+        case x => Seq(x)
+      }
+    val docSh = operators.DedupOps.docShingles(spark, SF).filter(size(col("shs")) > 0)
+    val cand = operators.DedupOps.bandCandidates(docSh)
+    assert(cand.collect().nonEmpty)
+    val sigAggs = flatten(cand.queryExecution.executedPlan).collect {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(e =>
+        e.mode == Partial && e.aggregateFunction.isInstanceOf[Min]) => a
+    }
+    assert(sigAggs.size === 1,
+      s"signature aggregate ran ${sigAggs.size}× in\n${cand.queryExecution.executedPlan}")
+  }
+
   test("broadcast joins degrade to shuffle joins — same answers — when dims outgrow the threshold") {
     // SURVEY §5's claim made executable: the declarative q3 plan
     // broadcasts its dimension sides at test scale, and when a

@@ -1,17 +1,22 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.col
+import org.scalatest.concurrent.Eventually
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{DedupOps, GraphOps}
+import graft.operators.{BpeOps, DedupOps, GraphOps, PipelineOps}
 
 /** Lifecycle and concurrency contract of [[Standing]]: per-key build
   * futures (no global lock), failed builds not cached, artifact slots
-  * rebuilt on invalidate / another value / a dead artifact. */
-class StandingSpec extends AnyFunSuite with SharedSpark {
+  * rebuilt on invalidate / another value / a dead artifact, and named
+  * inputs built concurrently on per-call threads. */
+class StandingSpec extends AnyFunSuite with SharedSpark with Eventually {
 
   private def inParallel[T](n: Int)(f: Int => T): Seq[T] = {
     val pool = Executors.newFixedThreadPool(n)
@@ -35,20 +40,21 @@ class StandingSpec extends AnyFunSuite with SharedSpark {
     assert(dfs.head.count() === 10L)
   }
 
+  /** A build that signals its own latch, then needs the OTHER's signal —
+    * two of them complete only if both are in flight at the same time. */
+  private def latched(mine: CountDownLatch, other: CountDownLatch) = {
+    mine.countDown()
+    assert(other.await(20, TimeUnit.SECONDS),
+      "the other build never started: the builds ran one after another")
+    spark.range(3).toDF("id")
+  }
+
   test("distinct keys build concurrently: neither build waits on a global lock") {
-    // each build signals its own latch, then needs the OTHER's signal —
-    // satisfiable only if both builds are in flight at the same time
     val a = new CountDownLatch(1)
     val b = new CountDownLatch(1)
-    def build(mine: CountDownLatch, other: CountDownLatch) = {
-      mine.countDown()
-      assert(other.await(20, TimeUnit.SECONDS),
-        "the other key's build never started: builds are serialized")
-      spark.range(3).toDF("id")
-    }
     val got = inParallel(2) { i =>
-      if (i == 0) Standing.relation("standing_par_a", SF)(build(a, b))
-      else Standing.relation("standing_par_b", SF)(build(b, a))
+      if (i == 0) Standing.relation("standing_par_a", SF)(latched(a, b))
+      else Standing.relation("standing_par_b", SF)(latched(b, a))
     }
     assert(got.map(_.count()) === Seq(3L, 3L))
   }
@@ -119,5 +125,109 @@ class StandingSpec extends AnyFunSuite with SharedSpark {
     // and the inner key is now a memo hit holding the same pairs
     assert(DedupOps.pairs50(spark, SF).collect().toSet ===
       DedupOps.q50Plan(spark, SF).collect().toSet)
+  }
+
+  test("named inputs overlap: neither waits for the other to finish") {
+    val a = new CountDownLatch(1)
+    val b = new CountDownLatch(1)
+    val got = Standing.inputs(spark)(
+      () => Standing.relation("inputs_par_a", SF)(latched(a, b)),
+      () => Standing.relation("inputs_par_b", SF)(latched(b, a)))
+    assert(got.map(_.count()) === Seq(3L, 3L))
+  }
+
+  test("named inputs: a diamond builds its shared key once") {
+    val builds = new AtomicInteger
+    def shared = Standing.relation("inputs_diamond", SF) {
+      builds.incrementAndGet()
+      // hold the build open so the other branch arrives mid-build
+      Thread.sleep(200)
+      spark.range(5).toDF("id")
+    }
+    val Seq(left, right) = Standing.inputs(spark)(
+      () => Standing.relation("inputs_diamond_l", SF)(shared.filter(col("id") < 2)),
+      () => Standing.relation("inputs_diamond_r", SF)(shared.filter(col("id") >= 2)))
+    assert(builds.get === 1)
+    assert(left.count() === 2L && right.count() === 3L)
+  }
+
+  test("named inputs: a failed input is rethrown at the consumer and not cached") {
+    val builds = new AtomicInteger
+    val siblingDone = new AtomicBoolean
+    val e = intercept[IllegalStateException] {
+      Standing.inputs(spark)(
+        () => Standing.relation("inputs_fail", SF) {
+          builds.incrementAndGet()
+          throw new IllegalStateException("boom")
+        },
+        () => {
+          Thread.sleep(200)
+          siblingDone.set(true)
+          spark.range(1).toDF("id")
+        })
+    }
+    assert(e.getMessage === "boom")
+    assert(siblingDone.get, "the consumer must see the failure only once every input finished")
+    val df = Standing.relation("inputs_fail", SF) {
+      builds.incrementAndGet()
+      spark.range(4).toDF("id")
+    }
+    assert(df.count() === 4L)
+    assert(builds.get === 2, "the failed build must not be cached")
+  }
+
+  test("named inputs: input threads carry the caller's job group and no stale execution id") {
+    val sc = spark.sparkContext
+    val jobs = new ConcurrentLinkedQueue[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.job.description") == "standing_input_job")
+          jobs.add((e.properties.getProperty("spark.jobGroup.id"),
+            e.properties.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup("standing_inputs_group", "spec")
+    // a caller inside an SQL execution carries its id; an input thread
+    // must not run its own jobs under it
+    sc.setLocalProperty(SQLExecution.EXECUTION_ID_KEY, "-42")
+    try {
+      val Seq((group, execId, thread), _) = Standing.inputs(spark)(
+        () => {
+          sc.setJobDescription("standing_input_job")
+          sc.parallelize(1 to 3).count()
+          (sc.getLocalProperty("spark.jobGroup.id"),
+            sc.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), Thread.currentThread)
+        },
+        () => ("", "", Thread.currentThread))
+      assert(thread ne Thread.currentThread, "all but the last input run on their own thread")
+      assert(group === "standing_inputs_group")
+      assert(execId === null)
+      assert(sc.getLocalProperty(SQLExecution.EXECUTION_ID_KEY) === "-42",
+        "clearing the id on the input thread must leave the caller's alone")
+      eventually(timeout(10.seconds)) {
+        assert(jobs.asScala.toSeq === Seq(("standing_inputs_group", null)))
+      }
+    } finally {
+      sc.setLocalProperty(SQLExecution.EXECUTION_ID_KEY, null)
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("q152/q158/q173 built through concurrent inputs equal a sequential build") {
+    def rows() = Seq(PipelineOps.q152(spark, SF), PipelineOps.q158(spark, SF),
+      PipelineOps.q173(spark, SF)).map(_.collect().toSeq)
+    Standing.clear()
+    val concurrent = rows()
+    Standing.clear()
+    // build every named input one after another first, so no two
+    // builds below overlap
+    PipelineOps.q77(spark, SF).count()
+    DedupOps.dupSpans8(spark, SF).count()
+    BpeOps.docUnits(spark, SF).count()
+    BpeOps.chunkMasses(spark, SF).count()
+    val sequential = rows()
+    assert(concurrent.forall(_.nonEmpty))
+    assert(concurrent === sequential)
   }
 }
