@@ -729,22 +729,16 @@ object BpeOps {
     * the artifact round-trip contract (the q161 treatment, applied to
     * the release seam). Scale shape: q151's (distinct-token replay +
     * one corpus-pass join + per-doc agg); the artifact adds one
-    * model-sized parquet write+read per corpus snapshot. */
-  private[graft] def tokenizerDir(base: java.io.File, gen: Long): java.io.File =
-    new java.io.File(base, s"merges_g$gen")
-
-  /** Publish `merges` as the next generation at `base` (atomic manifest
-    * rename; aged-out generations GC'd). Returns the published gen. */
+    * model-sized parquet write+read per corpus snapshot.
+    *
+    * [[tokenizerWrite]] publishes `merges` as the next generation
+    * ([[graft.GenManifest.writeNext]]) and returns it. */
   private[graft] def tokenizerWrite(s: SparkSession, base: java.io.File,
       merges: Seq[BpeMerge]): Long = {
     import s.implicits._
-    val next =
-      graft.GenManifest.read(base, "merges").map(_.current).getOrElse(0L) + 1
-    merges.toDF("round", "pair", "merged", "n").coalesce(1)
-      .write.parquet(tokenizerDir(base, next).getAbsolutePath)
-    graft.GenManifest.publish(base, "merges", next)
-      .foreach(g => graft.GenManifest.rmTree(tokenizerDir(base, g)))
-    next
+    graft.GenManifest.writeNext(base, "merges")(g =>
+      merges.toDF("round", "pair", "merged", "n").coalesce(1)
+        .write.parquet(graft.GenManifest.dir(base, "merges", g).getAbsolutePath))
   }
 
   /** Load the CURRENT generation's merge table. A gapped table is a
@@ -754,7 +748,7 @@ object BpeOps {
   private[graft] def tokenizerLoad(s: SparkSession,
       base: java.io.File): Seq[BpeMerge] = {
     val gen = graft.GenManifest.current(base, "merges")
-    val ms = s.read.parquet(tokenizerDir(base, gen).getAbsolutePath)
+    val ms = s.read.parquet(graft.GenManifest.dir(base, "merges", gen).getAbsolutePath)
       .collect()
       .map(r => BpeMerge(r.getAs[Int]("round"), r.getAs[String]("pair"),
         r.getAs[String]("merged"), r.getAs[Long]("n")))
@@ -1059,24 +1053,17 @@ object BpeOps {
     * artifact must hash-match the oracle's straight-through replay
     * (the q164 round-trip contract, per script). Membership is total:
     * each class's tokens were all seen by its own trainer AND the
-    * mixture trainer, so neither join drops rows. */
-  private[graft] def tokenizerScriptDir(base: java.io.File,
-      gen: Long): java.io.File =
-    new java.io.File(base, s"merges_script_g$gen")
-
-  /** Publish the per-script merge tables as the next `merges_script`
-    * generation (atomic manifest rename; aged-out generations GC'd). */
+    * mixture trainer, so neither join drops rows.
+    *
+    * [[tokenizerWriteScripts]] publishes the per-script tables as the
+    * next `merges_script` generation and returns it. */
   private[graft] def tokenizerWriteScripts(s: SparkSession,
       base: java.io.File, merges: Seq[(String, BpeMerge)]): Long = {
     import s.implicits._
-    val next = graft.GenManifest.read(base, "merges_script")
-      .map(_.current).getOrElse(0L) + 1
-    merges.map { case (sc, m) => (sc, m.round, m.pair, m.merged, m.n) }
-      .toDF("script", "round", "pair", "merged", "n").coalesce(1)
-      .write.parquet(tokenizerScriptDir(base, next).getAbsolutePath)
-    graft.GenManifest.publish(base, "merges_script", next)
-      .foreach(g => graft.GenManifest.rmTree(tokenizerScriptDir(base, g)))
-    next
+    graft.GenManifest.writeNext(base, "merges_script")(g =>
+      merges.map { case (sc, m) => (sc, m.round, m.pair, m.merged, m.n) }
+        .toDF("script", "round", "pair", "merged", "n").coalesce(1)
+        .write.parquet(graft.GenManifest.dir(base, "merges_script", g).getAbsolutePath))
   }
 
   /** Load the CURRENT per-script generation. A script whose rounds are
@@ -1086,7 +1073,7 @@ object BpeOps {
       base: java.io.File): Map[String, Seq[BpeMerge]] = {
     val gen = graft.GenManifest.current(base, "merges_script")
     val byScript = s.read
-      .parquet(tokenizerScriptDir(base, gen).getAbsolutePath)
+      .parquet(graft.GenManifest.dir(base, "merges_script", gen).getAbsolutePath)
       .collect()
       .map(r => (r.getAs[String]("script"),
         BpeMerge(r.getAs[Int]("round"), r.getAs[String]("pair"),

@@ -735,20 +735,14 @@ object DedupOps {
     * ([[q115Write]]'s pattern at shingle granularity — write pays the
     * one distinct shuffle; probes are bucket-aligned with NO exchange
     * on the index side), maintained by the same append +
-    * dedup-compaction lifecycle ([[compactBucketed]]). Probe cost is
+    * dedup-compaction lifecycle ([[Bucketed.Index]]). Probe cost is
     * arrival-rate-sized: one anti-join on sh + two thin aggregates.
     * FULL oracle (the split replayed with NOT EXISTS). DedupSpec:
     * driver replay, and the lifecycle proof that folding the arrivals
     * INTO the index drives their re-probed novelty to exactly zero. */
   private[graft] def q189Write(s: SparkSession, oldSh: DataFrame): Unit = {
     graft.Standing.invalidate(s, "shingleindex", "g189_shingles")
-    val base = graft.Standing.dir(s, "shingleindex")
-    Bucketed.reset(s, base, "g189_shingles")
-    oldSh.select(explode(col("shs")).as("sh")).distinct()
-      .write.bucketBy(IndexBuckets, "sh")
-      .option("path", new java.io.File(base, "g189_shingles").getAbsolutePath)
-      .mode("overwrite").saveAsTable("g189_shingles")
-    graft.GenManifest.publish(base, "g189_shingles", 0L)
+    G189Shingles.write(s, oldSh.select(explode(col("shs")).as("sh")).distinct())
   }
 
   /** Fold a new batch's distinct shingles in by bucketed append —
@@ -756,14 +750,10 @@ object DedupOps {
     * [[q189Compact]]. `addSh`: (doc_id, shs). */
   private[graft] def q189Append(s: SparkSession, addSh: DataFrame): Unit = {
     graft.Standing.invalidate(s, "shingleindex", "g189_shingles")
-    addSh.select(explode(col("shs")).as("sh")).distinct()
-      .write.bucketBy(IndexBuckets, "sh").mode("append")
-      .saveAsTable("g189_shingles")
+    G189Shingles.append(s, addSh.select(explode(col("shs")).as("sh")).distinct())
   }
 
-  private[graft] def q189Compact(s: SparkSession): Unit =
-    compactBucketed(s, "shingleindex", "g189_shingles", Seq("sh"), Nil,
-      dedupe = true)
+  private[graft] def q189Compact(s: SparkSession): Unit = G189Shingles.compact(s)
 
   /** The registered probe: arrivals = doc_id % [[IncrSplitMod]] == 0
     * (the q108/q115 convention); production probes its own batch. */
@@ -1176,6 +1166,13 @@ object DedupOps {
   val IncrSplitMod = 7
   val IndexBuckets = 16
 
+  /** The bucketed index tables of the incremental dedup/span family. */
+  val G108Buckets = Bucketed.Index("dedupindex", "g108_buckets", Seq("band", "bucket"))
+  val G108Shingles = Bucketed.Index("dedupindex", "g108_shingles", Seq("doc_id"), Seq("doc_id"))
+  val G115Spans = Bucketed.Index("spanindex", "g115_spans", Seq("sh"), dedupe = true)
+  val G119Spans = Bucketed.Index("srcspanindex", "g119_spans", Seq("sh"), dedupe = true)
+  val G189Shingles = Bucketed.Index("shingleindex", "g189_shingles", Seq("sh"), dedupe = true)
+
   /** EXACT incremental connected components: update a label snapshot
     * `oldLabels(doc_id, root)` (root = component min id, q74's
     * convention) with a batch of `newEdges` — and a possibly grown
@@ -1296,15 +1293,10 @@ object DedupOps {
       basePairs: DataFrame, docs: DataFrame): Unit =
     graft.Standing.artifact(s, "cclabels", "g127_labels", dir,
         graft.Standing.catalogHas(s, "g127_labels")) { base =>
-      Bucketed.reset(s, base, "g127_labels")
       graft.CheckpointRegistry.scoped {
-        connectedComponents(basePairs, docs)
-          .select(col("doc_id"), col("root"))
-          .write.bucketBy(IndexBuckets, "doc_id")
-          .option("path", new java.io.File(base, "g127_labels").getAbsolutePath)
-          .mode("overwrite").saveAsTable("g127_labels")
+        Bucketed.fresh(s, base, "g127_labels", connectedComponents(basePairs, docs)
+          .select(col("doc_id"), col("root")))(_.bucketBy(IndexBuckets, "doc_id"))
       }
-      graft.GenManifest.publish(base, "g127_labels", 0L)
     }
 
   /** Full-recompute replay over the merged edge set — delta ≡ full. */
@@ -1335,19 +1327,10 @@ object DedupOps {
   /** Corpus-snapshot build: both artifacts bucketed on their probe key. */
   private[graft] def q108Write(s: SparkSession, oldSh: DataFrame): Unit = {
     graft.Standing.invalidate(s, "dedupindex", "g108")
-    val base = graft.Standing.dir(s, "dedupindex")
-    Seq("g108_buckets", "g108_shingles").foreach(Bucketed.reset(s, base, _))
     // corpus-volume banding: the codegen'd aggregate form, not the
     // per-row HOF fold (measured ~10× on the 6/7-corpus index side)
-    aggBandBuckets(oldSh)
-      .write.bucketBy(IndexBuckets, "band", "bucket")
-      .option("path", new java.io.File(base, "g108_buckets").getAbsolutePath)
-      .mode("overwrite").saveAsTable("g108_buckets")
-    oldSh.write.bucketBy(IndexBuckets, "doc_id").sortBy("doc_id")
-      .option("path", new java.io.File(base, "g108_shingles").getAbsolutePath)
-      .mode("overwrite").saveAsTable("g108_shingles")
-    Seq("g108_buckets", "g108_shingles")
-      .foreach(graft.GenManifest.publish(base, _, 0L))
+    G108Buckets.write(s, aggBandBuckets(oldSh))
+    G108Shingles.write(s, oldSh)
   }
 
   /** Index MAINTENANCE: fold an accepted batch into the artifacts by
@@ -1360,166 +1343,19 @@ object DedupOps {
     * compaction that restores it.) */
   private[graft] def q108Append(s: SparkSession, addSh: DataFrame): Unit = {
     graft.Standing.invalidate(s, "dedupindex", "g108")
-    aggBandBuckets(addSh)
-      .write.bucketBy(IndexBuckets, "band", "bucket")
-      .mode("append").saveAsTable("g108_buckets")
-    addSh.write.bucketBy(IndexBuckets, "doc_id").sortBy("doc_id")
-      .mode("append").saveAsTable("g108_shingles")
+    G108Buckets.append(s, aggBandBuckets(addSh))
+    G108Shingles.append(s, addSh)
   }
 
   /** Index COMPACTION — the maintenance companion of [[q108Append]]:
     * each append folds delta files into the buckets, and once a bucket
     * holds several files Spark drops the sorted-scan shortcut and
-    * re-sorts per task; compaction rewrites the artifact as ONE sorted
-    * file per bucket at a FRESH GENERATION and promotes it UNDER THE
-    * SAME TABLE NAME, so probe code (and its exchange-free plan
-    * contract) never changes.
-    *
-    * The rewrite streams files → `repartition(numBuckets, bucketCols)`
-    * — the same murmur3-pmod hash bucketing assigns file buckets with,
-    * so every write task holds exactly its own bucket's rows and emits
-    * exactly one file — → bucketed write at the new generation's path.
-    * (Files, not the table: a bucketed-table scan satisfies the
-    * repartition's distribution, so Catalyst elides the exchange — and
-    * then DisableUnnecessaryBucketedScan downgrades to a packed plain
-    * scan, leaving the write on arbitrary splits. The plain read keeps
-    * the aligning repartition in the plan.)
-    *
-    * The swap is generation-cataloged ([[graft.GenManifest]]) with no
-    * destructive window: retire the live name FIRST (rename to
-    * `{table}_r{gen}` — external tables keep their location, so any
-    * probe plan already resolved keeps its exact file list), promote
-    * the new generation, ROLL BACK the retire if the promote throws,
-    * publish the manifest atomically, and only then GC generations that
-    * aged past `retain` (default current + previous). A probe pinned at
-    * a retained generation ([[bucketedGenOf]]) reads the same bucketed
-    * table it always did — bit-identical results while the next
-    * generation is being written and after the publish (spec-pinned).
-    * Contract: ONE maintainer at a time; any number of readers.
-    *
-    * Corpus cost: one read + write of the artifact, no joins, no wide
-    * aggregation — the periodic price that keeps probe plans both
-    * exchange-free and sort-free at any append count. `dedupe` collapses
-    * duplicate rows first (for SET-valued artifacts like g115, where
-    * appends re-add windows the index already holds). */
-  private[graft] def compactBucketed(s: SparkSession, name: String,
-      table: String, bucketCols: Seq[String], sortCols: Seq[String],
-      dedupe: Boolean = false,
-      retain: Int = graft.GenManifest.DefaultRetain,
-      merge: DataFrame => DataFrame = identity): Unit = {
-    val base = graft.Standing.dir(s, name)
-    // Crash-recovery pre-clean (r6 ADVICE): under the single-maintainer
-    // contract, a previous attempt that DIED mid-swap leaves exactly one
-    // of three states, each detectable and healable before this attempt:
-    //   1. leftover `{table}_c*` tmp tables (crash before promote, or a
-    //      completed promote whose tmp survived) — always dead: drop, so
-    //      this attempt's ErrorIfExists write doesn't wedge;
-    //   2. live name GONE but `{table}_r{manifest-current}` present
-    //      (crash between retire and promote) — restore the live name;
-    //   3. live name present AND `{table}_r{manifest-current}` present
-    //      (crash between promote and publish: the live table is already
-    //      the NEXT generation, only the manifest is stale) — heal
-    //      FORWARD by publishing the interrupted generation, then
-    //      proceed against the now-consistent catalog.
-    locally {
-      import scala.jdk.CollectionConverters._
-      s.catalog.listTables().collectAsList().asScala.map(_.name)
-        .filter(_.startsWith(s"${table}_c")).foreach(dropTableAndFiles(s, _))
-      val curM = graft.GenManifest.current(base, table)
-      val retiredCur = s"${table}_r$curM"
-      if (s.catalog.tableExists(retiredCur)) {
-        if (!s.catalog.tableExists(table))
-          s.sql(s"ALTER TABLE $retiredCur RENAME TO $table") // state 2
-        else
-          graft.GenManifest.publish(base, table, curM + 1, retain, Some(curM))
-            .foreach(dropGen(s, table, _)) // state 3
-      }
-      // state 4 (r7 ADVICE): a crash AFTER publish but BEFORE the GC
-      // loop leaves aged-out `{table}_r{old}` tables no later pass
-      // removed (states 1–3 only inspect _c* and _r{current}). Re-read
-      // the now-consistent manifest and drop every retired-generation
-      // table whose gen fell out of the retained set — they are
-      // unreachable by contract (readers pin via bucketedGenOf only
-      // within retain depth).
-      val retained = graft.GenManifest.read(base, table)
-        .map(_.retained.toSet).getOrElse(Set.empty[Long])
-      val rPat = (java.util.regex.Pattern.quote(table) + "_r(\\d+)").r
-      s.catalog.listTables().collectAsList().asScala.map(_.name).foreach {
-        case rPat(g) if !retained.contains(g.toLong) =>
-          dropTableAndFiles(s, s"${table}_r$g")
-        case _ => ()
-      }
-    }
-    val cur = graft.GenManifest.current(base, table)
-    val next = cur + 1
-    val oldLoc = new java.io.File(s.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
-    val tmp = s"${table}_c$next"
-    val src0 = s.read.parquet(oldLoc.getAbsolutePath)
-    // `merge` is the AGGREGATING-compaction hook (schema-preserving;
-    // e.g. q130's per-term partial-count rows sum to one row per term):
-    // probes that aggregate over partials are invariant under it, so
-    // compaction may apply it for free while rewriting
-    val src = merge(if (dedupe) src0.distinct() else src0)
-    val w = src.repartition(IndexBuckets, bucketCols.map(col): _*)
-      .write.bucketBy(IndexBuckets, bucketCols.head, bucketCols.tail: _*)
-      .option("path", new java.io.File(base, s"${table}_g$next").getAbsolutePath)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
-      .saveAsTable(tmp)
-    s.sql(s"ALTER TABLE $table RENAME TO ${table}_r$cur") // retire first
-    try s.sql(s"ALTER TABLE $tmp RENAME TO $table") // promote
-    catch { case e: Throwable =>
-      s.sql(s"ALTER TABLE ${table}_r$cur RENAME TO $table") // roll back
-      throw e
-    }
-    try graft.GenManifest.publish(base, table, next, retain, Some(cur))
-      .foreach(dropGen(s, table, _))
-    catch { case e: Throwable =>
-      // publish failed (or lost the compare-and-publish race): the
-      // catalog must not outrun the manifest — demote the promoted
-      // generation, restore the previous one as live, drop the orphaned
-      // build. Leaves exactly the pre-compaction state (r6 ADVICE).
-      s.sql(s"ALTER TABLE $table RENAME TO $tmp")
-      s.sql(s"ALTER TABLE ${table}_r$cur RENAME TO $table")
-      dropTableAndFiles(s, tmp)
-      throw e
-    }
-  }
-
-  /** Drop a retired generation's table + storage (post-publish GC). */
-  private def dropGen(s: SparkSession, table: String, gen: Long): Unit =
-    dropTableAndFiles(s, s"${table}_r$gen")
-
-  /** Drop any catalog table together with its external files. */
-  private def dropTableAndFiles(s: SparkSession, name: String): Unit =
-    if (s.catalog.tableExists(name)) {
-      val loc = new java.io.File(s.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(name)).location)
-      s.sql(s"DROP TABLE $name")
-      graft.GenManifest.rmTree(loc)
-    }
-
-  /** The artifact pinned at generation `gen` — the live table if `gen`
-    * is current, else the retained retired table. Still a bucketed
-    * catalog table, so pinned probes keep the exchange-free plan. */
-  private[graft] def bucketedGenOf(s: SparkSession, name: String,
-      table: String, gen: Long): DataFrame = {
-    val st = graft.GenManifest.read(graft.Standing.dir(s, name), table)
-      .getOrElse(sys.error(s"artifact $table not built"))
-    require(st.retained.contains(gen),
-      s"generation $gen of $table not retained (have ${st.retained.mkString(",")})")
-    s.table(if (gen == st.current) table else s"${table}_r$gen")
-  }
-
-  private[graft] def bucketedGen(s: SparkSession, name: String,
-      table: String): Long =
-    graft.GenManifest.current(graft.Standing.dir(s, name), table)
-
+    * re-sorts per task; compaction ([[Bucketed.Index.compact]])
+    * rewrites each artifact as ONE sorted file per bucket at a fresh
+    * generation under the same table name. */
   private[graft] def q108Compact(s: SparkSession): Unit = {
-    compactBucketed(s, "dedupindex", "g108_buckets",
-      Seq("band", "bucket"), Nil)
-    compactBucketed(s, "dedupindex", "g108_shingles",
-      Seq("doc_id"), Seq("doc_id"))
+    G108Buckets.compact(s)
+    G108Shingles.compact(s)
   }
 
   /** Per-batch probe: id-only candidates against the persisted index,
@@ -1730,13 +1566,7 @@ object DedupOps {
     * the index side. */
   private[graft] def q115Write(s: SparkSession, oldDocs: DataFrame): Unit = {
     graft.Standing.invalidate(s, "spanindex", "g115_spans")
-    val base = graft.Standing.dir(s, "spanindex")
-    Bucketed.reset(s, base, "g115_spans")
-    spanOcc(oldDocs, DupSpanK).select(col("sh")).distinct()
-      .write.bucketBy(IndexBuckets, "sh")
-      .option("path", new java.io.File(base, "g115_spans").getAbsolutePath)
-      .mode("overwrite").saveAsTable("g115_spans")
-    graft.GenManifest.publish(base, "g115_spans", 0L)
+    G115Spans.write(s, spanOcc(oldDocs, DupSpanK).select(col("sh")).distinct())
   }
 
   /** Window-index MAINTENANCE: fold a new batch's distinct windows in
@@ -1747,13 +1577,10 @@ object DedupOps {
     * bucket. `addDocs`: (doc_id, toks). */
   private[graft] def q115Append(s: SparkSession, addDocs: DataFrame): Unit = {
     graft.Standing.invalidate(s, "spanindex", "g115_spans")
-    spanOcc(addDocs, DupSpanK).select(col("sh")).distinct()
-      .write.bucketBy(IndexBuckets, "sh").mode("append").saveAsTable("g115_spans")
+    G115Spans.append(s, spanOcc(addDocs, DupSpanK).select(col("sh")).distinct())
   }
 
-  private[graft] def q115Compact(s: SparkSession): Unit =
-    compactBucketed(s, "spanindex", "g115_spans", Seq("sh"), Nil,
-      dedupe = true)
+  private[graft] def q115Compact(s: SparkSession): Unit = G115Spans.compact(s)
 
   /** Incremental SPAN CLEANING against the persisted window index —
     * q107's action in the q108 arrival model: a new-docs batch is
@@ -2013,20 +1840,17 @@ object DedupOps {
     * window (catalog-sized blow-up bound, q113's argument); probes join
     * it bucket-aligned, exchange-free on the index side. The
     * [[q115Append]]/[[q115Compact]] lifecycle (bucketed append +
-    * dedup-compaction via [[compactBucketed]]) applies verbatim. */
+    * dedup-compaction via [[Bucketed.Index]]) applies verbatim. */
   private[graft] def q119Write(s: SparkSession, oldDocs: DataFrame): Unit = {
     graft.Standing.invalidate(s, "srcspanindex", "g119_spans")
-    val base = graft.Standing.dir(s, "srcspanindex")
-    Bucketed.reset(s, base, "g119_spans")
-    oldDocs
-      .select(col("source").as("osrc"),
+    G119Spans.write(s, srcSpans(oldDocs))
+  }
+
+  /** Distinct (sh, osrc) over `docs`' [[DupSpanK]]-windows. */
+  private def srcSpans(docs: DataFrame): DataFrame =
+    docs.select(col("source").as("osrc"),
         explode(shingles(col("toks"), DupSpanK)).as("sh"))
       .select(col("sh"), col("osrc")).distinct()
-      .write.bucketBy(IndexBuckets, "sh")
-      .option("path", new java.io.File(base, "g119_spans").getAbsolutePath)
-      .mode("overwrite").saveAsTable("g119_spans")
-    graft.GenManifest.publish(base, "g119_spans", 0L)
-  }
 
   /** Source-tagged-window-index MAINTENANCE — [[q115Append]] with the
     * attribution tag kept: fold a batch's distinct (sh, osrc) in by
@@ -2035,28 +1859,10 @@ object DedupOps {
     * `addDocs`: (source, toks). */
   private[graft] def q119Append(s: SparkSession, addDocs: DataFrame): Unit = {
     graft.Standing.invalidate(s, "srcspanindex", "g119_spans")
-    addDocs
-      .select(col("source").as("osrc"),
-        explode(shingles(col("toks"), DupSpanK)).as("sh"))
-      .select(col("sh"), col("osrc")).distinct()
-      .write.bucketBy(IndexBuckets, "sh").mode("append").saveAsTable("g119_spans")
+    G119Spans.append(s, srcSpans(addDocs))
   }
 
-  private[graft] def q119Compact(s: SparkSession): Unit =
-    compactBucketed(s, "srcspanindex", "g119_spans", Seq("sh"), Nil,
-      dedupe = true)
-
-  /** Data files currently backing a bucketed artifact — the compaction
-    * trigger for scheduled maintenance (appends land one file set per
-    * batch; past a threshold, compacting restores one file per bucket). */
-  private[graft] def artifactFileCount(s: SparkSession, table: String): Int = {
-    val loc = new java.io.File(s.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
-    def walk(f: java.io.File): Int =
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
-      else if (f.getName.endsWith(".parquet")) 1 else 0
-    walk(loc)
-  }
+  private[graft] def q119Compact(s: SparkSession): Unit = G119Spans.compact(s)
 
   /** Span-source attribution of a new-docs batch against the persisted
     * index — q113's matrix in the q108/q115 arrival model: WHICH
@@ -2236,10 +2042,10 @@ object DedupOps {
       .select(col("doc_id"), array_distinct(shingles(col("toks"), 3)).as("shs"))
       .filter(size(col("shs")) > 0))
     q119Append(s, at.select(col("source"), col("toks")))
-    if (artifactFileCount(s, "g108_shingles") > compactAtFiles ||
-        artifactFileCount(s, "g108_buckets") > compactAtFiles)
+    if (G108Shingles.fileCount(s) > compactAtFiles ||
+        G108Buckets.fileCount(s) > compactAtFiles)
       q108Compact(s)
-    if (artifactFileCount(s, "g119_spans") > compactAtFiles)
+    if (G119Spans.fileCount(s) > compactAtFiles)
       q119Compact(s)
   }
 

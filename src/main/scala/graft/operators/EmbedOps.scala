@@ -172,28 +172,22 @@ object EmbedOps {
     * pins loaded-model doc vectors ≡ the in-memory fit's exactly, plus
     * the generation lifecycle. Scale shape: the artifact is model-sized
     * (vocab × dim floats — driver-cheap here, broadcast-scale in
-    * production); the transform is q148's own one corpus pass. */
-  private[graft] def w2vDir(base: java.io.File, gen: Long): java.io.File =
-    new java.io.File(base, s"w2v_g$gen")
-
-  /** Publish `model` as the next generation at `base` (atomic manifest
-    * rename; aged-out generations GC'd). Returns the published gen. */
+    * production); the transform is q148's own one corpus pass.
+    *
+    * [[w2vWrite]] publishes `model` as the next generation
+    * ([[graft.GenManifest.writeNext]]) and returns it. */
   private[graft] def w2vWrite(s: SparkSession, base: java.io.File,
-      model: org.apache.spark.ml.feature.Word2VecModel): Long = {
-    val next =
-      graft.GenManifest.read(base, "w2v").map(_.current).getOrElse(0L) + 1
-    model.write.overwrite().save(w2vDir(base, next).getAbsolutePath)
-    graft.GenManifest.publish(base, "w2v", next)
-      .foreach(g => graft.GenManifest.rmTree(w2vDir(base, g)))
-    next
-  }
+      model: org.apache.spark.ml.feature.Word2VecModel): Long =
+    graft.GenManifest.writeNext(base, "w2v")(g =>
+      model.write.save(graft.GenManifest.dir(base, "w2v", g).getAbsolutePath))
 
   /** Load the CURRENT generation's model (absent manifest = named
     * error). */
   private[graft] def w2vLoad(s: SparkSession, base: java.io.File)
       : org.apache.spark.ml.feature.Word2VecModel =
     org.apache.spark.ml.feature.Word2VecModel.load(
-      w2vDir(base, graft.GenManifest.current(base, "w2v")).getAbsolutePath)
+      graft.GenManifest.dir(base, "w2v", graft.GenManifest.current(base, "w2v"))
+        .getAbsolutePath)
 
   private[graft] def q175Base(s: SparkSession): java.io.File =
     graft.Standing.dir(s, "w2v")

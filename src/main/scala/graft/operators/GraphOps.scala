@@ -706,16 +706,12 @@ object GraphOps {
       table: String, pairsTag: String, pairs: DataFrame): Unit =
     graft.Standing.artifact(s, table, table, (dir, teleportPolicyHash, pairsTag),
         graft.Standing.catalogHas(s, table)) { base =>
-      Bucketed.reset(s, base, table)
       // scoped: the history build's per-round checkpoint blocks are dead
       // once the write materializes them into the artifact
       graft.CheckpointRegistry.scoped {
-        pagerankPersonalizedHistory(pairs, q111Weights(s, dir))
-          .write.partitionBy("t")
-          .option("path", new java.io.File(base, table).getAbsolutePath)
-          .mode("overwrite").saveAsTable(table)
+        Bucketed.fresh(s, base, table,
+          pagerankPersonalizedHistory(pairs, q111Weights(s, dir)))(_.partitionBy("t"))
       }
-      graft.GenManifest.publish(base, table, 0L)
     }
 
   private[graft] def q111History(s: SparkSession, dir: String): Unit =
@@ -819,16 +815,12 @@ object GraphOps {
       basePairs: DataFrame, docs: DataFrame): Unit =
     graft.Standing.artifact(s, "prhist", "g126_hist", dir,
         graft.Standing.catalogHas(s, "g126_hist")) { base =>
-      Bucketed.reset(s, base, "g126_hist")
       // scoped: the history build's per-round checkpoint blocks are dead
       // once the write materializes them into the artifact
       graft.CheckpointRegistry.scoped {
-        pagerankHistory(basePairs, docs)
-          .write.partitionBy("t")
-          .option("path", new java.io.File(base, "g126_hist").getAbsolutePath)
-          .mode("overwrite").saveAsTable("g126_hist")
+        Bucketed.fresh(s, base, "g126_hist",
+          pagerankHistory(basePairs, docs))(_.partitionBy("t"))
       }
-      graft.GenManifest.publish(base, "g126_hist", 0L)
     }
 
   /** Full-recompute replay over the merged edge set — delta ≡ full. */

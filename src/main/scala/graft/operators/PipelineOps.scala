@@ -1854,42 +1854,28 @@ object PipelineOps {
 
     /** Generation `gen`'s data directory under `base`. */
     def dir(base: java.io.File, gen: Long): java.io.File =
-      new java.io.File(base, s"${name}_g$gen")
-
-    private def manifestDir(base: java.io.File, gen: Long): java.io.File =
-      new java.io.File(base, s"${name}mf_g$gen")
+      graft.GenManifest.dir(base, name, gen)
 
     /** Write `pack` as generation `gen` (repartition on shard → one file
-      * per shard, the bucketed-write rule) with its manifest beside it,
-      * publish it (atomic manifest rename) and GC the aged-out
-      * generations. The stored manifest is computed from the IN-MEMORY
-      * relation, not a read-back of the files just written: a
+      * per shard, the bucketed-write rule) with its manifest beside it
+      * in `<name>mf_g<gen>`. The stored manifest is computed from the
+      * IN-MEMORY relation, not a read-back of the files just written: a
       * write-time corruption (bit flip, partial row group) must NOT
       * notarize itself into the stored manifest — the first audit
       * catches it instead (r13 review). Also saves one full artifact
       * scan per publish. */
-    private def publish(base: java.io.File, pack: DataFrame, gen: Long,
-        expectCurrent: Option[Long]): Unit = {
+    private def writeGen(base: java.io.File, pack: DataFrame, gen: Long): Unit = {
       pack.repartition(col("shard"))
         .write.partitionBy("shard")
         .parquet(dir(base, gen).getAbsolutePath)
-      manifestOf(pack).write.parquet(manifestDir(base, gen).getAbsolutePath)
-      graft.GenManifest.publish(base, name, gen,
-          expectCurrent = expectCurrent)
-        .foreach { g =>
-          graft.GenManifest.rmTree(dir(base, g))
-          graft.GenManifest.rmTree(manifestDir(base, g))
-        }
+      manifestOf(pack).write.parquet(
+        graft.GenManifest.dir(base, name + "mf", gen).getAbsolutePath)
     }
 
     /** Publish `pack` as the next generation at `base`. Returns the
       * published gen. */
-    def write(base: java.io.File, pack: DataFrame): Long = {
-      val next =
-        graft.GenManifest.read(base, name).map(_.current).getOrElse(0L) + 1
-      publish(base, pack, next, None)
-      next
-    }
+    def write(base: java.io.File, pack: DataFrame): Long =
+      graft.GenManifest.writeNext(base, name, "mf")(writeGen(base, pack, _))
 
     /** The artifact at generation `gen` (default: the CURRENT one, resolved
       * here), read THROUGH the [[graft.sources.GraftPackDataSource]]
@@ -1955,11 +1941,10 @@ object PipelineOps {
       * survive to the manifest hash-check. A reader pinned at the old
       * generation is undisturbed (sibling directory, atomic
       * compare-and-publish, retained to [[graft.GenManifest.DefaultRetain]]). */
-    def compact(s: SparkSession, base: java.io.File): Unit = {
-      val cur = graft.GenManifest.current(base, name)
-      publish(base, read(s, base, Some(cur)).dropDuplicates(), cur + 1,
-        Some(cur))
-    }
+    def compact(s: SparkSession, base: java.io.File): Unit =
+      graft.GenManifest.compact(base, name, "mf") { (cur, next) =>
+        writeGen(base, read(s, base, Some(cur)).dropDuplicates(), next)
+      }
   }
 
   private[graft] object Lineage {

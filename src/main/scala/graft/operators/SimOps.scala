@@ -975,23 +975,20 @@ object SimOps {
       .parquet(new java.io.File(base, "model_cells").getAbsolutePath)
     cbRow.coalesce(1).write
       .parquet(new java.io.File(base, "model_cb").getAbsolutePath)
-    annIndexEncodeInto(s, base, 1L, corpus, overwrite = true)
-    graft.GenManifest.publish(base, "vecs", 1L)
+    graft.GenManifest.writeNext(base, "vecs")(
+      annIndexEncodeInto(s, base, _, corpus, overwrite = true))
   }
 
   /** Current generation of the artifact at `base` (manifest read). */
   private[graft] def annIndexGen(base: java.io.File): Long =
     graft.GenManifest.current(base, "vecs")
 
-  /** The vector payload of one GENERATION of the artifact — `vecs_g{N}`
-    * beside the generation-independent frozen model. A DataFrame opened
-    * at a pinned generation keeps reading exactly those files across
-    * concurrent appends/compactions (new generations land in their own
-    * directory; retired ones are retained to the manifest's depth). */
-  private[graft] def annIndexVecsDir(base: java.io.File, gen: Long): java.io.File =
-    new java.io.File(base, s"vecs_g$gen")
-
-  /** The artifact's vectors at the CURRENT generation. */
+  /** The artifact's vectors at the CURRENT generation. The vector
+    * payload of each GENERATION is `vecs_g{N}` beside the generation-
+    * independent frozen model: a DataFrame opened at a pinned generation
+    * keeps reading exactly those files across concurrent appends/
+    * compactions (new generations land in their own directory; retired
+    * ones are retained to the manifest's depth). */
   private[graft] def annIndexVecs(s: SparkSession, base: java.io.File): DataFrame =
     annIndexVecsOf(s, base, annIndexGen(base))
 
@@ -1036,27 +1033,20 @@ object SimOps {
     * the new generation is a sibling directory, the publish is an atomic
     * manifest rename, and the old directory survives until it ages past
     * the retain depth — only then is its storage GC'd. */
-  private[graft] def annIndexCompact(s: SparkSession, base: java.io.File,
-      retain: Int = graft.GenManifest.DefaultRetain): Unit = {
-    val cur = annIndexGen(base)
-    val next = cur + 1
-    annIndexVecsOf(s, base, cur)
-      .repartition(col("cell_id"))
-      .write.partitionBy("cell_id")
-      .parquet(annIndexVecsDir(base, next).getAbsolutePath)
-    graft.GenManifest.publish(base, "vecs", next, retain, Some(cur))
-      .foreach(g => graft.GenManifest.rmTree(annIndexVecsDir(base, g)))
-  }
+  private[graft] def annIndexCompact(s: SparkSession, base: java.io.File): Unit =
+    graft.GenManifest.compact(base, "vecs") { (cur, next) =>
+      annIndexVecsOf(s, base, cur)
+        .repartition(col("cell_id"))
+        .write.partitionBy("cell_id")
+        .parquet(graft.GenManifest.dir(base, "vecs", next).getAbsolutePath)
+    }
 
   /** Data files in the CURRENT generation's payload — the compaction
     * trigger for scheduled maintenance (each append lands one file set
     * per cell directory). */
-  private[graft] def annIndexFileCount(base: java.io.File): Int = {
-    def walk(f: java.io.File): Int =
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
-      else if (f.getName.endsWith(".parquet")) 1 else 0
-    walk(annIndexVecsDir(base, annIndexGen(base)))
-  }
+  private[graft] def annIndexFileCount(base: java.io.File): Int =
+    graft.GenManifest.parquetFiles(
+      graft.GenManifest.dir(base, "vecs", annIndexGen(base)))
 
   private def annIndexEncodeInto(s: SparkSession, base: java.io.File,
       gen: Long, vecs: DataFrame, overwrite: Boolean): Unit = {
@@ -1066,7 +1056,7 @@ object SimOps {
         col("cell_id").cast("int").as("cell_id"))
       .write.partitionBy("cell_id")
       .mode(if (overwrite) "overwrite" else "append")
-      .parquet(annIndexVecsDir(base, gen).getAbsolutePath)
+      .parquet(graft.GenManifest.dir(base, "vecs", gen).getAbsolutePath)
   }
 
   /** Per-cell STALENESS of the frozen model — the WHEN-TO-REBUILD
@@ -1270,7 +1260,7 @@ object SimOps {
     * prune to the probed cells, then score that slice exactly. The
     * 8-dim trained vectors give PQ ONE dimension per subspace, and a
     * 1-dim code's distance estimate cannot usefully ORDER candidates —
-    * measured at sf0.1 (DevProbe, np3, cell ceiling 0.944): ADC top-100
+    * measured at sf0.1 (DevTime, np3, cell ceiling 0.944): ADC top-100
     * recall 0.46, top-200 0.62, full probed slice 0.93. The design rule
     * this encodes: the ADC shortlist earns its skip only when codes
     * carry enough dimensions to rank (q105's 64-dim corpus keeps

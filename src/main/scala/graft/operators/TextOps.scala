@@ -1016,7 +1016,7 @@ object TextOps {
     * law), and the un-memoized plan re-ran the lang-dim aggregate, its
     * cumulative window, the keyed join and PrefixSum's binned scans on
     * EVERY q180/q186 call — 28/31 scheduler jobs per readout (r17
-    * DevProbe), almost all of it the ~0.1 s/job floor. The memoized
+    * DevTime), almost all of it the ~0.1 s/job floor. The memoized
     * relation is doc-sized (4 thin columns); the epoch-order/
     * length-batches treatment (r15) applied one family over. */
   private def pplBuckets(s: SparkSession, dir: String): DataFrame =
@@ -1376,7 +1376,7 @@ object TextOps {
     * the totals just sum): [[q130Append]] folds a batch in by appending
     * its per-term partials and one totals row; probes aggregate the ≤
     * (batches) partials per probed term — an aggregating compaction is
-    * the obvious [[graft.operators.DedupOps.compactBucketed]] extension
+    * the obvious [[Bucketed.Index.compact]] extension
     * if partial counts ever matter. A term unseen in the snapshot
     * scores with df = 0 (the standard BM25 idf still well-defined).
     *
@@ -1388,32 +1388,28 @@ object TextOps {
     * lattice as q103. Top-K is TakeOrderedAndProject. */
   private[graft] def q130Write(s: SparkSession, snap: DataFrame): Unit = {
     graft.Standing.invalidate(s, "bm25index", "g130")
-    val base = graft.Standing.dir(s, "bm25index")
-    Seq("g130_df", "g130_totals").foreach(Bucketed.reset(s, base, _))
-    snap.select(explode(array_distinct(col("toks"))).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("df"))
-      .write.bucketBy(DedupOps.IndexBuckets, "tok")
-      .option("path", new java.io.File(base, "g130_df").getAbsolutePath)
-      .mode("overwrite").saveAsTable("g130_df")
-    snap.agg(count(lit(1)).as("n_docs"),
-        sum(size(col("toks")).cast("long")).as("sum_len"))
-      .coalesce(1).write
-      .option("path", new java.io.File(base, "g130_totals").getAbsolutePath)
-      .mode("overwrite").saveAsTable("g130_totals")
-    graft.GenManifest.publish(base, "g130_df", 0L)
+    G130Df.write(s, termDf(snap))
+    Bucketed.fresh(s, graft.Standing.dir(s, "bm25index"), "g130_totals",
+      totals(snap), publish = false)(identity)
   }
 
   /** Fold an accepted batch into the stats artifact (partial rows). */
   private[graft] def q130Append(s: SparkSession, batch: DataFrame): Unit = {
     graft.Standing.invalidate(s, "bm25index", "g130")
-    batch.select(explode(array_distinct(col("toks"))).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("df"))
-      .write.bucketBy(DedupOps.IndexBuckets, "tok")
-      .mode("append").saveAsTable("g130_df")
-    batch.agg(count(lit(1)).as("n_docs"),
-        sum(size(col("toks")).cast("long")).as("sum_len"))
-      .coalesce(1).write.mode("append").saveAsTable("g130_totals")
+    G130Df.append(s, termDf(batch))
+    totals(batch).write.mode("append").saveAsTable("g130_totals")
   }
+
+  /** Per-term document frequencies of `docs` (partial rows). */
+  private def termDf(docs: DataFrame): DataFrame =
+    docs.select(explode(array_distinct(col("toks"))).as("tok"))
+      .groupBy(col("tok")).agg(count(lit(1)).as("df"))
+
+  /** One totals row (n_docs, sum_len) of `docs`. */
+  private def totals(docs: DataFrame): DataFrame =
+    docs.agg(count(lit(1)).as("n_docs"),
+        sum(size(col("toks")).cast("long")).as("sum_len"))
+      .coalesce(1)
 
   /** AGGREGATING compaction of the df artifact: the per-term partial
     * rows appended per batch sum back to ONE row per term while the
@@ -1422,10 +1418,11 @@ object TextOps {
     * generation-cataloged like every other compaction. The totals
     * table stays append-only: one row per batch is bounded by batch
     * COUNT, not data, and its reader is already a 2-column sum. */
-  private[graft] def q130Compact(s: SparkSession): Unit =
-    DedupOps.compactBucketed(s, "bm25index", "g130_df",
-      Seq("tok"), Nil,
-      merge = _.groupBy(col("tok")).agg(sum(col("df")).as("df")))
+  private[graft] def q130Compact(s: SparkSession): Unit = G130Df.compact(s)
+
+  /** The per-term df index; compaction sums the partial rows per term. */
+  val G130Df = Bucketed.Index("bm25index", "g130_df", Seq("tok"),
+    merge = _.groupBy(col("tok")).agg(sum(col("df")).as("df")))
 
   /** Score an arriving batch `(doc_id, toks)` for `query` against the
     * persisted stats — batch-sized work, corpus untouched. */

@@ -69,7 +69,7 @@ class GraftPackDataSource extends FileDataSourceV2 {
         throw new IllegalArgumentException(
           s"graftpack: no published generation for lineage '$lineage' " +
             s"at $base — Lineage.write publishes one")))
-    val dirF = new java.io.File(baseF, s"${lineage}_g$gen")
+    val dirF = graft.GenManifest.dir(baseF, lineage, gen)
     // A pinned `generation` older than the manifest's retain depth has
     // been GC'd ([[graft.GenManifest.publish]] removes aged-out dirs):
     // without this check the read falls through to ParquetTable's raw

@@ -39,4 +39,20 @@ class AllOpsSpec extends AnyFunSuite with SharedSpark {
       Seq(oracle, ops))
     assert(quoted("""the (\d+) rows-only ops""".r) === Seq(ops - oracle))
   }
+
+  test("only GenManifest builds a generation dir name") {
+    // `<name>_g<gen>` is GenManifest.dir's rule; an operator spelling it
+    // again would fork the naming the graftpack table and GC rely on
+    val genName = "_g$"
+    def sources(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(sources)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val all = sources(new java.io.File("src/main"))
+    assert(all.exists(_.getName == "GenManifest.scala"), "src/main not found")
+    val offenders = all.filter { f =>
+      f.getName != "GenManifest.scala" &&
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").contains(genName)
+    }
+    assert(offenders.isEmpty, s"generation dir names built outside GenManifest: $offenders")
+  }
 }

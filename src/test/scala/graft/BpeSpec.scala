@@ -277,9 +277,9 @@ class BpeSpec extends AnyFunSuite with SharedSpark {
     assert(BpeOps.tokenizerLoad(spark, base) === ms.take(5))
     // a third publish ages generation 1 out (retain = current + previous)
     assert(BpeOps.tokenizerWrite(spark, base, ms) === 3L)
-    assert(!BpeOps.tokenizerDir(base, 1L).exists(),
+    assert(!GenManifest.dir(base, "merges", 1L).exists(),
       "aged-out generation must be GC'd")
-    assert(BpeOps.tokenizerDir(base, 2L).exists(),
+    assert(GenManifest.dir(base, "merges", 2L).exists(),
       "previous generation must be retained")
     assert(BpeOps.tokenizerLoad(spark, base) === ms)
     // a gapped table is a NAMED error at the load seam, not silent
@@ -391,9 +391,9 @@ class BpeSpec extends AnyFunSuite with SharedSpark {
       Map("x" -> ms.take(1).map(_._2)))
     // a third publish ages generation 1 out (retain = current + previous)
     assert(BpeOps.tokenizerWriteScripts(spark, base, ms) === 3L)
-    assert(!BpeOps.tokenizerScriptDir(base, 1L).exists(),
+    assert(!GenManifest.dir(base, "merges_script", 1L).exists(),
       "aged-out generation must be GC'd")
-    assert(BpeOps.tokenizerScriptDir(base, 2L).exists(),
+    assert(GenManifest.dir(base, "merges_script", 2L).exists(),
       "previous generation must be retained")
     // one script gapped (rounds 1,3) fails loudly even though the other
     // script's table is whole

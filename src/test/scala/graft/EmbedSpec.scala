@@ -64,7 +64,7 @@ class EmbedSpec extends AnyFunSuite with SharedSpark {
     val next = EmbedOps.w2vWrite(spark, base, EmbedOps.w2vFit(spark, SF))
     assert(next === gen + 1)
     assert(graft.GenManifest.current(base, "w2v") === next)
-    assert(EmbedOps.w2vDir(base, gen).exists(),
+    assert(graft.GenManifest.dir(base, "w2v", gen).exists(),
       "the previous generation must stay within the retain depth")
     val again = EmbedOps.q175(spark, SF).collect()
     assert(again === mem)

@@ -47,6 +47,44 @@ class GenerationsSpec extends AnyFunSuite with SharedSpark {
     assert(GenManifest.publish(base, "t", 3L, expectCurrent = Some(2L)) === Seq(1L))
   }
 
+  test("a malformed manifest is a named error quoting the file") {
+    val base = Standing.dir(spark, "genmanifest_malformed")
+    base.mkdirs()
+    val f = new java.io.File(base, "MANIFEST_t")
+    Seq("", "current=3").foreach { text =>
+      java.nio.file.Files.writeString(f.toPath, text)
+      val e = intercept[IllegalStateException](GenManifest.read(base, "t"))
+      assert(e.getMessage.contains(s"malformed generation manifest $f"), e.getMessage)
+      assert(e.getMessage.contains(s"\"$text\""), e.getMessage)
+    }
+  }
+
+  test("a leftover unpublished generation dir is refused by name, not overwritten or removed") {
+    // a publish that threw after its data write leaves `<name>_g<next>`
+    // behind; the next write must neither overwrite it (it may be a
+    // racing maintainer's in-flight write) nor die on a raw path error
+    val wBase = Standing.dir(spark, "genleftover_w2v")
+    val model = graft.operators.EmbedOps.w2vFit(spark, SF)
+    assert(graft.operators.EmbedOps.w2vWrite(spark, wBase, model) === 1L)
+    val tBase = Standing.dir(spark, "genleftover_merges")
+    val ms = graft.operators.BpeOps.train(spark, SF)._1
+    assert(graft.operators.BpeOps.tokenizerWrite(spark, tBase, ms) === 1L)
+    Seq[(java.io.File, String, () => Long)](
+      (wBase, "w2v", () => graft.operators.EmbedOps.w2vWrite(spark, wBase, model)),
+      (tBase, "merges", () => graft.operators.BpeOps.tokenizerWrite(spark, tBase, ms))
+    ).foreach { case (base, name, write) =>
+      val planted = GenManifest.dir(base, name, 2L)
+      assert(planted.mkdirs())
+      val marker = new java.io.File(planted, "in-flight")
+      java.nio.file.Files.writeString(marker.toPath, "x")
+      val e = intercept[IllegalStateException](write())
+      assert(e.getMessage.contains(s"$planted is an unpublished generation of '$name'"),
+        e.getMessage)
+      assert(marker.exists(), s"$name: the leftover dir must not be removed")
+      assert(GenManifest.current(base, name) === 1L)
+    }
+  }
+
   test("ann index: probe pinned at gen N is bit-identical across compaction; aged gens GC") {
     val e = Tables.embeddings(spark, SF)
     val base = Standing.dir(spark, "anngen_spec")
@@ -71,7 +109,7 @@ class GenerationsSpec extends AnyFunSuite with SharedSpark {
     SimOps.annIndexCompact(spark, base)
     assert(SimOps.annIndexGen(base) === 2L)
     assert(shot(pinned) === before)
-    assert(SimOps.annIndexVecsDir(base, 1L).exists(), "retained gen deleted")
+    assert(GenManifest.dir(base, "vecs", 1L).exists(), "retained gen deleted")
     // current-generation probe answers identically (compaction moves
     // bytes, never rows)
     assert(shot(SimOps.annIndexSearch(
@@ -80,7 +118,7 @@ class GenerationsSpec extends AnyFunSuite with SharedSpark {
     // gen 2 (still retained) remains pinnable
     SimOps.annIndexCompact(spark, base)
     assert(SimOps.annIndexGen(base) === 3L)
-    assert(!SimOps.annIndexVecsDir(base, 1L).exists(), "aged-out gen not GC'd")
+    assert(!GenManifest.dir(base, "vecs", 1L).exists(), "aged-out gen not GC'd")
     assert(shot(SimOps.annIndexSearch(
       SimOps.annIndexVecsOf(spark, base, 2L), probed, cbRow, SimOps.IdxK)) === before)
   }
@@ -100,11 +138,11 @@ class GenerationsSpec extends AnyFunSuite with SharedSpark {
     // the generation; it's the SWAP that must not strand a reader)
     val beforeRows = resolvedBefore.count()
     DedupOps.q108Compact(spark)
-    assert(DedupOps.bucketedGen(spark, "dedupindex", "g108_shingles") === 1L)
+    assert(DedupOps.G108Shingles.gen(spark) === 1L)
     // the pre-swap reader's plan still reads generation 0's files —
     // retained, so identical; and the retired table is pinnable by name
     assert(resolvedBefore.count() === beforeRows)
-    val pinned0 = DedupOps.bucketedGenOf(spark, "dedupindex", "g108_shingles", 0L)
+    val pinned0 = DedupOps.G108Shingles.at(spark, 0L)
     assert(pinned0.count() === beforeRows)
     // pinned generation is still a BUCKETED catalog table (the plan
     // contract pinning needs: DESCRIBE carries the bucket spec)
@@ -125,9 +163,9 @@ class GenerationsSpec extends AnyFunSuite with SharedSpark {
     DedupOps.q108Compact(spark)
     assert(!spark.catalog.tableExists("g108_shingles_r0"))
     intercept[IllegalArgumentException] {
-      DedupOps.bucketedGenOf(spark, "dedupindex", "g108_shingles", 0L)
+      DedupOps.G108Shingles.at(spark, 0L)
     }
-    assert(DedupOps.bucketedGenOf(spark, "dedupindex", "g108_shingles", 1L)
+    assert(DedupOps.G108Shingles.at(spark, 1L)
       .count() > 0L)
     newSh.unpersist()
   }
@@ -143,7 +181,7 @@ class GenerationsSpec extends AnyFunSuite with SharedSpark {
     spark.range(1).selectExpr("id AS doc_id", "array('x') AS shs")
       .write.saveAsTable("g108_shingles_c1")
     DedupOps.q108Compact(spark)
-    assert(DedupOps.bucketedGen(spark, "dedupindex", "g108_shingles") === 1L)
+    assert(DedupOps.G108Shingles.gen(spark) === 1L)
     assert(spark.table("g108_shingles").count() === rows)
     // STATE 3: crash between promote and publish — the live table is
     // already the next generation, only the manifest is stale. Simulate
@@ -154,14 +192,14 @@ class GenerationsSpec extends AnyFunSuite with SharedSpark {
     val mf = new java.io.File(base, "MANIFEST_g108_shingles")
     java.nio.file.Files.writeString(mf.toPath, "current=0;retained=0\n")
     DedupOps.q108Compact(spark)
-    assert(DedupOps.bucketedGen(spark, "dedupindex", "g108_shingles") === 2L)
+    assert(DedupOps.G108Shingles.gen(spark) === 2L)
     assert(spark.table("g108_shingles").count() === rows)
     // STATE 2: crash between retire and promote — the live name is gone,
     // the retired current generation holds the data. The next attempt
     // must restore the live name and proceed.
     spark.sql("ALTER TABLE g108_shingles RENAME TO g108_shingles_r2")
     DedupOps.q108Compact(spark)
-    assert(DedupOps.bucketedGen(spark, "dedupindex", "g108_shingles") === 3L)
+    assert(DedupOps.G108Shingles.gen(spark) === 3L)
     assert(spark.table("g108_shingles").count() === rows)
     // STATE 4 (r7 ADVICE): crash AFTER publish but BEFORE the GC loop —
     // an aged-out retired generation's table+files survive and nothing

@@ -525,7 +525,7 @@ class SimilaritySpec extends AnyFunSuite with SharedSpark {
     // bit-identical serving, pruning intact (the compacted payload lands
     // at a NEW generation directory — resolve via the manifest)
     def cellFiles() = {
-      val d = SimOps.annIndexVecsDir(base, SimOps.annIndexGen(base))
+      val d = GenManifest.dir(base, "vecs", SimOps.annIndexGen(base))
       d.listFiles().filter(_.getName.startsWith("cell_id="))
         .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
     }

@@ -661,7 +661,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     assert(synthRec._6 === 1, s"synthetic copy not flagged near-dup: $synthRec")
     assert(synthRec._8 === 0, "near-dup must not be admitted")
     // the lifecycle compacted at least once ⇒ generations advanced
-    assert(DedupOps.bucketedGen(spark, "dedupindex", "g108_shingles") >= 1L)
+    assert(DedupOps.G108Shingles.gen(spark) >= 1L)
 
     // ---- the maintained stream over the same chunks ----
     DedupOps.q122Write(spark, SF) // fresh snapshot artifacts

@@ -362,7 +362,7 @@ class TextSpec extends AnyFunSuite with SharedSpark {
       .filter(col("count") > 1).count()
     assert(partials > 0, "no term has >1 partial — append split vacuous")
     TextOps.q130Compact(spark)
-    assert(DedupOps.bucketedGen(spark, "bm25index", "g130_df") === 1L)
+    assert(TextOps.G130Df.gen(spark) === 1L)
     val collapsed = spark.table("g130_df").groupBy(col("tok")).count()
       .agg(max(col("count"))).head().getLong(0)
     assert(collapsed === 1L, s"compaction left $collapsed partials for some term")
