@@ -332,7 +332,7 @@ object BpeOps {
   /** The per-doc segmentation readout over (doc_id, token) rows and a
     * (token → units) mapping — ONE aggregate definition behind q151 and
     * the streaming serve path ([[graft.streaming.StreamOps
-    * .segmentServe]]), so stream ≡ batch holds by construction, not
+    * .segment]] fold), so stream ≡ batch holds by construction, not
     * just by the spec (r10 review). */
   private[graft] def segmentReadout(toks: DataFrame,
       mapping: DataFrame): DataFrame =
@@ -372,7 +372,7 @@ object BpeOps {
     * evolution equivalence — q156's rule). Unlike [[unitMapping]] (which
     * reads the training run's final vocab), this works for tokens the
     * trainer never saw — the serving seam's requirement
-    * ([[graft.streaming.StreamOps.segmentServe]]). */
+    * ([[graft.streaming.StreamOps.segment]]). */
   private[graft] def unitMappingOf(tokens: DataFrame,
       merges: Seq[BpeMerge]): DataFrame =
     merges.sortBy(_.round)
@@ -494,7 +494,7 @@ object BpeOps {
   /** The per-doc chunking aggregate over (doc_id, pos, token) rows and a
     * (token → units) mapping — ONE definition behind q157's batch
     * chunker and the streaming serve path ([[graft.streaming.StreamOps
-    * .chunkServe]]), the [[segmentReadout]] rule applied to chunking:
+    * .chunk]] fold), the [[segmentReadout]] rule applied to chunking:
     * stream ≡ batch holds by construction, not just by the spec. */
   private[graft] def chunkReadout(toks: DataFrame,
       mapping: DataFrame): DataFrame = {
@@ -713,7 +713,7 @@ object BpeOps {
     * around in memory). A production pipeline trains once per corpus
     * snapshot, PUBLISHES the merge table, and every downstream consumer
     * — segmentation (q151), chunking (q157), the serving seams
-    * (segmentServe/chunkServe/serve), a resumed train
+    * (StreamOps's segment, chunk and pack folds), a resumed train
     * ([[trainFrom]]) — loads the artifact instead of re-training or
     * holding driver state. The artifact is model-sized (≤ rounds rows),
     * so the write/load are driver-cheap; the generation manifest gives

@@ -525,48 +525,30 @@ object DedupOps {
     * set; shared by q70 (Jaccard edges) and q74 (MinHash-LSH edges).
     * `docs` supplies the universe so isolated docs label themselves. */
   def connectedComponents(pairs: DataFrame, docs: DataFrame): DataFrame = {
-    // localCheckpoint blocks are NOT CacheManager entries — the group
-    // cache clear in Bench/Verify can't free them, and waiting on the
-    // ContextCleaner means several corpus-sized label snapshots can
-    // coexist. Unpersist each round's blocks explicitly once the next
-    // round is materialized; the final round's blocks back the returned
-    // plan, so they are handed to [[graft.CheckpointRegistry]] for the
-    // harness to release after the consuming count/write completes.
+    // checkpointed rounds (CheckpointRegistry.iterate): lineage stays one
+    // round deep, each round's blocks die once the next is materialized,
+    // and the final round's are handed to the registry for the harness
+    // to release after the consuming count/write completes
     val edges = pairs
       .unionAll(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .cache()
-    // localCheckpoint per round: iterative plans otherwise grow one
-    // join-select layer of lineage per iteration, so round k replans all
-    // k−1 predecessors on any cache eviction (and the optimizer re-walks
-    // an ever-deeper tree). The eager checkpoint materializes the round
-    // in ONE job and truncates lineage to the stored blocks.
-    var labels = docs.withColumn("root", col("doc_id")).localCheckpoint()
-    var prevBlocks = graft.CheckpointRegistry.blocksOf(labels)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < 20) {
+    val fix = graft.CheckpointRegistry.iterate(
+        docs.withColumn("root", col("doc_id")), 20) { prev =>
+      val labels = prev.select(col("doc_id"), col("root"))
       val neigh = edges
         .join(labels.select(col("doc_id").as("id_b"), col("root").as("nroot")), "id_b")
         .groupBy(col("id_a")).agg(min(col("nroot")).as("min_nroot"))
       // old_root rides along so the convergence check is a filter-count
       // over the checkpointed blocks — not a second join job per round
-      val next = labels
+      labels
         .join(neigh.withColumnRenamed("id_a", "doc_id"), Seq("doc_id"), "left")
         .select(col("doc_id"),
-          least(col("root"), coalesce(col("min_nroot"), col("root"))).as("new_root"),
+          least(col("root"), coalesce(col("min_nroot"), col("root"))).as("root"),
           col("root").as("old_root"))
-        .localCheckpoint()
-      val changed = next.filter(col("new_root") =!= col("old_root")).count()
-      prevBlocks.foreach(_.unpersist(blocking = false))
-      prevBlocks = graft.CheckpointRegistry.blocksOf(next)
-      labels = next.select(col("doc_id"), col("new_root").as("root"))
-      converged = changed == 0
-      iter += 1
-    }
+    }((_, next) => next.filter(col("root") =!= col("old_root")).count() == 0)
     edges.unpersist()
-    prevBlocks.foreach(r => graft.CheckpointRegistry.register(r))
-    require(converged, s"label propagation did not converge in $iter rounds")
-    labels
+    require(fix.done, s"label propagation did not converge in ${fix.rounds} rounds")
+    fix.last
       .select(col("doc_id"), col("root"),
         when(col("doc_id") === col("root"), 1).otherwise(0).as("is_keeper"))
       .orderBy(col("doc_id"))
@@ -1078,8 +1060,9 @@ object DedupOps {
     * the q107 action in incremental form: every k-window of a new doc
     * that already exists in the corpus is cut before the doc enters the
     * training stream. Same q107-shaped readout (n_tokens, kept_tokens,
-    * kept_fraction, cleaned_text). Batch-plan core of the streaming
-    * [[graft.streaming.StreamOps.spanCleanServe]]. */
+    * kept_fraction, cleaned_text). Served per micro-batch as the fold
+    * `Fold.map(cleanVsIndex(_, indexShingles, k))` of
+    * [[graft.streaming.StreamOps.serve]]. */
   private[graft] def cleanVsIndex(newDocs: DataFrame, indexShingles: DataFrame,
       k: Int): DataFrame =
     cleanVsIndexToks(
@@ -1882,10 +1865,11 @@ object DedupOps {
     * rate; the corpus is only touched through its bucketed artifact. */
   /** Per-doc attribution of a batch against a source-tagged window
     * relation — `(doc_id, source, osrc, dup_tokens)`, the batch core
-    * shared by [[q119]] and the streaming
-    * [[graft.streaming.StreamOps.spanAttributeServe]] (docs are
-    * batch-disjoint, so the union of per-batch outputs IS the batch
-    * relation). `newDocs`: (doc_id, source, text). */
+    * shared by [[q119]] and the served fold
+    * `Fold.map(attributeVsIndex(_, idx, k))` of
+    * [[graft.streaming.StreamOps.serve]] (docs are batch-disjoint, so the
+    * union of per-batch outputs IS the batch relation).
+    * `newDocs`: (doc_id, source, text). */
   private[graft] def attributeVsIndex(newDocs: DataFrame, idx: DataFrame,
       k: Int): DataFrame = {
     val occ = newDocs
@@ -1988,7 +1972,7 @@ object DedupOps {
     * arriving batch `(doc_id, source, text)` against the artifacts
     * [[q122Write]] (or the production snapshot build) left behind.
     * Batch-sized work only; also the micro-batch body of the streaming
-    * [[graft.streaming.StreamOps.admitServe]] (docs are batch-disjoint,
+    * [[graft.streaming.StreamOps.admit]] fold (docs are batch-disjoint,
     * so the union of per-batch records IS the batch relation). */
   private[graft] def q122Probe(s: SparkSession, batchDocs: DataFrame): DataFrame =
     q122ProbeToks(s, batchDocs.select(col("doc_id"), col("source"),
@@ -1997,8 +1981,8 @@ object DedupOps {
   /** [[q122Probe]] over a tokenized batch (doc_id, source, toks) — the
     * three probes consume the token stream three different ways, so the
     * caller caches it (batch: released at the family boundary;
-    * streaming: [[graft.streaming.StreamOps.admitServe]] owns the
-    * cache per micro-batch). */
+    * streaming: the [[graft.streaming.StreamOps.admit]] folds cache it
+    * per micro-batch). */
   private[graft] def q122ProbeToks(s: SparkSession, t: DataFrame): DataFrame = {
     val batchSh = t
       .select(col("doc_id"), array_distinct(shingles(col("toks"), 3)).as("shs"))

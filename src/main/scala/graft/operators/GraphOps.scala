@@ -77,28 +77,21 @@ object GraphOps {
     // symmetric edges: degree = out-degree = in-degree, keyed on the
     // CONTRIBUTING endpoint (id_b) to join once per round
     val deg = edges.groupBy(col("id_b")).agg(count(lit(1)).as("deg"))
-    var ranks = ranks0.select(col("doc_id"), col("r"))
-      .localCheckpoint()
-    var prevBlocks = graft.CheckpointRegistry.blocksOf(ranks)
-    for (_ <- 1 to iters) {
+    val ranks = graft.CheckpointRegistry.iterate(
+        ranks0.select(col("doc_id"), col("r")), iters) { ranks =>
       val shares = ranks
         .join(deg, ranks("doc_id") === deg("id_b"))
         .select(col("id_b"), expr("r div deg").as("share"))
       val contrib = edges.join(shares, "id_b")
         .groupBy(col("id_a")).agg(sum(col("share")).as("cin"))
-      val next = docs.select(col("doc_id"))
+      docs.select(col("doc_id"))
         .join(contrib.withColumnRenamed("id_a", "doc_id"), Seq("doc_id"), "left")
         .withColumn("cin0", coalesce(col("cin"), lit(0L)))
         .select(col("doc_id"),
           (lit((100 - Damping) * RankScale / 100) +
             expr(s"($Damping * cin0) div 100")).as("r"))
-        .localCheckpoint()
-      prevBlocks.foreach(_.unpersist(blocking = false))
-      prevBlocks = graft.CheckpointRegistry.blocksOf(next)
-      ranks = next
-    }
+    }((_, _) => false).last
     edges.unpersist()
-    prevBlocks.foreach(r => graft.CheckpointRegistry.register(r))
     ranks.select(col("doc_id"), (col("r") / 1000000.0).as("rank"))
       .orderBy(col("doc_id"))
   }
@@ -619,17 +612,11 @@ object GraphOps {
       .cache()
     val deg = edges.groupBy(col("id_b")).agg(count(lit(1)).as("deg"))
     val pw = weights.select(col("doc_id"), col("pw")).cache()
-    var ranks = pw.select(col("doc_id"), col("pw").as("r")).localCheckpoint()
-    var prevBlocks = graft.CheckpointRegistry.blocksOf(ranks)
-    for (_ <- 1 to iters) {
-      val next = personalizedStep(ranks, deg, edges, pw).localCheckpoint()
-      prevBlocks.foreach(_.unpersist(blocking = false))
-      prevBlocks = graft.CheckpointRegistry.blocksOf(next)
-      ranks = next
-    }
+    val ranks = graft.CheckpointRegistry.iterate(
+        pw.select(col("doc_id"), col("pw").as("r")), iters)(
+        personalizedStep(_, deg, edges, pw))((_, _) => false).last
     edges.unpersist()
     pw.unpersist(blocking = false)
-    prevBlocks.foreach(r => graft.CheckpointRegistry.register(r))
     ranks.select(col("doc_id"), (col("r") / 1000000.0).as("rank"))
       .orderBy(col("doc_id"))
   }

@@ -631,31 +631,21 @@ object SimOps {
     // codebook plan twice (encode + the re-center join), so without
     // lineage truncation the logical tree DOUBLES per round — 10 rounds
     // is a 2¹⁰-node plan that OOMs the driver before any data moves.
-    // The checkpointed codebook is one tiny row; blocks of superseded
-    // rounds are released immediately, the final round's are handed to
-    // the registry (the CC/q50 ownership pattern).
+    // The checkpointed codebook is one tiny row; CheckpointRegistry.iterate
+    // releases superseded rounds and hands the final one to the registry.
     val n = corpus.count()
     val threshold = n * tolPpm / 1000000L
-    var cb = pqCodebook(corpus).localCheckpoint()
-    var prevBlocks = graft.CheckpointRegistry.blocksOf(cb)
-    var iters = 0
-    var converged = false
     var lastChanged = n
-    while (!converged && iters < maxIters) {
-      val next = pqRefine(corpus, cb).localCheckpoint()
+    val fit = graft.CheckpointRegistry.iterate(pqCodebook(corpus), maxIters)(
+        pqRefine(corpus, _)) { (cb, next) =>
       lastChanged = pqEncode(corpus, cb)
         .select(col("vec_id"), col("codes").as("c0"))
         .join(pqEncode(corpus, next).select(col("vec_id"), col("codes").as("c1")),
           "vec_id")
         .filter(col("c0") =!= col("c1")).count()
-      prevBlocks.foreach(_.unpersist(blocking = false))
-      prevBlocks = graft.CheckpointRegistry.blocksOf(next)
-      cb = next
-      iters += 1
-      converged = lastChanged <= threshold
+      lastChanged <= threshold
     }
-    prevBlocks.foreach(r => graft.CheckpointRegistry.register(r))
-    PqTrained(cb, iters, converged, lastChanged, n)
+    PqTrained(fit.last, fit.rounds, fit.done, lastChanged, n)
   }
 
   /** Lloyd refinement of the COARSE quantizer (the [[pqRefine]] rule one
@@ -682,25 +672,17 @@ object SimOps {
     * would otherwise double per round — the [[pqTrain]] lesson), final
     * blocks handed to the registry. */
   private[graft] def lloydCmeans(corpus: DataFrame, rounds: Int): DataFrame = {
-    var cm = cmeansOf(corpus).localCheckpoint()
-    var prevBlocks = graft.CheckpointRegistry.blocksOf(cm)
-    for (_ <- 1 to rounds) {
+    graft.CheckpointRegistry.iterate(cmeansOf(corpus), rounds) { cm =>
       val fresh = assignToCells(withNorm(corpus), cellsAsRow(cellsOfCmeans(cm)))
         .select(col("cell_id").as("label"),
           posexplode(col("embedding")).as(Seq("dim", "v")))
         .groupBy(col("label"), col("dim"))
         .agg((sum(col("v").cast("decimal(18,9)")).cast("double") /
           count(lit(1))).as("c1"))
-      val next = cm.join(fresh, Seq("label", "dim"), "left")
+      cm.join(fresh, Seq("label", "dim"), "left")
         .select(col("label"), col("dim"),
           coalesce(col("c1"), col("c")).as("c"))
-        .localCheckpoint()
-      prevBlocks.foreach(_.unpersist(blocking = false))
-      prevBlocks = graft.CheckpointRegistry.blocksOf(next)
-      cm = next
-    }
-    prevBlocks.foreach(r => graft.CheckpointRegistry.register(r))
-    cm
+    }((_, _) => false).last
   }
 
   /** Map-side encode: nearest codeword per subspace by rounded
@@ -976,7 +958,7 @@ object SimOps {
     cbRow.coalesce(1).write
       .parquet(new java.io.File(base, "model_cb").getAbsolutePath)
     graft.GenManifest.writeNext(base, "vecs")(
-      annIndexEncodeInto(s, base, _, corpus, overwrite = true))
+      annIndexEncodeInto(base, _, corpus, annIndexModel(s, base), overwrite = true))
   }
 
   /** Current generation of the artifact at `base` (manifest read). */
@@ -1017,10 +999,15 @@ object SimOps {
     * append — each appended file lands inside its cell's directory, so
     * partition pruning (the artifact's serving property) is preserved
     * verbatim. Batch cost ∝ batch size; the existing index is never
-    * read, moved, or re-encoded. */
+    * read, moved, or re-encoded. A caller that already holds the frozen
+    * `model` ([[annIndexModel]]) passes it instead of re-reading it. */
   private[graft] def annIndexAppend(s: SparkSession, base: java.io.File,
       newVecs: DataFrame): Unit =
-    annIndexEncodeInto(s, base, annIndexGen(base), newVecs, overwrite = false)
+    annIndexAppend(base, newVecs, annIndexModel(s, base))
+
+  private[graft] def annIndexAppend(base: java.io.File, newVecs: DataFrame,
+      model: (DataFrame, DataFrame)): Unit =
+    annIndexEncodeInto(base, annIndexGen(base), newVecs, model, overwrite = false)
 
   /** Index COMPACTION: [[annIndexAppend]] lands one file set per batch
     * inside each cell directory; periodically rewrite to ONE file per
@@ -1048,9 +1035,9 @@ object SimOps {
     graft.GenManifest.parquetFiles(
       graft.GenManifest.dir(base, "vecs", annIndexGen(base)))
 
-  private def annIndexEncodeInto(s: SparkSession, base: java.io.File,
-      gen: Long, vecs: DataFrame, overwrite: Boolean): Unit = {
-    val (cellsRow, cbRow) = annIndexModel(s, base)
+  private def annIndexEncodeInto(base: java.io.File, gen: Long,
+      vecs: DataFrame, model: (DataFrame, DataFrame), overwrite: Boolean): Unit = {
+    val (cellsRow, cbRow) = model
     pqEncode(assignToCells(withNorm(vecs), cellsRow), cbRow)
       .select(col("vec_id"), col("codes"), col("embedding"), col("nrm"),
         col("cell_id").cast("int").as("cell_id"))

@@ -1294,7 +1294,7 @@ object TextOps {
   val Bm25Query: Seq[String] = Seq("vector", "stream", "filter", "window")
 
   /** Per-doc query-term frequencies `(doc_id, dl, tok, tf)` — the
-    * shared probe stage of q103/q130/bm25Serve, computed ENTIRELY
+    * shared probe stage of q103/q130/StreamOps.bm25, computed ENTIRELY
     * row-locally (r6 VERDICT #2): for each of the |query| standing
     * terms, tf is one membership scan of the doc's token array
     * (`size(filter(toks, = term))`), and only the (term, tf>0) pairs

@@ -1,9 +1,13 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode}
+import graft.CheckpointRegistry
+import graft.operators.{BpeOps, DedupOps, PipelineOps, SimOps, TextOps}
+import graft.text.Text
 
 /** Structured Streaming forms of the event operators (SURVEY §2 rows
   * 31–32 + sessionization). The batch shapes live in
@@ -107,12 +111,11 @@ object StreamOps {
     * `newDocs`: (doc_id, text, ts). Emits (doc_id, dup_of, jaccard). */
   def dedupVsIndex(newDocs: DataFrame, indexBuckets: DataFrame,
       indexShingles: DataFrame): DataFrame = {
-    import graft.text.Text
     val newSh = newDocs
       .select(col("doc_id"), col("ts"),
         array_distinct(Text.shingles(Text.tokens(col("text")), 3)).as("shs"))
       .filter(size(col("shs")) > 0)
-    graft.operators.DedupOps.rowBandBuckets(newSh)
+    DedupOps.rowBandBuckets(newSh)
       .withWatermark("ts", "1 hour")
       .join(indexBuckets.select(col("doc_id").as("dup_of"), col("band"),
         col("bucket")), Seq("band", "bucket"))
@@ -258,7 +261,6 @@ object StreamOps {
     * (the q108 pattern); here any static relation. */
   def spanDedupVsIndex(newDocs: DataFrame, indexShingles: DataFrame,
       k: Int): DataFrame = {
-    import graft.text.Text
     val spark = newDocs.sparkSession
     import spark.implicits._
     val hits = newDocs
@@ -304,268 +306,144 @@ object StreamOps {
       .toDF()
   }
 
-  /** Streaming ANN SERVING against the persisted IVF+PQ index (the
-    * q105 artifact): each query micro-batch runs the exact batch
-    * serving path — probe its top-nprobe cells map-side against the
-    * broadcast centroid row, collect the ≤|cells| probed ids, prune
-    * the index read to those partitions, ADC-shortlist, exact-rerank.
+  /** ANN serving against the persisted IVF+PQ index (the q105
+    * artifact): each batch runs the exact batch serving path — probe
+    * its top-nprobe cells map-side against the broadcast centroid row,
+    * collect the ≤|cells| probed ids, prune the index read to those
+    * partitions, ADC-shortlist, exact-rerank. Inside [[serve]] the batch
+    * is a plain DataFrame, so the probed-cell list inlines as literals
+    * and static partition pruning fires exactly as in q105 (the spec
+    * asserts `PartitionFilters` on the inner plan; a stream-static join
+    * would plan the index scan against values it cannot see and read
+    * the whole index per batch). Per-batch IO = |probed cells| / |cells|
+    * of the index.
     *
-    * Deliberately `foreachBatch`, not a stream-static join: a join
-    * would plan the index scan against stream VALUES it cannot see at
-    * plan time, so every micro-batch reads the whole index; inside
-    * foreachBatch the batch is a plain DataFrame, the probed-cell list
-    * inlines as literals, and static partition pruning fires exactly
-    * as in q105 (the spec asserts `PartitionFilters` on the inner
-    * plan). Per-batch IO = |probed cells| / |cells| of the index —
-    * the property that makes ANN serving viable at 100 TB; stream
-    * state is ZERO (every stage is stateless, the artifact owns all
-    * persistence).
-    *
-    * `queries`: streaming (vec_id, embedding). `sink` receives each
-    * batch's ranked results (q_id, n_id, cos, rank) — in production a
-    * write, in the spec a buffer. Caller starts/stops the query. */
-  def annServe(queries: DataFrame, idx: DataFrame, cellsRow: DataFrame,
-      cbRow: DataFrame, k: Int)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.SimOps
-    queries.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      sink(SimOps.annIndexSearch(idx,
-        SimOps.probeCells(SimOps.withNorm(batch), cellsRow, SimOps.IdxNProbe),
-        cbRow, k))
-    }
-  }
+    * Batch: (vec_id, embedding). Sink: the ranked results
+    * (q_id, n_id, cos, rank). */
+  def ann(idx: DataFrame, cellsRow: DataFrame, cbRow: DataFrame, k: Int): Fold =
+    Fold.map(b => SimOps.annIndexSearch(idx,
+      SimOps.probeCells(SimOps.withNorm(b), cellsRow, SimOps.IdxNProbe),
+      cbRow, k))
 
-  /** [[annServe]] WITH SCHEDULED MAINTENANCE — the q122 treatment for
-    * vectors: each arriving micro-batch `(vec_id, embedding)` is FIRST
-    * answered against the index as of its arrival (the exact q105
-    * serving path — map-side cell probe, partition-pruned scan, ADC
-    * shortlist, exact rerank), THEN encoded with the artifact's FROZEN
-    * model and folded in by partitioned append; once the current
-    * generation's file count passes `compactAtFiles`, compaction
-    * rewrites it at a new generation (manifest-published — readers
-    * pinned at an old generation are undisturbed). Later batches
-    * therefore search snapshot ∪ everything that arrived before them —
-    * sequential daily-batch semantics at micro-batch granularity.
-    *
-    * Zero stream state: the artifact owns all persistence (appends
-    * never move an existing vector's cell or code — the frozen-model
-    * invariant — so batch results are independent of file layout and
-    * re-delivery just re-appends rows an id-keyed consumer dedups).
-    * The model row/codebook are read once at wiring and broadcast per
-    * batch; per-batch IO stays |probed cells| / |cells| of the index
-    * plus one arrival-sized encode. [[graft.operators.SimOps.annIndexDrift]]
+  /** [[ann]] as a MAINTAINED fold — the q122 treatment for vectors:
+    * each batch is answered against the index as of its arrival, THEN
+    * encoded with the artifact's FROZEN model and folded in by
+    * partitioned append; once the current generation's file count
+    * passes `compactAtFiles`, compaction rewrites it at a new generation
+    * (manifest-published — readers pinned at an old generation are
+    * undisturbed). Appends never move an existing vector's cell or code
+    * (the frozen-model invariant), so results are independent of file
+    * layout and re-delivery just re-appends rows an id-keyed consumer
+    * dedups. The model row and codebook are read once, on the fold's
+    * first batch, and serve the search and the encode of every batch;
+    * per-batch IO stays |probed cells| / |cells| of the index plus one
+    * arrival-sized encode. [[graft.operators.SimOps.annIndexDrift]]
     * remains the when-to-rebuild signal as appends accumulate.
     *
-    * `arrivals`: streaming (vec_id, embedding). `sink` receives each
-    * batch's ranked results BEFORE the batch joins the index. Caller
-    * starts/stops the query. */
-  def annServeMaintained(arrivals: DataFrame, base: java.io.File, k: Int,
-      compactAtFiles: Int = 64)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.SimOps
-    arrivals.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val s = batch.sparkSession
-      val (cellsRow, cbRow) = SimOps.annIndexModel(s, base)
-      val b = batch.cache()
-      try graft.CheckpointRegistry.scoped {
-        // decisions frozen BEFORE the append lands files in the same
-        // generation directory — a batch answers against the index as
-        // of its arrival, never against itself; blocks die with the
-        // batch (the admitServeMaintained contract)
-        val res = graft.CheckpointRegistry.checkpoint(
-          SimOps.annIndexSearch(SimOps.annIndexVecs(s, base),
-            SimOps.probeCells(SimOps.withNorm(b), cellsRow, SimOps.IdxNProbe),
-            cbRow, k))
-        sink(res)
-        SimOps.annIndexAppend(s, base, b.select(col("vec_id"), col("embedding")))
-        if (SimOps.annIndexFileCount(base) > compactAtFiles)
-          SimOps.annIndexCompact(s, base)
-      } finally b.unpersist(blocking = false)
+    * Batch: (vec_id, embedding). Sink: [[ann]]'s ranked results. */
+  def annMaintained(base: java.io.File, k: Int, compactAtFiles: Int = 64): Fold = {
+    var model: Option[(DataFrame, DataFrame)] = None
+    def frozen(s: SparkSession) = model.getOrElse {
+      val m = SimOps.annIndexModel(s, base); model = Some(m); m }
+    Fold.maintained(_.select(col("vec_id"), col("embedding"))) { t =>
+      val (cellsRow, cbRow) = frozen(t.sparkSession)
+      SimOps.annIndexSearch(SimOps.annIndexVecs(t.sparkSession, base),
+        SimOps.probeCells(SimOps.withNorm(t), cellsRow, SimOps.IdxNProbe),
+        cbRow, k)
+    } { (t, _) =>
+      SimOps.annIndexAppend(base, t, frozen(t.sparkSession))
+      if (SimOps.annIndexFileCount(base) > compactAtFiles)
+        SimOps.annIndexCompact(t.sparkSession, base)
     }
   }
 
-  /** Streaming span CLEANING against a static corpus shingle set — the
-    * action to [[spanDedupVsIndex]]'s readout: every k-window of an
-    * arriving doc that already exists in the corpus is cut before the
-    * doc flows on, emitting the q107-shaped readout per micro-batch.
+  /** NOVELTY — q189 per batch: each doc's fraction of distinct
+    * 3-shingles the standing corpus index (`DedupOps.q189Write`'s
+    * bucketed artifact) has never seen — the admission pipeline's
+    * template-inflow monitor at the seam. The index side is
+    * bucket-aligned, so the probe needs no exchange on it.
     *
-    * `foreachBatch`, not keyed state: the island merge + complement
-    * slicing need the doc's full token stream, and unlike detection
-    * (which accumulates hit coordinates incrementally), cleaning is
-    * only correct once the doc is complete — so the contract is
-    * doc-atomic micro-batches (one ingest record = one whole doc, the
-    * normal file/queue ingest shape), and each batch runs the exact
-    * batch plan (DedupOps.cleanVsIndex: stateless explode →
-    * stream-static semi-join → per-doc island merge → segment-slice
-    * complement). Zero stream state; per-batch cost is batch-linear.
+    * Batch: (doc_id, text). Sink: q189's (doc_id, n_shingles, n_novel,
+    * novelty). */
+  val novelty: Fold = Fold.map(b => DedupOps.q189ProbeOf(b.sparkSession,
+    b.select(col("doc_id"),
+      array_distinct(Text.shingles(Text.tokens(col("text")), 3)).as("shs"))))
+
+  /** ADMISSION — the q122 capstone per batch: each doc's near-dup /
+    * cleaned / attribution / admit record against the persisted
+    * snapshot artifacts (`DedupOps.q122Write` or the production snapshot
+    * build), through the exact batch probe (`DedupOps.q122ProbeToks`).
+    * The batch is tokenized once and cached for the three probes.
     *
-    * `newDocs`: streaming (doc_id, text). `sink` receives each batch's
-    * (doc_id, n_tokens, kept_tokens, kept_fraction, cleaned_text). */
-  def spanCleanServe(newDocs: DataFrame, indexShingles: DataFrame, k: Int)(
-      sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      sink(graft.operators.DedupOps.cleanVsIndex(batch, indexShingles, k))
+    * Batch: (doc_id, source, text). Sink: the q122-shaped records. */
+  val admit: Fold = Fold.map(b =>
+    DedupOps.q122ProbeToks(b.sparkSession, CheckpointRegistry.cached(admitToks(b))))
+
+  private def admitToks(b: DataFrame): DataFrame =
+    b.select(col("doc_id"), col("source"), Text.tokens(col("text")).as("toks"))
+
+  /** [[admit]] as a MAINTAINED fold — the always-on pipeline wired shut:
+    * after each batch's admission records are frozen and delivered, its
+    * ADMITTED docs are folded into the snapshot artifacts (band index
+    * via q108Append, source-tagged window index via q119Append), and
+    * whichever artifact's file count has passed `compactAtFiles` is
+    * compacted (generation-cataloged — pinned readers are undisturbed).
+    * Later arrivals near-dup/clean/attribute against snapshot ∪
+    * everything admitted before them. Re-delivery of a batch re-appends
+    * already-present rows — harmless for the set-semantics band/window
+    * artifacts, and the compaction's dedupe collapses them.
+    *
+    * Batch: (doc_id, source, text). Sink: the q122-shaped records. */
+  def admitMaintained(compactAtFiles: Int = 64): Fold =
+    Fold.maintained(admitToks)(t => DedupOps.q122ProbeToks(t.sparkSession, t)) {
+      (t, rec) => DedupOps.admissionMaintain(t.sparkSession, t,
+        rec.filter(col("admit") === 1).select(col("doc_id")), compactAtFiles)
     }
 
-  /** Streaming span-source ATTRIBUTION against the q119 source-tagged
-    * window index — "which existing sources does the arriving stream
-    * overlap, and by how much", per micro-batch. Same doc-atomic
-    * foreachBatch contract as [[spanCleanServe]] (the island merge
-    * needs the whole doc), running the exact batch core
-    * (`DedupOps.attributeVsIndex`); zero stream state, and because
-    * docs are batch-disjoint the union of per-batch per-doc outputs IS
-    * the batch relation — the global (source, osrc) matrix is one
-    * re-aggregation over the sink (spec-pinned ≡ q119's split matrix).
+  /** RETRIEVAL against the q130 term-stats artifact, MAINTAINED: each
+    * batch is scored for the standing `query` under the persisted
+    * statistics (`TextOps.q130Probe` — batch-sized explode,
+    * artifact-pruned broadcast df side, corpus never rescanned), then
+    * folded into them by partial-row append, so later arrivals are
+    * scored under statistics that include everything before them (df
+    * and avgdl drift tracked live). Once the df index passes
+    * `compactAtFiles` files it is compacted (`TextOps.q130Compact`:
+    * partial rows summed per term, probes bit-identical), so an always-on
+    * stream's df side stays bounded.
     *
-    * `newDocs`: streaming (doc_id, source, text). `sink` receives each
-    * batch's (doc_id, source, osrc, dup_tokens). */
-  def spanAttributeServe(newDocs: DataFrame, idx: DataFrame, k: Int)(
-      sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      sink(graft.operators.DedupOps.attributeVsIndex(batch, idx, k))
+    * Batch: (doc_id, text). Sink: the (doc_id, n_terms, bm25) top-K as
+    * of the batch's arrival. */
+  def bm25(query: Seq[String], compactAtFiles: Int = 64): Fold =
+    Fold.maintained(_.select(col("doc_id"), Text.tokens(col("text")).as("toks")))(
+        t => TextOps.q130Probe(t.sparkSession, t, query)) { (t, _) =>
+      val s = t.sparkSession
+      TextOps.q130Append(s, t)
+      if (TextOps.G130Df.fileCount(s) > compactAtFiles) TextOps.q130Compact(s)
     }
 
-  /** Streaming NOVELTY — q189 served per micro-batch: each arriving
-    * doc scored for the fraction of its distinct 3-shingles the
-    * standing corpus index (`DedupOps.q189Write`'s bucketed artifact)
-    * has never seen — the admission pipeline's template-inflow monitor
-    * at the seam. Zero stream state: the probe is stateless against
-    * the persisted artifact (index side bucket-aligned, no exchange),
-    * so the union over micro-batches ≡ the batch q189 relation on the
-    * same split (StreamingSpec pins it), and re-delivery is idempotent
-    * per doc. `newDocs`: streaming (doc_id, text). */
-  def noveltyServe(newDocs: DataFrame)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      sink(graft.operators.DedupOps.q189ProbeOf(batch.sparkSession,
-        batch.select(col("doc_id"),
-          org.apache.spark.sql.functions.array_distinct(
-            graft.text.Text.shingles(
-              graft.text.Text.tokens(col("text")), 3)).as("shs"))))
-    }
-
-  /** Streaming ADMISSION — the q122 capstone served per micro-batch:
-    * each arriving doc gets its near-dup / cleaned / attribution /
-    * admit record against the persisted snapshot artifacts
-    * (`DedupOps.q122Write` or the production snapshot build), running
-    * the exact batch probe (`DedupOps.q122Probe`). Same doc-atomic
-    * foreachBatch contract as [[spanCleanServe]]; zero stream state —
-    * all persistence lives in the artifacts, so the decision stream is
-    * idempotent per doc and the union over micro-batches ≡ the batch
-    * admission relation (spec-pinned ≡ q122 on the split).
+  /** DRIFT GATE — q124's monitoring readout as a per-batch admission
+    * signal: each batch's per-(source, lang) token share is compared
+    * against the SNAPSHOT shares of `snapDocs` (a catalog-sized
+    * aggregate, computed once when the fold is made and broadcast per
+    * batch); a cell drifts when its absolute shift exceeds
+    * `maxShiftMicros` — the guard that keeps an upstream ingest skew
+    * (one feed suddenly dominating) from silently baking into the
+    * mixture policies (q82/q114/q120) downstream.
     *
-    * `newDocs`: streaming (doc_id, source, text). `sink` receives each
-    * batch's q122-shaped records. */
-  def admitServe(newDocs: DataFrame)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      // one tokenization per batch, cached for the three probes and
-      // released with the batch; the probe's candidate localCheckpoint
-      // likewise scopes to the batch (sink materializes before release)
-      // — an always-on stream must not accumulate either
-      val t = batch.select(col("doc_id"), col("source"),
-        graft.text.Text.tokens(col("text")).as("toks")).cache()
-      try graft.CheckpointRegistry.scoped {
-        sink(graft.operators.DedupOps.q122ProbeToks(batch.sparkSession, t))
-      } finally t.unpersist(blocking = false)
-    }
-
-  /** [[admitServe]] WITH SCHEDULED MAINTENANCE — the always-on pipeline
-    * wired shut: after each micro-batch's admission records are frozen
-    * and delivered, the batch's ADMITTED docs are folded into the
-    * snapshot artifacts (band index via q108Append, source-tagged
-    * window index via q119Append), and whichever artifact's file count
-    * has passed `compactAtFiles` is compacted (generation-cataloged —
-    * concurrent pinned readers are undisturbed). So later arrivals
-    * near-dup/clean/attribute against snapshot ∪ everything admitted
-    * before them — the sequential semantics a daily batch pipeline has,
-    * at micro-batch granularity.
+    * The sink receives the batch's q124-shaped cell rows, each with its
+    * `drifted` flag (0/1); the batch drifted iff any row's flag is 1.
+    * Shares are computed WITHIN each side (snapshot's own total vs the
+    * batch's own total, exact half-away micros — q124's comparability
+    * rule), so batch size never masquerades as drift. Per-batch cost is
+    * one arrival-sized aggregate joined to a broadcast
+    * ≤|sources×langs| relation.
     *
-    * The decision records are localCheckpointed (materialized) BEFORE
-    * the appends: a batch's decisions are made against the artifacts as
-    * of its arrival, never against its own admissions — and the blocks
-    * die with the batch ([[graft.CheckpointRegistry.scoped]]). Appends
-    * are arrival-sized and every probe keeps its exchange-free index
-    * side; maintenance adds no stream state (re-delivery of a chunk
-    * re-appends already-present rows — harmless for the set-semantics
-    * band/window artifacts, and the compaction's dedupe collapses
-    * them).
-    *
-    * `newDocs`: streaming (doc_id, source, text). `sink` receives each
-    * batch's q122-shaped records. */
-  def admitServeMaintained(newDocs: DataFrame, compactAtFiles: Int = 64)(
-      sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val s = batch.sparkSession
-      val t = batch.select(col("doc_id"), col("source"),
-        graft.text.Text.tokens(col("text")).as("toks")).cache()
-      try graft.CheckpointRegistry.scoped {
-        val rec = graft.CheckpointRegistry.checkpoint(
-          graft.operators.DedupOps.q122ProbeToks(s, t))
-        sink(rec)
-        graft.operators.DedupOps.admissionMaintain(s, t,
-          rec.filter(col("admit") === 1).select(col("doc_id")), compactAtFiles)
-      } finally t.unpersist(blocking = false)
-    }
-
-  /** Streaming RETRIEVAL against the q130 term-stats artifact: each
-    * arriving micro-batch of docs is scored for the standing query with
-    * the persisted frozen statistics (`TextOps.q130Probe` — batch-sized
-    * explode, artifact-pruned broadcast df side, corpus never
-    * rescanned), and, when `maintain` is set, folded into the stats by
-    * partial-row append AFTER its scores are frozen — so later arrivals
-    * are scored under statistics that include everything admitted
-    * before them (df/avgdl drift tracked live, the q122/annServe
-    * sequential semantics for retrieval). Zero stream state either way;
-    * the decision snapshot is localCheckpointed before the append and
-    * its blocks die with the batch.
-    *
-    * `newDocs`: streaming (doc_id, text). `sink` receives each batch's
-    * (doc_id, n_terms, bm25) top-K as of the batch's arrival. */
-  def bm25Serve(newDocs: DataFrame, query: Seq[String], maintain: Boolean = false)(
-      sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val s = batch.sparkSession
-      val t = batch.select(col("doc_id"),
-        graft.text.Text.tokens(col("text")).as("toks")).cache()
-      try graft.CheckpointRegistry.scoped {
-        val res = graft.CheckpointRegistry.checkpoint(
-          graft.operators.TextOps.q130Probe(s, t, query))
-        sink(res)
-        if (maintain) graft.operators.TextOps.q130Append(s, t)
-      } finally t.unpersist(blocking = false)
-    }
-
-  /** Streaming DRIFT GATE — q124's monitoring readout turned into a
-    * per-batch admission decision: each arriving micro-batch's
-    * per-(source, lang) token-share is compared against the SNAPSHOT
-    * shares (a catalog-sized static aggregate, computed once at wiring
-    * and broadcast per batch), and the batch is flagged when any cell's
-    * absolute shift exceeds `maxShiftMicros` — the guard that keeps an
-    * upstream ingest skew (one feed suddenly dominating) from silently
-    * baking into the mixture policies (q82/q114/q120) downstream.
-    *
-    * `sink` receives the q124-shaped cell rows for the batch plus a
-    * `drifted` flag per cell; the returned per-batch verdict is
-    * any(drifted). Shares are computed WITHIN each side (snapshot's own
-    * total vs batch's own total, exact half-away micros — q124's
-    * comparability rule), so batch size never masquerades as drift.
-    * Zero stream state; per-batch cost is one arrival-sized aggregate
-    * joined to a broadcast ≤|sources×langs| relation.
-    *
-    * `newDocs`: streaming (doc_id, source, lang, text). `snapDocs`: the
-    * static snapshot relation with the same columns. */
-  def driftGateServe(newDocs: DataFrame, snapDocs: DataFrame,
-      maxShiftMicros: Long)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    * Batch and `snapDocs`: (doc_id, source, lang, text). */
+  def driftGate(snapDocs: DataFrame, maxShiftMicros: Long): Fold = {
     import graft.functions.Num
     // snapshot side once: (source, lang, tok_old, share_old_micros)
     val s0 = snapDocs.select(col("source"), col("lang"),
-        size(graft.text.Text.tokens(col("text"))).cast("long").as("nt"))
+        size(Text.tokens(col("text"))).cast("long").as("nt"))
       .groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("docs_old"), sum(col("nt")).as("tok_old"))
     val snapTot = s0.agg(sum(col("tok_old"))).head().getLong(0)
@@ -579,13 +457,13 @@ object StreamOps {
       Num.idivHalfAway(col("tok_old") * 1000000L, lit(snapTot)))
     val snap = sess.createDataFrame(
       java.util.Arrays.asList(withShare.collect(): _*), withShare.schema)
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+    Fold.map { batch =>
       val b = batch.select(col("source"), col("lang"),
-          size(graft.text.Text.tokens(col("text"))).cast("long").as("nt"))
+          size(Text.tokens(col("text"))).cast("long").as("nt"))
         .groupBy(col("source"), col("lang"))
         .agg(count(lit(1)).as("docs_new"), sum(col("nt")).as("tok_new"))
       val btot = b.agg(sum(col("tok_new")).as("tot_new"))
-      sink(snap
+      snap
         .join(b, Seq("source", "lang"), "full")
         .na.fill(0L, Seq("docs_old", "tok_old", "share_old_micros",
           "docs_new", "tok_new"))
@@ -600,94 +478,67 @@ object StreamOps {
         .select(col("source"), col("lang"), col("docs_old"), col("docs_new"),
           col("tok_old"), col("tok_new"), col("share_old_micros"),
           col("share_new_micros"), col("delta_micros"), col("drifted"))
-        .orderBy(col("source"), col("lang")))
+        .orderBy(col("source"), col("lang"))
     }
   }
 
-  /** Streaming corpus segmentation with a SHIPPED tokenizer — q151's
-    * readout at the arrival seam: each micro-batch of (doc_id, text)
-    * explodes to tokens and re-tokenizes them by REPLAYING the trained
-    * merge table over the batch's OWN distinct-token vocabulary
-    * ([[graft.operators.BpeOps.unitMappingOf]] — the q156 rule, so
-    * tokens the trainer never saw segment exactly as the shipped
-    * tokenizer segments them: merges fire where they apply, character
-    * fallback elsewhere). A static PRECOMPUTED corpus mapping would
-    * silently drop (inner join) or null (left join) out-of-vocabulary
-    * arrivals — the one case a serving path exists for.
+  /** Corpus SEGMENTATION with a SHIPPED tokenizer — q151's readout at
+    * the arrival seam: each batch explodes to tokens and re-tokenizes
+    * them by REPLAYING the trained merge table over the batch's OWN
+    * distinct-token vocabulary ([[graft.operators.BpeOps.unitMappingOf]]
+    * — the q156 rule, so tokens the trainer never saw segment exactly as
+    * the shipped tokenizer segments them: merges fire where they apply,
+    * character fallback elsewhere). A static PRECOMPUTED corpus mapping
+    * would silently drop (inner join) or null (left join)
+    * out-of-vocabulary arrivals — the one case a serving path exists
+    * for. Per batch: [[graft.operators.BpeOps.Rounds]] broadcast-literal
+    * replaces over the batch-vocabulary-sized distinct relation, then
+    * one batch-sized join + per-doc aggregate; the merge table itself is
+    * ≤ Rounds rows — a driver literal.
     *
-    * Scale shape: zero stream state (stateless per-batch transform);
-    * per batch, the merge replay is [[graft.operators.BpeOps.Rounds]]
-    * broadcast-literal replaces over the batch-vocabulary-sized
-    * distinct relation, then one batch-sized join + per-doc aggregate.
-    * The merge table itself is ≤ Rounds rows — a driver literal. */
-  def segmentServe(newDocs: DataFrame,
-      merges: Seq[graft.operators.BpeOps.BpeMerge])(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      // cached: both the distinct-vocabulary branch and the join probe
-      // read the tokenized batch — uncached, every micro-batch would
-      // tokenize + explode twice (r10 review); released once the sink
-      // has consumed the readout
-      val toks = batch.select(col("doc_id"),
-        explode(graft.text.Text.tokens(col("text"))).as("token")).cache()
-      try {
-        val mapping = graft.operators.BpeOps.unitMappingOf(
-          toks.select(col("token")).distinct(), merges)
-        sink(graft.operators.BpeOps.segmentReadout(toks, mapping))
-      } finally toks.unpersist()
-    }
+    * Batch: (doc_id, text). Sink: the q151-shaped per-doc readout. */
+  def segment(merges: Seq[BpeOps.BpeMerge]): Fold = Fold.map { b =>
+    // cached: the distinct-vocabulary branch and the join probe both
+    // read the tokenized batch — uncached, every batch would tokenize
+    // and explode twice
+    val toks = CheckpointRegistry.cached(b.select(col("doc_id"),
+      explode(Text.tokens(col("text"))).as("token")))
+    BpeOps.segmentReadout(toks,
+      BpeOps.unitMappingOf(toks.select(col("token")).distinct(), merges))
+  }
 
-  /** Streaming context CHUNKING with a SHIPPED tokenizer — q157's
-    * readout at the arrival seam (r10 VERDICT #8): each micro-batch of
-    * (doc_id, text) docs explodes to POSITIONED tokens, prices them by
-    * replaying the trained merge table over the batch's own distinct
-    * vocabulary ([[graft.operators.BpeOps.unitMappingOf]] — the
-    * [[segmentServe]] OOV rule: merges fire where they apply, character
-    * fallback where they don't), and cuts each doc into fixed-budget
-    * chunks through the SAME aggregate the batch op runs
-    * ([[graft.operators.BpeOps.chunkReadout]]) — stream ≡ batch by
-    * construction. Chunking is per-doc (the start-offset rule runs
-    * inside a doc-keyed window), so a doc chunked in the batch it
-    * arrived in is chunked forever: zero stream state, stateless
-    * per-batch transform, the q157 semantics exactly
-    * (StreamingSpec pins union-over-batches ≡ batch, incl. an OOV
-    * arrival). Per-batch cost: Rounds broadcast-literal replaces over
-    * the batch vocabulary + one batch-sized join + the doc-keyed
-    * window. With `gate` (the benchmark shingle set,
+  /** Context CHUNKING with a SHIPPED tokenizer — q157's readout at the
+    * arrival seam: each batch explodes to POSITIONED tokens, prices them
+    * by the [[segment]] merge replay over the batch's own vocabulary,
+    * and cuts each doc into fixed-budget chunks through the SAME
+    * aggregate the batch op runs ([[graft.operators.BpeOps.chunkReadout]])
+    * — stream ≡ batch by construction (the start-offset rule runs inside
+    * a doc-keyed window, so the batch a doc arrived in cannot move a
+    * chunk boundary). With `gate` (the benchmark shingle set,
     * [[graft.operators.PipelineOps.benchShingles]]) contaminated chunks
-    * are DROPPED before the sink sees them ([[decontamGate]]; the rest
-    * of the doc still serves — q173's sequence granularity). */
-  def chunkServe(newDocs: DataFrame,
-      merges: Seq[graft.operators.BpeOps.BpeMerge],
-      gate: Option[DataFrame] = None)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newDocs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val (toks, mapping) = batchToksAndMapping(batch, merges)
-      try sink(decontamGate(
-        graft.operators.BpeOps.chunkReadout(toks, mapping), gate).chunks)
-      finally toks.unpersist()
+    * are DROPPED before the sink sees them ([[decontamGate]]; the rest of
+    * the doc still serves — q173's sequence granularity).
+    *
+    * Batch: (doc_id, text). Sink: q157's chunk rows. */
+  def chunk(merges: Seq[BpeOps.BpeMerge], gate: Option[DataFrame] = None): Fold =
+    Fold.map { b =>
+      val (toks, mapping) = batchToksAndMapping(b, merges)
+      decontamGate(BpeOps.chunkReadout(toks, mapping), gate).chunks
     }
 
-  /** The shared per-batch prelude of [[chunkServe]] and every [[Pack]]
-    * fold: positioned tokens (CACHED — the distinct-vocabulary branch and
-    * the join probe both read them; the segmentServe lifecycle, caller
-    * unpersists) + the OOV-correct unit mapping replayed over the
-    * batch's own vocabulary. One definition so the serve paths cannot
-    * silently diverge on the tokenize/replay rule (r11 review). */
+  /** The shared per-batch prelude of [[chunk]] and every [[Pack]] fold:
+    * positioned tokens (batch-scoped [[graft.CheckpointRegistry.cached]]
+    * — the distinct-vocabulary branch and the join probe both read them)
+    * + the OOV-correct unit mapping replayed over the batch's own
+    * vocabulary. One definition so the serve paths cannot silently
+    * diverge on the tokenize/replay rule. */
   private def batchToksAndMapping(batch: DataFrame,
-      merges: Seq[graft.operators.BpeOps.BpeMerge])
-      : (DataFrame, DataFrame) = {
-    val toks = batch.select(col("doc_id"),
-        posexplode(graft.text.Text.tokens(col("text")))
-          .as(Seq("pos0", "token")))
+      merges: Seq[BpeOps.BpeMerge]): (DataFrame, DataFrame) = {
+    val toks = CheckpointRegistry.cached(batch.select(col("doc_id"),
+        posexplode(Text.tokens(col("text"))).as(Seq("pos0", "token")))
       .select(col("doc_id"), (col("pos0") + 1).cast("long").as("pos"),
-        col("token")).cache()
-    // construction can throw (AnalysisException on a bad batch schema)
-    // AFTER cache() registered the plan — unpersist on THAT path too, or
-    // the CacheManager entry outlives the batch (r11 review)
-    try (toks, graft.operators.BpeOps.unitMappingOf(
-      toks.select(col("token")).distinct(), merges))
-    catch { case t: Throwable => toks.unpersist(); throw t }
+        col("token")))
+    (toks, BpeOps.unitMappingOf(toks.select(col("token")).distinct(), merges))
   }
 
   /** A batch's chunk readout after the optional q173 eval-overlap gate:
@@ -711,7 +562,6 @@ object StreamOps {
   private def decontamGate(readout: DataFrame, benchSh: Option[DataFrame])
       : Gated =
     benchSh.fold(new Gated(readout, identity)) { b =>
-      import graft.operators.PipelineOps
       val flagged = PipelineOps.contamCountsOf(
           readout.select(col("doc_id"), col("chunk_id"), col("text_chunk")), b)
         .filter(col("n_shared") >= PipelineOps.ContamMinShared)
@@ -842,16 +692,50 @@ object StreamOps {
       }
   }
 
-  /** One pack-family micro-batch: a [[Pack]] fold ([[pack]], [[mmPack]])
-    * or an [[epochTail]] over one. [[serve]] runs `step` per batch, then
-    * commits the state; StreamingSpec drives `step` itself to replay a
-    * re-delivered batchId or a process death (MemoryStream's happy path
-    * never re-delivers and cannot survive one). */
+  /** One serve's per-micro-batch body. [[serve]] runs `step` per batch,
+    * then commits the state; StreamingSpec drives `step` itself to replay
+    * a re-delivered batchId or a process death (MemoryStream's happy path
+    * never re-delivers and cannot survive one). `step` runs the fold's
+    * body inside ONE [[graft.CheckpointRegistry.scoped]] block, whoever
+    * calls it: what the batch checkpoints or
+    * [[graft.CheckpointRegistry.cached caches]] dies when the step
+    * returns, so a sink must consume its frame before it returns. */
   sealed abstract class Fold {
     /** Whether the fold needs a ranked [[ServeState]] ([[epochTail]]). */
-    def ranked: Boolean
-    def step(batch: DataFrame, state: ServeState, batchId: Long)
+    def ranked: Boolean = false
+    protected def run(batch: DataFrame, state: ServeState, batchId: Long)
         (sink: DataFrame => Unit): Unit
+    final def step(batch: DataFrame, state: ServeState, batchId: Long)
+        (sink: DataFrame => Unit): Unit =
+      CheckpointRegistry.scoped(run(batch, state, batchId)(sink))
+  }
+
+  object Fold {
+    /** A stateless fold: the sink receives `f(batch)`. */
+    def map(f: DataFrame => DataFrame): Fold = new Fold {
+      protected def run(batch: DataFrame, state: ServeState, batchId: Long)
+          (sink: DataFrame => Unit): Unit = sink(f(batch))
+    }
+
+    /** A MAINTAINED fold: each batch is answered against the standing
+      * artifacts as of its arrival, and only then folded into them —
+      * `t = cached(prep(batch))`, decisions `d = checkpoint(decide(t))`,
+      * `sink(d)`, then `maintain(t, d)`. The decisions are materialized
+      * BEFORE any maintenance lands, so a batch never answers against
+      * itself, and later batches see snapshot ∪ everything before them:
+      * the sequential semantics of a daily batch pipeline at micro-batch
+      * granularity. The artifacts own all persistence; the stream holds
+      * none. */
+    def maintained(prep: DataFrame => DataFrame)(decide: DataFrame => DataFrame)
+        (maintain: (DataFrame, DataFrame) => Unit): Fold = new Fold {
+      protected def run(batch: DataFrame, state: ServeState, batchId: Long)
+          (sink: DataFrame => Unit): Unit = {
+        val t = CheckpointRegistry.cached(prep(batch))
+        val d = CheckpointRegistry.checkpoint(decide(t))
+        sink(d)
+        maintain(t, d)
+      }
+    }
   }
 
   /** Packs a batch under `lineage`: the lineage's rows of the batch
@@ -862,47 +746,39 @@ object StreamOps {
     * shard rule), emitted in `cum_units` order. [[epochTail]] ranks the
     * packed rows under the lineage's draw key. */
   final class Pack private[StreamOps] (
-      merges: Seq[graft.operators.BpeOps.BpeMerge], gate: Option[DataFrame],
-      private[StreamOps] val lineage: graft.operators.PipelineOps.Lineage)
+      merges: Seq[BpeOps.BpeMerge], gate: Option[DataFrame],
+      private[StreamOps] val lineage: PipelineOps.Lineage)
       extends Fold {
-    def ranked: Boolean = false
-    def step(batch: DataFrame, state: ServeState, batchId: Long)
+    protected def run(batch: DataFrame, state: ServeState, batchId: Long)
         (sink: DataFrame => Unit): Unit = {
-      import graft.operators.{BpeOps, PipelineOps}
       val (toks, mapping) = batchToksAndMapping(batch, merges)
       // cached: the mass total and the sink's PrefixSum plan both read the
       // row masses — uncached, the merge replay + mapping join + doc
-      // window + groupBy would run twice per batch; built
-      // under the toks guard so a construction failure can't leak either.
-      // Both gate references live inside this ONE cached plan, so the
-      // flagged-key subplan executes at most twice within a single
-      // batch-sized materialization — never per action
-      val rows =
-        try {
-          val g = decontamGate(BpeOps.chunkReadout(toks, mapping), gate)
-          lineage.rowsOf(g.chunks,
-            g.docs(batch.select(col("doc_id"), col("text")))).cache()
-        } catch { case t: Throwable => toks.unpersist(); throw t }
-      try {
-        val (base, _) = state.claim(batchId)
-        val packed = PipelineOps
-          .packAt(rows, lineage.orderPrefix, lineage.keys, Some(base))
-          // deterministic EMIT order: PrefixSum's final window
-          // leaves rows hash-distributed by bin — correct values, arbitrary
-          // order past one post-shuffle partition. The pack order is part
-          // of this op's contract, so sort the batch-sized result by it.
-          .orderBy(col("cum_units"))
-        val total = rows.agg(coalesce(sum(col("n_units")), lit(0L)))
-          .head().getLong(0)
-        sink(packed)
-        state.advance(base + total)
-      } finally { rows.unpersist(); toks.unpersist() }
+      // window + groupBy would run twice per batch. Both gate references
+      // live inside this ONE cached plan, so the flagged-key subplan
+      // executes at most twice within a single batch-sized
+      // materialization — never per action
+      val g = decontamGate(BpeOps.chunkReadout(toks, mapping), gate)
+      val rows = CheckpointRegistry.cached(lineage.rowsOf(g.chunks,
+        g.docs(batch.select(col("doc_id"), col("text")))))
+      val (base, _) = state.claim(batchId)
+      val packed = PipelineOps
+        .packAt(rows, lineage.orderPrefix, lineage.keys, Some(base))
+        // deterministic EMIT order: PrefixSum's final window
+        // leaves rows hash-distributed by bin — correct values, arbitrary
+        // order past one post-shuffle partition. The pack order is part
+        // of this op's contract, so sort the batch-sized result by it.
+        .orderBy(col("cum_units"))
+      val total = rows.agg(coalesce(sum(col("n_units")), lit(0L)))
+        .head().getLong(0)
+      sink(packed)
+      state.advance(base + total)
     }
   }
 
   /** Streaming SEQUENCE PACKING at the arrival seam — what a loader
     * does between full rebuilds: arriving docs chunk under the shipped
-    * tokenizer ([[chunkServe]]'s OOV-correct replay + the shared
+    * tokenizer ([[chunk]]'s OOV-correct replay + the shared
     * [[graft.operators.BpeOps.chunkReadout]]), and their chunks APPEND
     * to the unit-budgeted shard stream where it left off. Within a
     * batch, chunks order deterministically by q158's md5-bkey rule; the
@@ -928,13 +804,13 @@ object StreamOps {
     * re-delivery at the original base, gapless offsets over what WAS
     * packed, open-shard append, deterministic emit order) holds verbatim.
     *
-    * Scale shape: zero executor stream state; per batch: the chunkServe
+    * Scale shape: zero executor stream state; per batch: the [[chunk]]
     * costs + the PrefixSum two-level scan over batch-sized CACHED chunk
     * masses (computed once, read by the mass total and the sink's
     * plan). */
-  def pack(merges: Seq[graft.operators.BpeOps.BpeMerge],
+  def pack(merges: Seq[BpeOps.BpeMerge],
       gate: Option[DataFrame] = None): Pack =
-    new Pack(merges, gate, graft.operators.PipelineOps.Lineage.Pack)
+    new Pack(merges, gate, PipelineOps.Lineage.Pack)
 
   /** [[pack]] for the MULTIMODAL stream (the q196 build at the
     * arrival seam): each arriving doc batch packs its text chunks AND its
@@ -951,9 +827,9 @@ object StreamOps {
     * [[graft.operators.PipelineOps.Lineage.appendServed]] cannot bypass
     * the gate the rebuild enforces. Every [[pack]] guarantee holds
     * verbatim over the interleaved rows. */
-  def mmPack(merges: Seq[graft.operators.BpeOps.BpeMerge],
+  def mmPack(merges: Seq[BpeOps.BpeMerge],
       gate: Option[DataFrame] = None): Pack =
-    new Pack(merges, gate, graft.operators.PipelineOps.Lineage.MmPack)
+    new Pack(merges, gate, PipelineOps.Lineage.MmPack)
 
   /** The epoch TAIL at the arrival seam (q200 over [[pack]],
     * q207 over [[mmPack]]): arriving docs pack exactly like `fold`, and
@@ -974,33 +850,48 @@ object StreamOps {
     * pack costs + one batch-sized epoch fold (Epochs × batch rows, never
     * the corpus) + a 1-row count. */
   def epochTail(fold: Pack, nGenPrefix: Long): Fold = new Fold {
-    def ranked: Boolean = true
-    def step(batch: DataFrame, state: ServeState, batchId: Long)
+    override def ranked: Boolean = true
+    protected def run(batch: DataFrame, state: ServeState, batchId: Long)
         (sink: DataFrame => Unit): Unit = {
-      import graft.operators.PipelineOps
       require(state.ranked, "an epoch-tail fold needs a ranked ServeState")
       fold.step(batch, state, batchId) { packed =>
-        val cached = packed.cache()
-        try {
-          val (_, rankBase) = state.claim(batchId)
-          val ids = fold.lineage.ids :+ "shard"
-          val ranked = PipelineOps.epochRanked(
-              cached.select(ids.map(col): _*), fold.lineage, "arr_rank")
-            .select(col("epoch") +:
-              (col("arr_rank") + nGenPrefix + rankBase).as("seq_rank") +:
-              ids.map(col): _*)
-            .orderBy(col("epoch"), col("seq_rank"))
-          val n = cached.count()
-          sink(ranked)
-          state.advanceRanks(rankBase + n)
-        } finally cached.unpersist()
+        val cached = CheckpointRegistry.cached(packed)
+        val (_, rankBase) = state.claim(batchId)
+        val ids = fold.lineage.ids :+ "shard"
+        val ranked = PipelineOps.epochRanked(
+            cached.select(ids.map(col): _*), fold.lineage, "arr_rank")
+          .select(col("epoch") +:
+            (col("arr_rank") + nGenPrefix + rankBase).as("seq_rank") +:
+            ids.map(col): _*)
+          .orderBy(col("epoch"), col("seq_rank"))
+        val n = cached.count()
+        sink(ranked)
+        state.advanceRanks(rankBase + n)
       }
     }
   }
 
-  /** Serve `fold` over the arriving (doc_id, text) stream: per
-    * micro-batch, `fold.step` under `state`, then `state.commit()`.
-    * At-least-once: the fold keys its state by foreachBatch's batchId, so
+  /** Serve `fold` over an arriving stream — the library's one
+    * `foreachBatch`: per micro-batch, `fold.step` under `state`, then
+    * `state.commit()`. Each fold runs its operator's exact batch plan on
+    * the micro-batch as a plain DataFrame, and the stateless folds share
+    * one stream contract:
+    *
+    *  - batches are DOC-ATOMIC (one ingest record = one whole doc, the
+    *    normal file/queue ingest shape), so the per-doc rules — island
+    *    merges, complement slicing, chunk boundaries — see whole docs;
+    *  - the stream holds ZERO state: the artifacts own all persistence,
+    *    so re-delivery is idempotent per doc, and per-batch cost is
+    *    batch-linear;
+    *  - the union over micro-batches of the sink's frames ≡ the batch op
+    *    over the same docs (StreamingSpec pins each fold).
+    *
+    * A [[Fold.maintained]] fold instead answers each batch as of its
+    * arrival and then folds the batch into its artifacts. A stateless
+    * fold ignores `state`; the default in-memory [[ServeState]] commits
+    * nothing.
+    *
+    * The pack-family folds key their state by foreachBatch's batchId, so
     * a RE-DELIVERED batch (sink succeeded, checkpoint commit didn't)
     * replays at its ORIGINAL bases, reproducing the identical rows (an
     * append-only downstream absorbs them by key idempotence) instead of
@@ -1008,9 +899,8 @@ object StreamOps {
     * Crash-safe with a file-backed state ([[ServeState.resume]]). A
     * state that is not ranked exactly when the fold is fails here, before
     * the query starts. */
-  def serve(newDocs: DataFrame, fold: Fold, state: ServeState)
-      (sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+  def serve(newDocs: DataFrame, fold: Fold, state: ServeState = ServeState())
+      (sink: DataFrame => Unit): DataStreamWriter[Row] = {
     // checked here, before any batch runs: inside foreachBatch the
     // mismatch would fail the running query, and an unranked state
     // would rewrite an epoch tail's state file without its rank fields
@@ -1024,11 +914,9 @@ object StreamOps {
   }
 
   /** [[serve]] of the gated text [[pack]] from unit offset 0. */
-  def packServeDecontam(newDocs: DataFrame,
-      merges: Seq[graft.operators.BpeOps.BpeMerge], benchSh: DataFrame)
-      (sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    serve(newDocs, pack(merges, Some(benchSh)), ServeState())(sink)
+  def packServeDecontam(newDocs: DataFrame, merges: Seq[BpeOps.BpeMerge],
+      benchSh: DataFrame)(sink: DataFrame => Unit): DataStreamWriter[Row] =
+    serve(newDocs, pack(merges, Some(benchSh)))(sink)
 
   def sessionCounts(events: Dataset[Event]): DataFrame = {
     import events.sparkSession.implicits._

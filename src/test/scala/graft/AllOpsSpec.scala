@@ -40,19 +40,45 @@ class AllOpsSpec extends AnyFunSuite with SharedSpark {
     assert(quoted("""the (\d+) rows-only ops""".r) === Seq(ops - oracle))
   }
 
-  test("only GenManifest builds a generation dir name") {
-    // `<name>_g<gen>` is GenManifest.dir's rule; an operator spelling it
-    // again would fork the naming the graftpack table and GC rely on
-    val genName = "_g$"
+  /** src/main sources that spell `token` outside the part `allowed`
+    * keeps of them (a file's text → the text to scan). */
+  private def spelledOutside(token: String)(allowed: (String, String) => String)
+      : Seq[java.io.File] = {
     def sources(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(sources)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     val all = sources(new java.io.File("src/main"))
     assert(all.exists(_.getName == "GenManifest.scala"), "src/main not found")
-    val offenders = all.filter { f =>
-      f.getName != "GenManifest.scala" &&
-        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").contains(genName)
+    all.filter { f =>
+      allowed(f.getName,
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).contains(token)
     }
+  }
+
+  test("only GenManifest builds a generation dir name") {
+    // `<name>_g<gen>` is GenManifest.dir's rule; an operator spelling it
+    // again would fork the naming the graftpack table and GC rely on
+    val offenders = spelledOutside("_g$") { (name, text) =>
+      if (name == "GenManifest.scala") "" else text }
     assert(offenders.isEmpty, s"generation dir names built outside GenManifest: $offenders")
+  }
+
+  test("only StreamOps.serve runs a foreachBatch; only CheckpointRegistry drops a round's blocks") {
+    // every serve is a fold over the one serve, and every checkpointed
+    // fixpoint loop releases its rounds through CheckpointRegistry.iterate
+    val outsideServe = spelledOutside("foreachBatch") { (name, text) =>
+      if (name != "StreamOps.scala") text
+      else {
+        val at = text.indexOf("  def serve(")
+        val end = text.indexOf("  def packServeDecontam(", at)
+        assert(at >= 0 && end > at, "StreamOps.serve not found")
+        val from = text.lastIndexOf("/**", at)
+        text.substring(0, from) + text.substring(end)
+      }
+    }
+    assert(outsideServe.isEmpty, s"foreachBatch outside StreamOps.serve: $outsideServe")
+    val loops = spelledOutside("prevBlocks") { (name, text) =>
+      if (name == "CheckpointRegistry.scala") "" else text }
+    assert(loops.isEmpty, s"hand-rolled round releases: $loops")
   }
 }

@@ -355,8 +355,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val ms = MemoryStream[(Long, Array[Float])]
     val buf = scala.collection.mutable.ArrayBuffer[(Long, Long, Double, Long)]()
     val plans = scala.collection.mutable.ArrayBuffer[String]()
-    val q = StreamOps.annServe(ms.toDF().toDF("vec_id", "embedding"),
-        idx, cellsRow, cbRow, SimOps.IdxK) { out =>
+    val q = StreamOps.serve(ms.toDF().toDF("vec_id", "embedding"),
+        StreamOps.ann(idx, cellsRow, cbRow, SimOps.IdxK)) { out =>
       plans += out.queryExecution.executedPlan.toString
       buf ++= out.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
@@ -416,8 +416,9 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val ckBefore = CheckpointRegistry.liveCount
     // threshold low enough that the b1 append trips a compaction before
     // b2 is served — the mid-run maintenance case
-    val q = StreamOps.annServeMaintained(ms.toDF().toDF("vec_id", "embedding"),
-        base, SimOps.IdxK, compactAtFiles = 1) { out => batches += shot(out) }.start()
+    val q = StreamOps.serve(ms.toDF().toDF("vec_id", "embedding"),
+        StreamOps.annMaintained(base, SimOps.IdxK, compactAtFiles = 1)) { out =>
+      batches += shot(out) }.start()
     try {
       ms.addData(b1.toSeq); q.processAllAvailable()
       ms.addData(b2.toSeq); q.processAllAvailable()
@@ -465,8 +466,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val (h1, h2) = mk.splitAt(mk.length / 2)
     val ms = MemoryStream[NewDoc]
     val buf = scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Double, String)]()
-    val q = StreamOps.spanCleanServe(
-        ms.toDF().select("doc_id", "text"), corpusSh, k) { out =>
+    val q = StreamOps.serve(ms.toDF().select("doc_id", "text"),
+        StreamOps.Fold.map(DedupOps.cleanVsIndex(_, corpusSh, k))) { out =>
       buf ++= out.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getLong(2), r.getDouble(3), r.getString(4)))
     }.start()
@@ -516,7 +517,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val (h1, h2) = mk.splitAt(mk.length / 2)
     val ms = MemoryStream[SrcDoc]
     val buf = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
-    val q = StreamOps.spanAttributeServe(ms.toDF(), idx, k) { out =>
+    val q = StreamOps.serve(ms.toDF(),
+        StreamOps.Fold.map(DedupOps.attributeVsIndex(_, idx, k))) { out =>
       buf ++= out.collect().map(r => (r.getLong(0), r.getString(1),
         r.getString(2), r.getLong(3)))
     }.start()
@@ -554,7 +556,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val (h1, h2) = mk.splitAt(mk.length / 2)
     val ms = MemoryStream[SrcDoc]
     val buf = scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Double)]()
-    val q = StreamOps.noveltyServe(ms.toDF().select("doc_id", "text")) { out =>
+    val q = StreamOps.serve(ms.toDF().select("doc_id", "text"),
+        StreamOps.novelty) { out =>
       buf ++= out.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     }.start()
@@ -591,7 +594,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val ms = MemoryStream[SrcDoc]
     val buf = scala.collection.mutable.ArrayBuffer[(Long, String, Long, Long, Double, Int, Long, Int)]()
     val ckBefore = CheckpointRegistry.liveCount
-    val q = StreamOps.admitServe(ms.toDF()) { out =>
+    val q = StreamOps.serve(ms.toDF(), StreamOps.admit) { out =>
       buf ++= out.collect().map(r => (r.getLong(0), r.getString(1),
         r.getLong(2), r.getLong(3), r.getDouble(4), r.getInt(5),
         r.getLong(6), r.getInt(7)))
@@ -668,7 +671,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val ms = MemoryStream[SrcDoc]
     val batches = scala.collection.mutable.ArrayBuffer[Set[Rec]]()
     val ckBefore = CheckpointRegistry.liveCount
-    val q = StreamOps.admitServeMaintained(ms.toDF(), compactAt) { out =>
+    val q = StreamOps.serve(ms.toDF(), StreamOps.admitMaintained(compactAt)) { out =>
       batches += shot(out)
     }.start()
     try {
@@ -732,11 +735,15 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
 
     // maintained stream over the same batches (fresh artifact)
     TextOps.q130Write(spark, toks.filter(col("doc_id") % mod =!= 0))
+    val gen0 = TextOps.G130Df.gen(spark)
     val ms = MemoryStream[(Long, String)]
     val batches = scala.collection.mutable.ArrayBuffer[List[(Long, Long, Double)]]()
     val ckBefore = CheckpointRegistry.liveCount
-    val q = StreamOps.bm25Serve(ms.toDF().toDF("doc_id", "text"),
-        TextOps.Bm25Query, maintain = true) { out => batches += shot(out) }.start()
+    // threshold low enough that the b1 append trips a compaction of the
+    // df index before b2 is scored
+    val q = StreamOps.serve(ms.toDF().toDF("doc_id", "text"),
+        StreamOps.bm25(TextOps.Bm25Query, compactAtFiles = 1)) { out =>
+      batches += shot(out) }.start()
     try {
       ms.addData(b1); q.processAllAvailable()
       ms.addData(b2); q.processAllAvailable()
@@ -746,10 +753,12 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     assert(batches.length === 2)
     assert(batches(0) === want1)
     assert(batches(1) === want2)
+    // the df side compacted: an always-on stream's appends stay bounded
+    assert(TextOps.G130Df.gen(spark) > gen0, "the df index never compacted")
     // maintenance is visible: b1's arrival moved the stats b2 was
     // scored under (df/avgdl drift), so scoring b2 against the ORIGINAL
-    // snapshot differs somewhere — if it didn't, the maintained flag
-    // was a no-op and the test is vacuous
+    // snapshot differs somewhere — if it didn't, maintenance was a
+    // no-op and the test is vacuous
     TextOps.q130Write(spark, toks.filter(col("doc_id") % mod =!= 0))
     val unmaintained = shot(TextOps.q130Probe(spark, toksOf(b2), TextOps.Bm25Query))
     assert(unmaintained !== want2,
@@ -770,8 +779,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val ms = MemoryStream[(Long, String)]
     val batches = scala.collection.mutable.ArrayBuffer[
       List[(Long, Long, Long, Long, Double)]]()
-    val q = StreamOps.segmentServe(
-        ms.toDF().toDF("doc_id", "text"), merges) { out =>
+    val q = StreamOps.serve(ms.toDF().toDF("doc_id", "text"),
+        StreamOps.segment(merges)) { out =>
       batches += out.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getLong(2), r.getLong(3), r.getDouble(4))).toList
     }.start()
@@ -818,8 +827,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val ms = MemoryStream[(Long, String)]
     type ChunkRow = (Long, Long, Long, Long, Long, Long, String)
     val batches = scala.collection.mutable.ArrayBuffer[List[ChunkRow]]()
-    val q = StreamOps.chunkServe(
-        ms.toDF().toDF("doc_id", "text"), merges) { out =>
+    val q = StreamOps.serve(ms.toDF().toDF("doc_id", "text"),
+        StreamOps.chunk(merges)) { out =>
       batches += out.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
         r.getString(6))).toList
@@ -887,10 +896,10 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
         ()
       }
       val w = if (gated)
-        StreamOps.chunkServe(ms.toDF().toDF("doc_id", "text"),
-          merges, Some(benchSh))(sink)
-      else StreamOps.chunkServe(ms.toDF().toDF("doc_id", "text"),
-        merges)(sink)
+        StreamOps.serve(ms.toDF().toDF("doc_id", "text"),
+          StreamOps.chunk(merges, Some(benchSh)))(sink)
+      else StreamOps.serve(ms.toDF().toDF("doc_id", "text"),
+        StreamOps.chunk(merges))(sink)
       val q = w.start()
       try batchesIn.foreach { b => ms.addData(b); q.processAllAvailable() }
       finally q.stop()
@@ -1467,8 +1476,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     // them locally
     val all = scala.collection.mutable.ArrayBuffer[(Long, Long, String)]()
     val msAll = MemoryStream[(Long, String)]
-    val qAll = StreamOps.chunkServe(msAll.toDF().toDF("doc_id", "text"),
-        merges) { out =>
+    val qAll = StreamOps.serve(msAll.toDF().toDF("doc_id", "text"),
+        StreamOps.chunk(merges)) { out =>
       all ++= out.select("doc_id", "chunk_id", "text_chunk").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
       ()
@@ -1643,9 +1652,9 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val ms = MemoryStream[(Long, String, String, String)]
     val batches = scala.collection.mutable.ArrayBuffer[
       List[(String, String, Long, Long, Long, Long, Long, Long, Long, Int)]]()
-    val q = StreamOps.driftGateServe(
-        ms.toDF().toDF("doc_id", "source", "lang", "text"), snap,
-        maxShiftMicros = maxDelta + 1) { out =>
+    val q = StreamOps.serve(
+        ms.toDF().toDF("doc_id", "source", "lang", "text"),
+        StreamOps.driftGate(snap, maxShiftMicros = maxDelta + 1)) { out =>
       batches += out.collect().map(r => (r.getString(0), r.getString(1),
         r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
         r.getLong(7), r.getLong(8), r.getInt(9))).toList
@@ -2138,5 +2147,115 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     // fresh batch continues both sequences; states converge
     assert(drive(st2, b2, 1L) === ref(1))
     assert(text(fKill) === text(fRef))
+  }
+
+  test("every fold's batch-scoped blocks die with its batch, through serve and through step") {
+    implicit val ctx = spark.sqlContext
+    import graft.operators.{BpeOps, PipelineOps, SimOps, TextOps}
+    import org.apache.spark.sql.DataFrame
+    val mod = DedupOps.IncrSplitMod
+    val k = DedupOps.DupSpanK
+    val docs = Tables.documents(spark, SF)
+    val arr = docs.filter(col("doc_id") % mod === 0).orderBy("doc_id").limit(6)
+      .select("doc_id", "source", "lang", "text").as[(Long, String, String, String)].collect().toSeq
+    val vecs = Tables.embeddings(spark, SF).orderBy("vec_id").limit(6)
+      .select("vec_id", "embedding").as[(Long, Array[Float])].collect().toSeq
+    // the standing artifacts every fold reads
+    val merges = BpeOps.train(spark, SF)._1
+    val benchSh = PipelineOps.benchShingles(spark, SF)
+    DedupOps.q122Write(spark, SF)
+    DedupOps.q189(spark, SF).count()
+    TextOps.q130Write(spark, docs.filter(col("doc_id") % mod =!= 0)
+      .select(col("doc_id"), graft.text.Text.tokens(col("text")).as("toks")))
+    val annBase = Standing.dir(spark, "annserve_life")
+    SimOps.annIndexWrite(spark, annBase, Tables.embeddings(spark, SF))
+    val (cellsRow, cbRow) = SimOps.annIndexModel(spark, annBase)
+    val spans = docs.filter(col("doc_id") % mod =!= 0)
+      .select(col("source").as("osrc"), explode(graft.text.Text.shingles(
+        graft.text.Text.tokens(col("text")), k)).as("sh")).distinct()
+    val docFolds: Seq[(String, StreamOps.Fold, Seq[String])] = Seq(
+      ("clean", StreamOps.Fold.map(DedupOps.cleanVsIndex(_, spans.select("sh"), k)),
+        Seq("doc_id", "text")),
+      ("attribute", StreamOps.Fold.map(DedupOps.attributeVsIndex(_, spans, k)),
+        Seq("doc_id", "source", "text")),
+      ("novelty", StreamOps.novelty, Seq("doc_id", "text")),
+      ("admit", StreamOps.admit, Seq("doc_id", "source", "text")),
+      ("admitMaintained", StreamOps.admitMaintained(), Seq("doc_id", "source", "text")),
+      ("bm25", StreamOps.bm25(TextOps.Bm25Query, compactAtFiles = 1),
+        Seq("doc_id", "text")),
+      ("driftGate", StreamOps.driftGate(docs.select("doc_id", "source", "lang", "text"),
+        0L), Seq("doc_id", "source", "lang", "text")),
+      ("segment", StreamOps.segment(merges), Seq("doc_id", "text")),
+      ("chunk", StreamOps.chunk(merges), Seq("doc_id", "text")),
+      ("chunkGated", StreamOps.chunk(merges, Some(benchSh)), Seq("doc_id", "text")),
+      ("pack", StreamOps.pack(merges, Some(benchSh)), Seq("doc_id", "text")),
+      ("mmPack", StreamOps.mmPack(merges), Seq("doc_id", "text")),
+      ("epochTail", StreamOps.epochTail(StreamOps.pack(merges), 0L),
+        Seq("doc_id", "text")))
+    val vecFolds: Seq[(String, StreamOps.Fold)] = Seq(
+      ("ann", StreamOps.ann(SimOps.annIndexVecs(spark, annBase), cellsRow, cbRow,
+        SimOps.IdxK)),
+      ("annMaintained", StreamOps.annMaintained(annBase, SimOps.IdxK,
+        compactAtFiles = 1)))
+    def blocks = (spark.sparkContext.getPersistentRDDs.keySet, CheckpointRegistry.liveCount)
+    def consume(out: DataFrame): Unit = { out.collect(); () }
+    def stepOnce(fold: StreamOps.Fold, batch: DataFrame): Unit =
+      fold.step(batch, StreamOps.ServeState(ranked = fold.ranked), 0L)(consume)
+    def serveOnce(fold: StreamOps.Fold, in: DataFrame, feed: () => Unit): Unit = {
+      val q = StreamOps.serve(in, fold,
+        StreamOps.ServeState(ranked = fold.ranked))(consume).start()
+      try { feed(); q.processAllAvailable() } finally q.stop()
+    }
+    def check(name: String)(run: => Unit): Unit = {
+      run // first batch: builds whatever standing relation the fold reads
+      val before = blocks
+      run
+      assert(blocks === before, s"$name: a batch left blocks behind")
+    }
+    docFolds.foreach { case (name, fold, cols) =>
+      check(name) {
+        stepOnce(fold, arr.toDF("doc_id", "source", "lang", "text").select(cols.map(col): _*))
+        val ms = MemoryStream[(Long, String, String, String)]
+        serveOnce(fold, ms.toDF().toDF("doc_id", "source", "lang", "text")
+          .select(cols.map(col): _*), () => { ms.addData(arr); () })
+      }
+    }
+    vecFolds.foreach { case (name, fold) =>
+      check(name) {
+        stepOnce(fold, vecs.toDF("vec_id", "embedding"))
+        val ms = MemoryStream[(Long, Array[Float])]
+        serveOnce(fold, ms.toDF().toDF("vec_id", "embedding"),
+          () => { ms.addData(vecs); () })
+      }
+    }
+  }
+
+  test("CheckpointRegistry.iterate keeps one registered round; done stops early") {
+    def live = spark.sparkContext.getPersistentRDDs.keySet
+    val seed = spark.range(10).toDF("x")
+    val step = (df: org.apache.spark.sql.DataFrame) => df.select((col("x") + 1).as("x"))
+    def top(df: org.apache.spark.sql.DataFrame) = df.agg(max("x")).head().getLong(0)
+    val (rddsBefore, ckBefore) = (live, CheckpointRegistry.liveCount)
+    CheckpointRegistry.scoped {
+      val all = CheckpointRegistry.iterate(seed, 5)(step)((_, _) => false)
+      assert(all.rounds === 5 && !all.done)
+      assert(top(all.last) === 14L)
+      // the superseded rounds are gone; only the last round's blocks
+      // stay, registered once
+      assert(CheckpointRegistry.liveCount === ckBefore + 1)
+      assert(live -- rddsBefore ===
+        CheckpointRegistry.blocksOf(all.last).map(_.id).toSet)
+      var seen = List.empty[(Long, Long)]
+      val early = CheckpointRegistry.iterate(seed, 5)(step) { (prev, next) =>
+        seen ::= ((top(prev), top(next)))
+        top(next) >= 11L
+      }
+      assert(early.rounds === 2 && early.done)
+      assert(seen.reverse === List((9L, 10L), (10L, 11L)))
+      assert(top(early.last) === 11L)
+      assert(CheckpointRegistry.liveCount === ckBefore + 2)
+    }
+    assert(CheckpointRegistry.liveCount === ckBefore)
+    assert(live === rddsBefore)
   }
 }
