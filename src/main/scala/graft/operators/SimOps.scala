@@ -999,12 +999,8 @@ object SimOps {
     * append — each appended file lands inside its cell's directory, so
     * partition pruning (the artifact's serving property) is preserved
     * verbatim. Batch cost ∝ batch size; the existing index is never
-    * read, moved, or re-encoded. A caller that already holds the frozen
-    * `model` ([[annIndexModel]]) passes it instead of re-reading it. */
-  private[graft] def annIndexAppend(s: SparkSession, base: java.io.File,
-      newVecs: DataFrame): Unit =
-    annIndexAppend(base, newVecs, annIndexModel(s, base))
-
+    * read, moved, or re-encoded. `model` is the artifact's frozen model
+    * ([[annIndexModel]]), read once by the caller. */
   private[graft] def annIndexAppend(base: java.io.File, newVecs: DataFrame,
       model: (DataFrame, DataFrame)): Unit =
     annIndexEncodeInto(base, annIndexGen(base), newVecs, model, overwrite = false)

@@ -1416,9 +1416,19 @@ object TextOps {
     * rewrite lands one file per bucket — probes aggregate over
     * partials, so results are bit-identical pre/post (spec-pinned);
     * generation-cataloged like every other compaction. The totals
-    * table stays append-only: one row per batch is bounded by batch
-    * COUNT, not data, and its reader is already a 2-column sum. */
-  private[graft] def q130Compact(s: SparkSession): Unit = G130Df.compact(s)
+    * table's one row per appended batch sums back to ONE row in the same
+    * step (its reader is already a 2-column sum, so probes are again
+    * bit-identical): an always-on append stream stays bounded on both
+    * sides. The sum is collected before the rewrite, so the write never
+    * reads the table it replaces. */
+  private[graft] def q130Compact(s: SparkSession): Unit = {
+    G130Df.compact(s)
+    val tot = s.table("g130_totals")
+      .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_len")).as("sum_len"))
+    Bucketed.fresh(s, graft.Standing.dir(s, "bm25index"), "g130_totals",
+      s.createDataFrame(java.util.Arrays.asList(tot.collect(): _*), tot.schema),
+      publish = false)(identity)
+  }
 
   /** The per-term df index; compaction sums the partial rows per term. */
   val G130Df = Bucketed.Index("bm25index", "g130_df", Seq("tok"),

@@ -335,27 +335,35 @@ object StreamOps {
     * (the frozen-model invariant), so results are independent of file
     * layout and re-delivery just re-appends rows an id-keyed consumer
     * dedups. The model row and codebook are read once, on the fold's
-    * first batch, and serve the search and the encode of every batch;
-    * per-batch IO stays |probed cells| / |cells| of the index plus one
-    * arrival-sized encode. [[graft.operators.SimOps.annIndexDrift]]
-    * remains the when-to-rebuild signal as appends accumulate.
+    * first batch, into driver-local rows (so they pin no file listing)
+    * and serve the search and the encode of every batch; per-batch IO
+    * stays |probed cells| / |cells| of the index plus one arrival-sized
+    * encode. [[graft.operators.SimOps.annIndexDrift]] remains the
+    * when-to-rebuild signal as appends accumulate.
     *
     * Batch: (vec_id, embedding). Sink: [[ann]]'s ranked results. */
   def annMaintained(base: java.io.File, k: Int, compactAtFiles: Int = 64): Fold = {
-    var model: Option[(DataFrame, DataFrame)] = None
-    def frozen(s: SparkSession) = model.getOrElse {
-      val m = SimOps.annIndexModel(s, base); model = Some(m); m }
+    lazy val model = SimOps.annIndexModel(SparkSession.active, base) match {
+      case (cells, cb) => (driverLocal(cells), driverLocal(cb)) }
     Fold.maintained(_.select(col("vec_id"), col("embedding"))) { t =>
-      val (cellsRow, cbRow) = frozen(t.sparkSession)
       SimOps.annIndexSearch(SimOps.annIndexVecs(t.sparkSession, base),
-        SimOps.probeCells(SimOps.withNorm(t), cellsRow, SimOps.IdxNProbe),
-        cbRow, k)
+        SimOps.probeCells(SimOps.withNorm(t), model._1, SimOps.IdxNProbe),
+        model._2, k)
     } { (t, _) =>
-      SimOps.annIndexAppend(base, t, frozen(t.sparkSession))
+      SimOps.annIndexAppend(base, t, model)
       if (SimOps.annIndexFileCount(base) > compactAtFiles)
         SimOps.annIndexCompact(t.sparkSession, base)
     }
   }
+
+  /** A catalog-sized `df` collected into a DRIVER-LOCAL relation: it
+    * reads no files and owns no checkpoint blocks, so a rebuild of its
+    * source or a harness-level CheckpointRegistry.releaseAll() while a
+    * stream is live cannot strand later micro-batches, and every batch's
+    * join against it is a plain LocalRelation broadcast. */
+  private def driverLocal(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   /** NOVELTY — q189 per batch: each doc's fraction of distinct
     * 3-shingles the standing corpus index (`DedupOps.q189Write`'s
@@ -447,16 +455,9 @@ object StreamOps {
       .groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("docs_old"), sum(col("nt")).as("tok_old"))
     val snapTot = s0.agg(sum(col("tok_old"))).head().getLong(0)
-    // The snapshot is catalog-sized (≤ |sources×langs| rows) by premise,
-    // so materialize it as a DRIVER-LOCAL relation: no checkpoint blocks
-    // to own, so a harness-level CheckpointRegistry.releaseAll() while
-    // the stream is live cannot strand later micro-batches (r6 ADVICE),
-    // and every batch's join side is a plain LocalRelation broadcast.
-    val sess = snapDocs.sparkSession
-    val withShare = s0.withColumn("share_old_micros",
-      Num.idivHalfAway(col("tok_old") * 1000000L, lit(snapTot)))
-    val snap = sess.createDataFrame(
-      java.util.Arrays.asList(withShare.collect(): _*), withShare.schema)
+    // The snapshot is catalog-sized (≤ |sources×langs| rows) by premise
+    val snap = driverLocal(s0.withColumn("share_old_micros",
+      Num.idivHalfAway(col("tok_old") * 1000000L, lit(snapTot))))
     Fold.map { batch =>
       val b = batch.select(col("source"), col("lang"),
           size(Text.tokens(col("text"))).cast("long").as("nt"))

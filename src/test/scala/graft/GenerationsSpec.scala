@@ -89,8 +89,9 @@ class GenerationsSpec extends AnyFunSuite with SharedSpark {
     val e = Tables.embeddings(spark, SF)
     val base = Standing.dir(spark, "anngen_spec")
     SimOps.annIndexWrite(spark, base, e.filter(col("vec_id") % 5 =!= 0))
-    SimOps.annIndexAppend(spark, base,
-      e.filter(col("vec_id") % 5 === 0).select(col("vec_id"), col("embedding")))
+    SimOps.annIndexAppend(base,
+      e.filter(col("vec_id") % 5 === 0).select(col("vec_id"), col("embedding")),
+      SimOps.annIndexModel(spark, base))
     val gen1 = SimOps.annIndexGen(base)
     assert(gen1 === 1L)
     val (cellsRow, cbRow) = SimOps.annIndexModel(spark, base)

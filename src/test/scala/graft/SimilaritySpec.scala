@@ -493,7 +493,8 @@ class SimilaritySpec extends AnyFunSuite with SharedSpark {
     val base = Standing.dir(spark, "annidx_lc")
     // build on the snapshot (model trained on A only), then append B
     SimOps.annIndexWrite(spark, base, a)
-    SimOps.annIndexAppend(spark, base, b.select(col("vec_id"), col("embedding")))
+    SimOps.annIndexAppend(base, b.select(col("vec_id"), col("embedding")),
+      SimOps.annIndexModel(spark, base))
     val (cellsRow, cbRow) = SimOps.annIndexModel(spark, base)
     val probed = SimOps.probeCells(
       SimOps.withNorm(SimOps.testQueries(e)), cellsRow, SimOps.IdxNProbe)
@@ -555,7 +556,8 @@ class SimilaritySpec extends AnyFunSuite with SharedSpark {
     val b = tv.filter(col("vec_id") % 5 === 0)
     val base = Standing.dir(spark, "annidx_tlc")
     SimOps.annIndexWrite(spark, base, a)
-    SimOps.annIndexAppend(spark, base, b.select(col("vec_id"), col("embedding")))
+    SimOps.annIndexAppend(base, b.select(col("vec_id"), col("embedding")),
+      SimOps.annIndexModel(spark, base))
     val (cellsRow, cbRow) = SimOps.annIndexModel(spark, base)
     val probed = SimOps.probeCells(
       SimOps.withNorm(tv.filter(col("vec_id") % 50 === 0)),

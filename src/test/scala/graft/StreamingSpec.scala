@@ -402,8 +402,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       SimOps.probeCells(SimOps.withNorm(
         spark.createDataFrame(vs).toDF("vec_id", "embedding")), cells, SimOps.IdxNProbe),
       cb, SimOps.IdxK))
-    def appendRef(vs: Seq[(Long, Array[Float])]) = SimOps.annIndexAppend(spark,
-      refBase, spark.createDataFrame(vs).toDF("vec_id", "embedding"))
+    def appendRef(vs: Seq[(Long, Array[Float])]) = SimOps.annIndexAppend(
+      refBase, spark.createDataFrame(vs).toDF("vec_id", "embedding"), (cells, cb))
     val want1 = searchRef(b1.toSeq); appendRef(b1.toSeq)
     val want2 = searchRef(b2.toSeq); appendRef(b2.toSeq)
 
@@ -755,6 +755,9 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     assert(batches(1) === want2)
     // the df side compacted: an always-on stream's appends stay bounded
     assert(TextOps.G130Df.gen(spark) > gen0, "the df index never compacted")
+    // and so did the totals side: its per-batch rows summed back to one
+    assert(spark.table("g130_totals").count() === 1L,
+      "the totals table kept one row per batch")
     // maintenance is visible: b1's arrival moved the stats b2 was
     // scored under (df/avgdl drift), so scoring b2 against the ORIGINAL
     // snapshot differs somewhere — if it didn't, maintenance was a

@@ -366,6 +366,8 @@ class TextSpec extends AnyFunSuite with SharedSpark {
     val collapsed = spark.table("g130_df").groupBy(col("tok")).count()
       .agg(max(col("count"))).head().getLong(0)
     assert(collapsed === 1L, s"compaction left $collapsed partials for some term")
+    assert(spark.table("g130_totals").count() === 1L,
+      "compaction left the totals table's per-batch rows")
     assert(shot(TextOps.q130Probe(spark, arr, TextOps.Bm25Query)) === got)
     // and with the full corpus as snapshot, scoring the corpus itself
     // for the same query reproduces q103's own stats regime: every
