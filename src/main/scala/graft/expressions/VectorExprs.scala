@@ -72,6 +72,68 @@ case class FloatVecDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** Native Catalyst expression for the overlap |a ∩ b| of two ascending,
+  * duplicate-free `array<bigint>` — the All-Pairs/PPJoin verify step.
+  *
+  * q49 verifies every prefix-filter candidate pair against the two
+  * docs' full kept-shingle sets. `size(array_intersect(a, b))` builds a
+  * hash set of one side and a result array per pair; with both sets
+  * encoded as ascending integer ids the overlap is one merge: two
+  * cursors, one long compare per step, no allocation.
+  *
+  * Precondition: both arrays ascending, duplicate-free and null-free
+  * (q49's `sort_array(collect_list(sid))` over a per-doc distinct set).
+  * Under it the result equals `size(array_intersect(a, b))`. A NULL
+  * array yields NULL.
+  */
+case class SortedOverlap(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case _ =>
+        TypeCheckResult.TypeCheckFailure(
+          s"$prettyName requires two array<bigint> inputs, got " +
+            s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
+    }
+  override def dataType: DataType = LongType
+  override def prettyName: String = "sorted_overlap"
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    SortedOverlap.overlap(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    // one static call per row: the same loop on both paths, and the JIT
+    // inlines it into the stage's generated code
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.expressions.SortedOverlap.overlap($a, $b);")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object SortedOverlap {
+  /** |x ∩ y| of two ascending, duplicate-free long arrays by merge. */
+  def overlap(x: ArrayData, y: ArrayData): Long = {
+    val n = x.numElements()
+    val m = y.numElements()
+    var i = 0
+    var j = 0
+    var c = 0L
+    while (i < n && j < m) {
+      val u = x.getLong(i)
+      val v = y.getLong(j)
+      if (u < v) i += 1
+      else if (u > v) j += 1
+      else { c += 1; i += 1; j += 1 }
+    }
+    c
+  }
+}
+
 /** Native Catalyst expression for exact integer-vector dot products
   * surfaced as DECIMAL(38,0).
   *
@@ -276,6 +338,11 @@ object VectorExprs {
     * `aggregate(zip_with(…, CAST AS DECIMAL(38,0) …))` fold. */
   def vecDotDec(a: Column, b: Column): Column =
     Bridge.column(LongVecDotDecimal(Bridge.expression(a), Bridge.expression(b)))
+
+  /** |a ∩ b| of two ascending, duplicate-free `array<bigint>` columns
+    * (bigint) — the merge twin of `size(array_intersect(a, b))`. */
+  def sortedOverlap(a: Column, b: Column): Column =
+    Bridge.column(SortedOverlap(Bridge.expression(a), Bridge.expression(b)))
 
   /** `numPlanes`-bit LSH sign bucket of an `array<float>` column (int) —
     * the codegen'd twin of the per-plane

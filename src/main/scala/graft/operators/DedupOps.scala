@@ -74,8 +74,7 @@ object DedupOps {
 
   /** df-capped shingle occurrences (doc_id, sh) — the corpus inverted
     * index with hot shingles removed. Shared by q49 (Jaccard) and q100
-    * (IDF cosine): both are cached, so within the dedup cache group the
-    * second caller structural-match reuses the materialized relation.
+    * (IDF cosine).
     *
     * df-cap via groupBy + broadcast anti-join, NOT a window over sh: a
     * Window.partitionBy(sh) count shuffles the full exploded relation on
@@ -87,9 +86,13 @@ object DedupOps {
     * the HOT set — the small side: ≤ |occurrences|/cap distinct
     * shingles, a Zipf head in practice — broadcasts back as an
     * anti-join applied map-side, so the exploded corpus is never
-    * shuffled on sh before the cap filter. cache() because the index
-    * feeds three consumers (sizes + both join sides) and the upstream
-    * tokenize/shingle pipeline is the expensive part. */
+    * shuffled on sh before the cap filter.
+    *
+    * Not cached: the index is a map-side explode plus that broadcast
+    * anti-join over the already-cached [[docShingles]], so a second
+    * consumer re-derives it for less than a cached copy costs (each
+    * caller caches what it builds on it: q49 its per-doc id sets, q100
+    * its weighted index). */
   private[graft] def keptShingles(s: SparkSession, dir: String): DataFrame = {
     val sh = docShingles(s, dir).select(col("doc_id"), explode(col("shs")).as("sh"))
     val hot = sh.groupBy(col("sh")).agg(count(lit(1)).as("dfc"))
@@ -117,7 +120,7 @@ object DedupOps {
             .unionAll(sh.filter(probe).join(hot, Seq("sh"), "left_anti"))
         case None => sh // empty hot set: nothing to exclude
       }
-    kept0.cache()
+    kept0
   }
 
   /** Exact Jaccard ≥ 0.5 with PREFIX FILTERING (r7, the All-Pairs/PPJoin
@@ -127,17 +130,24 @@ object DedupOps {
     * prefixes — so only prefix occurrences (≈ half the index at t=0.5)
     * enter the self-join, cutting candidate pairs ~4× vs joining the
     * full inverted index, and the surviving candidates are verified
-    * EXACTLY against the per-doc kept sets (array_intersect — so the
-    * emitted jaccard is the true set measure, not a prefix count).
+    * EXACTLY against the per-doc kept sets (so the emitted jaccard is
+    * the true set measure, not a prefix count).
     * The global order is RAREST-FIRST (document frequency asc, shingle
     * asc) — the order that maximizes pruning: a frequent shingle sorts
     * LAST and falls out of every prefix, so it can't manufacture
     * candidate pairs (a hash order would pin frequent-but-hash-early
     * shingles inside every prefix and forfeit most of the cut; measured
     * 2.1× vs ~10× candidates). The order never reaches the output, so
-    * the oracle is untouched. Prefixes are then built ROW-LOCALLY from
-    * the per-doc (df, sh)-sorted arrays — no window; the df join is on
-    * the capped index (≤ ShingleDfCap rows per key — no skew). */
+    * the oracle is untouched.
+    *
+    * The order is carried by INTEGER ids, as in All-Pairs: every kept
+    * shingle gets its exact rank in (df, sh) order ([[shingleIds]]), so
+    * one ascending `array<bigint>` per doc is both the rarest-first
+    * prefix source (a row-local slice — no window) and the verify
+    * operand, and the verify is a merge over two sorted id arrays
+    * ([[graft.expressions.SortedOverlap]]) instead of a hash
+    * intersection of string arrays. The id join is on the capped index
+    * (≤ ShingleDfCap rows per key — no skew). */
   def q49(s: SparkSession, dir: String): DataFrame =
     pairs49(s, dir).orderBy(col("id_a"), col("id_b"))
 
@@ -158,22 +168,19 @@ object DedupOps {
   /** The unmemoized q49 pair-set build plan (plan-discipline pin). */
   private[graft] def q49Plan(s: SparkSession, dir: String): DataFrame = {
     val kept = keptShingles(s, dir)
-    val dfk = kept.groupBy(col("sh")).agg(count(lit(1)).as("dfk"))
     // per-doc kept SETS (kept is distinct per (doc, sh) by construction)
-    // in global rarest-first order: the verify side AND the prefix
+    // as ascending rarest-first ids: the verify side AND the prefix
     // source; cached — consumed 3×
-    val keptSets = kept.join(dfk, "sh")
+    val keptSets = kept.join(shingleIds(s, kept), "sh")
       .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("dfk"), col("sh")))).as("ord"))
-      .select(col("doc_id"),
-        transform(col("ord"), o => o.getField("sh")).as("shs"))
+      .agg(sort_array(collect_list(col("sid"))).as("shs"))
       .withColumn("sz", size(col("shs")).cast("long"))
       .cache()
     // prefix = first ⌊sz/2⌋+1 shingles of the globally-ordered set
     val pre = keptSets.select(col("doc_id"),
-      explode(slice(col("shs"), lit(1), (col("sz") / 2 + 1).cast("int"))).as("sh"))
-    val cand = pre.select(col("doc_id").as("id_a"), col("sh"))
-      .join(pre.select(col("doc_id").as("id_b"), col("sh")), Seq("sh"))
+      explode(slice(col("shs"), lit(1), (col("sz") / 2 + 1).cast("int"))).as("sid"))
+    val cand = pre.select(col("doc_id").as("id_a"), col("sid"))
+      .join(pre.select(col("doc_id").as("id_b"), col("sid")), Seq("sid"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b")).distinct()
     cand
@@ -181,7 +188,8 @@ object DedupOps {
         col("shs").as("shs_a"), col("sz").as("sz_a")), "id_a")
       .join(keptSets.select(col("doc_id").as("id_b"),
         col("shs").as("shs_b"), col("sz").as("sz_b")), "id_b")
-      .withColumn("shared", size(array_intersect(col("shs_a"), col("shs_b"))).cast("long"))
+      .withColumn("shared",
+        graft.expressions.VectorExprs.sortedOverlap(col("shs_a"), col("shs_b")))
       .filter(col("shared") / (col("sz_a") + col("sz_b") - col("shared")).cast("double") >= 0.5)
       // integer-micro rounding: shared/union is a small-denominator exact
       // rational, the boundary class where double round() is
@@ -189,6 +197,28 @@ object DedupOps {
       .select(col("id_a"), col("id_b"),
         graft.functions.Num.ratio6(col("shared"),
           col("sz_a") + col("sz_b") - col("shared")).as("jaccard"))
+  }
+
+  /** `(sh, sid)`: each distinct shingle of the capped index `kept` with
+    * its exact 0-based rank in rarest-first `(df, sh)` order. The rank
+    * comes from a range sort of the per-shingle df aggregate and
+    * `zipWithIndex`, so it is
+    *   - exact: one id per shingle, no hash collisions;
+    *   - deterministic: a rank in a total order does not depend on how
+    *     the sort partitioned the vocabulary;
+    *   - window-free and distributed: the vocabulary never reaches the
+    *     driver, only the per-partition counts `zipWithIndex` takes. */
+  private def shingleIds(s: SparkSession, kept: DataFrame): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val ranked = kept.groupBy(col("sh")).agg(count(lit(1)).as("dfk"))
+      .orderBy(col("dfk"), col("sh"))
+      .select(col("sh"))
+      .rdd.zipWithIndex()
+      .map { case (r, i) => Row(r.getString(0), i) }
+    s.createDataFrame(ranked, StructType(Seq(
+      StructField("sh", StringType, nullable = false),
+      StructField("sid", LongType, nullable = false))))
   }
 
   val q49Sql: String =
@@ -915,13 +945,13 @@ object DedupOps {
       .join(indexShingles.select(col("sh")), Seq("sh"), "left_semi")
       .select(col("doc_id"), col("pos"), (col("pos") + (k - 1)).as("fin")))
 
-  /** Tokenized doc relation shared by the span family (cached: span
-    * detection + the doc universe / cleaning readback both consume it). */
+  /** Tokenized doc relation `(doc_id, toks)` shared by the span family
+    * (span detection + the doc universe / cleaning readback). A
+    * projection of [[TextOps.docsWithToks]]: the same `tokens(text)`
+    * over the same fan-out, so the span family reads the one cached
+    * tokenized corpus instead of writing a second copy. */
   private def spanDocs(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir)
-      .repartition(s.sparkContext.defaultParallelism)
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .cache()
+    TextOps.docsWithToks(s, dir).select(col("doc_id"), col("toks"))
 
   /** The k=[[DupSpanK]] maximal-span relation, MEMOIZED per (family
     * run, dir) — r18, the pplBuckets treatment: the span set is a pure
@@ -1465,7 +1495,7 @@ object DedupOps {
     * scores overlap by how *distinctive* the shared shingles are — the
     * signal used to separate "same template" from "same content" before
     * a keeper policy fires. Same inverted-index + cap skew guard as q49
-    * (the [[keptShingles]] relation is shared and cached); the weight
+    * (the [[keptShingles]] relation is shared); the weight
     * table derives from kept itself (rare shingles retain ALL their
     * occurrences, so COUNT per shingle ≡ its df) and re-joins the index
     * skew-free — every kept shingle carries ≤ [[ShingleDfCap]] rows.
@@ -1485,8 +1515,8 @@ object DedupOps {
       .select(col("sh"), round(idf(col("n_docs"), col("dfc")) * 1000000L).cast("long").as("m"))
     // cache: three consumers (norms + both self-join sides) would each
     // recompute the weight join. Group-scoped lifecycle (cleared with the
-    // dedup family), the q36 pattern; sized like the already-cached kept
-    // index + one long.
+    // dedup family), the q36 pattern; sized like the kept index + one
+    // long.
     val wk = kept.join(w, "sh").cache()
     val norms = wk.groupBy(col("doc_id"))
       .agg(sum((col("m") * col("m")).cast(DecimalType(38, 0))).cast("double").as("n2"))
@@ -1723,8 +1753,7 @@ object DedupOps {
     // and size class as docShingles — corpus-occurrence-sized,
     // MEMORY_AND_DISK, evicted at the family boundary. Measured
     // 2.5 → 1.5 s for the pair.
-    val occ = spanDocs(s, dir)
-      .join(Tables.documents(s, dir).select(col("doc_id"), col("source")), "doc_id")
+    val occ = TextOps.docsWithToks(s, dir)
       .select(col("doc_id"), col("source"),
         posexplode(shingles(col("toks"), k)).as(Seq("p0", "sh")))
       .select(col("doc_id"), col("source"),

@@ -31,10 +31,11 @@ object TextOps {
     * several (q101/q102's sketch+recount, q36's tf/df passes) scan it
     * twice within one plan — the family cache group (SparkEntry
     * .opGroups) holds ONE tokenized corpus copy for the family's
-    * lifetime and structural-match reuses it across all ~25 consumers,
-    * exactly the [[DedupOps.docShingles]] pattern (MEMORY_AND_DISK,
+    * lifetime and structural-match reuses it across all ~25 consumers
+    * (DedupOps' span family included), exactly the
+    * [[DedupOps.docShingles]] pattern (MEMORY_AND_DISK,
     * executor-local, evicted at the family boundary). */
-  private[operators] def docsWithToks(s: SparkSession, dir: String): DataFrame =
+  private[graft] def docsWithToks(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .repartition(s.sparkContext.defaultParallelism)
       .withColumn("toks", tokens(col("text")))

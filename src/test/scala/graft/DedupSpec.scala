@@ -23,6 +23,31 @@ class DedupSpec extends AnyFunSuite with SharedSpark {
     assert(rows.map(r => (r.getLong(0), r.getLong(1))).distinct.length === rows.length)
   }
 
+  test("q49 equals a driver-side brute-force Jaccard over the string kept sets") {
+    // pins q49's integer shingle-id encoding and merge verify against
+    // the plain definition: cap the string shingle sets by df on the
+    // driver, then every pair with |a ∩ b| / |a ∪ b| ≥ 0.5, rounded to
+    // integer micros half-away as Num.ratio6 does
+    val sets = DedupOps.docShingles(spark, SF).collect()
+      .map(r => r.getLong(0) -> r.getSeq[String](1).toSet)
+    val df = sets.toSeq.flatMap(_._2).groupBy(identity).map { case (k, v) => k -> v.size }
+    val kept = sets.map { case (d, sh) => d -> sh.filter(df(_) <= DedupOps.ShingleDfCap) }
+      .filter(_._2.nonEmpty).sortBy(_._1)
+    val expected = for {
+      i <- kept.indices
+      j <- i + 1 until kept.length
+      (a, sa) = kept(i)
+      (b, sb) = kept(j)
+      shared = (sa intersect sb).size.toLong
+      union = sa.size + sb.size - shared
+      if 2 * shared >= union
+    } yield (a, b, ((2 * shared * 1000000L + union) / (2 * union)) / 1000000.0)
+    val got = DedupOps.q49(spark, SF).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(expected.nonEmpty)
+    assert(got === expected)
+  }
+
   test("q50 minhash-LSH finds the same verified pairs as the inverted index") {
     val lsh = DedupOps.q50(spark, SF).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet

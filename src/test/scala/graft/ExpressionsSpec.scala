@@ -76,6 +76,61 @@ class ExpressionsSpec extends AnyFunSuite with SharedSpark {
     assert(decl === 32.0)
   }
 
+  test("SortedOverlap matches size(array_intersect), codegen'd and interpreted") {
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    // random ascending duplicate-free sets on a small value range (so
+    // pairs overlap), plus the edge rows: empty, identical, disjoint,
+    // negative and extreme values, and NULL on either side
+    val rnd = new scala.util.Random(49)
+    def set(): Seq[Long] =
+      Seq.fill(rnd.nextInt(30))(rnd.nextInt(60).toLong - 25L).distinct.sorted
+    val edge: Seq[(Option[Seq[Long]], Option[Seq[Long]])] = Seq(
+      (Some(Nil), Some(Nil)),
+      (Some(Nil), Some(Seq(1L, 2L))),
+      (Some(Seq(-7L, 0L, 9L)), Some(Seq(-7L, 0L, 9L))),
+      (Some(Seq(-3L, -1L)), Some(Seq(2L, 4L))),
+      (Some(Seq(Long.MinValue, -1L, Long.MaxValue)), Some(Seq(Long.MinValue, Long.MaxValue))),
+      (None, Some(Seq(1L))),
+      (Some(Seq(1L)), None),
+      (None, None))
+    val rows = edge ++ Seq.fill(300)((Some(set()), Some(set())))
+    // an RDD source, not a local relation the optimizer would fold
+    val df = spark.sparkContext.parallelize(
+      rows.zipWithIndex.map { case ((a, b), i) => (i, a, b) }, 3).toDF("i", "a", "b")
+    def run(): Seq[(Option[Long], Option[Int])] = {
+      val q = df.select(col("i"),
+        VectorExprs.sortedOverlap(col("a"), col("b")).as("nat"),
+        size(array_intersect(col("a"), col("b"))).as("ref"))
+      val codegen = q.queryExecution.executedPlan
+        .collectFirst { case w: WholeStageCodegenExec => w }.isDefined
+      assert(codegen === (spark.conf.get("spark.sql.codegen.wholeStage") == "true"))
+      q.collect().sortBy(_.getInt(0)).toSeq.map(r =>
+        (Option(r.get(1)).map(_.asInstanceOf[Long]),
+          Option(r.get(2)).map(_.asInstanceOf[Int])))
+    }
+    def check(got: Seq[(Option[Long], Option[Int])]): Unit =
+      got.zip(rows).foreach { case ((nat, ref), (a, b)) =>
+        if (a.isEmpty || b.isEmpty) assert(nat === None, s"$a $b")
+        else assert(nat === ref.map(_.toLong), s"$a $b")
+      }
+    val compiled = run()
+    check(compiled)
+    assert(compiled(2)._1 === Some(3L) && compiled(3)._1 === Some(0L))
+    assert(compiled(4)._1 === Some(2L))
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val before = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      val interpreted = run()
+      check(interpreted)
+      assert(interpreted === compiled)
+    } finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("FreqItemsAgg: MG guarantee holds on a skewed stream, any partitioning") {
     import graft.expressions.FreqItemsAgg
     val k = 8

@@ -157,7 +157,7 @@ class ScalePlanSpec extends AnyFunSuite with SharedSpark {
   test("q49's df cap is a broadcast anti-join — no window, no keyed shuffle of the exploded relation") {
     import org.apache.spark.sql.catalyst.plans.LeftAnti
     // the assertion targets the COLD plan: a warm cache left by another
-    // suite (q49 caches its kept index) substitutes InMemoryRelation
+    // suite (q49 caches its per-doc id sets) substitutes InMemoryRelation
     // nodes planned at cache time and hides the join being asserted
     spark.catalog.clearCache()
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -168,8 +168,8 @@ class ScalePlanSpec extends AnyFunSuite with SharedSpark {
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.execution.window.WindowExec
 
-    // descend through cached subplans (q49 caches the kept index) and
-    // AQE wrappers so the assertions see the real operators
+    // descend through cached subplans (q49 caches its per-doc id sets)
+    // and AQE wrappers so the assertions see the real operators
     def flatten(p: SparkPlan): Seq[SparkPlan] =
       p.collect { case x => x }.flatMap {
         case s: InMemoryTableScanExec => s +: flatten(s.relation.cachedPlan)
@@ -194,6 +194,35 @@ class ScalePlanSpec extends AnyFunSuite with SharedSpark {
         if e.outputPartitioning.isInstanceOf[HashPartitioning] => e }
     assert(keyed.isEmpty,
       s"keyed shuffle below the df-cap filter:\n${anti.get.left}")
+    // the verify is the merge kernel over ascending id arrays: no hash
+    // intersection of string arrays anywhere in the build
+    import org.apache.spark.sql.catalyst.expressions.ArrayIntersect
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    val exprs = all.flatMap(_.expressions).flatMap(_.collect { case e => e })
+    assert(!exprs.exists(_.isInstanceOf[ArrayIntersect]),
+      "q49 must verify with SortedOverlap, not array_intersect")
+    val verify = exprs.collect { case o: graft.expressions.SortedOverlap => o }
+    assert(verify.nonEmpty, "q49's verify must run SortedOverlap")
+    verify.foreach { o =>
+      assert(o.references.map(_.name).toSet === Set("shs_a", "shs_b"))
+      o.children.foreach(c => assert(c.dataType match {
+        case ArrayType(LongType, _) => true
+        case _ => false
+      }, s"verify input ${c.dataType.simpleString}, want array<bigint>"))
+    }
+  }
+
+  test("the k=8 span build reads the docsWithToks cache — no second token copy") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    spark.catalog.clearCache()
+    val shared = TextOps.docsWithToks(spark, SF).queryExecution.withCachedData
+      .collectFirst { case m: InMemoryRelation => m.cacheBuilder }
+    assert(shared.isDefined, "docsWithToks must be cached")
+    val caches = operators.DedupOps.dupSpans8Plan(spark, SF).queryExecution
+      .withCachedData.collect { case m: InMemoryRelation => m }
+    assert(caches.nonEmpty, "the span build must read a cached token relation")
+    assert(caches.forall(_.cacheBuilder eq shared.get),
+      s"the span build caches its own copy:\n${caches.map(_.output).mkString("\n")}")
   }
 
   test("q98 windows are all doc-keyed; q100 sits on the capped anti-joined index") {
@@ -218,8 +247,8 @@ class ScalePlanSpec extends AnyFunSuite with SharedSpark {
         s"$n must never run an unpartitioned window")
     }
     // q100 shares keptShingles: the df cap must reach its plan as the
-    // same broadcast anti-join q49 is guarded for. cache() registers the
-    // kept relation eagerly, so descend through InMemoryRelation's cached
+    // same broadcast anti-join q49 is guarded for. q100 caches its
+    // weighted index eagerly, so descend through InMemoryRelation's cached
     // physical plan (the logical view only shows the cache node).
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
